@@ -1,23 +1,26 @@
 """Aggregate ddsketch functions — the centerpiece of the reference.
 
 The reference's C-API aggregate lifecycle (state init → per-row ``update`` →
-cross-thread ``combine`` → ``finalize``; lib.rs:630-804) maps 1:1 onto Spark
-aggregation. Three strategies:
+cross-thread ``combine`` → ``finalize``; lib.rs:630-804) maps onto two Spark
+homes:
 
-* ``ddsketch_agg`` — a grouped-agg pandas UDF. Simple and SQL-registrable,
-  but Spark's ``AggregateInPandas`` has **no partial aggregation**: every row
-  shuffles to its group's reducer. Fine for pre-aggregated sketch tables
-  (few rows per group), wrong for raw-event scale.
-* ``merge_sketches_native`` — the 100 TB path for blob columns: map-side
-  decode to the struct working form, Catalyst hash aggregate over exploded
-  bins (partial aggregation applies — the shuffle carries combined counts),
-  re-encode at the boundary.
-* ``merge_sketches_scalable`` — mapInPandas per-partition pre-merge
-  (the reference's ``update``) + grouped-agg ``combine``/``finalize``;
-  preserves the UDAF's drop-mismatched-row semantics at scale.
+* ``ddsketch_agg`` / ``sketch_values_agg`` — grouped-agg pandas UDFs.
+  Simple and SQL-registrable, but Spark's ``AggregateInPandas`` has **no
+  partial aggregation**: every row shuffles to its group's reducer. Right
+  for the SQL surface and bounded groups (pre-aggregated sketch tables).
+* the native Catalyst path — ``merge_sketches_native`` for blob merges at
+  scale, and ``operators/native.sketch_struct_agg`` → ``struct_to_wire``
+  for raw-value ingest. Partial aggregation applies, so the shuffle carries
+  combined (key, sign, bin) counts, never raw rows or whole blobs.
 
-Sketch-from-raw-values at scale is fully native (no Python in the hot path):
-see ``operators/native.py``; MIGRATION.md "Ingest paths" ranks the options.
+Mapping-mismatch rule. ``ddsketch_agg`` keeps the group's first decodable
+mapping and drops later rows whose gamma/index_offset differ (the
+reference discards the merge result, lib.rs:730). That rule depends on row
+arrival order, which a partially aggregated shuffle does not have, so
+``merge_sketches_native`` returns a deterministic NULL sketch for a group
+with mixed mappings instead (the SQL layer's merge-mismatch result,
+lib.rs:241-243). For same-accuracy inputs — the normal case — both give
+byte-identical results.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from __future__ import annotations
 from typing import Iterable, Optional, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType
 
@@ -37,8 +40,6 @@ __all__ = [
     "ddsketch_stats_agg",
     "sketch_values_agg",
     "merge_sketches_native",
-    "merge_sketches_scalable",
-    "ingest_values_scalable",
 ]
 
 
@@ -48,9 +49,8 @@ def _merge_series(blobs: Iterable) -> Optional[bytes]:
     First decodable sketch is adopted (group inherits its gamma), later ones
     merged. NULL, zero-length, and undecodable rows are skipped
     (lib.rs:697-735, NULL-skip via set_special_handling lib.rs:1024), and a
-    gamma-mismatched merge is *silently ignored* — the reference discards
-    the merge result (`let _ = existing.merge(...)`, lib.rs:730, 758).
-    Empty group → None (lib.rs:798-801).
+    gamma-mismatched merge is *silently ignored* (the mismatch rule in the
+    module docstring). Empty group → None (lib.rs:798-801).
     """
     merged: Optional[DDSketch] = None
     for blob in blobs:
@@ -93,7 +93,8 @@ def sketch_values_agg(value_col, alpha: float = DEFAULT_RELATIVE_ACCURACY) -> Co
 
     The reference ingests via per-row ``ddsketch_add`` loops (its own stated
     anti-pattern, README.md:236-247); this is the vectorized ingest form.
-    For full-scale ingest prefer the native binned path (operators/native.py).
+    For full-scale ingest prefer ``native.sketch_struct_agg`` →
+    ``native.struct_to_wire``, which has partial aggregation.
     """
 
     @pandas_udf(BinaryType())
@@ -119,11 +120,8 @@ def merge_sketches_native(
     boundary. This is the closest pure-Python approximation of the
     reference's cross-thread ``combine`` (lib.rs:740-765).
 
-    Semantics: gamma/index_offset-mismatched groups yield a NULL sketch (the
-    SQL layer's merge-mismatch result, lib.rs:241-243) — unlike
-    ``ddsketch_agg``, which keeps the first mapping and drops mismatched
-    rows (lib.rs:730). For same-accuracy inputs (the normal case) results
-    are byte-identical.
+    A group with mixed mappings yields a NULL sketch (the mismatch rule in
+    the module docstring); NULL and undecodable blobs are skipped.
     """
     from ..operators import native
 
@@ -135,94 +133,3 @@ def merge_sketches_native(
     return merged.select(
         *keys, native.struct_to_wire(sketch_col).alias(sketch_col)
     )
-
-
-def merge_sketches_scalable(
-    df: DataFrame, keys: Sequence[str], sketch_col: str = "sketch"
-) -> DataFrame:
-    """Two-stage sketch merge that restores partial aggregation.
-
-    Stage 1 (reference ``update``): within each input partition, merge rows
-    that share a key — no shuffle, output ≤ |partitions|·|groups| rows.
-    Stage 2 (reference ``combine`` + ``finalize``): shuffle the pre-merged
-    sketches and fold per key.
-
-    Returns ``keys + [sketch_col]`` with one merged sketch per group.
-    """
-    keys = list(keys)
-    fields = df.select(*keys, sketch_col).schema
-
-    def partial_merge(batches: Iterable[pd.DataFrame]):
-        states: dict[tuple, DDSketch] = {}
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                key = tuple(row[:-1])
-                blob = row[-1]
-                if blob is None or len(blob) == 0:
-                    continue
-                try:
-                    s = DDSketch.decode(bytes(blob))
-                except Exception:
-                    continue
-                if key in states:
-                    try:
-                        states[key].merge(s)
-                    except Exception:
-                        pass  # mismatched mapping skipped (lib.rs:730)
-                else:
-                    states[key] = s
-        if states:
-            yield pd.DataFrame(
-                [(*k, s.encode()) for k, s in states.items()],
-                columns=[*keys, sketch_col],
-            )
-
-    partial = df.select(*keys, sketch_col).mapInPandas(partial_merge, schema=fields)
-    return partial.groupBy(*keys).agg(ddsketch_agg(sketch_col).alias(sketch_col))
-
-
-def ingest_values_scalable(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: str,
-    alpha: float = DEFAULT_RELATIVE_ACCURACY,
-    sketch_col: str = "sketch",
-) -> DataFrame:
-    """Raw-value ingest with partial aggregation on the Python path.
-
-    ``sketch_values_agg`` (a grouped-agg pandas UDF) shuffles every raw row
-    to its group's reducer; this form builds one partial sketch per
-    (input partition, group) with ``mapInPandas`` — no shuffle of raw rows,
-    numpy-vectorized binning — and only the tiny partial sketches move,
-    exactly the reference's update/combine split (lib.rs:687-765). Use when
-    the wire/pandas path is required end-to-end; the fully native
-    ``operators/native.sketch_struct_agg`` remains the fastest ingest.
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    keys = list(keys)
-    out_schema = StructType(
-        list(df.select(*keys).schema.fields)
-        + [StructField(sketch_col, BinaryType())]
-    )
-
-    def partial_ingest(batches: Iterable[pd.DataFrame]):
-        states: dict[tuple, DDSketch] = {}
-        for pdf in batches:
-            for k, sub in pdf.groupby(keys, dropna=False, sort=False):
-                key = k if isinstance(k, tuple) else (k,)
-                vals = sub[value].dropna().to_numpy()
-                if len(vals) == 0:
-                    continue
-                s = states.get(key)
-                if s is None:
-                    s = states[key] = DDSketch(alpha)
-                s.extend_array(vals)
-        if states:
-            yield pd.DataFrame(
-                [(*k, s.encode()) for k, s in states.items() if s.count > 0],
-                columns=[*keys, sketch_col],
-            )
-
-    partial = df.select(*keys, value).mapInPandas(partial_ingest, schema=out_schema)
-    return partial.groupBy(*keys).agg(ddsketch_agg(sketch_col).alias(sketch_col))

@@ -314,19 +314,7 @@ def ddsketch_prepare(value_col, alpha: float = DEFAULT_RELATIVE_ACCURACY):
     ``ddsketch_prepare(F.col("v"))`` ≡ ``ddsketch_add(lit(empty), v)`` but
     without decoding an empty sketch per row.
     """
-
-    @pandas_udf(BinaryType())
-    def _prepare(values: pd.Series) -> pd.Series:
-        def go(v):
-            if v is None or (isinstance(v, float) and math.isnan(v)):
-                return None
-            s = DDSketch(alpha)
-            s.add(float(v))
-            return s.encode()
-
-        return values.map(go)
-
-    return _prepare(value_col)
+    return ddsketch_prepare_sql(value_col, F.lit(float(alpha)))
 
 
 @pandas_udf(BinaryType())

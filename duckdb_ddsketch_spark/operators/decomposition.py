@@ -257,7 +257,7 @@ def pca_project(
     # (SCALING.md, similarity section): Catalyst inlines the centering
     # zip_with into EVERY coordinate's fold, recomputing the d-element
     # subtraction k times per row — measured 8x wall on the 1M x 64 -> 8
-    # reduction probe (scripts/pca_reduction_probe.py). One zip_with over
+    # reduction probe (SCALING.md, PCA reduction). One zip_with over
     # the raw stored column per coordinate has no intermediate to inline.
     offsets = [
         sum(float(c) * float(m) for c, m in zip(w, mean))

@@ -216,6 +216,12 @@ def duplicate_span_extents(
     With ``min_docs=1`` every gram is "duplicated", so the census
     materialization is corpus-token-sized — degenerate for this operator
     (every token of every document lands in one extent) but still correct.
+
+    Calling this function runs two Spark jobs before any action on the
+    result: the census ``localCheckpoint`` and its row ``count``. The
+    checkpointed census lives in executor-local blocks, so losing an
+    executor after the call fails the query that reads the result
+    (Spark cannot recompute a local checkpoint).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")

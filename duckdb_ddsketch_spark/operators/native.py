@@ -276,7 +276,8 @@ def sketch_quantile_agg(
     out_cols.append(f"{max_sql} AS max")
     for q in quantiles:
         out_cols.append(
-            f"{_entries_quantile_sql(q, gamma)} AS p{_qname(q)}"
+            f"{_quantile_fold_sql(q, 'pe', 'ne', 'zc', 'cnt', g, mult)}"
+            f" AS p{_qname(q)}"
         )
     # grouped level: sorted (bin, cnt) entry ARRAYS per sign class — no
     # map/struct assembly; the stat/quantile folds below run on the arrays
@@ -321,17 +322,23 @@ def sketch_quantile_agg(
     )
 
 
-def _entries_quantile_sql(q: float, gamma: float) -> str:
-    """Go-exact quantile over sorted (bin, cnt) entry arrays ``pe``/``ne``
-    with zero count ``zc`` and total ``cnt`` (same fold as
-    :func:`struct_quantile_sql`, minus the map/struct indirection)."""
+def _quantile_fold_sql(
+    q: float, pos: str, neg: str, zero: str, count: str, gamma: str, mult: str
+) -> str:
+    """Go-exact quantile as one SQL fold — the single home of the rule.
+
+    ``pos``/``neg`` are arrays of (key=bin, value=count) entries sorted by
+    bin; ``zero``, ``count``, ``gamma`` and ``mult`` (the bin-representative
+    multiplier) are scalars — all given as SQL text. ``rank = q*(count-1)``;
+    the selected bin is the first whose cumulative count is strictly greater
+    than the rank, with the negative store searched under a reversed rank
+    (datadog_encoding.rs:651-703). ``aggregate`` carries (cumulative,
+    selected-bin) over the entries — no Python, no explode, no shuffle.
+    """
     if q < 0.0 or q > 1.0:
         return "CAST(NULL AS DOUBLE)"
-    g = repr(gamma) + "D"
-    mult = repr(1.0 + (1.0 - 2.0 / (1.0 + gamma))) + "D"
-    qd = f"{float(q)!r}D"
-    rank = f"({qd} * (cnt - 1.0D))"
-    negc = "coalesce(aggregate(ne, 0.0D, (acc, x) -> acc + x.value), 0.0D)"
+    rank = f"({float(q)!r}D * ({count} - 1.0D))"
+    negc = f"coalesce(aggregate({neg}, 0.0D, (acc, x) -> acc + x.value), 0.0D)"
 
     def key_at_rank(arr: str, target: str) -> str:
         folded_sel = (
@@ -346,14 +353,14 @@ def _entries_quantile_sql(q: float, gamma: float) -> str:
             f"coalesce({folded_sel},"
             f" CASE WHEN size({arr}) > 0 THEN element_at({arr}, -1).key END)"
         )
-        return f"(POWER({g}, CAST({sel} AS DOUBLE)) * {mult})"
+        return f"(POWER({gamma}, CAST({sel} AS DOUBLE)) * {mult})"
 
     return (
-        "CASE WHEN cnt <= 0 THEN CAST(NULL AS DOUBLE)"
+        f"CASE WHEN {count} <= 0 THEN CAST(NULL AS DOUBLE)"
         f" WHEN {rank} < {negc}"
-        f" THEN -{key_at_rank('ne', f'{negc} - 1.0D - {rank}')}"
-        f" WHEN {rank} < {negc} + zc THEN 0.0D"
-        f" ELSE {key_at_rank('pe', f'{rank} - zc - {negc}')} END"
+        f" THEN -{key_at_rank(neg, f'{negc} - 1.0D - {rank}')}"
+        f" WHEN {rank} < {negc} + {zero} THEN 0.0D"
+        f" ELSE {key_at_rank(pos, f'{rank} - {zero} - {negc}')} END"
     )
 
 
@@ -512,37 +519,17 @@ def struct_sum(sketch: Column) -> Column:
 
 
 def struct_quantile_sql(sketch_col: str, q: float) -> str:
-    """SQL text of the Go-exact quantile over the native struct form.
-
-    Scans the sorted map entries with ``aggregate`` (a fold), carrying
-    (cumulative, selected-bin) — no Python, no explode, no shuffle.
-    """
+    """SQL text of the Go-exact quantile over the native struct form: the
+    shared fold (:func:`_quantile_fold_sql`) over its sorted map entries."""
     s = f"`{sketch_col}`"
-    if q < 0.0 or q > 1.0:
-        return "CAST(NULL AS DOUBLE)"
-    qd = f"{float(q)!r}D"
-    rank = f"({qd} * ({s}.count - 1.0D))"
-    negc = f"coalesce(aggregate(map_values({s}.neg), 0.0D, (acc, x) -> acc + x), 0.0D)"
-    mult = f"(2.0D - 2.0D / (1.0D + {s}.gamma))"
-
-    def key_at_rank(m: str, target: str) -> str:
-        folded_sel = (
-            f"aggregate(sort_array(map_entries({m})),"
-            " struct(0.0D AS cum, CAST(NULL AS INT) AS sel),"
-            " (acc, e) -> struct(acc.cum + e.value AS cum,"
-            " CASE WHEN acc.sel IS NOT NULL THEN acc.sel"
-            f" WHEN acc.cum + e.value > greatest({target}, 0.0D) THEN e.key END AS sel)"
-            ").sel"
-        )
-        sel = f"coalesce({folded_sel}, array_max(map_keys({m})))"
-        return f"(POWER({s}.gamma, CAST({sel} AS DOUBLE)) * {mult})"
-
-    return (
-        f"CASE WHEN {s}.count <= 0 THEN CAST(NULL AS DOUBLE)"
-        f" WHEN {rank} < {negc}"
-        f" THEN -{key_at_rank(f'{s}.neg', f'{negc} - 1.0D - {rank}')}"
-        f" WHEN {rank} < {negc} + {s}.zero_count THEN 0.0D"
-        f" ELSE {key_at_rank(f'{s}.pos', f'{rank} - {s}.zero_count - {negc}')} END"
+    return _quantile_fold_sql(
+        q,
+        f"sort_array(map_entries({s}.pos))",
+        f"sort_array(map_entries({s}.neg))",
+        f"{s}.zero_count",
+        f"{s}.count",
+        f"{s}.gamma",
+        f"(2.0D - 2.0D / (1.0D + {s}.gamma))",
     )
 
 

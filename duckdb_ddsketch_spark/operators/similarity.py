@@ -186,7 +186,7 @@ def int_dot(a: Column, b: Column) -> Column:
     sum stays exact while below 2^53 (8-bit codes: ~5e11 dims; 16-bit:
     ~8e6 dims — far past any embedding width), so the result is the same
     exact BIGINT as an integer fold. Two measured hazards shape this
-    (scripts/quantized_bucket_probe.py): an integer fold pays a Cast
+    (SCALING.md "Similarity search"): an integer fold pays a Cast
     node plus ANSI overflow checks per element inside the interpreted
     higher-order function (~4x), and casting each ARRAY up front
     (``transform``) materializes two fresh arrays per evaluation — per
@@ -439,7 +439,7 @@ def _local_topk_batch(ids, q_ids, scores, take, require_finite):
     at ``take`` — deterministic regardless of batch boundaries, matching
     the final window's ordering. Vectorized across queries: one nonzero +
     one lexsort per batch, no per-query Python loop (kernel variants
-    cost-attributed in scripts/ann_blas_cost_probe.py).
+    cost-attributed in SCALING.md "Similarity search").
 
     Self-matches (corpus id == query id) are dropped here, as is any
     row failing ``require_finite`` — the float cosine path's -inf/NaN
@@ -801,7 +801,7 @@ def ivf_topk_blas(
     :func:`quantized_topk_blas`). The fold form's in-cell scoring is an
     interpreted HOF per candidate pair; at 1M x 64 x 100 queries that is
     ~40 s where this path runs the same search in ~2 s
-    (scripts/pca_reduction_probe.py measured the fold wall; dim
+    (fold wall measured in SCALING.md "Similarity search"; dim
     reduction AND this kernel both attack it).
 
     Shape: cell centroids come from ONE bounded Spark aggregate (cells x

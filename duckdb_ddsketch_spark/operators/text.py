@@ -175,12 +175,12 @@ VOCAB_EXPR_MAX = 512
 # inSetConversionThreshold, so per-token probe cost is ~flat in set
 # size; what the prune buys is rows never materialized by the explode).
 # Round-12 measurements: 13.4 -> 7.5 s at 9 terms, 22.7 -> 12.4 s at
-# 128 mostly-missing terms (scripts/bm25_prefilter_probe.py). Round-13
+# 128 mostly-missing terms (OPTIMIZATION_r12.md §3). Round-13
 # crossover sweep with MOSTLY-EXISTING terms — the adversarial case,
 # where high hit rates shrink the saving — still shows no crossover
 # through 512: join-branch vs prefilter mins 22.1/16.4 s at 128 terms,
 # 31.1/19.7 at 256, 78.2/58.0 at 512 (15M docs / 120M tokens,
-# interleaved reps, scripts/bm25_crossover_probe.py; branch equality
+# interleaved reps, OPTIMIZATION_r13.md §5; branch equality
 # pinned per set size). Cap set at the largest measured point — past
 # it the explode + broadcast semi-join prune applies unchanged, and the
 # bounded limit-collect never pulls more than cap+1 rows either way.

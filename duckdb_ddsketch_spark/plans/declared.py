@@ -15,11 +15,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import scalar as fs
-from ..functions.aggregate import (
-    ddsketch_agg,
-    ingest_values_scalable,
-    sketch_values_agg,
-)
+from ..functions.aggregate import sketch_values_agg
 from ..operators import dedup, native, relational, sampling, similarity, text
 from ..sources import load_table
 from .oracle import constants, qname, quantile_oracle_sql, rowwise_bin_value_sql
@@ -480,7 +476,8 @@ def q11(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q12 — ddsketch_stats_agg (stats_full ∘ ddsketch_agg), flattened
+# q12 — ddsketch_stats_agg's finalizer (ddsketch_stats_full) over natively
+# ingested wire blobs, flattened
 # ---------------------------------------------------------------------------
 
 _Q12_STATS = ("count", "sum", "avg", "min", "max")
@@ -499,13 +496,14 @@ _Q12_STATS = ("count", "sum", "avg", "min", "max")
 def q12(spark, sf_dir):
     _prep(spark)
     li = load_table(spark, sf_dir, "lineitem")
-    # update/combine split on the wire path: one partial sketch per
-    # (input partition, group) map-side, so only ~KB blobs shuffle — never
+    # native ingest to wire blobs: the binned hash aggregate partially
+    # aggregates map-side, so only (key, sign, bin) counts shuffle — never
     # raw rows. Identical final bins to direct ingest (bin-count addition
     # commutes across any partial split).
-    pre = ingest_values_scalable(li, ["l_linestatus"], "l_discount")
+    pre = native.sketch_struct_agg(li, ["l_linestatus"], "l_discount")
     agg = pre.select(
-        "l_linestatus", fs.ddsketch_stats_full(F.col("sketch")).alias("st")
+        "l_linestatus",
+        fs.ddsketch_stats_full(native.struct_to_wire("sketch")).alias("st"),
     )
     return agg.select(
         "l_linestatus",
@@ -2745,8 +2743,10 @@ def _q58_store(spark, sf_dir: str) -> tuple[str, str]:
             format="csv",
             schema="o_orderstatus string, o_totalprice double",
         )
-        sketches = ingest_values_scalable(
+        sketches = native.sketch_struct_agg(
             from_csv, ["o_orderstatus"], "o_totalprice"
+        ).select(
+            "o_orderstatus", native.struct_to_wire("sketch").alias("sketch")
         )
         write_source(sketches, json_dir, format="json")
         with open(marker, "w") as f:

@@ -30,6 +30,7 @@ __all__ = ["DDSketch", "SketchMergeError", "DEFAULT_RELATIVE_ACCURACY"]
 
 DEFAULT_RELATIVE_ACCURACY = 0.01
 _GAMMA_TOLERANCE = 1e-10
+_INDEX_MIN, _INDEX_MAX = -(2**31), 2**31 - 1
 
 
 class SketchMergeError(ValueError):
@@ -466,6 +467,10 @@ class DDSketch:
                 index += index_delta
         else:
             raise ValueError(f"unknown bin encoding subflag: {subflag}")
+        # the reference's stores are Vec<(i32, f64)> and the native struct
+        # form is MAP<INT,DOUBLE>: a wider index is a malformed blob
+        if bins and (min(bins) < _INDEX_MIN or max(bins) > _INDEX_MAX):
+            raise ValueError("bin index outside int32")
         return bins, pos
 
     def __repr__(self) -> str:  # pragma: no cover

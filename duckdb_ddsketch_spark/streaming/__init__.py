@@ -81,7 +81,7 @@ def scalable_state_conf() -> dict:
     QUARTER of executor heap (state competes with shuffle/exec memory and
     the provider keeps maintenance copies), the on-heap provider is an
     OOM risk and RocksDB is mandatory, not optional. Measured
-    (``scripts/rocksdb_state_probe.py``, SCALING.md "state-store probe"):
+    (SCALING.md "Streaming", the state-store probe):
     at 10x key cardinality the on-heap provider OOMs a 3.2 GB heap while
     RocksDB completes the same query with ~600 MB resident and state on
     SST files.

@@ -163,8 +163,10 @@ def test_merge_sketches_native_example(spark, fixtures):
 
 
 def test_ingest_paths_ranked_example(spark, fixtures):
-    """MIGRATION.md §2's ranked ingest paths agree on the same data."""
-    from duckdb_ddsketch_spark.functions.aggregate import ingest_values_scalable
+    """MIGRATION.md §2's two ranked ingest paths agree on the same data:
+    native quantiles equal the quantiles of the native wire blobs, and those
+    blobs are byte-identical to the grouped-agg ``sketch_values_agg`` ones."""
+    from duckdb_ddsketch_spark.functions.aggregate import sketch_values_agg
     from duckdb_ddsketch_spark.operators import native
 
     rows = [("api", float(v)) for v in range(1, 101)] + [
@@ -177,18 +179,30 @@ def test_ingest_paths_ranked_example(spark, fixtures):
             df, ["service"], "latency", 0.01, (0.5,)
         ).collect()
     }
+    per_group = native.sketch_struct_agg(df, ["service"], "latency", alpha=0.01)
+    wire_df = per_group.select(
+        "service", native.struct_to_wire("sketch").alias("sketch")
+    )
     wire = {
-        r["service"]: (r["count"], r["p50"])
-        for r in ingest_values_scalable(df, ["service"], "latency").select(
+        r["service"]: (r["count"], r["p50"], bytes(r["sketch"]))
+        for r in wire_df.select(
             "service",
+            "sketch",
             F.expr("ddsketch_count(sketch) AS count"),
             F.expr("ddsketch_quantile(sketch, 0.5d) AS p50"),
         ).collect()
     }
-    assert set(nat) == set(wire)
+    simple = {
+        r["service"]: bytes(r["sketch"])
+        for r in df.groupBy("service")
+        .agg(sketch_values_agg(F.col("latency"), 0.01).alias("sketch"))
+        .collect()
+    }
+    assert set(nat) == set(wire) == set(simple)
     for k in nat:
         assert nat[k][0] == wire[k][0]
         assert abs(nat[k][1] - wire[k][1]) <= 1e-9 * max(1.0, abs(nat[k][1]))
+        assert wire[k][2] == simple[k]
 
 
 def test_reference_readme_stats_agg_verbatim(spark, fixtures):

@@ -226,6 +226,64 @@ def test_struct_to_wire_null_struct_encodes_null(spark):
     assert DDSketch.decode(bytes(good.b)).get_count() == 2
 
 
+def _huge_index_blob() -> bytes:
+    """Decodable wire bytes whose one positive bin sits past int32."""
+    s = DDSketch(0.01)
+    s.gamma = 1.0
+    s.positive_bins = {2**31 + 5: 1.0}
+    return s.encode()
+
+
+_GOOD_BLOBS = [
+    DDSketch(0.01).extend([1.0 + i, 10.0 * i, -2.5 * i, 0.0]).encode()
+    for i in range(6)
+]
+_BAD_BLOBS = {
+    "huge_index": _huge_index_blob(),
+    "truncated": _GOOD_BLOBS[1][:-3],
+    "empty": b"",
+    "null": None,
+}
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_BLOBS))
+def test_malformed_blob_skipped_on_every_path(spark, bad):
+    """One malformed row fails no task: the per-row count, the struct
+    boundary, ``ddsketch_agg`` and ``merge_sketches_native`` skip or NULL the
+    same row, and both group merges equal the kernel merge of the good rows."""
+    from duckdb_ddsketch_spark.functions import ddsketch_agg, ddsketch_count
+    from duckdb_ddsketch_spark.functions.aggregate import merge_sketches_native
+
+    blobs = _GOOD_BLOBS + [_BAD_BLOBS[bad]]
+    df = spark.createDataFrame(
+        [("g", i, b) for i, b in enumerate(blobs)], "k string, i int, sketch binary"
+    ).repartition(3)
+    # the struct boundary renders an undecodable row as all-NULL fields
+    per_row = {
+        r.i: (r.c, r.s is None or r.s["gamma"] is None)
+        for r in df.select(
+            "i",
+            ddsketch_count(F.col("sketch")).alias("c"),
+            native.wire_to_struct("sketch").alias("s"),
+        ).collect()
+    }
+    bad_count, bad_struct_null = per_row[len(_GOOD_BLOBS)]
+    # a NULL count and a NULL struct mark the same rows; the empty blob is
+    # an empty sketch on both (count 0), which merges as a no-op
+    assert bad_struct_null == (bad_count is None)
+    assert bad_count == (0 if bad == "empty" else None)
+    for i, blob in enumerate(_GOOD_BLOBS):
+        assert per_row[i] == (DDSketch.decode(blob).get_count(), False)
+
+    expected = DDSketch.decode(_GOOD_BLOBS[0])
+    for blob in _GOOD_BLOBS[1:]:
+        expected.merge(DDSketch.decode(blob))
+    udaf = df.groupBy("k").agg(ddsketch_agg("sketch").alias("sketch")).first()
+    nat = merge_sketches_native(df, ["k"]).first()
+    assert bytes(udaf.sketch) == expected.encode()
+    assert bytes(nat.sketch) == expected.encode()
+
+
 def test_struct_cdf_matches_kernel(spark):
     """Native CDF fold == kernel cdf == scalar UDF over the wire, across
     sign classes and thresholds."""

@@ -22,8 +22,7 @@ allowlist entry here.
 import pytest
 
 # raw-UDAF surface queries: inputs are literals (q02), two sketch rows
-# (q04/q15), 16 pre-bucketed sketches per group (q17), a mapInPandas
-# pre-merged partial per partition x group (q12) — bounded — or, for
+# (q04/q15), 16 pre-bucketed sketches per group (q17) — bounded — or, for
 # q10 only, the raw value scan: q10 deliberately keeps one driver row on
 # the value-UDAF surface (`sketch_values_agg`), the documented slow path
 # whose scale twin is the native binned aggregate (q01/q13)
@@ -31,7 +30,6 @@ ALLOWED_PANDAS_AGG = {
     "q02_codec_golden_bytes",
     "q04_merge_two_sketches",
     "q10_stats_by_event_type",
-    "q12_stats_agg_by_linestatus",
     "q15_nested_column_merge",
     "q17_sql_surface_cte",
 }

@@ -17,7 +17,6 @@ from duckdb_ddsketch_spark.functions import (
     ddsketch_stats_agg,
     sketch_values_agg,
 )
-from duckdb_ddsketch_spark.functions.aggregate import merge_sketches_scalable
 
 
 def approx_rel(a, b, tol=0.02):
@@ -276,31 +275,6 @@ def test_prepare_then_agg_group_by(spark):
     assert out["web"].c == 1
 
 
-def test_merge_sketches_scalable_matches_simple_agg(spark):
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(200):
-        k = f"svc{i % 5}"
-        s = DDSketch(0.01).extend(rng.uniform(1, 1000) for _ in range(20))
-        rows.append((k, s.encode()))
-    df = spark.createDataFrame(rows, "k string, sketch binary").repartition(8)
-    simple = {
-        r.k: DDSketch.decode(bytes(r.s))
-        for r in df.groupBy("k").agg(ddsketch_agg("sketch").alias("s")).collect()
-    }
-    scalable = {
-        r.k: DDSketch.decode(bytes(r.sketch))
-        for r in merge_sketches_scalable(df, ["k"], "sketch").collect()
-    }
-    assert set(simple) == set(scalable)
-    for k in simple:
-        assert simple[k].count == scalable[k].count
-        assert simple[k].positive_bins == scalable[k].positive_bins
-        assert simple[k].quantile(0.5) == scalable[k].quantile(0.5)
-
-
 def test_merge_sketches_native_matches_simple_agg(spark):
     import random
 
@@ -393,15 +367,13 @@ def test_multi_quantile_array(spark):
     assert row.nul is None
 
 
-def test_ingest_values_scalable_matches_grouped_agg(spark):
-    """mapInPandas partial ingest must produce byte-identical sketches to
-    the direct grouped-agg ingest (bin counts are additive)."""
+def test_native_ingest_matches_grouped_agg(spark):
+    """Native struct ingest re-encoded at the wire boundary must produce
+    byte-identical sketches to the grouped-agg ingest, across negatives,
+    zeros and a partitioned input (bin counts are additive)."""
     import random
 
-    from duckdb_ddsketch_spark.functions.aggregate import (
-        ingest_values_scalable,
-        sketch_values_agg,
-    )
+    from duckdb_ddsketch_spark.operators import native
 
     rng = random.Random(5)
     rows = [
@@ -411,20 +383,19 @@ def test_ingest_values_scalable_matches_grouped_agg(spark):
     df = spark.createDataFrame(rows, "k string, v double").repartition(6)
     a = {
         r.k: bytes(r.sketch)
-        for r in ingest_values_scalable(df, ["k"], "v", 0.01).collect()
+        for r in native.sketch_struct_agg(df, ["k"], "v", 0.01)
+        .select("k", native.struct_to_wire("sketch").alias("sketch"))
+        .collect()
     }
     b = {
         r.k: bytes(r.sk)
         for r in df.groupBy("k").agg(sketch_values_agg(F.col("v")).alias("sk")).collect()
     }
-    from duckdb_ddsketch_spark import DDSketch
-
     assert set(a) == set(b)
     for k in a:
-        sa, sb = DDSketch.decode(a[k]), DDSketch.decode(b[k])
-        assert sa.positive_bins == sb.positive_bins, k
-        assert sa.negative_bins == sb.negative_bins, k
-        assert sa.zero_count == sb.zero_count and sa.count == sb.count, k
+        assert a[k] == b[k], k
+        sk = DDSketch.decode(a[k])
+        assert sk.negative_bins and sk.zero_count > 0, k
 
 
 def test_zero_arg_create_default_alpha(spark):
