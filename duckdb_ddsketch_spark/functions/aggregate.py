@@ -4,10 +4,11 @@ The reference's C-API aggregate lifecycle (state init → per-row ``update`` →
 cross-thread ``combine`` → ``finalize``; lib.rs:630-804) maps onto two Spark
 homes:
 
-* ``ddsketch_agg`` / ``sketch_values_agg`` — grouped-agg pandas UDFs.
-  Simple and SQL-registrable, but Spark's ``AggregateInPandas`` has **no
-  partial aggregation**: every row shuffles to its group's reducer. Right
-  for the SQL surface and bounded groups (pre-aggregated sketch tables).
+* ``ddsketch_agg`` / ``ddsketch_stats_agg`` / ``sketch_values_agg`` —
+  Arrow grouped-agg UDFs (one ``ArrowAggregatePython`` node). Simple and
+  SQL-registrable, but Spark gives a Python UDAF **no partial
+  aggregation**: every row shuffles to its group's reducer. Right for the
+  SQL surface and bounded groups (pre-aggregated sketch tables).
 * the native Catalyst path — ``merge_sketches_native`` for blob merges at
   scale, and ``operators/native.sketch_struct_agg`` → ``struct_to_wire``
   for raw-value ingest. Partial aggregation applies, so the shuffle carries
@@ -27,13 +28,14 @@ from __future__ import annotations
 
 from typing import Iterable, Optional, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BinaryType
 
-from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY
-from .scalar import ddsketch_stats_full
+from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY, SketchMergeError
+from .scalar import STATS_FULL_SCHEMA, stats_full_row
 
 __all__ = [
     "ddsketch_agg",
@@ -42,9 +44,11 @@ __all__ = [
     "merge_sketches_native",
 ]
 
+_STATS_FULL_ARROW = to_arrow_type(STATS_FULL_SCHEMA)
 
-def _merge_series(blobs: Iterable) -> Optional[bytes]:
-    """update/combine/finalize over a series of wire-format sketches.
+
+def _merge_blobs(blobs: Iterable) -> Optional[DDSketch]:
+    """update/combine over a group of wire-format sketches.
 
     First decodable sketch is adopted (group inherits its gamma), later ones
     merged. NULL, zero-length, and undecodable rows are skipped
@@ -54,10 +58,10 @@ def _merge_series(blobs: Iterable) -> Optional[bytes]:
     """
     merged: Optional[DDSketch] = None
     for blob in blobs:
-        if blob is None or len(blob) == 0:
+        if not blob:
             continue
         try:
-            s = DDSketch.decode(bytes(blob))
+            s = DDSketch.decode(blob)
         except Exception:
             continue
         if merged is None:
@@ -65,27 +69,34 @@ def _merge_series(blobs: Iterable) -> Optional[bytes]:
         else:
             try:
                 merged.merge(s)
-            except Exception:
+            except SketchMergeError:
                 pass  # mismatched mapping: row dropped, like the reference
+    return merged
+
+
+def _merged_wire(sketches: pa.Array) -> Optional[bytes]:
+    merged = _merge_blobs(sketches.to_pylist())
     return merged.encode() if merged is not None else None
 
 
-@pandas_udf(BinaryType())
-def ddsketch_agg(sketches: pd.Series) -> bytes:
+@arrow_udf(BinaryType())
+def ddsketch_agg(sketches: pa.Array) -> Optional[bytes]:
     """``SELECT k, ddsketch_agg(sketch) ... GROUP BY k`` — fold a column of
     serialized sketches into one (lib.rs:630-804)."""
-    return _merge_series(sketches)
+    return _merged_wire(sketches)
 
 
-def ddsketch_stats_agg(sketch_col) -> Column:
+@arrow_udf(STATS_FULL_SCHEMA)
+def ddsketch_stats_agg(sketches: pa.Array) -> pa.Scalar:
     """Aggregate returning STRUCT(sketch, count, sum, avg, min, max, p25, p50,
     p75, p90, p95, p99) in one pass (lib.rs:811-989).
 
-    Spark's grouped-agg pandas UDFs cannot return structs, so this composes
-    the binary aggregate with the one-decode finalizer — in SQL use
-    ``ddsketch_stats_full(ddsketch_agg(s))``.
+    The stats are read off the merged sketch's own wire bytes, as any later
+    ``ddsketch_stats_full(sketch)`` would read them. A group with no
+    decodable row gives a non-NULL struct of 12 NULL fields.
     """
-    return ddsketch_stats_full(ddsketch_agg(sketch_col))
+    row = stats_full_row(_merged_wire(sketches))
+    return pa.scalar(dict(zip(STATS_FULL_SCHEMA.names, row)), type=_STATS_FULL_ARROW)
 
 
 def sketch_values_agg(value_col, alpha: float = DEFAULT_RELATIVE_ACCURACY) -> Column:
@@ -97,10 +108,11 @@ def sketch_values_agg(value_col, alpha: float = DEFAULT_RELATIVE_ACCURACY) -> Co
     ``native.struct_to_wire``, which has partial aggregation.
     """
 
-    @pandas_udf(BinaryType())
-    def _agg(values: pd.Series) -> bytes:
+    @arrow_udf(BinaryType())
+    def _agg(values: pa.Array) -> Optional[bytes]:
+        # drop_null keeps NaN; extend_array skips every non-finite value
         s = DDSketch(alpha)
-        s.extend_array(values.dropna().to_numpy())
+        s.extend_array(values.drop_null().to_numpy(zero_copy_only=False))
         return s.encode() if s.count > 0 else None
 
     return _agg(value_col)
@@ -111,14 +123,15 @@ def merge_sketches_native(
 ) -> DataFrame:
     """Wire-blob merge with Catalyst partial aggregation end to end.
 
-    ``ddsketch_agg`` is an ``AggregateInPandas``: Spark gives it no partial
-    aggregation, so every input blob shuffles to its group's reducer. This
-    form keeps the aggregate in Catalyst: decode blobs to the struct working
-    form (a map-only ArrowEvalPython — no shuffle), merge natively
-    (bin-exploded hash aggregate with map-side partial aggregation, so the
-    shuffle carries combined (key, sign, bin) counts), then re-encode at the
-    boundary. This is the closest pure-Python approximation of the
-    reference's cross-thread ``combine`` (lib.rs:740-765).
+    ``ddsketch_agg`` is an ``ArrowAggregatePython``: Spark gives it no
+    partial aggregation, so every input blob shuffles to its group's
+    reducer. This form keeps the aggregate in Catalyst: decode blobs to the
+    struct working form (a map-only ArrowEvalPython — no shuffle), merge
+    natively (bin-exploded hash aggregate with map-side partial
+    aggregation, so the shuffle carries combined (key, sign, bin) counts),
+    then re-encode at the boundary. This is the closest pure-Python
+    approximation of the reference's cross-thread ``combine``
+    (lib.rs:740-765).
 
     A group with mixed mappings yields a NULL sketch (the mismatch rule in
     the module docstring); NULL and undecodable blobs are skipped.

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from . import scalar
-from .aggregate import ddsketch_agg
+from .aggregate import ddsketch_agg, ddsketch_stats_agg
 
 _FUNCTIONS = {
     "ddsketch_empty": scalar.ddsketch_empty,  # SQL form of ddsketch_create
@@ -27,9 +27,10 @@ _FUNCTIONS = {
     "ddsketch_sum": scalar.ddsketch_sum,
     "ddsketch_avg": scalar.ddsketch_avg,
     "ddsketch_stats": scalar.ddsketch_stats,
-    "ddsketch_stats_full": scalar.ddsketch_stats_full,  # finalize of stats_agg
+    "ddsketch_stats_full": scalar.ddsketch_stats_full,  # stats_agg's struct, one blob
     "ddsketch_prepare": scalar.ddsketch_prepare_sql,  # one-value sketch(v, alpha)
     "ddsketch_agg": ddsketch_agg,
+    "ddsketch_stats_agg": ddsketch_stats_agg,
 }
 
 
@@ -79,11 +80,9 @@ def register_all(spark: SparkSession) -> SparkSession:
         lambda: DDSketch(DEFAULT_RELATIVE_ACCURACY).encode(),
         BinaryType(),
     )
-    # the reference's 12th function, ddsketch_stats_agg (lib.rs:955-981):
-    # grouped-agg pandas UDFs cannot return structs, so the SQL name is
-    # provided as a session-local macro that rewrites the call into the
-    # equivalent ddsketch_stats_full(ddsketch_agg(s)) composition — the
-    # one name a migrating query would otherwise have to rewrite by hand.
+    # Spark rejects FILTER and DISTINCT on Python UDAFs; the session's
+    # spark.sql folds FILTER into the aggregate input and names the
+    # function in the DISTINCT error (see rewrite.py)
     from .rewrite import install_sql_rewrite
 
     install_sql_rewrite(spark)

@@ -1,20 +1,17 @@
-"""SQL-macro rewrite for ``ddsketch_stats_agg``.
+"""FILTER/DISTINCT handling for the two blob aggregates in ``spark.sql``.
 
-The reference registers ``ddsketch_stats_agg`` as ONE aggregate function
-(lib.rs:955-981) returning a stats struct. Spark's grouped-agg pandas
-UDFs cannot return structs (PySparkNotImplementedError as of 4.1), so the
-engine implements the same semantics as the composition
-``ddsketch_stats_full(ddsketch_agg(s))`` — one merge aggregate, one
-struct-producing finalizer, identical output.
-
-So that a reference query migrates VERBATIM —
-``SELECT service, ddsketch_stats_agg(sketch) FROM t GROUP BY 1`` —
-``register_all`` installs a session-local ``spark.sql`` wrapper that
-rewrites each ``ddsketch_stats_agg(<expr>)`` call into the composition
-before parsing. The rewrite is purely syntactic but string/comment-aware
-and paren-balanced, so sketch expressions containing nested calls,
-quoted literals, or comments rewrite correctly; occurrences inside
-string literals, quoted identifiers, or comments are left untouched.
+``ddsketch_agg`` and ``ddsketch_stats_agg`` are registered Spark
+aggregates (Arrow grouped-agg UDFs), so a reference query such as
+``SELECT service, ddsketch_stats_agg(sketch) FROM t GROUP BY 1`` parses
+as is. Spark still refuses two aggregate clauses on any Python UDAF that
+the reference's host engine accepts: ``FILTER (WHERE ...)`` and
+``DISTINCT``. ``register_all`` installs a session-local ``spark.sql``
+wrapper that folds a FILTER clause into the aggregate input and turns
+DISTINCT into a clear, function-named error, before parsing. The rewrite
+is purely syntactic but string/comment-aware and paren-balanced, so
+sketch expressions containing nested calls, quoted literals, or comments
+rewrite correctly; occurrences inside string literals, quoted
+identifiers, or comments are left untouched.
 """
 
 from __future__ import annotations
@@ -96,6 +93,7 @@ def _matching_paren(sql: str, open_idx: int) -> int:
     return -1
 
 
+_AGG_NAME_RE = re.compile(r"ddsketch_(?:stats_)?agg", re.IGNORECASE)
 _DISTINCT_RE = re.compile(r"^\s*DISTINCT\b", re.IGNORECASE)
 _WHERE_RE = re.compile(r"^\s*WHERE\b(.*)$", re.IGNORECASE | re.DOTALL)
 
@@ -144,26 +142,24 @@ def _parse_filter_clause(sql: str, pos: int):
     return w.group(1).strip(), close + 1
 
 
-def _rewrite_agg_calls(sql: str, name: str, template) -> str:
-    """Rewrite standalone ``<name>(<args>)[ FILTER (WHERE cond)]`` calls.
+def rewrite_stats_agg(sql: str) -> str:
+    """Fold the aggregate clauses Spark rejects on a Python UDAF out of
+    every top-level-code ``ddsketch_stats_agg(...)`` / ``ddsketch_agg(...)``
+    call; any other query comes back unchanged.
 
-    ``template(inner) -> str`` builds the replacement call body; a
-    trailing ``FILTER (WHERE cond)`` folds into the aggregate input as
-    ``CASE WHEN cond THEN <inner> END`` — exact because ``ddsketch_agg``
-    skips NULL inputs (the reference's aggregates do too, lib.rs:191-194).
+    A trailing ``FILTER (WHERE cond)`` folds into the aggregate input as
+    ``CASE WHEN cond THEN <inner> END`` — exact because both aggregates
+    skip NULL inputs (the reference's aggregates do too, lib.rs:191-194).
     ``DISTINCT`` inside the call raises a clear error naming the function
-    (Spark pandas UDAFs cannot dedup; the host engine the reference rides
-    in accepts it, so a migrating query must dedup in a subquery).
+    (Spark's Python UDAFs cannot dedup; the host engine the reference
+    rides in accepts it, so a migrating query must dedup in a subquery).
 
     Rewrites run one splice at a time, re-scanning the WHOLE output after
-    each: a rewritable call can sit INSIDE another call's FILTER
-    condition, so any batch splice plan computed on the original string
-    goes stale the moment one replacement changes the length. Each
-    actionable splice strictly reduces the count of foldable calls
-    (replacements carry neither the rewritten name nor a FILTER clause
-    on it), so the loop terminates."""
+    each: a foldable call can sit INSIDE another call's FILTER condition,
+    so any batch splice plan computed on the original string goes stale
+    the moment one replacement changes the length. Each splice strictly
+    reduces the count of FILTER clauses, so the loop terminates."""
     out = sql
-    pat = re.compile(re.escape(name), re.IGNORECASE)
     for _ in range(len(sql) + 1):  # hard bound; loop exits via break
         skip_spans = [(s, e) for s, e, _ in _scan_token_spans(out)]
 
@@ -171,7 +167,7 @@ def _rewrite_agg_calls(sql: str, name: str, template) -> str:
             return any(s <= idx < e for s, e in skip_spans)
 
         spliced = False
-        for m in pat.finditer(out):
+        for m in _AGG_NAME_RE.finditer(out):
             if in_skip(m.start()):
                 continue
             # standalone identifier only (not my_ddsketch_stats_agg2)
@@ -194,24 +190,21 @@ def _rewrite_agg_calls(sql: str, name: str, template) -> str:
             # skip leading comments so `(/* c */ DISTINCT x)` hits the
             # clear error below, not the opaque Spark UDAF failure
             if _DISTINCT_RE.match(inner[_skip_ws_comments(inner, 0) :]):
+                name = m.group(0).lower()
                 raise ValueError(
-                    f"{name}(DISTINCT ...) is not supported: Spark pandas"
+                    f"{name}(DISTINCT ...) is not supported: Spark's Python"
                     " UDAFs cannot deduplicate their input. Deduplicate"
                     " in a subquery instead, e.g."
                     f" {name}(s) over (SELECT DISTINCT s FROM ...)."
                 )
             filt = _parse_filter_clause(out, close + 1)
-            end = close + 1
-            had_filter = filt is not None
-            if had_filter:
-                cond, end = filt
-                # the newline before THEN terminates any trailing line
-                # comment in cond (strip() removed the newline that did
-                # so in the original text); harmless otherwise
-                inner = f"CASE WHEN {cond}\n THEN {inner} END"
-            repl = template(inner, had_filter)
-            if repl is None:
-                continue  # non-actionable (plain call) — keep scanning
+            if filt is None:
+                continue  # plain call: Spark parses it as is
+            cond, end = filt
+            # the newline before THEN terminates any trailing line comment
+            # in cond (strip() removed the newline that did so in the
+            # original text); harmless otherwise
+            repl = f"{m.group(0)}(CASE WHEN {cond}\n THEN {inner} END)"
             out = out[: m.start()] + repl + out[end:]
             spliced = True
             break  # indices are stale now — re-scan the new string
@@ -220,47 +213,18 @@ def _rewrite_agg_calls(sql: str, name: str, template) -> str:
     return out
 
 
-def rewrite_stats_agg(sql: str) -> str:
-    """Rewrite every top-level-code occurrence of
-    ``ddsketch_stats_agg(<args>)`` to
-    ``ddsketch_stats_full(ddsketch_agg(<args>))``, folding a trailing
-    ``FILTER (WHERE ...)`` clause into the aggregate input (Spark pandas
-    UDAFs reject the clause; the reference's host engine accepts it on
-    any aggregate). ``ddsketch_agg(...) FILTER (WHERE ...)`` gets the
-    same fold. ``DISTINCT`` raises a clear error for both names. Leaves
-    the query untouched when neither name appears outside
-    strings/comments."""
-    out = _rewrite_agg_calls(
-        sql,
-        "ddsketch_stats_agg",
-        lambda inner, _f: f"ddsketch_stats_full(ddsketch_agg({inner}))",
-    )
-    # plain ddsketch_agg parses natively; only FILTER/DISTINCT intervene
-    return _rewrite_agg_calls(
-        out,
-        "ddsketch_agg",
-        lambda inner, had_filter: (
-            f"ddsketch_agg({inner})" if had_filter else None
-        ),
-    )
-
-
 def install_sql_rewrite(spark) -> None:
-    """Wrap ``spark.sql`` on THIS session instance so queries calling
-    ``ddsketch_stats_agg(...)`` run verbatim. Idempotent; all other
+    """Wrap ``spark.sql`` on THIS session instance so FILTER and DISTINCT
+    on the blob aggregates behave as in the reference. Idempotent; all other
     queries pass through unchanged (the wrapper short-circuits on a
-    cheap substring check before doing any scanning)."""
+    cheap name search before doing any scanning)."""
     if getattr(spark, "_ddsketch_sql_rewrite_installed", False):
         return
     original = spark.sql
 
     def sql(query, *args, **kwargs):
-        if isinstance(query, str):
-            q = query.lower()
-            # "ddsketch_agg" is NOT a substring of "ddsketch_stats_agg",
-            # so both names need the cheap pre-check
-            if "ddsketch_stats_agg" in q or "ddsketch_agg" in q:
-                query = rewrite_stats_agg(query)
+        if isinstance(query, str) and _AGG_NAME_RE.search(query):
+            query = rewrite_stats_agg(query)
         return original(query, *args, **kwargs)
 
     spark.sql = sql

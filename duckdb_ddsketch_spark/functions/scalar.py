@@ -278,34 +278,34 @@ def ddsketch_stats(sketch: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["count", "sum", "min", "max", "avg"])
 
 
+_STATS_QUANTILES = (0.25, 0.50, 0.75, 0.90, 0.95, 0.99)
+
+
+def stats_full_row(blob) -> tuple:
+    """One ``STATS_FULL_SCHEMA`` row from a wire blob: the stats and the six
+    quantiles off one decode (lib.rs:811-895). A NULL or undecodable blob
+    gives 12 NULLs."""
+    s = _try_decode(blob)
+    if s is None:
+        return (None,) * len(STATS_FULL_SCHEMA.fields)
+    return (
+        bytes(blob),
+        s.get_count(),
+        s.get_sum(),
+        s.get_avg(),
+        s.get_min(),
+        s.get_max(),
+        *(s.quantile(q) for q in _STATS_QUANTILES),
+    )
+
+
 @pandas_udf(STATS_FULL_SCHEMA)
 def ddsketch_stats_full(sketch: pd.Series) -> pd.DataFrame:
-    """Finalizer of ddsketch_stats_agg: all stats + 6 quantiles in one decode
-    (lib.rs:811-895). Compose as ``ddsketch_stats_full(ddsketch_agg(s))``."""
-    cols = ["sketch", "count", "sum", "avg", "min", "max", "p25", "p50", "p75", "p90", "p95", "p99"]
-    rows = []
-    for blob in sketch:
-        s = _try_decode(blob)
-        if s is None:
-            rows.append((None,) * 12)
-        else:
-            rows.append(
-                (
-                    bytes(blob),
-                    s.get_count(),
-                    s.get_sum(),
-                    s.get_avg(),
-                    s.get_min(),
-                    s.get_max(),
-                    s.quantile(0.25),
-                    s.quantile(0.50),
-                    s.quantile(0.75),
-                    s.quantile(0.90),
-                    s.quantile(0.95),
-                    s.quantile(0.99),
-                )
-            )
-    return pd.DataFrame(rows, columns=cols)
+    """``ddsketch_stats_agg``'s struct for one stored blob: all stats + 6
+    quantiles in one decode (lib.rs:811-895)."""
+    return pd.DataFrame(
+        [stats_full_row(b) for b in sketch], columns=STATS_FULL_SCHEMA.names
+    )
 
 
 def ddsketch_prepare(value_col, alpha: float = DEFAULT_RELATIVE_ACCURACY):

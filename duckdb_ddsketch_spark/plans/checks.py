@@ -69,13 +69,15 @@ def has_partial_aggregation(df: DataFrame) -> bool:
 
 
 def python_eval_nodes(df: DataFrame) -> list[str]:
-    """Python execution nodes in the plan. ``ArrowEvalPython`` /
-    ``AggregateInPandas`` / ``MapInPandas`` are the vectorized (acceptable)
-    forms; ``BatchEvalPython`` is row-at-a-time and must never appear."""
+    """Python execution nodes in the plan, by their PySpark 4.1 names.
+    ``ArrowEvalPython`` / ``ArrowAggregatePython`` (a grouped-agg pandas or
+    Arrow UDAF) / ``ArrowWindowPython`` / ``MapInArrow`` / ``MapInPandas``
+    / ``FlatMapGroupsInPandas`` are the vectorized (acceptable) forms;
+    ``BatchEvalPython`` is row-at-a-time and must never appear."""
     plan = formatted_plan(df)
     return re.findall(
-        r"(BatchEvalPython|ArrowEvalPython|AggregateInPandas|MapInPandas|"
-        r"FlatMapGroupsInPandas|WindowInPandas)",
+        r"(BatchEvalPython|ArrowEvalPython|ArrowAggregatePython|"
+        r"ArrowWindowPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas)",
         plan,
     )
 

@@ -457,7 +457,7 @@ def q11(spark, sf_dir):
     # Arrow hop decodes the blobs to the struct working form, the merge is a
     # Catalyst hash aggregate WITH partial aggregation, and the quantiles are
     # fold expressions over the merged struct — no re-encode, no Python
-    # stats pass (raw AggregateInPandas ddsketch_agg — which shuffles every
+    # stats pass (raw ArrowAggregatePython ddsketch_agg — which shuffles every
     # blob to its reducer — stays covered by the pure-SQL CTE query)
     decoded = pre.select(
         "event_type", native.wire_to_struct("sketch").alias("sketch")
@@ -476,8 +476,8 @@ def q11(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q12 — ddsketch_stats_agg's finalizer (ddsketch_stats_full) over natively
-# ingested wire blobs, flattened
+# q12 — ddsketch_stats_full (ddsketch_stats_agg's struct for one blob) over
+# natively ingested wire blobs, flattened
 # ---------------------------------------------------------------------------
 
 _Q12_STATS = ("count", "sum", "avg", "min", "max")
@@ -1161,8 +1161,8 @@ def q17(spark, sf_dir):
 
     register_ddsketch_functions(spark)
     register_views(spark, sf_dir, ["orders"])
-    # build per-status pre-sketches in SQL (scalar sub-pipeline), roll up with
-    # the registered UDAF, extract stats via the struct-returning scalar.
+    # build per-status pre-sketches in SQL (scalar sub-pipeline), roll up
+    # with the registered UDAF, then merge and finalize with the stats UDAF.
     # The seed comes from the reference's TABLE-FUNCTION constructor
     # syntax VERBATIM (src/lib.rs:53-113, the README's first query) — a
     # Python UDTF emitting one constant (sketch BINARY) row, cross-joined
@@ -1191,8 +1191,7 @@ def q17(spark, sf_dir):
         ),
         rolled AS (
             -- the reference's single-name aggregate, VERBATIM (lib.rs:955-981):
-            -- register_all's SQL macro rewrites it to
-            -- ddsketch_stats_full(ddsketch_agg(sketch))
+            -- one registered Arrow UDAF that merges and finalizes per group
             SELECT o_orderstatus, ddsketch_stats_agg(sketch) AS st
             FROM sketches GROUP BY o_orderstatus
         )
@@ -2540,7 +2539,7 @@ def q52(spark, sf_dir):
     the filter sits on the partition column) and from the week-grain store
     produced by ``compact_sketch_table`` (2 week-directories). Stored blobs
     merge on the native path — a Catalyst hash aggregate with partial
-    aggregation, not an AggregateInPandas over raw blob rows. Both paths
+    aggregation, not an ArrowAggregatePython over raw blob rows. Both paths
     must hash-match the direct aggregation oracle: the compaction rewrite
     is thereby driver-checked end to end."""
     from ..functions.aggregate import merge_sketches_native

@@ -31,6 +31,7 @@ __all__ = ["DDSketch", "SketchMergeError", "DEFAULT_RELATIVE_ACCURACY"]
 DEFAULT_RELATIVE_ACCURACY = 0.01
 _GAMMA_TOLERANCE = 1e-10
 _INDEX_MIN, _INDEX_MAX = -(2**31), 2**31 - 1
+_BIGINT_LIMIT = 2**63
 
 
 class SketchMergeError(ValueError):
@@ -401,8 +402,19 @@ class DDSketch:
                 + sum(sketch.negative_bins.values())
                 + sketch.zero_count
             )
+        # every count path returns a BIGINT: a NaN, infinite or wider count
+        # is a malformed blob, like a bin index outside int32
+        if not -_BIGINT_LIMIT <= sketch.count < _BIGINT_LIMIT:
+            raise ValueError("count outside BIGINT")
+        # the stats and quantiles read bin values: a negative gamma to a
+        # fractional power has no real value, and an overflowing power
+        # raises in _sum_from_bins, so both are malformed blobs even when
+        # the sum is on the wire
+        if sketch.gamma < 0.0 and not sketch.index_offset.is_integer():
+            raise ValueError("negative gamma with a fractional index offset")
+        bin_sum = sketch._sum_from_bins()
         if not has_explicit_sum:
-            sketch.sum = sketch._sum_from_bins()
+            sketch.sum = bin_sum
         if not (math.isfinite(sketch.min) and math.isfinite(sketch.max)):
             sketch._min_max_from_bins()
         return sketch

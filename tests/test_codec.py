@@ -125,6 +125,38 @@ def test_merge_rejects_offset_mismatch():
         s1.merge(s2)
 
 
+def test_decode_rejects_counts_and_bin_values_spark_cannot_hold():
+    """A blob whose count is NaN, infinite or past BIGINT, or whose bins
+    have no real value, is malformed: decode raises, so every path NULLs
+    the row instead of failing the task that converts it."""
+
+    def blob(gamma=None, offset=None, count=None, explicit_sum=False):
+        s = DDSketch(0.01).extend([1.0, 5.0])
+        if gamma is not None:
+            s.gamma = gamma
+        if offset is not None:
+            s.index_offset = offset
+        if count is not None:
+            s.positive_bins[min(s.positive_bins)] = count
+        out = bytearray(s.encode())
+        if explicit_sum:
+            out.append(codec.make_flag(codec.FLAG_SKETCH_FEATURES, codec.SUBFLAG_SUM))
+            codec.encode_float64_le(out, 6.0)
+        return bytes(out)
+
+    for bad in (
+        blob(count=math.nan),
+        blob(count=math.inf),
+        blob(count=1e19),
+        blob(gamma=-1.5, offset=0.5),  # (-1.5) ** 0.5 is complex
+        blob(gamma=1e300, explicit_sum=True),  # bin value overflows
+    ):
+        with pytest.raises((ValueError, OverflowError)):
+            DDSketch.decode(bad)
+    # nonsense but real: a negative gamma under an integral offset decodes
+    assert DDSketch.decode(blob(gamma=-1.5)).get_count() == 2
+
+
 def test_quantiles_1_to_100():
     s = DDSketch(0.01).extend(float(i) for i in range(1, 101))
     p50 = s.quantile(0.50)

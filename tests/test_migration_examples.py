@@ -207,9 +207,9 @@ def test_ingest_paths_ranked_example(spark, fixtures):
 
 def test_reference_readme_stats_agg_verbatim(spark, fixtures):
     """The reference README's ddsketch_stats_agg examples, pasted verbatim
-    (README.md:266-291 of the reference): the single registered name —
-    round-5 session macro — including the outer field-access form with
-    every documented struct field."""
+    (README.md:266-291 of the reference): the single registered aggregate,
+    including the outer field-access form with every documented struct
+    field."""
     out = {
         r["service"]: r
         for r in spark.sql(
@@ -284,9 +284,9 @@ def test_reference_readme_folding_verbatim(spark, fixtures):
 
 def test_stats_agg_filter_clause(spark, fixtures):
     """``... FILTER (WHERE cond)`` — the reference's host engine accepts
-    the clause on any aggregate; Spark pandas UDAFs reject it, so the
-    session macro folds it into the aggregate input as CASE WHEN (exact:
-    ddsketch_agg skips NULL inputs). Both ddsketch_stats_agg and
+    the clause on any aggregate; Spark's Python UDAFs reject it, so the
+    session's spark.sql folds it into the aggregate input as CASE WHEN
+    (exact: both aggregates skip NULL inputs). Both ddsketch_stats_agg and
     ddsketch_agg take the fold; results must equal the WHERE form."""
     filtered = spark.sql(
         """
@@ -339,7 +339,7 @@ def test_stats_agg_filter_all_rows_filtered(spark, fixtures):
 
 def test_stats_agg_distinct_raises_clearly(spark, fixtures):
     """DISTINCT inside either aggregate raises a clear, function-named
-    error (Spark pandas UDAFs cannot dedup; without the macro the user
+    error (Spark's Python UDAFs cannot dedup; without the rewrite the user
     would see an opaque 'pythonudaf does not support DISTINCT')."""
     for fn in ("ddsketch_stats_agg", "ddsketch_agg"):
         with pytest.raises(ValueError, match=fn + r"\(DISTINCT"):
@@ -361,10 +361,7 @@ def test_rewrite_filter_string_and_comment_safety():
         "ddsketch_agg(CASE WHEN note <> 'FILTER ('\n THEN s END) AS x"
         in out
     )
-    assert (
-        "ddsketch_stats_full(ddsketch_agg(s)) /* FILTER: just a comment */"
-        in out
-    )
+    assert "ddsketch_stats_agg(s) /* FILTER: just a comment */ AS y" in out
     # a string literal mentioning the names is untouched
     s = "SELECT 'use ddsketch_stats_agg(DISTINCT x) FILTER' AS doc FROM t"
     assert rewrite_stats_agg(s) == s
@@ -381,10 +378,17 @@ def test_rewrite_backslash_escaped_quote_in_literal(spark, fixtures):
         "SELECT 'don\\'t' AS note, ddsketch_stats_agg(latency_sketch) AS st"
         " FROM hourly_latency_sketches"
     )
-    out = rewrite_stats_agg(sql)
-    assert "ddsketch_stats_full(ddsketch_agg(latency_sketch))" in out
+    assert rewrite_stats_agg(sql) == sql
     # and it executes end-to-end through the session wrapper
     row = spark.sql(sql).collect()[0]
+    assert row.note == "don't" and row.st["count"] > 0
+    # a FILTER clause after the escaped literal is still found and folded
+    filtered = sql.replace(" AS st", " FILTER (WHERE hour < 2) AS st")
+    assert (
+        "ddsketch_stats_agg(CASE WHEN hour < 2\n THEN latency_sketch END) AS st"
+        in rewrite_stats_agg(filtered)
+    )
+    row = spark.sql(filtered).collect()[0]
     assert row.note == "don't" and row.st["count"] > 0
     # conversely: the name INSIDE an escaped literal stays untouched
     s2 = "SELECT 'it\\'s ddsketch_stats_agg(x)' AS doc FROM hourly_latency_sketches"
@@ -410,7 +414,7 @@ def test_rewrite_filter_comment_edge_cases(spark, fixtures):
     ).collect()
     assert any(r["cnt"] is not None for r in rows)
 
-    # the macro itself emits a newline-terminated splice
+    # the rewrite itself emits a newline-terminated splice
     out = rewrite_stats_agg(
         "SELECT ddsketch_agg(s) FILTER (WHERE c > 1 -- note\n) AS x FROM t"
     )
@@ -423,7 +427,7 @@ def test_rewrite_filter_comment_edge_cases(spark, fixtures):
     assert "FILTER" not in out.split("--")[0].replace(
         "/* note */", ""
     ) or "CASE WHEN" in out
-    assert "ddsketch_stats_full(ddsketch_agg(CASE WHEN c" in out
+    assert "ddsketch_stats_agg(CASE WHEN c" in out
 
     # (3) FILTERED identifier after the call is untouched
     q = "SELECT ddsketch_agg(s), FILTERED (x) FROM t"
@@ -435,15 +439,17 @@ def test_rewrite_filter_comment_edge_cases(spark, fixtures):
         "SELECT ddsketch_stats_agg(a) FILTER (WHERE b > "
         "(SELECT ddsketch_stats_agg(c) FROM u)) FROM t"
     )
-    assert out.count("ddsketch_stats_full(ddsketch_agg(") == 2
-    assert "FILTER" not in out and "gg(c)) FROM u)) FROM t)" not in out
+    assert out == (
+        "SELECT ddsketch_stats_agg(CASE WHEN b > "
+        "(SELECT ddsketch_stats_agg(c) FROM u)\n THEN a END) FROM t"
+    )
 
     # (5) comment between '(' and WHERE inside the FILTER parens
     out = rewrite_stats_agg(
         "SELECT ddsketch_stats_agg(s) FILTER (/* keep */ WHERE c) FROM t"
     )
     assert "FILTER" not in out
-    assert "ddsketch_stats_full(ddsketch_agg(CASE WHEN c" in out
+    assert "ddsketch_stats_agg(CASE WHEN c" in out
 
 
 def test_rewrite_distinct_after_comment_still_raises():
@@ -457,7 +463,5 @@ def test_rewrite_distinct_after_comment_still_raises():
             with pytest.raises(ValueError, match=fn + r"\(DISTINCT"):
                 rewrite_stats_agg(f"SELECT {fn}({lead}DISTINCT x) FROM t")
     # the word DISTINCT merely INSIDE a comment is not the keyword
-    out = rewrite_stats_agg(
-        "SELECT ddsketch_stats_agg(/* DISTINCT? no */ s) FROM t"
-    )
-    assert "ddsketch_stats_full(ddsketch_agg(/* DISTINCT? no */ s))" in out
+    q = "SELECT ddsketch_stats_agg(/* DISTINCT? no */ s) FROM t"
+    assert rewrite_stats_agg(q) == q

@@ -9,9 +9,11 @@ import math
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from duckdb_ddsketch_spark import DDSketch
+from duckdb_ddsketch_spark.sketch import SketchMergeError
 from duckdb_ddsketch_spark.operators import native
 
 
@@ -234,12 +236,25 @@ def _huge_index_blob() -> bytes:
     return s.encode()
 
 
+def _with_mapping(blob: bytes, gamma: float, index_offset: float) -> bytes:
+    s = DDSketch.decode(blob)
+    s.gamma, s.index_offset = gamma, index_offset
+    return s.encode()
+
+
+def _with_bin_count(blob: bytes, count: float) -> bytes:
+    s = DDSketch.decode(blob)
+    s.positive_bins[min(s.positive_bins)] = count
+    return s.encode()
+
+
 _GOOD_BLOBS = [
     DDSketch(0.01).extend([1.0 + i, 10.0 * i, -2.5 * i, 0.0]).encode()
     for i in range(6)
 ]
 _BAD_BLOBS = {
     "huge_index": _huge_index_blob(),
+    "huge_count": _with_bin_count(_GOOD_BLOBS[1], 1e19),  # past BIGINT
     "truncated": _GOOD_BLOBS[1][:-3],
     "empty": b"",
     "null": None,
@@ -249,10 +264,16 @@ _BAD_BLOBS = {
 @pytest.mark.parametrize("bad", sorted(_BAD_BLOBS))
 def test_malformed_blob_skipped_on_every_path(spark, bad):
     """One malformed row fails no task: the per-row count, the struct
-    boundary, ``ddsketch_agg`` and ``merge_sketches_native`` skip or NULL the
-    same row, and both group merges equal the kernel merge of the good rows."""
-    from duckdb_ddsketch_spark.functions import ddsketch_agg, ddsketch_count
+    boundary, ``ddsketch_agg``, ``merge_sketches_native`` and
+    ``ddsketch_stats_agg`` skip or NULL the same row, and every group merge
+    equals the kernel merge of the good rows."""
+    from duckdb_ddsketch_spark.functions import (
+        ddsketch_agg,
+        ddsketch_count,
+        ddsketch_stats_agg,
+    )
     from duckdb_ddsketch_spark.functions.aggregate import merge_sketches_native
+    from duckdb_ddsketch_spark.functions.scalar import stats_full_row
 
     blobs = _GOOD_BLOBS + [_BAD_BLOBS[bad]]
     df = spark.createDataFrame(
@@ -278,10 +299,124 @@ def test_malformed_blob_skipped_on_every_path(spark, bad):
     expected = DDSketch.decode(_GOOD_BLOBS[0])
     for blob in _GOOD_BLOBS[1:]:
         expected.merge(DDSketch.decode(blob))
-    udaf = df.groupBy("k").agg(ddsketch_agg("sketch").alias("sketch")).first()
+    udaf = df.groupBy("k").agg(
+        ddsketch_agg("sketch").alias("sketch"),
+        ddsketch_stats_agg("sketch").alias("st"),
+    ).first()
     nat = merge_sketches_native(df, ["k"]).first()
     assert bytes(udaf.sketch) == expected.encode()
     assert bytes(nat.sketch) == expected.encode()
+    assert bytes(udaf.st.sketch) == expected.encode()
+    assert tuple(udaf.st) == stats_full_row(expected.encode())
+
+
+def test_stats_agg_all_bad_group_is_struct_of_nulls(spark):
+    """A group with no decodable row: ``ddsketch_agg`` gives NULL, and
+    ``ddsketch_stats_agg`` a non-NULL struct whose 12 fields are NULL."""
+    from duckdb_ddsketch_spark.functions import ddsketch_agg, ddsketch_stats_agg
+
+    df = spark.createDataFrame(
+        [("g", b) for b in _BAD_BLOBS.values()], "k string, sketch binary"
+    )
+    out = df.groupBy("k").agg(
+        ddsketch_agg("sketch").alias("m"), ddsketch_stats_agg("sketch").alias("st")
+    ).first()
+    assert out.m is None
+    assert out.st is not None
+    assert len(out.st) == 12 and all(v is None for v in out.st)
+
+
+def _decode_raises(blob: bytes) -> bool:
+    try:
+        DDSketch.decode(blob)
+    except Exception:
+        return True
+    return False
+
+
+# random bytes, good blobs whose mapping is rewritten (gamma 0 with a
+# negative bin raises in decode; a negative gamma decodes to nonsense
+# quantiles, or raises under a fractional index offset) or whose bin count
+# leaves BIGINT, and truncated good blobs, mixed with good rows in
+# arbitrary order
+_SWEEP_BLOBS = st.one_of(
+    st.binary(max_size=48),
+    st.builds(
+        _with_mapping,
+        st.sampled_from(_GOOD_BLOBS),
+        st.sampled_from([math.nan, -1.5, -1.02, 0.0, math.inf]),
+        st.sampled_from([0.0, 0.5]),
+    ),
+    st.builds(
+        _with_bin_count,
+        st.sampled_from(_GOOD_BLOBS),
+        st.sampled_from([math.nan, math.inf, 1e19]),
+    ),
+    st.builds(
+        lambda b, n: b[: len(b) - n],
+        st.sampled_from(_GOOD_BLOBS),
+        st.integers(min_value=1, max_value=30),
+    ),
+    st.sampled_from(_GOOD_BLOBS),
+)
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(blobs=st.lists(_SWEEP_BLOBS, min_size=1, max_size=5))
+def test_malformed_blob_sweep_paths_agree(spark, blobs):
+    """Over random and damaged blobs, one Spark query per example: no task
+    fails; a row is NULL under ``ddsketch_count`` exactly when it is NULL
+    under ``wire_to_struct`` and exactly when the kernel's decode raises;
+    ``ddsketch_agg`` and ``ddsketch_stats_agg(...).sketch`` equal the kernel
+    merge in arrival order."""
+    from duckdb_ddsketch_spark.functions import (
+        ddsketch_agg,
+        ddsketch_count,
+        ddsketch_stats_agg,
+    )
+
+    # one partition keeps arrival order through the group's shuffle
+    df = spark.createDataFrame(
+        [("g", i, b) for i, b in enumerate(blobs)], "k string, i int, sketch binary"
+    ).coalesce(1)
+    per_row = df.select(
+        "i",
+        ddsketch_count(F.col("sketch")).alias("c"),
+        native.wire_to_struct("sketch").alias("s"),
+    )
+    merged = df.groupBy("k").agg(
+        ddsketch_agg("sketch").alias("m"), ddsketch_stats_agg("sketch").alias("st")
+    )
+    rows = per_row.unionByName(merged.drop("k"), allowMissingColumns=True).collect()
+
+    agg = next(r for r in rows if r.i is None)
+    for r in rows:
+        if r.i is None:
+            continue
+        raises = _decode_raises(blobs[r.i])
+        assert (r.c is None) == raises, r
+        assert (r.s is None or all(v is None for v in r.s)) == raises, r
+
+    expected = None
+    for blob in blobs:
+        if not blob or _decode_raises(blob):
+            continue
+        s = DDSketch.decode(blob)
+        if expected is None:
+            expected = s
+        else:
+            try:
+                expected.merge(s)
+            except SketchMergeError:
+                pass  # mismatched mapping: the row is dropped
+    want = None if expected is None else expected.encode()
+    assert (None if agg.m is None else bytes(agg.m)) == want
+    assert (None if agg.st.sketch is None else bytes(agg.st.sketch)) == want
 
 
 def test_struct_cdf_matches_kernel(spark):

@@ -5,9 +5,9 @@ scale-killer operators:
 
 - ``CartesianProduct`` — forbidden everywhere: an unconditioned cross of
   two shuffled sides never survives a 100x scale-up.
-- ``ArrowAggregatePython`` (grouped-agg pandas UDAF — Spark gives it no
-  partial aggregation, so every input row shuffles to its group's
-  reducer) — allowed ONLY in the reference-surface-coverage queries whose
+- ``ArrowAggregatePython`` (grouped-agg pandas or Arrow UDAF — Spark
+  gives it no partial aggregation, so every input row shuffles to its
+  group's reducer) — allowed ONLY in the reference-surface-coverage queries whose
   inputs are bounded by construction; the scale path for the same
   semantics is the native merge (q11/q13/q14/q35/q52), pinned separately
   in test_plans.py.
@@ -97,8 +97,7 @@ def test_no_cartesian_product_anywhere(plans):
 
 
 def test_pandas_agg_only_in_surface_queries(plans):
-    hits = {n for n, p in plans.items() if "ArrowAggregatePython" in p
-            or "AggregateInPandas" in p}
+    hits = {n for n, p in plans.items() if "ArrowAggregatePython" in p}
     assert hits <= ALLOWED_PANDAS_AGG, (
         f"no-partial-agg pandas aggregate crept into: "
         f"{sorted(hits - ALLOWED_PANDAS_AGG)}"

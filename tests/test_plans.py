@@ -75,6 +75,25 @@ def test_no_row_at_a_time_python_anywhere(spark, lineitem):
     assert nodes and "BatchEvalPython" not in nodes
 
 
+def test_stats_agg_verbatim_is_one_python_aggregate(spark):
+    """The reference's roll-up query, verbatim: ``ddsketch_stats_agg`` is
+    one Arrow UDAF, so the plan holds a single Python node and no
+    ArrowEvalPython finalizer."""
+    from duckdb_ddsketch_spark import DDSketch
+
+    rows = [("a", DDSketch(0.01).extend([1.0, 2.0]).encode())]
+    spark.createDataFrame(rows, "k string, s binary").createOrReplaceTempView(
+        "stats_agg_plan_t"
+    )
+    q = spark.sql(
+        "SELECT k, ddsketch_stats_agg(s) AS st FROM stats_agg_plan_t GROUP BY k"
+    )
+    assert set(checks.python_eval_nodes(q)) == {"ArrowAggregatePython"}
+    # the unexecuted adaptive plan prints each node once
+    tree = q._jdf.queryExecution().executedPlan().toString()
+    assert tree.count("ArrowAggregatePython") == 1
+
+
 def test_minhash_signatures_partial_agg(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures_df(docs)
@@ -160,7 +179,7 @@ def test_bucketed_join_needs_no_exchange(spark, sf_dir, tmp_path):
 
 def test_no_declared_query_uses_row_at_a_time_python(spark, sf_dir):
     """Every declared query's physical plan must use only Arrow-vectorized
-    Python nodes (ArrowEvalPython / AggregateInPandas / MapInPandas /
+    Python nodes (ArrowEvalPython / ArrowAggregatePython / MapInPandas /
     FlatMapGroupsInPandas) — BatchEvalPython (pickle, row-at-a-time) in a
     hot path would be a 10-100x regression at scale."""
     import __spark_entry__ as entry_mod
@@ -266,7 +285,7 @@ def test_tpch_q5_join_plan_broadcasts_dims_and_prunes(spark, sf_dir):
 def test_partitioned_store_rollup_prunes_and_partial_aggs(spark, sf_dir):
     """q52's stored-blob roll-up: the day range must land in PartitionFilters
     (only matching day-directories scanned) and the merge must be the native
-    Catalyst aggregate — no AggregateInPandas over raw blob rows."""
+    Catalyst aggregate — no ArrowAggregatePython over raw blob rows."""
     from duckdb_ddsketch_spark.plans import declared
 
     q = declared.STAGED_QUERIES["q52_partitioned_store_rollup"](spark, sf_dir)
@@ -274,7 +293,7 @@ def test_partitioned_store_rollup_prunes_and_partial_aggs(spark, sf_dir):
     assert "PartitionFilters" in plan and "day" in plan
     # the compacted week store scans with its own partition filter
     assert "week" in plan
-    assert "AggregateInPandas" not in plan
+    assert "ArrowAggregatePython" not in checks.python_eval_nodes(q)
     assert checks.has_partial_aggregation(q)
 
 
@@ -284,8 +303,7 @@ def test_scalable_merge_rollup_uses_native_partial_agg(spark, sf_dir):
     from duckdb_ddsketch_spark.plans import declared
 
     q = declared.STAGED_QUERIES["q35_scalable_merge_rollup"](spark, sf_dir)
-    plan = checks.formatted_plan(q)
-    assert "AggregateInPandas" not in plan
+    assert "ArrowAggregatePython" not in checks.python_eval_nodes(q)
     assert checks.has_partial_aggregation(q)
 
 
@@ -304,12 +322,11 @@ def test_headline_bench_names_stay_declared():
 
 def test_q11_rollup_uses_native_partial_agg(spark, sf_dir):
     """The q11 headline blob roll-up must stay on the native merge path:
-    hash aggregate with partial aggregation, no AggregateInPandas."""
+    hash aggregate with partial aggregation, no ArrowAggregatePython."""
     from duckdb_ddsketch_spark.plans import declared
 
     q = declared.STAGED_QUERIES["q11_agg_rollup_event_type"](spark, sf_dir)
-    plan = checks.formatted_plan(q)
-    assert "AggregateInPandas" not in plan
+    assert "ArrowAggregatePython" not in checks.python_eval_nodes(q)
     assert checks.has_partial_aggregation(q)
 
 

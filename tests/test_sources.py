@@ -95,7 +95,8 @@ def test_reference_surface_coverage():
         "ddsketch_avg",
         "ddsketch_stats",
         "ddsketch_agg",
-        "ddsketch_stats_full",  # = ddsketch_stats_agg finalizer
+        "ddsketch_stats_agg",
+        "ddsketch_stats_full",  # ddsketch_stats_agg's struct for one blob
     ]:
         assert fn_name in sources, f"{fn_name} not exercised by any declared query"
 

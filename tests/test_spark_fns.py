@@ -197,8 +197,7 @@ def test_stats_agg_struct(spark):
 
 def test_stats_agg_sql_name_verbatim(spark):
     """The reference's README query shape runs VERBATIM through spark.sql:
-    ddsketch_stats_agg as ONE SQL aggregate name (lib.rs:955-981), provided
-    by the session macro rewrite installed in register_all."""
+    ddsketch_stats_agg is ONE registered SQL aggregate (lib.rs:955-981)."""
     rows = [
         ("api", DDSketch(0.01).extend([float(v)]).encode()) for v in (10, 20, 30)
     ] + [("web", DDSketch(0.01).extend([100.0]).encode())]
@@ -229,31 +228,43 @@ def test_stats_agg_sql_name_verbatim(spark):
 def test_stats_agg_rewrite_string_edge_cases():
     from duckdb_ddsketch_spark.functions.rewrite import rewrite_stats_agg
 
-    # basic + case-insensitive + GROUP BY untouched
-    assert (
-        rewrite_stats_agg("SELECT g, DDSketch_Stats_Agg(s) FROM t GROUP BY g")
-        == "SELECT g, ddsketch_stats_full(ddsketch_agg(s)) FROM t GROUP BY g"
-    )
+    # a plain call is a registered aggregate: case-insensitive, unchanged
+    q = "SELECT g, DDSketch_Stats_Agg(s) FROM t GROUP BY g"
+    assert rewrite_stats_agg(q) == q
+    # FILTER folds into the input, keeping the name as written
+    assert rewrite_stats_agg(
+        "SELECT g, DDSketch_Stats_Agg(s) FILTER (WHERE x) FROM t GROUP BY g"
+    ) == "SELECT g, DDSketch_Stats_Agg(CASE WHEN x\n THEN s END) FROM t GROUP BY g"
     # nested call with parens and a quoted literal inside the argument
     q = "SELECT ddsketch_stats_agg(ddsketch_add(s, if(x=')', 1.0, 2.0))) FROM t"
-    assert rewrite_stats_agg(q) == (
-        "SELECT ddsketch_stats_full(ddsketch_agg("
-        "ddsketch_add(s, if(x=')', 1.0, 2.0)))) FROM t"
+    assert rewrite_stats_agg(q) == q
+    assert rewrite_stats_agg(q.replace(" FROM", " FILTER (WHERE y) FROM")) == (
+        "SELECT ddsketch_stats_agg(CASE WHEN y\n THEN "
+        "ddsketch_add(s, if(x=')', 1.0, 2.0)) END) FROM t"
     )
-    # occurrences inside string literals / comments / identifiers untouched
+    # occurrences inside string literals / comments / identifiers untouched,
+    # with or without a FILTER clause
     for q in (
         "SELECT 'ddsketch_stats_agg(x)' AS lit FROM t",
         "SELECT s -- ddsketch_stats_agg(x)\n FROM t",
         "SELECT /* ddsketch_stats_agg(x) */ s FROM t",
         'SELECT "ddsketch_stats_agg" FROM t',
         "SELECT my_ddsketch_stats_agg(x) FROM t",
+        "SELECT 'ddsketch_stats_agg(x) FILTER (WHERE y)' AS lit FROM t",
+        "SELECT s -- ddsketch_stats_agg(x) FILTER (WHERE y)\n FROM t",
+        "SELECT /* ddsketch_stats_agg(x) FILTER (WHERE y) */ s FROM t",
+        "SELECT my_ddsketch_stats_agg(x) FILTER (WHERE y) FROM t",
     ):
         assert rewrite_stats_agg(q) == q
     # two occurrences in one query
     q2 = "SELECT ddsketch_stats_agg(a), ddsketch_stats_agg(b) FROM t"
-    assert rewrite_stats_agg(q2) == (
-        "SELECT ddsketch_stats_full(ddsketch_agg(a)),"
-        " ddsketch_stats_full(ddsketch_agg(b)) FROM t"
+    assert rewrite_stats_agg(q2) == q2
+    assert rewrite_stats_agg(
+        "SELECT ddsketch_stats_agg(a) FILTER (WHERE x),"
+        " ddsketch_stats_agg(b) FILTER (WHERE y) FROM t"
+    ) == (
+        "SELECT ddsketch_stats_agg(CASE WHEN x\n THEN a END),"
+        " ddsketch_stats_agg(CASE WHEN y\n THEN b END) FROM t"
     )
 
 
@@ -323,16 +334,17 @@ def test_merge_sketches_native_null_row_order_independent(spark):
 
 
 def test_merge_sketches_native_plan_has_partial_agg(spark):
-    """The wire-blob merge must NOT be an AggregateInPandas over raw rows:
+    """The wire-blob merge must NOT be an ArrowAggregatePython over raw rows:
     the aggregate runs in Catalyst with map-side partial aggregation and the
     only Python nodes are the map-only wire boundary codecs."""
     from duckdb_ddsketch_spark.functions.aggregate import merge_sketches_native
+    from duckdb_ddsketch_spark.plans import checks
 
     rows = [("k", DDSketch(0.01).extend([1.0, 2.0]).encode())]
     df = spark.createDataFrame(rows, "k string, sketch binary")
     out = merge_sketches_native(df, ["k"], "sketch")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "AggregateInPandas" not in plan
+    assert "ArrowAggregatePython" not in checks.python_eval_nodes(out)
     assert "HashAggregate" in plan
     assert "partial" in plan.lower()
 
