@@ -1,4 +1,4 @@
-"""DataDog DDSketch wire-format codec (pure Python).
+"""DataDog DDSketch wire-format codec.
 
 Implements the binary encoding used by ``github.com/DataDog/sketches-go``
 v1.4.7 so that sketches produced by this engine are byte-compatible with the
@@ -21,11 +21,17 @@ bits are a subflag:
   accept sum/min/max (0x21/0x22/0x23, float64LE) and count (0x28, varfloat64)
   but the encoder intentionally never writes them — Go's decoder mishandles
   FlagCount, so stats are recomputed from bins on decode.
+
+The scalar primitives are pure Python. ``decode_varint64_tokens`` and
+``decode_varfloat64_tokens`` decode a column of already-delimited tokens
+with numpy, using the same integer and IEEE operations bit for bit.
 """
 
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 __all__ = [
     "encode_uvarint64",
@@ -36,6 +42,10 @@ __all__ = [
     "decode_varfloat64",
     "encode_float64_le",
     "decode_float64_le",
+    "decode_varint64_tokens",
+    "decode_varfloat64_tokens",
+    "MAX_VARINT_TOKEN",
+    "MAX_VARFLOAT_TOKEN",
 ]
 
 _U64 = (1 << 64) - 1
@@ -175,3 +185,53 @@ def decode_float64_le(data: bytes, pos: int) -> tuple[float, int]:
     if pos + 8 > len(data):
         raise ValueError("truncated float64")
     return struct.unpack_from("<d", data, pos)[0], pos + 8
+
+
+# ---------------------------------------------------------------------------
+# Token columns (numpy)
+# ---------------------------------------------------------------------------
+
+# Longest tokens the column decoders take. Five varint bytes hold any delta
+# between two int32 bin indexes; a varfloat of up to eight bytes ends in a
+# byte < 0x80 (a ninth byte carries 8 bits and need not).
+MAX_VARINT_TOKEN = 5
+MAX_VARFLOAT_TOKEN = _MAX_VAR_LEN_64 - 1
+
+_VARINT_SHIFTS = tuple(7 * j for j in range(MAX_VARINT_TOKEN))
+_VARFLOAT_SHIFTS = tuple(64 - 7 - 7 * j for j in range(MAX_VARFLOAT_TOKEN))
+
+
+def _token_bits(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray, shifts) -> np.ndarray:
+    """OR of each token's 7-bit groups, byte ``j`` shifted by ``shifts[j]``;
+    bytes past a token's length contribute nothing."""
+    out = np.zeros(len(starts), dtype=np.uint64)
+    last = len(data) - 1
+    for j, shift in enumerate(shifts):
+        group = (data[np.minimum(starts + j, last)] & 0x7F).astype(np.uint64)
+        group[lengths <= j] = 0
+        out |= group << np.uint64(shift)
+    return out
+
+
+def decode_varint64_tokens(
+    data: np.ndarray, starts: np.ndarray, lengths: np.ndarray
+) -> np.ndarray:
+    """``decode_varint64`` of every token ``data[starts[i]:starts[i] +
+    lengths[i]]`` of a uint8 array, as int64, for tokens that are one whole
+    varint of at most ``MAX_VARINT_TOKEN`` bytes. A longer token decodes to
+    a wrong value the caller must discard."""
+    zigzag = _token_bits(data, starts, lengths, _VARINT_SHIFTS).astype(np.int64)
+    return (zigzag >> 1) ^ -(zigzag & 1)
+
+
+def decode_varfloat64_tokens(
+    data: np.ndarray, starts: np.ndarray, lengths: np.ndarray
+) -> np.ndarray:
+    """``decode_varfloat64`` of every token, as float64 with identical bits,
+    for tokens that are one whole varfloat of at most ``MAX_VARFLOAT_TOKEN``
+    bytes. A longer token decodes to a wrong value the caller must
+    discard."""
+    x = _token_bits(data, starts, lengths, _VARFLOAT_SHIFTS)
+    r = np.uint64(_VARFLOAT_ROTATE)
+    bits = ((x >> r) | (x << (np.uint64(64) - r))) + np.uint64(_FLOAT_BITS_1)
+    return bits.view(np.float64) - 1.0

@@ -14,6 +14,16 @@ homes:
   for raw-value ingest. Partial aggregation applies, so the shuffle carries
   combined (key, sign, bin) counts, never raw rows or whole blobs.
 
+Column decode. ``ddsketch_agg`` and ``ddsketch_stats_agg`` hand the group's
+whole Arrow column to ``sketch.merge_wire_column``, which reads the array's
+offset and data buffers and decodes every store of every blob in one numpy
+pass, then merges the bins with ``np.unique`` + ``np.add.at`` in row order.
+The kernel decode decides every blob the fast path cannot prove decodable:
+such a blob goes through ``DDSketch.decode`` alone, so the skipped rows and
+the merged bytes are those of a per-row ``DDSketch.decode`` /
+``DDSketch.merge`` fold. The finalize is ``encode`` of the merged sketch
+(and, for ``ddsketch_stats_agg``, ``scalar.stats_full_row`` on its bytes).
+
 Mapping-mismatch rule. ``ddsketch_agg`` keeps the group's first decodable
 mapping and drops later rows whose gamma/index_offset differ (the
 reference discards the merge result, lib.rs:730). That rule depends on row
@@ -26,7 +36,7 @@ byte-identical results.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional, Sequence
+from typing import Optional, Sequence
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
@@ -34,7 +44,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BinaryType
 
-from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY, SketchMergeError
+from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY, merge_wire_column
 from .scalar import STATS_FULL_SCHEMA, stats_full_row
 
 __all__ = [
@@ -47,43 +57,11 @@ __all__ = [
 _STATS_FULL_ARROW = to_arrow_type(STATS_FULL_SCHEMA)
 
 
-def _merge_blobs(blobs: Iterable) -> Optional[DDSketch]:
-    """update/combine over a group of wire-format sketches.
-
-    First decodable sketch is adopted (group inherits its gamma), later ones
-    merged. NULL, zero-length, and undecodable rows are skipped
-    (lib.rs:697-735, NULL-skip via set_special_handling lib.rs:1024), and a
-    gamma-mismatched merge is *silently ignored* (the mismatch rule in the
-    module docstring). Empty group → None (lib.rs:798-801).
-    """
-    merged: Optional[DDSketch] = None
-    for blob in blobs:
-        if not blob:
-            continue
-        try:
-            s = DDSketch.decode(blob)
-        except Exception:
-            continue
-        if merged is None:
-            merged = s
-        else:
-            try:
-                merged.merge(s)
-            except SketchMergeError:
-                pass  # mismatched mapping: row dropped, like the reference
-    return merged
-
-
-def _merged_wire(sketches: pa.Array) -> Optional[bytes]:
-    merged = _merge_blobs(sketches.to_pylist())
-    return merged.encode() if merged is not None else None
-
-
 @arrow_udf(BinaryType())
 def ddsketch_agg(sketches: pa.Array) -> Optional[bytes]:
     """``SELECT k, ddsketch_agg(sketch) ... GROUP BY k`` — fold a column of
     serialized sketches into one (lib.rs:630-804)."""
-    return _merged_wire(sketches)
+    return merge_wire_column(sketches)
 
 
 @arrow_udf(STATS_FULL_SCHEMA)
@@ -95,7 +73,7 @@ def ddsketch_stats_agg(sketches: pa.Array) -> pa.Scalar:
     ``ddsketch_stats_full(sketch)`` would read them. A group with no
     decodable row gives a non-NULL struct of 12 NULL fields.
     """
-    row = stats_full_row(_merged_wire(sketches))
+    row = stats_full_row(merge_wire_column(sketches))
     return pa.scalar(dict(zip(STATS_FULL_SCHEMA.names, row)), type=_STATS_FULL_ARROW)
 
 

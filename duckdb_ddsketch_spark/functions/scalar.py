@@ -86,6 +86,12 @@ STATS_FULL_SCHEMA = StructType(
 )
 
 
+# What value_to_bin raises on a decodable blob whose mapping it cannot
+# evaluate: gamma 1 (ZeroDivisionError), gamma <= 0 or a NaN index offset
+# (ValueError), an infinite index offset (OverflowError). Such a row is NULL.
+_MAPPING_ERRORS = (ValueError, ArithmeticError)
+
+
 def _try_decode(blob) -> Optional[DDSketch]:
     if blob is None:
         return None
@@ -115,7 +121,10 @@ def ddsketch_add(sketch: pd.Series, value: pd.Series) -> pd.Series:
         s = _try_decode(blob)
         if s is None or v is None or (isinstance(v, float) and math.isnan(v)):
             return None
-        s.add(float(v))
+        try:
+            s.add(float(v))
+        except _MAPPING_ERRORS:
+            return None
         return s.encode()
 
     return pd.Series(
@@ -183,7 +192,7 @@ def ddsketch_downsample(sketch: pd.Series, alpha: pd.Series) -> pd.Series:
             return None
         try:
             return s.downsample(float(a)).encode()
-        except ValueError:
+        except _MAPPING_ERRORS:  # also a refining target (ValueError)
             return None
 
     return pd.Series([go(b, a) for b, a in zip(sketch, alpha)], dtype=object)
@@ -193,13 +202,17 @@ def ddsketch_downsample(sketch: pd.Series, alpha: pd.Series) -> pd.Series:
 def ddsketch_cdf(sketch: pd.Series, v: pd.Series) -> pd.Series:
     """Beyond-reference inverse of ``ddsketch_quantile``: fraction of values
     <= v at bin granularity (see DDSketch.cdf). NULL semantics match the
-    other scalars: bad blob/NULL input/empty sketch -> NULL."""
+    other scalars: bad blob/NULL input/empty sketch/a mapping ``value_to_bin``
+    cannot evaluate -> NULL."""
 
     def go(blob, value):
         s = _try_decode(blob)
         if s is None or value is None:
             return None
-        return s.cdf(float(value))
+        try:
+            return s.cdf(float(value))
+        except _MAPPING_ERRORS:
+            return None
 
     return pd.Series([go(b, x) for b, x in zip(sketch, v)], dtype="float64")
 

@@ -17,16 +17,30 @@ Semantics mirror the reference extension's sketch
 * the wire encoder never emits sum/count/min/max, so any decode reconstructs
   them from bins — count exactly, sum/min/max to within the relative accuracy
   (:334-338, 429-494).
+
+``decode_wire_column`` / ``merge_wire_column`` decode and merge a whole Arrow
+column of wire blobs in numpy; ``DDSketch.decode`` stays the definition of
+which blobs are decodable.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterable, Optional
+from typing import Iterable, NamedTuple, Optional
+
+import numpy as np
+import pyarrow as pa
 
 from . import codec
 
-__all__ = ["DDSketch", "SketchMergeError", "DEFAULT_RELATIVE_ACCURACY"]
+__all__ = [
+    "DDSketch",
+    "SketchMergeError",
+    "DEFAULT_RELATIVE_ACCURACY",
+    "WireRow",
+    "decode_wire_column",
+    "merge_wire_column",
+]
 
 DEFAULT_RELATIVE_ACCURACY = 0.01
 _GAMMA_TOLERANCE = 1e-10
@@ -491,3 +505,269 @@ class DDSketch:
             f"pos_bins={len(self.positive_bins)}, neg_bins={len(self.negative_bins)}, "
             f"zero={self.zero_count})"
         )
+
+
+# ---------------------------------------------------------------------------
+# Columns of wire blobs
+# ---------------------------------------------------------------------------
+
+_DEFAULT_GAMMA = DDSketch(DEFAULT_RELATIVE_ACCURACY).gamma
+# Bounds inside which DDSketch.decode provably does not raise: gamma ** x
+# overflows past x * ln(gamma) ~ 709.8, and a count must stay inside BIGINT.
+_MAX_BIN_EXPONENT = 700.0
+_MAX_TOTAL_COUNT = 2.0**60
+
+
+class WireRow(NamedTuple):
+    """One decoded blob: its mapping, zero count and bins. The index arrays
+    (int64) are strictly increasing; counts are float64."""
+
+    gamma: float
+    index_offset: float
+    zero_count: float
+    positive_index: np.ndarray
+    positive_count: np.ndarray
+    negative_index: np.ndarray
+    negative_count: np.ndarray
+
+
+_NO_BINS = (np.empty(0, np.int64), np.empty(0, np.float64))
+
+
+def _bin_arrays(bins: dict[int, float]) -> tuple[np.ndarray, np.ndarray]:
+    return (
+        np.fromiter(bins.keys(), np.int64, len(bins)),
+        np.fromiter(bins.values(), np.float64, len(bins)),
+    )
+
+
+def _column_buffers(blobs: pa.Array) -> tuple[np.ndarray, list[int], Optional[np.ndarray]]:
+    """The data bytes, row offsets into them and validity of a binary or
+    large_binary array, read off its buffers without copying rows."""
+    large = pa.types.is_large_binary(blobs.type)
+    if not (large or pa.types.is_binary(blobs.type)):
+        raise TypeError(f"expected a binary array, got {blobs.type}")
+    if len(blobs) == 0:
+        return np.empty(0, np.uint8), [0], None
+    _, offsets_buf, data_buf = blobs.buffers()
+    offsets = np.frombuffer(offsets_buf, np.int64 if large else np.int32)
+    offsets = offsets[blobs.offset : blobs.offset + len(blobs) + 1]
+    data = np.empty(0, np.uint8) if data_buf is None else np.frombuffer(data_buf, np.uint8)
+    data = data[offsets[0] : offsets[-1]]
+    valid = None
+    if blobs.null_count:
+        valid = blobs.is_valid().to_numpy(zero_copy_only=False)
+    return data, (offsets - offsets[0]).tolist(), valid
+
+
+def _scan_blob(buf: bytes, lo: int, hi: int, term: np.ndarray):
+    """Walk the sections of ``buf[lo:hi]`` the way ``DDSketch.decode`` does:
+    later mapping, zero-count and store sections replace earlier ones.
+
+    Returns ``(gamma, index_offset, zero_count, stores, final)``: ``stores``
+    lists every store section as (index into ``term`` of its first token's
+    terminator byte, bin count) and ``final`` maps a store's flag type to
+    the section that survives. None when the blob is outside the column
+    fast path: an unknown or explicit-stats section, a store encoding other
+    than IndexDeltasAndCounts, a truncated section, or a mapping not
+    ``1 < gamma < 2`` with a finite offset.
+    """
+    blob = buf[lo:hi]
+    gamma, index_offset, zero_count = _DEFAULT_GAMMA, 0.0, 0.0
+    stores: list[tuple[int, int]] = []
+    final: dict[int, int] = {}
+    pos = 0
+    try:
+        while pos < len(blob):
+            flag = blob[pos]
+            pos += 1
+            ftype, sub = codec.flag_type_of(flag), codec.subflag_of(flag)
+            if ftype == codec.FLAG_INDEX_MAPPING:
+                if sub > 4:
+                    return None
+                gamma, pos = codec.decode_float64_le(blob, pos)
+                index_offset, pos = codec.decode_float64_le(blob, pos)
+            elif ftype == codec.FLAG_SKETCH_FEATURES:
+                if sub != codec.SUBFLAG_ZERO_COUNT:
+                    return None
+                zero_count, pos = codec.decode_varfloat64(blob, pos)
+            elif sub != codec.SUBFLAG_INDEX_DELTAS_AND_COUNTS:
+                return None
+            else:
+                bins, pos = codec.decode_uvarint64(blob, pos)
+                # the bin count's own last byte is the terminator before
+                # the first token, so tokens run from term[first]
+                first = int(term.searchsorted(lo + pos))
+                if bins:
+                    last = first + 2 * bins - 1
+                    if last >= len(term) or term[last] >= hi:
+                        return None
+                    pos = int(term[last]) + 1 - lo
+                final[ftype] = len(stores)
+                stores.append((first, bins))
+    except ValueError:
+        return None
+    if not (1.0 < gamma < 2.0 and math.isfinite(index_offset)):
+        return None
+    return gamma, index_offset, zero_count, stores, final
+
+
+def decode_wire_column(blobs: pa.Array) -> list[Optional[WireRow]]:
+    """Decode every blob of a binary Arrow array: one ``WireRow`` per row,
+    or None for a NULL, empty or undecodable blob.
+
+    The kernel decides what is decodable: a row is None exactly when
+    ``DDSketch.decode`` raises on it, and a decoded row holds the kernel's
+    mapping, zero count and bins, counts bit for bit. The fast path reads
+    the array's data buffer in one numpy pass: every byte < 0x80 ends a
+    varint or varfloat token, a short Python walk over each blob's section
+    flags (``_scan_blob``) finds each store's token run, and then every
+    index and count token of the batch decodes at once (zig-zag deltas and
+    a segmented cumsum for the indexes, ``decode_varfloat64_tokens`` for
+    the counts). It takes only blobs it can prove the kernel decodes
+    without raising: besides ``_scan_blob``'s conditions, index tokens of
+    at most 5 bytes and count tokens of at most 8 (so counts are finite and
+    >= 0), strictly increasing int32 indexes, ``|index - offset| *
+    ln(gamma) <= 700`` (no overflow in the bin values) and a total count
+    below ``2**60`` (no BIGINT overflow). Every other blob goes through
+    ``DDSketch.decode`` alone.
+    """
+    data, offsets, valid = _column_buffers(blobs)
+    n_rows = len(offsets) - 1
+    buf = data.tobytes()
+    term = np.flatnonzero(data < 0x80)
+    rows: list[Optional[WireRow]] = [None] * n_rows
+    layouts = {}  # row -> (_scan_blob layout, global id of its first store)
+    slow = []
+    store_first, store_bins, store_row = [], [], []
+    gamma, index_offset = np.ones(n_rows), np.zeros(n_rows)
+    for i in range(n_rows):
+        lo, hi = offsets[i], offsets[i + 1]
+        if hi == lo or (valid is not None and not valid[i]):
+            continue
+        layout = _scan_blob(buf, lo, hi, term)
+        if layout is None:
+            slow.append(i)
+            continue
+        layouts[i] = layout, len(store_first)
+        gamma[i], index_offset[i] = layout[0], layout[1]
+        for first, bins in layout[3]:
+            store_first.append(first)
+            store_bins.append(bins)
+            store_row.append(i)
+
+    n_bins = np.array(store_bins, np.int64)
+    bin_start = np.cumsum(n_bins) - n_bins
+    index, count = _NO_BINS
+    bad_rows = np.zeros(n_rows, bool)
+    total_count = np.zeros(n_rows)
+    if n_bins.sum():
+        store_of_bin = np.repeat(np.arange(len(n_bins)), n_bins)
+        j = np.arange(len(store_of_bin)) - bin_start[store_of_bin]
+        k = np.array(store_first, np.int64)[store_of_bin] + 2 * j
+        index_end, count_end = term[k], term[k + 1]
+        index_len = index_end - term[k - 1]
+        count_len = count_end - index_end
+        delta = codec.decode_varint64_tokens(data, index_end - index_len + 1, index_len)
+        count = codec.decode_varfloat64_tokens(data, index_end + 1, count_len)
+        steps = np.cumsum(delta)
+        index = steps - np.concatenate(([0], steps))[bin_start][store_of_bin]
+
+        row_of_bin = np.array(store_row, np.int64)[store_of_bin]
+        exponent = np.abs(index - index_offset[row_of_bin]) * np.log(gamma[row_of_bin])
+        # a varfloat of at most 8 bytes decodes to a finite count >= 0
+        bad = (
+            (index_len > codec.MAX_VARINT_TOKEN)
+            | (count_len > codec.MAX_VARFLOAT_TOKEN)
+            | ((j > 0) & (delta <= 0))
+            | (index < _INDEX_MIN)
+            | (index > _INDEX_MAX)
+            | ~(exponent <= _MAX_BIN_EXPONENT)
+        )
+        bad_rows[row_of_bin[bad]] = True
+        total_count = np.bincount(
+            row_of_bin[~bad], weights=count[~bad], minlength=n_rows
+        )
+
+    def final_bins(first_store: int, final: dict[int, int], ftype: int):
+        if ftype not in final:
+            return _NO_BINS
+        lo = bin_start[first_store + final[ftype]]
+        hi = lo + n_bins[first_store + final[ftype]]
+        return index[lo:hi], count[lo:hi]
+
+    for i, ((g, off, zero, _stores, final), first_store) in layouts.items():
+        if bad_rows[i] or not total_count[i] + abs(zero) < _MAX_TOTAL_COUNT:
+            slow.append(i)
+            continue
+        rows[i] = WireRow(
+            g,
+            off,
+            zero,
+            *final_bins(first_store, final, codec.FLAG_POSITIVE_STORE),
+            *final_bins(first_store, final, codec.FLAG_NEGATIVE_STORE),
+        )
+    for i in slow:
+        try:
+            s = DDSketch.decode(buf[offsets[i] : offsets[i + 1]])
+        except Exception:
+            continue  # undecodable: the row is skipped, like NULL
+        rows[i] = WireRow(
+            s.gamma,
+            s.index_offset,
+            s.zero_count,
+            *_bin_arrays(s.positive_bins),
+            *_bin_arrays(s.negative_bins),
+        )
+    return rows
+
+
+def _sum_bins(indexes: list[np.ndarray], counts: list[np.ndarray]) -> dict[int, float]:
+    """Per-index sums over rows, each index's counts added in row order
+    from 0.0, as a dict fold over the rows adds them."""
+    index = np.concatenate(indexes)
+    if not len(index):
+        return {}
+    keys, where = np.unique(index, return_inverse=True)
+    sums = np.zeros(len(keys))
+    np.add.at(sums, where, np.concatenate(counts))
+    return dict(zip(keys.tolist(), sums.tolist()))
+
+
+def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
+    """Merge a binary Arrow array of wire blobs into one blob, by the
+    reference aggregate's rule (lib.rs:697-735): NULL, empty and
+    undecodable rows are skipped; the first decodable row is adopted and
+    later rows merged into it; a row whose gamma or index_offset differs
+    from the adopted one by more than 1e-10 is dropped, as
+    ``DDSketch.merge`` would refuse it. No decodable row gives None.
+
+    The bytes equal ``encode()`` of the ``DDSketch.decode`` /
+    ``DDSketch.merge`` fold over the rows in order: each bin's counts and
+    the zero count are added in row order.
+    """
+    kept: list[WireRow] = []
+    for row in decode_wire_column(blobs):
+        if row is None:
+            continue
+        if kept and (
+            abs(kept[0].gamma - row.gamma) > _GAMMA_TOLERANCE
+            or abs(kept[0].index_offset - row.index_offset) > _GAMMA_TOLERANCE
+        ):
+            continue
+        kept.append(row)
+    if not kept:
+        return None
+    merged = DDSketch()
+    merged.gamma, merged.index_offset = kept[0].gamma, kept[0].index_offset
+    merged.zero_count = kept[0].zero_count
+    for row in kept[1:]:
+        merged.zero_count += row.zero_count
+    merged.positive_bins = _sum_bins(
+        [r.positive_index for r in kept], [r.positive_count for r in kept]
+    )
+    merged.negative_bins = _sum_bins(
+        [r.negative_index for r in kept], [r.negative_count for r in kept]
+    )
+    return merged.encode()
+

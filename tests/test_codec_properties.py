@@ -3,11 +3,19 @@ coverage beyond the reference's fixed vectors.
 """
 
 import math
+import struct
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from duckdb_ddsketch_spark import codec
-from duckdb_ddsketch_spark.sketch import DDSketch
+from duckdb_ddsketch_spark.sketch import (
+    DDSketch,
+    SketchMergeError,
+    decode_wire_column,
+    merge_wire_column,
+)
 
 finite_floats = st.floats(
     allow_nan=False, allow_infinity=False, min_value=-1e12, max_value=1e12
@@ -238,3 +246,265 @@ def test_trimmed_mean_properties(values, q_lo, width):
     mirrored = neg.trimmed_mean(1.0 - q_hi, 1.0 - q_lo)
     # mirroring reverses the fold order — same cancellation exposure
     assert math.isclose(mirrored, -tm, rel_tol=1e-9, abs_tol=1e-12 * max(mag, 1.0))
+
+
+# ---------------------------------------------------------------------------
+# Column decoder vs the kernel: decode_wire_column / merge_wire_column
+# ---------------------------------------------------------------------------
+
+_GAMMA = DDSketch(0.01).gamma
+_GAMMA_02 = DDSketch(0.02).gamma
+_POS, _NEG = codec.FLAG_POSITIVE_STORE, codec.FLAG_NEGATIVE_STORE
+# ln(_GAMMA) ~ 0.0200: gamma ** x overflows past index ~35,480; the column
+# fast path stops at 700 / ln(gamma) ~ 34,990
+_GOOD_STARTS = [0, -50, 1_000, 34_980]
+_BAD_STARTS = [35_470, 35_500, -36_000, 2**31 - 2, 2**31 + 1, -(2**31) - 1]
+_GOOD_COUNTS = [1.0, 2.0, 7.0, 0.5, 0.0, 2.5, 1e16]
+# 1/3, 0.3 and -1.0 are 9-byte varfloats ending in a byte < 0x80, 0.1 one
+# ending in a byte >= 0x80; 2**59 and 1e19 probe the total-count bound
+_BAD_COUNTS = [1 / 3, 0.3, 0.1, -1.0, 2.0**59, 1e19, math.inf, math.nan]
+_GOOD_GAMMAS = [_GAMMA, _GAMMA, _GAMMA_02, _GAMMA + 5e-11, 1.0000001]
+_BAD_GAMMAS = [1.0, 0.5, 2.0, 3.0, -1.5, math.nan, math.inf]
+
+
+def _flag(ftype, sub):
+    return bytes([codec.make_flag(ftype, sub)])
+
+
+def _varfloat(v):
+    buf = bytearray()
+    codec.encode_varfloat64(buf, v)
+    return bytes(buf)
+
+
+def _mapping(gamma, offset=0.0, sub=0):
+    return _flag(codec.FLAG_INDEX_MAPPING, sub) + struct.pack("<dd", gamma, offset)
+
+
+def _zero(count):
+    return _flag(codec.FLAG_SKETCH_FEATURES, codec.SUBFLAG_ZERO_COUNT) + _varfloat(count)
+
+
+def _store(ftype, deltas, counts, sub=codec.SUBFLAG_INDEX_DELTAS_AND_COUNTS):
+    """A store section: IndexDeltasAndCounts, IndexDeltas (counts unused) or
+    ContiguousCounts (first delta is the start index, step 1)."""
+    buf = bytearray(_flag(ftype, sub))
+    codec.encode_uvarint64(buf, len(counts))
+    if sub == codec.SUBFLAG_CONTIGUOUS_COUNTS:
+        codec.encode_varint64(buf, deltas[0] if deltas else 0)
+        codec.encode_varint64(buf, 1)
+    for delta, count in zip(deltas, counts):
+        if sub != codec.SUBFLAG_CONTIGUOUS_COUNTS:
+            codec.encode_varint64(buf, delta)
+        if sub != codec.SUBFLAG_INDEX_DELTAS:
+            codec.encode_varfloat64(buf, count)
+    return bytes(buf)
+
+
+@st.composite
+def _store_section(draw):
+    """A store the column fast path takes, or the same with one defect."""
+    n = draw(st.integers(0, 12))
+    deltas = [draw(st.sampled_from(_GOOD_STARTS))] + draw(
+        st.lists(st.integers(1, 40), min_size=n, max_size=n)
+    )
+    deltas = deltas[:n]
+    counts = draw(st.lists(st.sampled_from(_GOOD_COUNTS), min_size=n, max_size=n))
+    sub = codec.SUBFLAG_INDEX_DELTAS_AND_COUNTS
+    defect = draw(st.sampled_from([None, None, "sub", "start", "delta", "count"]))
+    at = draw(st.integers(0, max(n - 1, 0)))
+    if defect == "sub":
+        sub = draw(st.sampled_from([codec.SUBFLAG_INDEX_DELTAS, codec.SUBFLAG_CONTIGUOUS_COUNTS, 7]))
+    elif n and defect == "start":
+        deltas[0] = draw(st.sampled_from(_BAD_STARTS))
+    elif n > 1 and defect == "delta":  # a repeated or decreasing index
+        deltas[max(at, 1)] = draw(st.sampled_from([0, -1, -3]))
+    elif n and defect == "count":
+        counts[at] = draw(st.sampled_from(_BAD_COUNTS))
+    return _store(draw(st.sampled_from([_POS, _NEG])), deltas, counts, sub)
+
+
+_MAPPING_SECTION = st.one_of(
+    st.builds(_mapping, st.sampled_from(_GOOD_GAMMAS)),
+    st.builds(
+        _mapping,
+        st.sampled_from(_GOOD_GAMMAS + _BAD_GAMMAS),
+        st.sampled_from([0.0, 0.5, -3.0, 1e9, math.nan, math.inf]),
+        st.sampled_from([0, 1, 4, 5]),
+    ),
+)
+_FEATURE_SECTION = st.one_of(
+    st.builds(_zero, st.sampled_from(_GOOD_COUNTS + _BAD_COUNTS)),
+    st.builds(
+        lambda sub, v: _flag(0, sub) + struct.pack("<d", v),
+        st.sampled_from([codec.SUBFLAG_SUM, codec.SUBFLAG_MIN, codec.SUBFLAG_MAX]),
+        st.floats(-10.0, 10.0),
+    ),
+    st.builds(lambda c: _flag(0, codec.SUBFLAG_COUNT) + _varfloat(c), st.sampled_from([3.0, 1e19])),
+    st.sampled_from([_flag(0, 2), _flag(0, 7)]),  # unknown: no payload read
+)
+# a later mapping, store or zero-count section replaces an earlier one
+_CRAFTED_BLOB = st.tuples(
+    st.one_of(_MAPPING_SECTION, st.just(b"")),
+    st.lists(
+        st.one_of(_store_section(), _store_section(), _MAPPING_SECTION, _FEATURE_SECTION),
+        max_size=4,
+    ),
+).map(lambda t: t[0] + b"".join(t[1]))
+_CANONICAL_BLOB = st.builds(
+    lambda alpha, values: DDSketch(alpha).extend(values).encode(),
+    st.sampled_from([0.01, 0.01, 0.02]),
+    st.lists(st.floats(-1e4, 1e4), max_size=60),
+)
+_WIRE_BLOB = st.one_of(
+    _CRAFTED_BLOB,
+    _CRAFTED_BLOB,
+    _CANONICAL_BLOB,
+    st.builds(lambda b, cut: b[:cut], st.one_of(_CRAFTED_BLOB, _CANONICAL_BLOB), st.integers(0, 200)),
+    st.binary(max_size=40),
+    st.sampled_from([None, b""]),
+)
+
+
+def _kernel_fold(blobs):
+    """The per-row rule the column merge must reproduce: decode each row
+    with the kernel, skip what raises, adopt the first, merge the rest and
+    drop mapping mismatches."""
+    merged, skipped = None, []
+    for i, blob in enumerate(blobs):
+        try:
+            s = DDSketch.decode(blob) if blob else None
+        except Exception:
+            s = None
+        if s is None:
+            skipped.append(i)
+        elif merged is None:
+            merged = s
+        else:
+            try:
+                merged.merge(s)
+            except SketchMergeError:
+                pass
+    return (None if merged is None else merged.encode()), skipped
+
+
+def _bits(bins):
+    return sorted((int(i), float(c).hex()) for i, c in bins)
+
+
+def _assert_column_matches_kernel(blobs, arr):
+    want, skipped = _kernel_fold(blobs)
+    rows = decode_wire_column(arr)
+    assert [i for i, r in enumerate(rows) if r is None] == skipped
+    for blob, row in zip(blobs, rows):
+        if row is None:
+            continue
+        s = DDSketch.decode(blob)
+        assert (row.gamma.hex(), row.index_offset.hex(), row.zero_count.hex()) == (
+            s.gamma.hex(),
+            s.index_offset.hex(),
+            s.zero_count.hex(),
+        )
+        assert _bits(zip(row.positive_index, row.positive_count)) == _bits(s.positive_bins.items())
+        assert _bits(zip(row.negative_index, row.negative_count)) == _bits(s.negative_bins.items())
+    assert merge_wire_column(arr) == want
+
+
+@settings(max_examples=1000, deadline=None)
+@given(
+    st.lists(_WIRE_BLOB, min_size=1, max_size=8),
+    st.sampled_from([pa.binary(), pa.large_binary()]),
+    st.lists(_WIRE_BLOB, max_size=2),
+)
+def test_column_decode_matches_kernel(blobs, arrow_type, padding):
+    """The column decoder skips exactly the rows ``DDSketch.decode`` raises
+    on, decodes the others to the kernel's mapping and bins bit for bit,
+    and merges to the kernel fold's bytes: over blobs the fast path takes,
+    each fast-path exit (other store encodings, explicit stats, repeated or
+    decreasing indexes, 9-byte counts, gamma outside (1, 2), indexes at the
+    ``gamma ** x`` overflow edge and outside int32, counts past the total
+    bound), repeated sections, truncation and random bytes, in an array
+    slice whose offset is nonzero."""
+    arr = pa.array(padding + blobs + padding, type=arrow_type)
+    _assert_column_matches_kernel(blobs, arr.slice(len(padding), len(blobs)))
+
+
+_GOOD_BLOB = _mapping(_GAMMA) + _store(_POS, [3, 1, 1], [1.0, 2.0, 1.0]) + _zero(1.0)
+# one case per fast-path exit, each next to good rows
+_EXIT_CASES = {
+    "index_deltas_store": _store(_POS, [3, 1], [1.0, 1.0], codec.SUBFLAG_INDEX_DELTAS),
+    "contiguous_counts_store": _store(_NEG, [3], [2.0, 1.0], codec.SUBFLAG_CONTIGUOUS_COUNTS),
+    "explicit_sum": _GOOD_BLOB + _flag(0, codec.SUBFLAG_SUM) + struct.pack("<d", 5.0),
+    "explicit_count": _GOOD_BLOB + _flag(0, codec.SUBFLAG_COUNT) + _varfloat(2.0),
+    "unknown_feature": _GOOD_BLOB + _flag(0, 7),
+    "repeated_index": _store(_POS, [3, 0], [1.0, 2.0]),
+    "decreasing_index": _store(_POS, [3, -1], [1.0, 2.0]),
+    "nine_byte_count": _store(_POS, [3, 1], [1 / 3, 0.3]),
+    "nine_byte_count_high_last_byte": _store(_POS, [3, 1], [0.1, 1.0]),
+    "negative_count": _store(_NEG, [3], [-1.0]),
+    "nan_zero_count": _GOOD_BLOB + _zero(math.nan),
+    "infinite_zero_count": _GOOD_BLOB + _zero(math.inf),
+    "six_byte_index": _store(_POS, [3, 2**35 + 1], [1.0, 1.0]),
+    "count_past_bigint": _store(_POS, [3], [1e19]),
+    "counts_at_total_bound": _store(_POS, [3, 1], [2.0**59, 2.0**59]),
+    "gamma_one": _mapping(1.0) + _store(_POS, [3], [1.0]),
+    "gamma_two": _mapping(2.0) + _store(_POS, [3], [1.0]),
+    "gamma_below_one_overflows": _mapping(0.5) + _store(_POS, [-1_100], [1.0]),
+    "nan_gamma": _mapping(math.nan) + _store(_POS, [3], [1.0]),
+    "negative_gamma": _mapping(-1.5) + _store(_POS, [3], [1.0]),
+    "negative_gamma_fractional_offset": _mapping(-1.5, 0.5) + _store(_POS, [3], [1.0]),
+    "infinite_offset": _mapping(_GAMMA, math.inf) + _store(_POS, [3], [1.0]),
+    "below_pow_overflow": _store(_POS, [35_470], [1.0]),
+    "pow_overflow": _store(_POS, [35_500], [1.0]),
+    "int32_max": _mapping(1.0000001) + _store(_POS, [2**31 - 2, 1], [1.0, 1.0]),
+    "past_int32": _mapping(1.0000001) + _store(_POS, [2**31 - 2, 2], [1.0, 1.0]),
+    "mapping_subflag_5": _mapping(_GAMMA, 0.0, 5) + _store(_POS, [3], [1.0]),
+    "repeated_sections": _GOOD_BLOB
+    + _mapping(_GAMMA_02)
+    + _store(_POS, [7], [4.0])
+    + _zero(2.0)
+    + _store(_NEG, [1], [1.0])
+    + _zero(3.0),
+    "bad_store_replaced": _store(_POS, [2**31 + 1], [1.0]) + _store(_POS, [3], [1.0]),
+    "truncated": _GOOD_BLOB[:-4],
+}
+
+
+@pytest.mark.parametrize("arrow_type", [pa.binary(), pa.large_binary()])
+@pytest.mark.parametrize("case", sorted(_EXIT_CASES))
+def test_column_decode_exit_cases(case, arrow_type):
+    blobs = [_GOOD_BLOB, _EXIT_CASES[case], _GOOD_BLOB, _EXIT_CASES[case]]
+    _assert_column_matches_kernel(blobs, pa.array(blobs, type=arrow_type))
+
+
+def test_column_store_cut_short_is_not_read_from_the_next_row():
+    """A store whose last tokens are missing must not borrow them from the
+    following row's bytes (here a mapping whose first bytes would read as
+    one more bin)."""
+    cut = _mapping(_GAMMA) + _store(_POS, [3, 1], [1.0, 1.0])[:-2]
+    blobs = [cut, _mapping(1.5) + _store(_POS, [1], [1.0])]
+    _assert_column_matches_kernel(blobs, pa.array(blobs))
+
+
+def test_column_merge_adds_counts_in_row_order():
+    """Per bin, counts add in row order from 0.0, as the kernel fold adds
+    them: (1e16 + 1) + 1 rounds differently from 1e16 + (1 + 1), on the
+    fast path and with kernel-decoded rows (2.7 is a 9-byte count)."""
+    for counts in ([1e16, 1.0, 1.0], [1e16, 2.7, 2.7]):
+        blobs = [_store(_POS, [3], [c]) for c in counts]
+        _assert_column_matches_kernel(blobs, pa.array(blobs))
+        assert merge_wire_column(pa.array(blobs)) != merge_wire_column(pa.array(blobs[::-1]))
+
+
+@pytest.mark.parametrize("arrow_type", [pa.binary(), pa.large_binary()])
+@pytest.mark.parametrize(
+    "blobs", [[None, None], [b"", b""], [None, b""], []], ids=["null", "empty", "mixed", "no_rows"]
+)
+def test_column_decode_without_bytes(blobs, arrow_type):
+    """All-NULL, all-empty and zero-length arrays (also as slices) decode
+    to no rows and merge to None."""
+    arr = pa.array(blobs, type=arrow_type)
+    assert decode_wire_column(arr) == [None] * len(blobs)
+    assert merge_wire_column(arr) is None
+    sliced = pa.array([_GOOD_BLOB] + blobs, type=arrow_type).slice(1)
+    assert merge_wire_column(sliced) is None

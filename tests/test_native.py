@@ -326,6 +326,49 @@ def test_stats_agg_all_bad_group_is_struct_of_nulls(spark):
     assert len(out.st) == 12 and all(v is None for v in out.st)
 
 
+def test_value_scalars_null_a_row_whose_mapping_cannot_bin(spark):
+    """A decodable blob whose mapping ``value_to_bin`` cannot evaluate
+    (gamma 1.0, a negative gamma, an infinite index offset) is NULL under
+    ``ddsketch_cdf`` and ``ddsketch_add`` for that row only; good rows next
+    to it equal the kernel. ``ddsketch_downsample`` NULLs exactly the rows
+    the kernel's downsample raises on."""
+    from duckdb_ddsketch_spark.functions import scalar as fs
+
+    odd = [
+        _with_mapping(_GOOD_BLOBS[1], gamma, offset)
+        for gamma, offset in ((1.0, 0.0), (-1.5, 0.0), (1.02, math.inf), (1.02, -math.inf))
+    ]
+    blobs = [_GOOD_BLOBS[2], *odd, _GOOD_BLOBS[3]]
+    rows = (
+        spark.createDataFrame(list(enumerate(blobs)), "i int, sketch binary")
+        .select(
+            "i",
+            fs.ddsketch_cdf(F.col("sketch"), F.lit(3.0)).alias("cdf"),
+            fs.ddsketch_add(F.col("sketch"), F.lit(3.0)).alias("added"),
+            fs.ddsketch_downsample(F.col("sketch"), F.lit(0.05)).alias("down"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(blobs)
+
+    def kernel(blob, op):
+        try:
+            return op(DDSketch.decode(blob))
+        except (ValueError, ArithmeticError):
+            return None
+
+    for r in rows:
+        blob = blobs[r.i]
+        if blob in odd:
+            assert r.cdf is None and r.added is None, r
+        want_added = kernel(blob, lambda s: (s.add(3.0), s.encode())[1])
+        assert r.cdf == kernel(blob, lambda s: s.cdf(3.0)), r
+        assert (None if r.added is None else bytes(r.added)) == want_added, r
+        want_down = kernel(blob, lambda s: s.downsample(0.05).encode())
+        assert (None if r.down is None else bytes(r.down)) == want_down, r
+    assert sum(r.cdf is not None for r in rows) == 2
+
+
 def _decode_raises(blob: bytes) -> bool:
     try:
         DDSketch.decode(blob)
