@@ -1,6 +1,6 @@
 """SQL function surface: the 12 functions of the reference extension.
 
-Parity ("blob") path: Arrow-vectorized pandas UDFs over DataDog wire bytes —
+Parity ("blob") path: Arrow UDFs over DataDog wire bytes —
 the Spark analogue of the reference's vectorized scalar functions and C-API
 aggregates. The scale path lives in :mod:`duckdb_ddsketch_spark.operators.native`.
 """

@@ -83,8 +83,10 @@ def sketch_values_agg(value_col, alpha: float = DEFAULT_RELATIVE_ACCURACY) -> Co
     The reference ingests via per-row ``ddsketch_add`` loops (its own stated
     anti-pattern, README.md:236-247); this is the vectorized ingest form.
     For full-scale ingest prefer ``native.sketch_struct_agg`` →
-    ``native.struct_to_wire``, which has partial aggregation.
+    ``native.struct_to_wire``, which has partial aggregation. A bad
+    ``alpha`` raises here, not in a task.
     """
+    DDSketch(alpha)
 
     @arrow_udf(BinaryType())
     def _agg(values: pa.Array) -> Optional[bytes]:

@@ -44,7 +44,8 @@ class _DDSketchCreate:
     ArrowEvalPythonUDTF and the registry-wide no-BatchEvalPython plan
     guard (test_plans) holds with no carve-out. Closes what was
     permanent deviation #1 now that the repo runs PySpark 4 (UDTF
-    registration is Spark 3.5+)."""
+    registration is Spark 3.5+). An accuracy outside (0, 1) yields a NULL
+    sketch, as ``ddsketch_empty`` does."""
 
     def eval(self, relative_accuracy: float = None):  # noqa: D102
         from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY
@@ -54,7 +55,11 @@ class _DDSketchCreate:
             if relative_accuracy is None
             else float(relative_accuracy)
         )
-        yield (DDSketch(alpha).encode(),)
+        try:
+            blob = DDSketch(alpha).encode()
+        except ValueError:
+            blob = None
+        yield (blob,)
 
 
 def register_all(spark: SparkSession) -> SparkSession:
@@ -69,8 +74,8 @@ def register_all(spark: SparkSession) -> SparkSession:
     # ddsketch_create(α)` (lib.rs:53-113) — scalar and table functions
     # live in separate Spark registries, so the same name also keeps a
     # 0-parameter SCALAR registration for expression positions
-    # (`SELECT ddsketch_create()`), where pandas UDFs can't go because
-    # they need an input series.
+    # (`SELECT ddsketch_create()`), where Arrow UDFs can't go because
+    # they need an input column.
     spark.udtf.register(
         "ddsketch_create",
         udtf(_DDSketchCreate, returnType="sketch binary", useArrow=True),

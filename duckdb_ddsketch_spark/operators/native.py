@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY
+from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY, decode_or_none
 
 __all__ = [
     "gamma_of",
@@ -782,12 +782,8 @@ def _wire_to_struct(blobs: pd.Series) -> pd.DataFrame:
     rows = []
     cols = [f.name for f in SKETCH_STRUCT_SCHEMA.fields]
     for blob in blobs:
-        if blob is None:
-            rows.append((None,) * len(cols))
-            continue
-        try:
-            s = DDSketch.decode(bytes(blob))
-        except Exception:
+        s = decode_or_none(blob)
+        if s is None:
             rows.append((None,) * len(cols))
             continue
         rows.append(

@@ -38,6 +38,7 @@ __all__ = [
     "SketchMergeError",
     "DEFAULT_RELATIVE_ACCURACY",
     "WireRow",
+    "decode_or_none",
     "decode_wire_column",
     "merge_wire_column",
 ]
@@ -66,6 +67,11 @@ class DDSketch:
     )
 
     def __init__(self, relative_accuracy: float = DEFAULT_RELATIVE_ACCURACY):
+        # the range sketches-go's log mapping accepts; NaN fails it too
+        if not 0.0 < relative_accuracy < 1.0:
+            raise ValueError(
+                f"relative accuracy must be in (0, 1), got {relative_accuracy!r}"
+            )
         self.gamma = 1.0 + 2.0 * relative_accuracy / (1.0 - relative_accuracy)
         self.index_offset = 0.0
         self.positive_bins: dict[int, float] = {}
@@ -507,6 +513,18 @@ class DDSketch:
         )
 
 
+def decode_or_none(blob) -> Optional[DDSketch]:
+    """``DDSketch.decode`` of a wire blob, or None for a NULL blob or one
+    that does not decode. The decoder parses outside bytes, so any error it
+    raises marks the blob undecodable."""
+    if blob is None:
+        return None
+    try:
+        return DDSketch.decode(bytes(blob))
+    except Exception:
+        return None
+
+
 # ---------------------------------------------------------------------------
 # Columns of wire blobs
 # ---------------------------------------------------------------------------
@@ -708,9 +726,8 @@ def decode_wire_column(blobs: pa.Array) -> list[Optional[WireRow]]:
             *final_bins(first_store, final, codec.FLAG_NEGATIVE_STORE),
         )
     for i in slow:
-        try:
-            s = DDSketch.decode(buf[offsets[i] : offsets[i + 1]])
-        except Exception:
+        s = decode_or_none(buf[offsets[i] : offsets[i + 1]])
+        if s is None:
             continue  # undecodable: the row is skipped, like NULL
         rows[i] = WireRow(
             s.gamma,

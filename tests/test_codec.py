@@ -125,6 +125,26 @@ def test_merge_rejects_offset_mismatch():
         s1.merge(s2)
 
 
+@pytest.mark.parametrize("alpha", [0.0, 1.0, -0.5, 2.0, math.nan, math.inf])
+def test_relative_accuracy_outside_open_unit_interval_raises(alpha):
+    with pytest.raises(ValueError, match="relative accuracy"):
+        DDSketch(alpha)
+
+
+def test_relative_accuracy_inside_open_unit_interval_builds():
+    for alpha in (1e-9, 0.01, 0.5, 0.999):
+        assert DDSketch(alpha).extend([1.0, -2.0, 0.0]).count == 3.0
+    # the bytes of an empty and a small sketch at the common accuracies
+    values = [1.0, 2.5, -3.0, 0.0, 1e6]
+    for alpha, mapping, stores in (
+        (0.01, "02fd4a815abf52f03f0000000000000000", "050300025c028a0a0207016e020402"),
+        (0.02, "022a7839052fa7f03f0000000000000000", "050300022e02860502070138020402"),
+        (0.05, "02f31aca6b28aff13f0000000000000000", "050300021402820202070116020402"),
+    ):
+        assert DDSketch(alpha).encode().hex() == mapping
+        assert DDSketch(alpha).extend(values).encode().hex() == mapping + stores
+
+
 def test_decode_rejects_counts_and_bin_values_spark_cannot_hold():
     """A blob whose count is NaN, infinite or past BIGINT, or whose bins
     have no real value, is malformed: decode raises, so every path NULLs

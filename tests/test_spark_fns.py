@@ -423,28 +423,204 @@ def test_zero_arg_create_default_alpha(spark):
     assert row.c == 0
 
 
+def _decodes(blob) -> bool:
+    try:
+        DDSketch.decode(bytes(blob))
+    except Exception:
+        return False
+    return True
+
+
+def _dec(blob) -> DDSketch:
+    return DDSketch.decode(bytes(blob))
+
+
+def _added(s: DDSketch, x: float):
+    if math.isnan(x):
+        return None  # NaN is NULL for add and prepare, not a skipped value
+    s.add(x)
+    return s.encode()
+
+
+def _merged(a: DDSketch, b: DDSketch):
+    a.merge(b)
+    return a.encode()
+
+
+def _stats(s: DDSketch):
+    return (s.get_count(), s.get_sum(), s.get_min(), s.get_max(), s.get_avg())
+
+
+def _stats_full(blob):
+    s = _dec(blob)
+    qs = (0.25, 0.5, 0.75, 0.9, 0.95, 0.99)
+    return (bytes(blob), s.get_count(), s.get_sum(), s.get_avg(), s.get_min(),
+            s.get_max(), *(s.quantile(q) for q in qs))
+
+
+# Every SQL scalar: its argument columns (b/b2 blobs, x/y doubles, a an
+# accuracy, qs a double array) and the kernel's answer for a row whose
+# arguments are non-NULL and decodable.
+_SCALAR_CASES = {
+    "ddsketch_empty": (("a",), lambda a: DDSketch(a).encode()),
+    "ddsketch_add": (("b", "x"), lambda b, x: _added(_dec(b), x)),
+    "ddsketch_merge": (("b", "b2"), lambda b, c: _merged(_dec(b), _dec(c))),
+    "ddsketch_quantile": (("b", "x"), lambda b, x: _dec(b).quantile(x)),
+    "ddsketch_quantiles": (
+        ("b", "qs"),
+        lambda b, qs: [None if q is None else _dec(b).quantile(q) for q in qs],
+    ),
+    "ddsketch_cdf": (("b", "x"), lambda b, x: _dec(b).cdf(x)),
+    "ddsketch_trimmed_mean": (("b", "x", "y"), lambda b, x, y: _dec(b).trimmed_mean(x, y)),
+    "ddsketch_downsample": (("b", "a"), lambda b, a: _dec(b).downsample(a).encode()),
+    "ddsketch_count": (("b",), lambda b: _dec(b).get_count()),
+    "ddsketch_min": (("b",), lambda b: _dec(b).get_min()),
+    "ddsketch_max": (("b",), lambda b: _dec(b).get_max()),
+    "ddsketch_sum": (("b",), lambda b: _dec(b).get_sum()),
+    "ddsketch_avg": (("b",), lambda b: _dec(b).get_avg()),
+    "ddsketch_stats": (("b",), lambda b: _stats(_dec(b))),
+    "ddsketch_stats_full": (("b",), _stats_full),
+    "ddsketch_prepare": (("x", "a"), lambda x, a: _added(DDSketch(a), x)),
+}
+
+
+def _bits(v):
+    """Outputs compared exactly: floats by their bits (NaN is NULL, as
+    Spark returns it), bytes by value, a struct of NULL fields as NULL."""
+    if isinstance(v, float):
+        return None if math.isnan(v) else v.hex()
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    if isinstance(v, (list, tuple)):
+        out = tuple(_bits(x) for x in v)
+        return None if isinstance(v, tuple) and all(x is None for x in out) else out
+    return v
+
+
 def test_scalar_surface_survives_garbage_blobs(spark):
-    """Random bytes through every scalar: NULL out, never an exception
-    (lib.rs:191-194 bad-blob semantics), including mixed with valid rows."""
+    """Every registered SQL scalar over random bytes, NULL, empty and cut
+    blobs, NULL/NaN/infinite arguments and accuracies outside (0, 1): a
+    job that does not fail, NULL wherever the row rule says NULL
+    (NULL argument, undecodable blob, kernel ValueError/ArithmeticError;
+    lib.rs:154-157, 191-194), and the kernel's exact answer on every other
+    row."""
     import random
 
-    from duckdb_ddsketch_spark import DDSketch
+    from pyspark.util import PythonEvalType
+
+    from duckdb_ddsketch_spark.functions.registry import _FUNCTIONS
+
+    scalars = {
+        n for n, f in _FUNCTIONS.items()
+        if f.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+    }
+    assert all(
+        f.evalType == PythonEvalType.SQL_GROUPED_AGG_ARROW_UDF
+        for n, f in _FUNCTIONS.items() if n not in scalars
+    )
+    assert scalars == set(_SCALAR_CASES)
 
     rng = random.Random(99)
-    rows = [(bytes(rng.randbytes(rng.randint(0, 60))),) for _ in range(200)]
-    rows += [(DDSketch(0.01).extend([1.0, 2.0]).encode(),), (None,)]
-    df = spark.createDataFrame(rows, "b binary")
-    out = df.selectExpr(
-        "ddsketch_quantile(b, 0.5d) AS q",
-        "ddsketch_count(b) AS c",
-        "ddsketch_stats(b) AS st",
-        "ddsketch_merge(b, b) AS m",
-        "ddsketch_add(b, 1.0d) AS a",
-        "ddsketch_cdf(b, 1.0d) AS f",
+    good = DDSketch(0.01).extend([1.0, 2.5, -3.0, 0.0, 7.0]).encode()
+    good2 = DDSketch(0.01).extend([4.0, -0.5]).encode()
+    base = {"b": good, "b2": good2, "x": 0.5, "y": 0.75, "a": 0.02, "qs": [0.5, None]}
+    variants = [{}]
+    variants += [{"b": rng.randbytes(rng.randint(0, 60)),
+                  "b2": rng.randbytes(rng.randint(0, 60))} for _ in range(200)]
+    variants += [{k: None} for k in base]
+    variants += [{"b": b""}, {"b": good[:-2]}, {"b2": good[:5]},
+                 {"b": DDSketch(0.01).encode(), "b2": DDSketch(0.01).encode()}]
+    variants += [{"x": v} for v in (math.nan, math.inf, -math.inf, 0.0, -3.0, 2.0)]
+    variants += [{"y": v} for v in (math.nan, 0.25, 1.0)]
+    # accuracies outside (0, 1): NULL from every constructor, not a failed job
+    variants += [{"a": v} for v in (0.0, 1.0, -1.0, -0.5, 2.0, math.nan, math.inf)]
+    variants += [{"a": 0.001}]  # a refining downsample
+    variants += [{"b2": DDSketch(0.02).extend([1.0]).encode()}]  # merge mismatch
+    gamma_one = _dec(good)
+    gamma_one.gamma = 1.0  # decodes, but value_to_bin divides by ln 1
+    variants += [{"b": gamma_one.encode()}]
+    variants += [{"qs": [math.nan, 0.0, 1.0, 2.0]}, {"qs": []}]
+    rows = [{**base, **v, "i": i} for i, v in enumerate(variants)]
+    cols = ["i", "b", "b2", "x", "y", "a", "qs"]
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows],
+        "i int, b binary, b2 binary, x double, y double, a double, qs array<double>",
+    )
+    out = df.select(
+        "i",
+        *(F.expr(f"{n}({', '.join(args)})").alias(n)
+          for n, (args, _) in _SCALAR_CASES.items()),
     ).collect()
-    assert len(out) == 202
-    ok = [r for r in out if r.c == 2]
-    assert len(ok) >= 1  # the valid sketch still computes
+    assert sorted(r.i for r in out) == list(range(len(rows)))
+
+    answered = dict.fromkeys(_SCALAR_CASES, 0)
+    for r in out:
+        row = rows[r.i]
+        for name, (args, kernel) in _SCALAR_CASES.items():
+            vals = [row[c] for c in args]
+            want = None
+            if all(v is not None for v in vals) and all(
+                _decodes(row[c]) for c in args if c in ("b", "b2")
+            ):
+                try:
+                    want = kernel(*vals)
+                except (ValueError, ArithmeticError):
+                    pass
+            assert _bits(r[name]) == _bits(want), (name, row)
+            answered[name] += _bits(want) is not None
+    # every scalar also answers rows with a value, not only NULLs
+    assert min(answered.values()) > 5, answered
+
+
+def test_constructors_null_a_bad_accuracy(spark):
+    """An accuracy outside (0, 1) gives the table function a NULL sketch
+    row, and raises in the driver-side constructors at call time."""
+    assert spark.sql("SELECT * FROM ddsketch_create(1.0d)").collect() == [(None,)]
+    with pytest.raises(ValueError, match="relative accuracy"):
+        ddsketch_create(1.0)
+    with pytest.raises(ValueError, match="relative accuracy"):
+        ddsketch_prepare(F.col("v"), 0.0)
+    with pytest.raises(ValueError, match="relative accuracy"):
+        sketch_values_agg(F.col("v"), -1.0)
+
+
+def test_scalar_column_names_are_the_function_names(spark):
+    """The DataFrame-API column name of every scalar reads ``fn(args)``:
+    the decorator that applies the row rule does not rename a function."""
+    from duckdb_ddsketch_spark import functions as fns
+    from duckdb_ddsketch_spark.functions import scalar
+
+    df = spark.createDataFrame(
+        [], "s binary, t binary, v double, w double, qs array<double>"
+    )
+    expected = {
+        "ddsketch_empty": (["v"], "ddsketch_empty(v)"),
+        "ddsketch_add": (["s", "v"], "ddsketch_add(s, v)"),
+        "ddsketch_merge": (["s", "t"], "ddsketch_merge(s, t)"),
+        "ddsketch_quantile": (["s", "v"], "ddsketch_quantile(s, v)"),
+        "ddsketch_quantiles": (["s", "qs"], "ddsketch_quantiles(s, qs)"),
+        "ddsketch_cdf": (["s", "v"], "ddsketch_cdf(s, v)"),
+        "ddsketch_trimmed_mean": (["s", "v", "w"], "ddsketch_trimmed_mean(s, v, w)"),
+        "ddsketch_downsample": (["s", "v"], "ddsketch_downsample(s, v)"),
+        "ddsketch_count": (["s"], "ddsketch_count(s)"),
+        "ddsketch_min": (["s"], "ddsketch_min(s)"),
+        "ddsketch_max": (["s"], "ddsketch_max(s)"),
+        "ddsketch_sum": (["s"], "ddsketch_sum(s)"),
+        "ddsketch_avg": (["s"], "ddsketch_avg(s)"),
+        "ddsketch_stats": (["s"], "ddsketch_stats(s)"),
+        "ddsketch_stats_full": (["s"], "ddsketch_stats_full(s)"),
+        "ddsketch_prepare": (["v"], "ddsketch_prepare_sql(v, 0.01)"),
+        "ddsketch_prepare_sql": (["v", "w"], "ddsketch_prepare_sql(v, w)"),
+    }
+    column_fns = {
+        n for n in scalar.__all__
+        if n.startswith("ddsketch_") and n != "ddsketch_create"
+    }
+    assert column_fns == set(expected)
+    assert {n for n in fns.__all__ if n in scalar.__all__} - {"ddsketch_create"} <= column_fns
+    for name, (args, column) in expected.items():
+        fn = getattr(scalar, name)
+        assert df.select(fn(*map(F.col, args))).columns == [column], name
 
 
 def test_ddsketch_downsample_sql_surface(spark):
