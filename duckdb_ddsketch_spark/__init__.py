@@ -18,7 +18,11 @@ Layers:
   — IO helpers and Structured Streaming sketch windows.
 """
 
+from . import _zipcache
 from .sketch import DDSketch, SketchMergeError, DEFAULT_RELATIVE_ACCURACY
+
+# in a Python worker running a task, stop the per-task zip re-reads
+_zipcache.install()
 
 __version__ = "0.1.0"
 

@@ -762,6 +762,11 @@ def _struct_to_wire(rows: pd.DataFrame) -> pd.Series:
         s.positive_bins = dict(pos) if isinstance(pos, dict) else {}
         s.negative_bins = dict(neg) if isinstance(neg, dict) else {}
         s.zero_count = 0.0 if pd.isna(row.get("zero_count")) else float(row["zero_count"])
+        # a NULL, NaN or infinite count has no wire form that decodes
+        counts = (*s.positive_bins.values(), *s.negative_bins.values(), s.zero_count)
+        if not all(c is not None and math.isfinite(c) for c in counts):
+            out.append(None)
+            continue
         s.count = float(row["count"])
         s.sum = 0.0 if pd.isna(row.get("sum")) else float(row["sum"])
         s.min = math.inf if pd.isna(row.get("min")) else float(row["min"])

@@ -11,6 +11,7 @@ import os
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from duckdb_ddsketch_spark import DDSketch
 from duckdb_ddsketch_spark.sketch import SketchMergeError
@@ -226,6 +227,53 @@ def test_struct_to_wire_null_struct_encodes_null(spark):
     # and a real struct still encodes to decodable wire bytes
     good = s.select(native.struct_to_wire("sketch").alias("b")).first()
     assert DDSketch.decode(bytes(good.b)).get_count() == 2
+
+
+def test_struct_to_wire_nulls_a_row_whose_counts_cannot_encode(spark):
+    """A NULL, NaN or infinite bin count, or an infinite zero count, has no
+    decodable wire form: that row is NULL and the rest of its batch encodes
+    as before, a NULL or NaN zero count still encoding as 0."""
+    a = DDSketch(0.01).extend([-3.0, -1.5, 0.0, 0.0, 2.0, 7.5, 7.5, 40.0])
+    b = DDSketch(0.02).extend([0.5 * i for i in range(1, 30)])
+
+    def struct(s, pos=None, neg=None, zero_count="keep"):
+        return (
+            s.gamma,
+            s.index_offset,
+            dict(s.positive_bins) if pos is None else pos,
+            dict(s.negative_bins) if neg is None else neg,
+            s.zero_count if zero_count == "keep" else zero_count,
+            float(s.count),
+            s.sum,
+            s.min,
+            s.max,
+        )
+
+    no_zero = DDSketch.decode(a.encode())
+    no_zero.zero_count = 0.0
+    p1, n1 = next(iter(a.positive_bins)), next(iter(a.negative_bins))
+    cases = [
+        (struct(a), a.encode()),
+        (struct(a, pos={**a.positive_bins, p1: None}), None),
+        (struct(a, neg={**a.negative_bins, n1: math.nan}), None),
+        (struct(a, pos={**a.positive_bins, p1: math.inf}), None),
+        (struct(a, neg={**a.negative_bins, n1: -math.inf}), None),
+        (struct(a, zero_count=math.inf), None),
+        (struct(a, zero_count=math.nan), no_zero.encode()),
+        (struct(a, zero_count=None), no_zero.encode()),
+        (struct(b), b.encode()),
+    ]
+    df = spark.createDataFrame(
+        [(i, s) for i, (s, _) in enumerate(cases)],
+        StructType([StructField("i", IntegerType()),
+                    StructField("sketch", native.SKETCH_STRUCT_SCHEMA)]),
+    ).coalesce(1)
+    out = {
+        r.i: r.b
+        for r in df.select("i", native.struct_to_wire("sketch").alias("b")).collect()
+    }
+    for i, (_, want) in enumerate(cases):
+        assert (None if out[i] is None else bytes(out[i])) == want, i
 
 
 def _huge_index_blob() -> bytes:
