@@ -46,7 +46,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
 # ---------------------------------------------------------------------------
 # Session wall-clock guard (round 13, VERDICT r12 items 1-2). The r12 run
@@ -175,7 +175,7 @@ N_BITMAP_USERS = 5_000_000
 # ANN family: exact brute-force top-k — 2M 16-dim corpus x 128 queries
 # (256M scored pairs). Components are dyadic rationals + 0.5 so no vector
 # is ever zero-norm; both engines generate identical doubles. Spark drives
-# similarity.brute_force_topk_blas (Arrow + numpy matmul, distributive
+# similarity.brute_force_topk (Arrow + numpy matmul, distributive
 # local top-k — the corpus never shuffles); DuckDB runs the canonical SQL
 # form (cross join + windowed rank over the materialized pair set) — a SQL
 # engine has no way to express "local top-k then merge" without the
@@ -1805,7 +1805,7 @@ def run_spark_families(spark, result: dict) -> None:
         ) + ")"
         corpus = gen(N_ANN_CORPUS, [("vec_id", "id"), ("embedding", vec)])
         queries = gen(N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-        similarity.brute_force_topk_blas(
+        similarity.brute_force_topk(
             corpus, queries, k=ANN_K, max_query_rows=N_ANN_Q
         ).collect()
 
@@ -1827,7 +1827,7 @@ def run_spark_families(spark, result: dict) -> None:
         scale = similarity.quantize_calibration(corpus, bits=8)
         qc = similarity.quantize_embeddings(corpus, scale, bits=8)
         qq = similarity.quantize_embeddings(queries, scale, bits=8)
-        similarity.quantized_topk_blas(
+        similarity.quantized_topk(
             qc, qq, k=ANN_K, max_query_rows=N_ANN_Q
         ).collect()
 
@@ -1835,8 +1835,8 @@ def run_spark_families(spark, result: dict) -> None:
 
     def ann_pq():
         # PQ/ADC pipeline at bench scale: fixed dyadic codebooks (PQ_CB)
-        # -> BLAS encode (fold-order distance accumulation, bit-identical
-        # codes to the expression form) -> broadcast-LUT ADC top-k. The
+        # -> numpy encode (fold-order distance accumulation, codes equal
+        # to the mirror's argmin) -> collected-LUT ADC top-k. The
         # DuckDB mirror runs the identical argmin + list-lookup
         # arithmetic; mirror agreement pinned at small N in
         # test_bench_smoke.
@@ -1848,8 +1848,8 @@ def run_spark_families(spark, result: dict) -> None:
         ) + ")"
         corpus = gen(N_ANN_CORPUS, [("vec_id", "id"), ("embedding", vec)])
         queries = gen(N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-        coded = similarity.pq_encode_blas(corpus, PQ_CB)
-        similarity.pq_adc_topk_blas(
+        coded = similarity.pq_encode(corpus, PQ_CB)
+        similarity.pq_adc_topk(
             coded, queries, PQ_CB, k=ANN_K, max_query_rows=N_ANN_Q
         ).collect()
 

@@ -1,7 +1,7 @@
 """Native (JVM-side) DDSketch path — the 100 TB design.
 
 The reference's per-row decode/encode cost (README.md:236-237) and the
-pandas-UDF aggregate's missing partial aggregation both disappear when the
+Arrow-UDF aggregate's missing partial aggregation both disappear when the
 sketch math is expressed as Catalyst expressions over raw values:
 
 * ``value_to_bin`` is ``CEIL(LN(v)/LN(gamma))`` (datadog_encoding.rs:750-753)
@@ -40,7 +40,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY, decode_or_none
+from ..sketch import (
+    _BIGINT_LIMIT,
+    DDSketch,
+    DEFAULT_RELATIVE_ACCURACY,
+    decode_or_none,
+)
 
 __all__ = [
     "gamma_of",
@@ -745,6 +750,34 @@ def merge_struct_sketches(
 # ---------------------------------------------------------------------------
 
 
+def _wire_decodes(s: DDSketch) -> bool:
+    """Whether ``DDSketch.decode`` accepts ``s.encode()``, read off the
+    struct's finite counts and extreme bin indexes instead of the bytes:
+    the count decode rebuilds (each store summed in index order, then a
+    positive zero count) must fit a BIGINT, a negative gamma needs an
+    integral index offset, and the bin values decode sums must not
+    overflow."""
+    stores = (s.positive_bins, s.negative_bins)
+    zero = s.zero_count if s.zero_count > 0.0 else 0.0
+    total = sum(stores[0].values()) + sum(stores[1].values()) + zero
+    if abs(total) >= 2.0**62 or min(min(b.values(), default=0.0) for b in stores) < 0.0:
+        # near the limit, or negative counts that can cancel: then the
+        # summation order decides, so sum as decode does
+        total = sum(sum(c for _, c in sorted(b.items())) for b in stores) + zero
+    if not -_BIGINT_LIMIT <= total < _BIGINT_LIMIT:
+        return False
+    if s.gamma < 0.0 and not s.index_offset.is_integer():
+        return False
+    try:
+        for bins in stores:
+            if bins:
+                s.bin_to_value(min(bins))
+                s.bin_to_value(max(bins))
+    except ArithmeticError:
+        return False
+    return True
+
+
 @pandas_udf(BinaryType())
 def _struct_to_wire(rows: pd.DataFrame) -> pd.Series:
     out = []
@@ -765,6 +798,9 @@ def _struct_to_wire(rows: pd.DataFrame) -> pd.Series:
         # a NULL, NaN or infinite count has no wire form that decodes
         counts = (*s.positive_bins.values(), *s.negative_bins.values(), s.zero_count)
         if not all(c is not None and math.isfinite(c) for c in counts):
+            out.append(None)
+            continue
+        if not _wire_decodes(s):
             out.append(None)
             continue
         s.count = float(row["count"])

@@ -1,27 +1,37 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as a production ANN pipeline would ship them:
+Every operator here has one implementation, in one of two shapes:
 
-* **brute force** — exact cosine top-k: a self-join with the dot product as
-  a native ``aggregate(zip_with(...))`` fold and a per-query ``row_number``
-  window. At scale: broadcast the (much smaller) query set against the
-  corpus so the corpus never shuffles; norms are precomputed and reused.
-* **bucketed (sign-LSH / IVF-style)** — deterministic random hyperplanes
-  derived from md5 of (plane, dim) give every vector a bucket code; the join
-  is restricted to equal codes (plus optional multi-probe). The shuffle then
-  moves (code, id, vec) clustered by code instead of the full cross product.
-  The hyperplanes are engine-reproducible (no RNG state), so the operator
-  remains oracle-checkable.
+* **collected queries, local top-k** — :func:`brute_force_topk`,
+  :func:`ivf_topk`, :func:`quantized_topk` and :func:`pq_adc_topk` collect
+  the query side to the driver (at most ``max_query_rows`` rows), then one
+  ``mapInArrow`` pass scores each corpus batch against it in numpy and
+  keeps the batch's top-k per query (top-k is distributive); a single
+  window ranks the merged |partitions| x |queries| x k rows. The corpus
+  never shuffles. Ids must be integral.
+* **bucketed joins (sign-LSH / IVF-style)** — deterministic random
+  hyperplanes derived from md5 of (plane, dim) give every vector a bucket
+  code; the join is restricted to equal codes (plus optional multi-probe).
+  The shuffle then moves (code, id, vec) clustered by code instead of the
+  full cross product. The hyperplanes are engine-reproducible (no RNG
+  state), so the operator remains oracle-checkable. :func:`lsh_topk` is
+  the top-k for query sets too large to collect.
 
-All arithmetic is promoted to double before folding so results are stable
-across engines to within ulps (absorbed by float32 output casts).
+The Catalyst folds promote to double before folding so results are stable
+across engines to within ulps (absorbed by float32 output casts). The numpy
+kernels whose output must equal a DuckDB mirror bit for bit (quantized dots,
+PQ codes, ADC scores) accumulate in the mirror's left-to-right order.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Tuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.functions import arrow_udf
 
 __all__ = [
     "cosine",
@@ -31,24 +41,19 @@ __all__ = [
     "norm",
     "brute_force_topk",
     "cosine_near_pairs",
-    "brute_force_topk_blas",
     "ivf_topk",
-    "ivf_topk_blas",
     "hyperplane_code",
     "lsh_topk",
     "embedding_neardup_lsh",
     "semantic_dedup",
     "ivf_pq_topk",
     "pq_adc_topk",
-    "pq_adc_topk_blas",
     "pq_encode",
-    "pq_encode_blas",
     "pq_train",
     "quantize_calibration",
     "quantize_embeddings",
     "dequantize_embeddings",
     "quantized_topk",
-    "quantized_topk_blas",
 ]
 
 
@@ -57,13 +62,10 @@ def _i64_ids(col):
     ids convert zero-copy; a NULL id yields a mask (the row is dropped —
     through pandas it surfaced as NaN and raised; silently casting NaN
     to int64 is undefined). Non-integral id types raise, as documented
-    on every BLAS route."""
-    import numpy as np
-    import pyarrow.types as patypes
-
-    if not patypes.is_integer(col.type):
+    on every collected-query top-k."""
+    if not pa.types.is_integer(col.type):
         raise TypeError(
-            f"id column must be an integer type for the BLAS routes;"
+            f"id column must be an integer type for the top-k kernels;"
             f" got {col.type} (a float id like 1.7 would silently"
             f" truncate — cast the column to bigint upstream)"
         )
@@ -79,7 +81,7 @@ def _i64_ids(col):
 
 
 def _require_int_ids(df, id_col: str, caller: str) -> None:
-    """The BLAS routes stage ids as int64 vectors on BOTH sides; the
+    """The numpy top-k kernels stage ids as int64 vectors on BOTH sides; the
     corpus side is guarded per batch by :func:`_i64_ids`, and this is
     the query-side twin — without it a double id like 1.7 would silently
     truncate through ``np.array(..., dtype=np.int64)`` into a wrong
@@ -99,7 +101,7 @@ def _require_int_ids(df, id_col: str, caller: str) -> None:
 
 
 def _rb_vec_matrix(col, nd):
-    """Arrow list column -> (float64 matrix, valid-row mask) for the BLAS
+    """Arrow list column -> (float64 matrix, valid-row mask) for the numpy
     kernels. The fast path reinterprets the list values buffer ZERO-COPY
     (uniform-width verified via offsets, no nulls — what the upstream
     width/NULL filters guarantee) and only then widens to float64; the
@@ -114,8 +116,6 @@ def _rb_vec_matrix(col, nd):
     so the blas route stays update-identical to expand/fold on such
     rows. Returns (None, mask) when the batch holds no usable row; mask
     is None when every row is valid (the fast path)."""
-    import numpy as np
-
     n = len(col)
     if n == 0:
         return None, None
@@ -226,48 +226,6 @@ def _int_cos(qdot: Column, normsq_a: Column, normsq_b: Column) -> Column:
     return F.try_divide(
         qdot.cast("double"),
         F.sqrt(normsq_a.cast("double")) * F.sqrt(normsq_b.cast("double")),
-    )
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors of each query vector.
-
-    Returns (query_id, neighbor_id, cos, rank), rank 1..k, self-matches
-    excluded, ties broken by neighbor id. ``queries`` is broadcast — the
-    corpus is scanned once, never shuffled until the tiny top-k window.
-    """
-    # norms are precomputed per vector: higher-order folds are interpreted
-    # (not codegen'd), so hoisting them out of the O(|q|x|c|) join removes
-    # two thirds of the per-pair work
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qnorm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        norm(F.col(vec_col)).alias("nnorm"),
-    )
-    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.try_divide(dot(F.col("qvec"), F.col("nvec")), F.col("qnorm") * F.col("nnorm")).alias("cos"),
-    )
-    scored = scored.where(F.col("cos").isNotNull())  # zero-norm rows drop out
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
     )
 
 
@@ -429,8 +387,8 @@ def embedding_neardup_lsh(
 
 
 def _local_topk_batch(ids, q_ids, scores, take, require_finite):
-    """Deterministic local top-k over one BLAS batch — the shared kernel
-    behind :func:`brute_force_topk_blas` and :func:`quantized_topk_blas`.
+    """Deterministic local top-k over one corpus batch — the kernel every
+    :func:`_topk_pass` scorer ends in.
 
     A plain argpartition keeps an ARBITRARY subset of score-tied rows
     (integer dots tie constantly; duplicate vectors make exact float
@@ -448,8 +406,6 @@ def _local_topk_batch(ids, q_ids, scores, take, require_finite):
     (batch, n_queries); returns (qi, ri) index arrays into
     (query, batch-row) selecting the emitted pairs in final order.
     """
-    import numpy as np
-
     n = scores.shape[0]
     thresh = np.partition(scores, n - take, axis=0)[n - take]
     mask = scores >= thresh
@@ -473,7 +429,136 @@ def _local_topk_batch(ids, q_ids, scores, take, require_finite):
     return qi[sel], ri[sel]
 
 
-def brute_force_topk_blas(
+def _batch_rows(rb, width: int):
+    """One corpus batch's usable rows — column 0 the id, column 1 the
+    vector — as (int64 ids, float64 matrix, kept-row mask over the batch),
+    or None when no row is left. NULL ids, NULL or wrong-width vectors and
+    vectors with a non-finite component never score."""
+    mat, ok = _rb_vec_matrix(rb.column(1), width)
+    if mat is None:
+        return None
+    ids, ok_id = _i64_ids(rb.column(0))
+    keep = np.ones(rb.num_rows, dtype=bool) if ok is None else ok.copy()
+    use = np.isfinite(mat).all(axis=1)
+    if ok_id is not None:
+        use &= ok_id[keep]
+    if not use.all():
+        mat = mat[use]
+        keep[np.flatnonzero(keep)[~use]] = False
+    if not len(mat):
+        return None
+    return ids[keep], mat, keep
+
+
+def _collect_queries(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    row_limit: int,
+    caller: str,
+    width=None,
+):
+    """The query side on the driver: (int64 ids, float64 matrix), or None
+    when no usable query is left. More than ``row_limit`` rows (the
+    caller's ``max_query_rows``) raise instead of risking the driver.
+    Rows drop as on the corpus side (:func:`_batch_rows`). Without a
+    fixed ``width`` the reference width is the modal width of the
+    collected queries (ties -> smaller), so one ragged query cannot
+    decide it for everyone."""
+    _require_int_ids(queries, id_col, caller)
+    vec = F.col(vec_col)
+    present = vec.isNotNull()
+    if width is not None:
+        present &= F.size(vec) == width
+    rows = (
+        queries.where(present)
+        .select(id_col, vec_col)
+        .limit(row_limit + 1)
+        .collect()
+    )
+    if len(rows) > row_limit:
+        raise ValueError(
+            f"{caller} collects the query set to the driver; got more than"
+            f" max_query_rows={row_limit} rows. Use lsh_topk (no driver"
+            " collect) for large query sets, or raise max_query_rows"
+            " explicitly if the driver can hold the matrix."
+        )
+    if width is None:
+        counts = Counter(len(r[1]) for r in rows)
+        width = max(counts, key=lambda w: (counts[w], -w), default=0)
+    rows = [r for r in rows if r[0] is not None and len(r[1]) == width]
+    if not width or not rows:
+        return None
+    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
+    q_mat = np.array([r[1] for r in rows], dtype=np.float64)
+    finite = np.isfinite(q_mat).all(axis=1)
+    if not finite.any():
+        return None
+    return q_ids[finite], q_mat[finite]
+
+
+def _empty_topk(corpus: DataFrame, score_col: str, score_type: str) -> DataFrame:
+    return corpus.sparkSession.createDataFrame(
+        [], f"query_id long, neighbor_id long, {score_col} {score_type}, rank int"
+    )
+
+
+def _rank_topk(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """The final window: rank 1..k per query, score DESC, neighbor id ASC."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score_col, "rank")
+    )
+
+
+def _topk_pass(
+    corpus: DataFrame,
+    cols,
+    width: int,
+    k: int,
+    score_col: str,
+    score_type: str,
+    candidates,
+) -> DataFrame:
+    """The distributed top-k behind every collected-query operator: one
+    ``mapInArrow`` pass hands each corpus batch's usable rows
+    (:func:`_batch_rows`) to ``candidates(ids, mat, *rest)`` — ``rest`` are
+    the ``cols`` after the id and the vector, as Arrow arrays cut to those
+    rows — which returns the batch's local top-k as (query ids, neighbor
+    ids, scores). :func:`_rank_topk` then merges them, so the one exchange
+    feeds the final window and the corpus never shuffles."""
+    arrow_type = pa.int64() if score_type == "long" else pa.float64()
+
+    def run(batches):
+        for rb in batches:
+            rows = _batch_rows(rb, width)
+            if rows is None:
+                continue
+            ids, mat, keep = rows
+            mask = pa.array(keep)
+            rest = [rb.column(i).filter(mask) for i in range(2, rb.num_columns)]
+            q, n, s = candidates(ids, mat, *rest)
+            if len(q):
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(q, pa.int64()),
+                        pa.array(n, pa.int64()),
+                        pa.array(s, arrow_type),
+                    ],
+                    names=["query_id", "neighbor_id", score_col],
+                )
+
+    scored = corpus.select(*cols).mapInArrow(
+        run, schema=f"query_id long, neighbor_id long, {score_col} {score_type}"
+    )
+    return _rank_topk(scored, score_col, k)
+
+
+def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
@@ -481,114 +566,40 @@ def brute_force_topk_blas(
     vec_col: str = "embedding",
     max_query_rows: int = 10_000,
 ) -> DataFrame:
-    """Exact top-k via Arrow + numpy matmul — the dense-linear-algebra path.
+    """Exact top-k cosine neighbors of each query vector.
 
-    The fold-based form is pure Catalyst but interprets one lambda step per
-    element; for wide embeddings BLAS wins by orders of magnitude. Shape:
-    the (small) query matrix is closed over and shipped to every partition;
-    ``mapInPandas`` emits only each partition's local top-k per query
-    (top-k is distributive), so the final window sees |partitions|·|q|·k
-    rows — the corpus itself never shuffles. Results match
-    ``brute_force_topk`` up to BLAS summation-order ulps.
-
-    The query side is collected to the driver and closed over, which is the
-    point of this verification path — ``max_query_rows`` bounds that collect
-    so an oversized query set fails fast instead of OOMing the driver.
-
-    ``id_col`` must be integral (ids are staged as an int64 vector and the
-    output schema is ``long``); string/decimal ids raise on the first
-    batch. The fold form :func:`brute_force_topk` accepts any id type.
+    Returns (query_id, neighbor_id, cos, rank), rank 1..k, self-matches
+    excluded, ties broken by neighbor id. Each corpus batch is one numpy
+    matmul against the collected query matrix (:func:`_topk_pass`), so
+    results match an exact cosine up to BLAS summation-order ulps. NULL,
+    wrong-width, zero-norm and non-finite vectors never score, on either
+    side. ``id_col`` must be integral; more than ``max_query_rows``
+    queries raise (use :func:`lsh_topk` for large query sets).
     """
-    import numpy as np
-    import pandas as pd
-
-    _require_int_ids(queries, id_col, 'brute_force_topk_blas')
-    q_rows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"brute_force_topk_blas collects the query set to the driver; got "
-            f"more than max_query_rows={max_query_rows} rows. Use lsh_topk or "
-            "ivf_topk for large query sets (the scale paths), or raise "
-            "max_query_rows explicitly if the driver can hold the matrix."
-        )
-    # NULL ids drop like the corpus side's _i64_ids mask (np.int64
-    # staging would otherwise crash opaquely on None)
-    q_rows = [r for r in q_rows if r[0] is not None]
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    q = _collect_queries(
+        queries, id_col, vec_col, max_query_rows, "brute_force_topk"
+    )
+    if q is None:
+        return _empty_topk(corpus, "cos", "double")
+    q_ids, q_mat = q
     q_norm = np.linalg.norm(q_mat, axis=1)
 
-    out_schema = (
-        "query_id long, neighbor_id long, cos double"
-    )
+    def candidates(ids, mat):
+        denom = np.outer(np.linalg.norm(mat, axis=1), q_norm)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            cos = np.where(denom > 0.0, (mat @ q_mat.T) / denom, -np.inf)
+        # zero-norm pairs score -inf, the sentinel _local_topk_batch skips;
+        # a NaN (an overflowing norm) must become -inf too, or it would
+        # poison the k-th-score threshold for its query
+        np.nan_to_num(cos, copy=False, nan=-np.inf, neginf=-np.inf)
+        qi, ri = _local_topk_batch(
+            ids, q_ids, cos, min(k + 1, len(ids)), require_finite=True
+        )
+        return q_ids[qi], ids[ri], cos[ri, qi]
 
-    width = q_mat.shape[1] if q_mat.ndim == 2 else 0
-
-    def score(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            # drop NULL / wrong-width corpus rows BEFORE the reshape: a
-            # single malformed embedding otherwise makes the batch array
-            # ragged and fails np.linalg.norm — one bad row must never
-            # fail a 100 TB job (mirrors the Catalyst paths, where such
-            # rows produce NULL cos and fall out of top-k). Zero-copy
-            # list-buffer reshape on the clean fast path; interior-NULL
-            # elements surface as NaN (scored -inf below), exactly what
-            # the pandas conversion fed the previous kernel.
-            mat, ok = _rb_vec_matrix(rb.column(1), width)
-            if mat is None:
-                continue
-            ids, ok_id = _i64_ids(rb.column(0))
-            if ok is not None:
-                ids = ids[ok]
-                if ok_id is not None:
-                    ok_id = ok_id[ok]
-            if ok_id is not None:
-                # NULL ids: drop the row (a NULL id would otherwise
-                # surface as NaN -> undefined int64)
-                mat = mat[ok_id]
-                ids = ids[ok_id]
-                if not len(mat):
-                    continue
-            norms = np.linalg.norm(mat, axis=1)
-            denom = np.outer(norms, q_norm)  # (batch, nq)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0.0, (mat @ q_mat.T) / denom, -np.inf)
-            # zero-norm rows score -inf so they can never enter top-k —
-            # mirrors the Catalyst paths' try_divide -> NULL semantics.
-            # NaN scores (non-finite embedding components) become -inf
-            # in place (cos is batch-local, safe to mutate): a NaN would
-            # poison the tie-break threshold (cos >= NaN is all-False)
-            # and silently drop every finite candidate for that query.
-            # neginf must stay -inf: nan_to_num's default would rewrite
-            # the zero-norm sentinel to a finite -1.8e308, letting
-            # degenerate rows slip past the isfinite filter below
-            np.nan_to_num(cos, copy=False, nan=-np.inf, neginf=-np.inf)
-            take = min(k + 1, cos.shape[0])
-            qi, ri = _local_topk_batch(
-                ids, q_ids, cos, take, require_finite=True
-            )
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(q_ids[qi], pa.int64()),
-                    "neighbor_id": pa.array(ids[ri], pa.int64()),
-                    "cos": pa.array(cos[ri, qi], pa.float64()),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInArrow(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _topk_pass(
+        corpus, (id_col, vec_col), q_mat.shape[1], k, "cos", "double",
+        candidates,
     )
 
 
@@ -664,31 +675,17 @@ def _plane_component(p: int, d: int) -> float:
     return int(h, 16) / float(1 << 59) - 1.0
 
 
-def _cell_centroids(
-    corpus: DataFrame, vec_col: str, label_col: str, integer: bool = False
-) -> DataFrame:
+def _cell_centroids(corpus: DataFrame, vec_col: str, label_col: str) -> DataFrame:
     """Per-cell mean vectors for the IVF routes: (cell, centroid) rows,
-    bounded at cells x d doubles. Shared by :func:`ivf_topk` (both the
-    float and ``codes_col`` branches) and :func:`ivf_topk_blas` so the
-    probe-selection aggregate stays expression-identical in one place
-    (the documented fold/BLAS parity depends on it). NULL-label rows are
-    excluded: a NULL cell can never be probed (the cell equi-join is
-    null-rejecting), so including it would only waste one of each
-    query's ``nprobe`` slots. ``integer=True`` (the quantized-codes
-    route) averages via exact BIGINT component sums and ONE
-    correctly-rounded division — engine-reproducible, unlike an
-    order-sensitive float avg."""
-    if integer:
-        src = F.col(vec_col)
-        mean = (F.sum("col").cast("double") / F.count("col")).alias("m")
-    else:
-        src = _dbl(F.col(vec_col))
-        mean = F.avg("col").alias("m")
+    bounded at cells x d doubles. Shared by :func:`ivf_topk` and
+    :func:`ivf_pq_topk` so the probe-selection aggregate is written once.
+    NULL-label rows are excluded: a NULL cell can never be probed, so
+    including it would only waste one of each query's ``nprobe`` slots."""
     return (
         corpus.where(F.col(label_col).isNotNull())
-        .select(F.col(label_col).alias("cell"), F.posexplode(src))
+        .select(F.col(label_col).alias("cell"), F.posexplode(_dbl(F.col(vec_col))))
         .groupBy("cell", "pos")
-        .agg(mean)
+        .agg(F.avg("col").alias("m"))
         .groupBy("cell")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("e"))
         .select("cell", F.expr("transform(e, x -> x.m)").alias("centroid"))
@@ -703,274 +700,85 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    codes_col: str | None = None,
+    max_query_rows: int = 10_000,
 ) -> DataFrame:
     """IVF-style ANN: coarse cells = per-``label`` centroids (mean vectors);
     each query searches only its ``nprobe`` nearest cells.
 
-    The inverted-file shape at scale: centroids are a tiny broadcast table;
-    the corpus is (or can be stored) clustered by cell, so a probe reads
-    ``nprobe/num_cells`` of the data instead of all of it. Here cells come
-    from the existing label column; with unlabeled data, plug any clustering
-    that yields a (id, cell) assignment. NULL-label rows form no cell and
-    are never searched (the cell equi-join is null-rejecting — both here
-    and in :func:`ivf_topk_blas`). Deterministic end to end, so the
-    DuckDB oracle reproduces it exactly. Output schema matches
-    ``brute_force_topk``.
+    The inverted-file shape at scale: the centroids come from ONE bounded
+    aggregate (cells x d doubles, collected); with unlabeled data, plug any
+    clustering that yields an (id, cell) assignment. Probe selection runs
+    in numpy on the driver (centroid cosine DESC, cell ASC); then
+    :func:`_topk_pass` scores each corpus batch's rows against only the
+    queries probing their cell. Output schema matches
+    :func:`brute_force_topk`, and so do ``max_query_rows`` and the
+    integral ``id_col``. Deterministic end to end, so the DuckDB oracle
+    reproduces it, with one caveat: a query whose centroid cosines tie
+    across the nprobe boundary to within float summation order may probe
+    a different (equally near) cell than the mirror.
 
-    ``codes_col`` runs the operator over int8 quantized codes
-    (:func:`quantize_embeddings`): cell centroids become exact integer
-    sums divided once (no float-summation drift), probe selection uses
-    cosine against those centroids (cosine is scale-free, so the nearest
-    cells are the float route's cells up to quantization rounding), and
-    in-cell scoring uses exact integer dots — the corpus side ships 4x
-    fewer bytes through the cell join.
+    NULL-label rows form no cell and are never searched. NULL /
+    wrong-width / non-finite rows drop out; an empty (or all-NULL) query
+    or corpus side yields an empty result, not an error. Queries of
+    another than the modal width return no rows, and a cell whose
+    centroid width disagrees (it held an over-long corpus row) is never
+    probed.
     """
-    col = codes_col if codes_col is not None else vec_col
-    if codes_col is not None:
-        neigh_norm = int_normsq(F.col(col))
-        score = _int_cos(
-            int_dot(F.col("qvec"), F.col("nvec")),
-            int_normsq(F.col("qvec")),
-            F.col("nnorm"),
-        )
-        centroids = _cell_centroids(corpus, col, label_col, integer=True)
-    else:
-        neigh_norm = norm(F.col(col))
-        score = F.try_divide(
-            dot(F.col("qvec"), F.col("nvec")),
-            norm(F.col("qvec")) * F.col("nnorm"),
-        )
-        centroids = _cell_centroids(corpus, col, label_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(col).alias("qvec"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "qvec",
-            "cell",
-            cosine(F.col("qvec"), F.col("centroid")).alias("ccos"),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("ccos").desc(), F.col("cell").asc()
-                )
-            ),
-        )
-        .where(F.col("crank") <= nprobe)
-        .select("query_id", "qvec", "cell")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(col).alias("nvec"),
-        neigh_norm.alias("nnorm"),
-        F.col(label_col).alias("cell"),
-    )
-    scored = c.join(
-        F.broadcast(probes),
-        (c["cell"] == probes["cell"]) & (F.col("query_id") != F.col("neighbor_id")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        score.alias("cos"),
-    ).where(F.col("cos").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
-
-
-def ivf_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    max_query_rows: int = 10_000,
-) -> DataFrame:
-    """:func:`ivf_topk` on the Arrow + numpy path — the BLAS family's
-    bucketed member (with :func:`brute_force_topk_blas` /
-    :func:`quantized_topk_blas`). The fold form's in-cell scoring is an
-    interpreted HOF per candidate pair; at 1M x 64 x 100 queries that is
-    ~40 s where this path runs the same search in ~2 s
-    (fold wall measured in SCALING.md "Similarity search"; dim
-    reduction AND this kernel both attack it).
-
-    Shape: cell centroids come from ONE bounded Spark aggregate (cells x
-    d doubles collected); queries are collected under ``max_query_rows``
-    (the same driver-budget guard as the other BLAS routes); probe
-    selection runs in numpy; then a single ``mapInArrow`` pass scores
-    each partition's rows against only the queries probing their cell —
-    the corpus never shuffles, and the final window sees
-    |partitions| * |q| * k rows.
-
-    Results match :func:`ivf_topk` up to BLAS summation-order ulps, with
-    one caveat: a query whose centroid cosines TIE across the nprobe
-    boundary may probe a different cell than the fold form (both orders
-    are valid nearest-cell sets; ties are broken cell-ASC in both).
-    ``id_col`` must be integral, as for the other BLAS routes. NULL /
-    wrong-width / unlabeled corpus rows drop out per batch; an empty (or
-    all-NULL) query or corpus side yields an empty result, not an error.
-    Ragged inputs degrade rather than crash: the reference width is the
-    modal width of the collected queries (ties -> smaller), other-width
-    queries return no rows (they score NULL on the fold form), and a
-    cell whose centroid width disagrees (it held an over-long corpus
-    row) is never probed — the fold form ranks such cells last via NULL
-    centroid cosines, so the two routes only diverge on corpora where
-    malformed cells would have been probed anyway.
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_full = "query_id long, neighbor_id long, cos double, rank int"
-
-    def _empty():
-        return corpus.sparkSession.createDataFrame([], out_full)
-
-    _require_int_ids(queries, id_col, 'ivf_topk_blas')
-    q_rows = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col)
-        .limit(max_query_rows + 1)
-        .collect()
-    )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"ivf_topk_blas collects the query set to the driver; got more "
-            f"than max_query_rows={max_query_rows} rows. Use ivf_topk (no "
-            "driver collect) for large query sets, or raise max_query_rows "
-            "explicitly if the driver can hold the matrix."
-        )
-    if not q_rows:
-        return _empty()
-    # modal width (ties -> smaller): one ragged query must not decide the
-    # width for everyone, and np.array on ragged rows would raise
-    widths = sorted({len(r[1]) for r in q_rows})
-    counts = {w: 0 for w in widths}
-    for r in q_rows:
-        counts[len(r[1])] += 1
-    width = max(widths, key=lambda w: (counts[w], -w))
-    if width == 0:
-        return _empty()
-    # NULL ids drop like the corpus side's _i64_ids mask
-    q_rows = [r for r in q_rows if len(r[1]) == width and r[0] is not None]
-    if not q_rows:
-        return _empty()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    q = _collect_queries(queries, id_col, vec_col, max_query_rows, "ivf_topk")
+    if q is None:
+        return _empty_topk(corpus, "cos", "double")
+    q_ids, q_mat = q
+    width = q_mat.shape[1]
     q_norm = np.linalg.norm(q_mat, axis=1)
-
-    # cell centroids: the SAME bounded aggregate as the fold form
-    # (cells x d doubles); cells whose centroid width disagrees held an
-    # over-long corpus row — dropped here (see docstring)
     cent_rows = [
         r
         for r in _cell_centroids(corpus, vec_col, label_col).collect()
         if len(r["centroid"]) == width
     ]
     if not cent_rows:
-        return _empty()
+        return _empty_topk(corpus, "cos", "double")
     cells = np.array([r["cell"] for r in cent_rows])
     cmat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
     with np.errstate(divide="ignore", invalid="ignore"):
-        ccos = (q_mat @ cmat.T) / np.outer(q_norm, cnorm)
+        ccos = (q_mat @ cmat.T) / np.outer(q_norm, np.linalg.norm(cmat, axis=1))
     np.nan_to_num(ccos, copy=False, nan=-np.inf, neginf=-np.inf)
-    # top-nprobe cells per query, ties broken cell ASC (the fold form's
-    # row_number orderBy ccos DESC, cell ASC)
+    # top-nprobe cells per query: centroid cosine DESC, cell ASC
     order = np.lexsort((cells[None, :].repeat(len(q_ids), 0), -ccos), axis=1)
-    probe_cells = cells[order[:, : min(nprobe, len(cells))]]
     cell_to_q: dict = {}
-    for qi, row in enumerate(probe_cells):
+    for qi, row in enumerate(cells[order[:, :nprobe]]):
         for c in row:
             cell_to_q.setdefault(c, []).append(qi)
 
-    out_schema = "query_id long, neighbor_id long, cos double"
-
-    def score(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            mat, ok = _rb_vec_matrix(rb.column(1), width)
-            if mat is None:
-                continue
-            ids, ok_id = _i64_ids(rb.column(0))
-            labels = np.asarray(rb.column(2).to_pylist(), dtype=object)
-            if ok is not None:
-                ids = ids[ok]
-                labels = labels[ok]
-                if ok_id is not None:
-                    ok_id = ok_id[ok]
-            if ok_id is not None:
-                mat = mat[ok_id]
-                ids = ids[ok_id]
-                labels = labels[ok_id]
-            probed = np.array(
-                [c in cell_to_q for c in labels], dtype=bool
+    def candidates(ids, mat, labels):
+        labels = np.asarray(labels.to_pylist(), dtype=object)
+        probed = np.array([c in cell_to_q for c in labels], dtype=bool)
+        ids, mat, labels = ids[probed], mat[probed], labels[probed]
+        norms = np.linalg.norm(mat, axis=1)
+        # the local top-k runs PER CELL on a dense (cell rows x probing
+        # queries) matrix: every entry is a real candidate, so the k-th
+        # score never degenerates to -inf and widens to the whole batch
+        outs = []
+        for c in np.unique(labels):
+            ri_c = np.flatnonzero(labels == c)
+            qi_c = np.asarray(cell_to_q[c], dtype=np.int64)
+            denom = np.outer(norms[ri_c], q_norm[qi_c])
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                sub = np.where(
+                    denom > 0.0, (mat[ri_c] @ q_mat[qi_c].T) / denom, -np.inf
+                )
+            np.nan_to_num(sub, copy=False, nan=-np.inf, neginf=-np.inf)
+            qi, ri = _local_topk_batch(
+                ids[ri_c], q_ids[qi_c], sub, min(k + 1, len(ri_c)),
+                require_finite=True,
             )
-            if not probed.any():
-                continue
-            mat = mat[probed]
-            ids = ids[probed]
-            labels = labels[probed]
-            norms = np.linalg.norm(mat, axis=1)
-            # the shared local-top-k kernel runs PER CELL on a dense
-            # (cell rows x cell queries) submatrix — every entry is a
-            # real candidate score, so the k-th-score threshold never
-            # degenerates to -inf (a dense batch x |q| matrix would be
-            # mostly -inf here and the widen step would select it all)
-            outs = []
-            for c in np.unique(labels):
-                ri_c = np.nonzero(labels == c)[0]
-                qi_c = np.asarray(cell_to_q[c], dtype=np.int64)
-                denom = np.outer(norms[ri_c], q_norm[qi_c])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sub = np.where(
-                        denom > 0.0, (mat[ri_c] @ q_mat[qi_c].T) / denom,
-                        -np.inf,
-                    )
-                np.nan_to_num(sub, copy=False, nan=-np.inf, neginf=-np.inf)
-                take = min(k + 1, sub.shape[0])
-                qi, ri = _local_topk_batch(
-                    ids[ri_c], q_ids[qi_c], sub, take, require_finite=True
-                )
-                outs.append(
-                    (q_ids[qi_c][qi], ids[ri_c][ri], sub[ri, qi])
-                )
-            if outs:
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "query_id": pa.array(
-                            np.concatenate([o[0] for o in outs]), pa.int64()
-                        ),
-                        "neighbor_id": pa.array(
-                            np.concatenate([o[1] for o in outs]), pa.int64()
-                        ),
-                        "cos": pa.array(
-                            np.concatenate([o[2] for o in outs]),
-                            pa.float64(),
-                        ),
-                    }
-                )
+            outs.append((q_ids[qi_c][qi], ids[ri_c][ri], sub[ri, qi]))
+        if not outs:
+            return (), (), ()
+        return [np.concatenate(x) for x in zip(*outs)]
 
-    scored = corpus.select(id_col, vec_col, label_col).mapInArrow(
-        score, schema=out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _topk_pass(
+        corpus, (id_col, vec_col, label_col), width, k, "cos", "double",
+        candidates,
     )
 
 
@@ -1037,14 +845,7 @@ def lsh_topk(
         "neighbor_id",
         score.alias("cos"),
     ).where(F.col("cos").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(scored, "cos", k)
 
 
 def semantic_dedup(
@@ -1311,153 +1112,39 @@ def quantized_topk(
     k: int = 10,
     id_col: str = "vec_id",
     codes_col: str = "qcodes",
+    max_query_rows: int = 10_000,
 ) -> DataFrame:
     """Top-k neighbors by INTEGER dot product over quantized codes:
     (query_id, neighbor_id, qdot, rank), self-matches excluded, ties by
     neighbor id. Symmetric quantization preserves dot-product ordering up
     to the (positive) factor ``scale^2``, so ranks approximate the float
-    ranking while every score is an exact BIGINT — bit-reproducible
-    across engines and runs, immune to summation-order float drift.
+    ranking while every score is an exact BIGINT: codes are staged as
+    float64, whose products and sums stay exact far beyond any embedding
+    width (|code| <= 32767 even at 16 bits -> exact up to ~2^23 dims), so
+    the matmul is bit-reproducible across engines and runs.
 
-    Same scale shape as :func:`brute_force_topk`: queries broadcast, the
-    corpus scanned once and never shuffled until the tiny per-query
-    top-k window. NULL code rows drop out.
+    Same shape as :func:`brute_force_topk` (``max_query_rows``, integral
+    ``id_col``), but the Arrow transfer ships int codes, 4x smaller than
+    float64 vectors. NULL / ragged code rows drop out.
     """
-    q = queries.where(F.col(codes_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), F.col(codes_col).alias("qa")
+    q = _collect_queries(
+        queries, id_col, codes_col, max_query_rows, "quantized_topk"
     )
-    c = corpus.where(F.col(codes_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), F.col(codes_col).alias("qb")
-    )
-    # same double-domain fold as int_dot: exact for integer codes far
-    # past any embedding width, ~4x faster than the ANSI-checked integer
-    # fold inside the interpreted HOF
-    qdot = int_dot(F.col("qa"), F.col("qb"))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", qdot.alias("qdot"))
-        # ragged-width pairs fold to NULL (zip_with pads the shorter array
-        # with NULLs) — drop them outright so the fold and BLAS forms stay
-        # bit-identical at ANY k, instead of relying on NULLS-LAST ordering
-        .where(F.col("qdot").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "qdot", "rank")
-    )
+    if q is None:
+        return _empty_topk(corpus, "qdot", "long")
+    q_ids, q_mat = q
 
-
-def quantized_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    codes_col: str = "qcodes",
-    max_query_rows: int = 10_000,
-) -> DataFrame:
-    """:func:`quantized_topk` on the Arrow + numpy path — BLAS matmul
-    speed with EXACT integer results: int codes are staged as float64,
-    whose products/sums stay exact far beyond any embedding width
-    (|code| <= 32767 even at 16 bits -> exact up to ~2^23 dims), so the
-    output is bit-identical to the fold-based form, not ulp-close like
-    the float cosine paths. Same scale shape as
-    :func:`brute_force_topk_blas`: bounded query collect, corpus never
-    shuffles, |partitions|*|q|*k rows into the final window — but the
-    Arrow transfer ships int codes, 4x smaller than float64 vectors.
-    NULL / ragged code rows drop out per batch.
-
-    ``id_col`` must be integral (the BLAS batch stages ids as an int64
-    vector and the output schema is ``long``, like
-    :func:`brute_force_topk_blas`); string/decimal ids raise on the
-    first batch. The fold form :func:`quantized_topk` has no such
-    restriction — the bit-identical claim holds on the shared domain.
-    """
-    import numpy as np
-    import pandas as pd
-
-    _require_int_ids(queries, id_col, 'quantized_topk_blas')
-    q_rows = (
-        queries.where(F.col(codes_col).isNotNull())
-        .select(id_col, codes_col)
-        .limit(max_query_rows + 1)
-        .collect()
-    )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"quantized_topk_blas collects the query set to the driver; got "
-            f"more than max_query_rows={max_query_rows} rows. For large "
-            "query sets use quantized_topk (no driver collect) or "
-            "dequantize and route through the lsh_topk/ivf_topk scale "
-            "paths; or raise max_query_rows explicitly if the driver can "
-            "hold the matrix."
+    def candidates(ids, mat):
+        dots = mat @ q_mat.T  # exact integers in float64
+        # integer dots: no -inf/NaN sentinel, skip the finite gather
+        qi, ri = _local_topk_batch(
+            ids, q_ids, dots, min(k + 1, len(ids)), require_finite=False
         )
-    # NULL ids drop like the corpus side's _i64_ids mask
-    q_rows = [r for r in q_rows if r[0] is not None]
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, qdot long, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    width = q_mat.shape[1] if q_mat.ndim == 2 else 0
+        return q_ids[qi], ids[ri], dots[ri, qi].astype(np.int64)
 
-    def score(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            mat, ok = _rb_vec_matrix(rb.column(1), width)
-            if mat is None:
-                continue
-            ids, ok_id = _i64_ids(rb.column(0))
-            if ok is not None:
-                ids = ids[ok]
-                if ok_id is not None:
-                    ok_id = ok_id[ok]
-            if ok_id is not None:
-                mat = mat[ok_id]
-                ids = ids[ok_id]
-                if not len(mat):
-                    continue
-            # a code row with an interior NULL (NaN after the reshape)
-            # is malformed: drop it like the fold form, whose int_dot
-            # folds it to NULL — previously a NaN dot reached the
-            # int64 cast below with undefined astype semantics
-            finite = np.isfinite(mat).all(axis=1)
-            if not finite.all():
-                mat = mat[finite]
-                ids = ids[finite]
-                if not len(mat):
-                    continue
-            dots = mat @ q_mat.T  # (batch, nq) — exact integers in f64
-            take = min(k + 1, dots.shape[0])
-            # integer dots: no -inf/NaN sentinel, skip the finite gather
-            qi, ri = _local_topk_batch(
-                ids, q_ids, dots, take, require_finite=False
-            )
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(q_ids[qi], pa.int64()),
-                    "neighbor_id": pa.array(ids[ri], pa.int64()),
-                    "qdot": pa.array(
-                        dots[ri, qi].astype(np.int64), pa.int64()
-                    ),
-                }
-            )
-
-    scored = corpus.select(id_col, codes_col).mapInArrow(
-        score, schema="query_id long, neighbor_id long, qdot long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "qdot", "rank")
+    return _topk_pass(
+        corpus, (id_col, codes_col), q_mat.shape[1], k, "qdot", "long",
+        candidates,
     )
 
 
@@ -1501,7 +1188,7 @@ def pq_train(
     """Train PQ codebooks: deterministic Lloyd's k-means (``ksub``
     centroids) independently on each of ``m`` d/m-dim subspaces. Returns
     ``codebooks[j] = [centroid, ...]`` — plain Python floats, ready to be
-    baked into :func:`pq_encode` / :func:`pq_adc_topk` as literals.
+    closed over by :func:`pq_encode` / :func:`pq_adc_topk` as constants.
 
     Determinism is inherited from ``clustering.kmeans_centroids``
     (fixed-point partial sums, order-free under any partitioning; empty
@@ -1537,43 +1224,6 @@ def pq_train(
     return books
 
 
-def _pq_code_expr(vec: Column, codebooks, j: int, dsub: int) -> Column:
-    """0-based nearest-codeword index for subspace ``j`` — squared-L2
-    argmin with first-index tie-break (array_position finds the FIRST
-    min, mirroring DuckDB's list_position). Both the subvector and the
-    distance array are let-bound so the slice and every (x-c)^2 term are
-    evaluated exactly once (see dedup._let — without the binding the
-    subvector tree would inline into all ksub distance lambdas)."""
-    from .dedup import _let
-
-    cb = F.array(
-        *[
-            F.array(*[F.lit(float(v)) for v in cw])
-            for cw in codebooks[j]
-        ]
-    )
-
-    def dists(sub: Column) -> Column:
-        return F.transform(
-            cb,
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-        )
-
-    return _let(
-        F.slice(vec, j * dsub + 1, dsub),
-        lambda sub: _let(
-            dists(sub),
-            lambda ds: (F.array_position(ds, F.array_min(ds)) - 1).cast(
-                "int"
-            ),
-        ),
-    )
-
-
 def pq_encode(
     df: DataFrame,
     codebooks,
@@ -1582,28 +1232,48 @@ def pq_encode(
 ) -> DataFrame:
     """Map-only PQ encoding: ``out_col`` = array<int> of ``m`` 0-based
     nearest-codeword indices (squared-L2 argmin per subspace, first-index
-    tie-break). The codebooks are LITERALS, so this is pure per-row
-    arithmetic — no shuffle, no model join, whole-row parallel at any
-    scale; at 8 subspaces a 64-dim float vector compresses 256 bytes ->
-    8 small ints before any index build or shuffle. NULL or wrong-width
-    vectors encode as NULL.
+    tie-break). Every input row and column is kept; a NULL, wrong-width or
+    non-finite vector encodes as NULL. The codebooks are closed over, so
+    this is per-row arithmetic — no shuffle, no model join; at 8 subspaces
+    a 64-dim float vector compresses 256 bytes -> 8 small ints before any
+    index build or shuffle.
 
-    Every engine computing the same IEEE ops in the same order gets the
-    same doubles, so with literal codebooks the codes — and everything
-    downstream of them — are reproducible cross-engine (the q39 'pq'
-    driver gate runs exactly this against a DuckDB mirror).
+    A scalar Arrow UDF encodes a whole batch in numpy. The squared
+    distances accumulate per sub-dimension left to right (never the
+    ||x||^2 - 2x.c + ||c||^2 rearrangement, whose different doubles could
+    flip an argmin on a near-tie) and ``argmin`` takes the FIRST minimum,
+    so the codes equal the DuckDB mirror's ``list_position(ds,
+    list_min(ds))`` bit for bit (the q39 'pq' driver gate).
     """
     m, dsub = _pq_shape(codebooks)
-    vec = _dbl(F.col(vec_col))
-    codes = F.array(
-        *[_pq_code_expr(vec, codebooks, j, dsub) for j in range(m)]
+    width = m * dsub
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    out_type = pa.list_(pa.int32())
+
+    def encode(vecs: pa.Array) -> pa.Array:
+        mat, ok = _rb_vec_matrix(vecs, width)
+        if mat is None:
+            return pa.nulls(len(vecs), out_type)
+        keep = np.ones(len(vecs), dtype=bool) if ok is None else ok.copy()
+        finite = np.isfinite(mat).all(axis=1)
+        mat = mat[finite]
+        keep[np.flatnonzero(keep)[~finite]] = False
+        codes = np.empty((len(mat), m), dtype=np.int32)
+        for j, cb in enumerate(books):
+            acc = np.zeros((len(mat), len(cb)))
+            for t in range(dsub):
+                d = mat[:, j * dsub + t, None] - cb[None, :, t]
+                acc = acc + d * d
+            codes[:, j] = np.argmin(acc, axis=1)
+        offsets = np.zeros(len(vecs) + 1, dtype=np.int32)
+        np.cumsum(np.where(keep, m, 0), out=offsets[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(codes.ravel()), mask=pa.array(~keep)
+        )
+
+    return df.withColumn(
+        out_col, arrow_udf(encode, "array<int>")(F.col(vec_col))
     )
-    guarded = F.when(
-        F.col(vec_col).isNotNull()
-        & (F.size(F.col(vec_col)) == m * dsub),
-        codes,
-    )
-    return df.withColumn(out_col, guarded)
 
 
 def _pq_lut_col(vec: Column, codebooks) -> Column:
@@ -1641,7 +1311,7 @@ def _pq_lut_col(vec: Column, codebooks) -> Column:
 
 def _pq_adc_expr(lut: Column, codes: Column) -> Column:
     """ADC score: sum_j lut[j][codes_j], folded in subspace order (the
-    exact add sequence the BLAS form and the DuckDB mirrors replay)."""
+    exact add sequence :func:`pq_adc_topk` and the DuckDB mirrors replay)."""
     return F.aggregate(
         F.zip_with(lut, codes, lambda l, cd: F.element_at(l, cd + 1)),
         F.lit(0.0),
@@ -1661,9 +1331,9 @@ def ivf_pq_topk(
     codes_col: str = "pq_codes",
 ) -> DataFrame:
     """IVF-PQ: the standard billion-vector index posture — coarse cells
-    prune WHICH rows are scored (:func:`ivf_topk`'s probe machinery),
-    product-quantized codes compress WHAT is scored (:func:`pq_adc_topk`'s
-    broadcast-LUT arithmetic). Each query ranks the per-cell mean
+    prune WHICH rows are scored (:func:`ivf_topk`'s probe rule, here as
+    Catalyst joins), product-quantized codes compress WHAT is scored
+    (:func:`pq_adc_topk`'s LUT arithmetic). Each query ranks the per-cell mean
     centroids by cosine, keeps its ``nprobe`` nearest cells, and
     ADC-scores only those cells' rows from their m-byte PQ codes.
 
@@ -1731,14 +1401,7 @@ def ivf_pq_topk(
         "neighbor_id",
         _pq_adc_expr(F.col("__lut"), F.col("__cd")).alias("adc"),
     ).where(F.col("adc").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", "rank")
-    )
+    return _rank_topk(scored, "adc", k)
 
 
 def pq_adc_topk(
@@ -1749,245 +1412,61 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     codes_col: str = "pq_codes",
     vec_col: str = "embedding",
+    max_query_rows: int = 10_000,
 ) -> DataFrame:
     """Top-k by ASYMMETRIC distance computation (ADC): each query builds a
     per-subspace lookup table ``lut[j][c] = <q_subj, codebook[j][c]>``
-    map-side from its RAW vector, and every corpus row scores as
+    from its RAW vector, and every corpus row scores as
     ``sum_j lut[j][code_j]`` — an m-term add chain per (query, doc) pair,
     never a d-term dot, never a reconstructed vector. This is the inner
     product ADC of Jegou et al.'s PQ paper, the standard
     compressed-domain scorer: queries stay uncompressed (asymmetric =
     no query-side quantization error), the corpus stays m bytes/row.
 
-    Scale shape — identical envelope to :func:`brute_force_topk`: the
-    query side (with its model-sized LUT column, m x ksub doubles per
-    query) broadcasts; the corpus is scanned once, never shuffled until
-    the tiny per-query top-k window; compose with the IVF/LSH bucketers
-    upstream to prune candidates exactly as with raw vectors. Returns
-    (query_id, neighbor_id, adc, rank), self-pairs excluded, ties by
-    neighbor id; NULL codes / wrong-width queries drop out.
+    Same shape as :func:`brute_force_topk` (``max_query_rows``, integral
+    ``id_col``); the LUT gather is numpy fancy indexing, and the Arrow
+    transfer ships m small ints per row. The tables accumulate one
+    sub-dimension at a time and the score one subspace at a time, left to
+    right — the DuckDB mirror's add sequence — so scores are bit-identical
+    to it. Returns (query_id, neighbor_id, adc, rank), self-pairs
+    excluded, ties by neighbor id; rows whose codes are NULL, ragged or
+    out of range for their codebook drop out, as do wrong-width and
+    non-finite queries.
     """
     m, dsub = _pq_shape(codebooks)
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    q = queries.where(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == m * dsub)
-    ).select(
-        F.col(id_col).alias("query_id"),
-        _pq_lut_col(F.col(vec_col), codebooks).alias("__lut"),
+    q = _collect_queries(
+        queries, id_col, vec_col, max_query_rows, "pq_adc_topk",
+        width=m * dsub,
     )
-    c = corpus.where(F.col(codes_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), F.col(codes_col).alias("__cd")
-    )
-    adc = _pq_adc_expr(F.col("__lut"), F.col("__cd"))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", adc.alias("adc"))
-        .where(F.col("adc").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", "rank")
-    )
-
-
-def pq_encode_blas(
-    df: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pq_codes",
-) -> DataFrame:
-    """:func:`pq_encode` on the Arrow + numpy path — returns
-    (id_col, out_col) with BIT-IDENTICAL codes: the squared-L2 distances
-    accumulate per sub-dimension in the same left-to-right order as the
-    expression form's fold (never the ||x||^2 - 2x.c + ||c||^2
-    rearrangement, whose different doubles could flip an argmin on a
-    near-tie), and numpy's argmin takes the FIRST minimum exactly like
-    array_position. Map-only (mapInArrow), corpus never shuffles; use for
-    bulk encoding where the interpreted-HOF expression form's per-row
-    lambda overhead dominates (measured ~10x on the 2M x 128 bench
-    shape). NULL / ragged / non-finite vectors drop out (the expression
-    form keeps them as NULL-code rows — select its output when you need
-    one row per input).
-
-    ``id_col`` must be integral (ids stage as an int64 vector), like the
-    other _blas forms.
-    """
-    import numpy as np
-
-    m, dsub = _pq_shape(codebooks)
-    _require_int_ids(df, id_col, "pq_encode_blas")
-    width = m * dsub
+    if q is None:
+        return _empty_topk(corpus, "adc", "double")
+    q_ids, q_mat = q
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-
-    def encode(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            mat, ok = _rb_vec_matrix(rb.column(1), width)
-            if mat is None:
-                continue
-            ids, ok_id = _i64_ids(rb.column(0))
-            if ok is not None:
-                ids = ids[ok]
-                if ok_id is not None:
-                    ok_id = ok_id[ok]
-            if ok_id is not None:
-                mat = mat[ok_id]
-                ids = ids[ok_id]
-            if not len(mat):
-                continue
-            finite = np.isfinite(mat).all(axis=1)
-            if not finite.all():
-                mat = mat[finite]
-                ids = ids[finite]
-                if not len(mat):
-                    continue
-            codes = np.empty((mat.shape[0], m), dtype=np.int32)
-            for j, cb in enumerate(books):
-                acc = np.zeros((mat.shape[0], cb.shape[0]))
-                off = j * dsub
-                for t in range(dsub):
-                    d = mat[:, off + t, None] - cb[None, :, t]
-                    acc = acc + d * d
-                codes[:, j] = np.argmin(acc, axis=1)  # first min, like
-                # array_position(ds, array_min(ds))
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "i": pa.array(ids, pa.int64()),
-                    "c": pa.array(list(codes), pa.list_(pa.int32())),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInArrow(
-        encode, schema="i long, c array<int>"
-    ).select(F.col("i").alias(id_col), F.col("c").alias(out_col))
-
-
-def pq_adc_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    k: int = 10,
-    id_col: str = "vec_id",
-    codes_col: str = "pq_codes",
-    vec_col: str = "embedding",
-    max_query_rows: int = 10_000,
-) -> DataFrame:
-    """:func:`pq_adc_topk` on the Arrow + numpy path, BIT-IDENTICAL to
-    the expression form: the per-query lookup tables accumulate one
-    sub-dimension at a time and the ADC score one subspace at a time —
-    the same add sequence as the folds — so scores, ranks, and tie-breaks
-    match exactly (pinned in pytest). The LUT gather (score[b, q] =
-    sum_j LUT_j[code_bj, q]) is numpy fancy indexing, the operation ADC
-    exists for. Same envelope as the other _blas top-ks: bounded query
-    collect, corpus codes stream through mapInArrow, never shuffled,
-    |partitions| x |q| x k rows into the final window; the Arrow transfer
-    ships m small ints per row — at m=16 over 128 dims that is 64x fewer
-    bytes than the float64 vectors. Rows whose codes are NULL, ragged,
-    or out of range for their codebook drop out.
-    """
-    import numpy as np
-
-    m, dsub = _pq_shape(codebooks)
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    _require_int_ids(queries, id_col, "pq_adc_topk_blas")
-    q_rows = (
-        queries.where(
-            F.col(vec_col).isNotNull()
-            & (F.size(F.col(vec_col)) == m * dsub)
-        )
-        .select(id_col, vec_col)
-        .limit(max_query_rows + 1)
-        .collect()
-    )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"pq_adc_topk_blas collects the query set to the driver; got "
-            f"more than max_query_rows={max_query_rows} rows. Use "
-            "pq_adc_topk (no driver collect) for large query sets, or "
-            "raise max_query_rows explicitly."
-        )
-    q_rows = [r for r in q_rows if r[0] is not None]
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, adc double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    sizes = np.array([b.shape[0] for b in books], dtype=np.int64)
-    # LUT_j: (ksub_j, nq), accumulated in the expression fold's order
+    sizes = np.array([len(b) for b in books], dtype=np.int64)
+    # LUT_j: (ksub_j, nq), accumulated one sub-dimension at a time
     luts = []
     for j, cb in enumerate(books):
-        acc = np.zeros((len(q_rows), cb.shape[0]))
-        off = j * dsub
+        acc = np.zeros((len(q_ids), len(cb)))
         for t in range(dsub):
-            acc = acc + np.outer(q_mat[:, off + t], cb[:, t])
+            acc = acc + np.outer(q_mat[:, j * dsub + t], cb[:, t])
         luts.append(acc.T.copy())
 
-    def score(batches):
-        import pyarrow as pa
+    def candidates(ids, mat):
+        codes = mat.astype(np.int64)
+        valid = ((codes >= 0) & (codes < sizes)).all(axis=1)
+        if not valid.any():
+            return (), (), ()
+        ids, codes = ids[valid], codes[valid]
+        scores = np.zeros((len(codes), len(q_ids)))
+        for j in range(m):
+            scores = scores + luts[j][codes[:, j]]
+        qi, ri = _local_topk_batch(
+            ids, q_ids, scores, min(k + 1, len(ids)), require_finite=True
+        )
+        return q_ids[qi], ids[ri], scores[ri, qi]
 
-        for rb in batches:
-            mat, ok = _rb_vec_matrix(rb.column(1), m)
-            if mat is None:
-                continue
-            ids, ok_id = _i64_ids(rb.column(0))
-            if ok is not None:
-                ids = ids[ok]
-                if ok_id is not None:
-                    ok_id = ok_id[ok]
-            if ok_id is not None:
-                mat = mat[ok_id]
-                ids = ids[ok_id]
-            if not len(mat):
-                continue
-            finite = np.isfinite(mat).all(axis=1)
-            if not finite.all():
-                mat = mat[finite]
-                ids = ids[finite]
-                if not len(mat):
-                    continue
-            cint = mat.astype(np.int64)
-            valid = ((cint >= 0) & (cint < sizes[None, :])).all(axis=1)
-            if not valid.all():
-                cint = cint[valid]
-                ids = ids[valid]
-                if not len(cint):
-                    continue
-            scores = np.zeros((cint.shape[0], len(q_ids)))
-            for j in range(m):
-                scores = scores + luts[j][cint[:, j]]
-            # self-pairs are dropped inside _local_topk_batch (take k+1
-            # absorbs the lost slot); require_finite guards NaN query
-            # components flowing through the LUT
-            take = min(k + 1, scores.shape[0])
-            qi, ri = _local_topk_batch(
-                ids, q_ids, scores, take, require_finite=True
-            )
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(q_ids[qi], pa.int64()),
-                    "neighbor_id": pa.array(ids[ri], pa.int64()),
-                    "adc": pa.array(scores[ri, qi], pa.float64()),
-                }
-            )
-
-    scored = corpus.select(id_col, codes_col).mapInArrow(
-        score, schema="query_id long, neighbor_id long, adc double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", "rank")
+    return _topk_pass(
+        corpus, (id_col, codes_col), m, k, "adc", "double", candidates
     )

@@ -853,9 +853,9 @@ def q25(spark, sf_dir):
     _prep(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") % 25 == 0)
-    # BLAS path: equal to the fold-based brute_force_topk modulo summation
-    # ulps, which the float32 output cast absorbs (see test_blas_topk_...)
-    out = similarity.brute_force_topk_blas(emb, queries_df, k=5)
+    # numpy matmul: equal to an exact cosine modulo summation ulps, which
+    # the float32 output cast absorbs (see test_blas_topk_...)
+    out = similarity.brute_force_topk(emb, queries_df, k=5)
     return out.select(
         "query_id",
         "neighbor_id",

@@ -138,7 +138,7 @@ def _ann_quantized(spark, n):
     scale = similarity.quantize_calibration(corpus, bits=8)
     qc = similarity.quantize_embeddings(corpus, scale, bits=8)
     qq = similarity.quantize_embeddings(queries, scale, bits=8)
-    similarity.quantized_topk_blas(
+    similarity.quantized_topk(
         qc, qq, k=bench.ANN_K, max_query_rows=bench.N_ANN_Q
     ).collect()
 
@@ -152,8 +152,8 @@ def _ann_pq(spark, n):
     ) + ")"
     corpus = _gen(spark, n, [("vec_id", "id"), ("embedding", vec)])
     queries = _gen(spark, bench.N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-    coded = similarity.pq_encode_blas(corpus, bench.PQ_CB)
-    similarity.pq_adc_topk_blas(
+    coded = similarity.pq_encode(corpus, bench.PQ_CB)
+    similarity.pq_adc_topk(
         coded, queries, bench.PQ_CB, k=bench.ANN_K,
         max_query_rows=bench.N_ANN_Q,
     ).collect()
@@ -254,7 +254,7 @@ def _ann_brute(spark, n):
     ) + ")"
     corpus = _gen(spark, n, [("vec_id", "id"), ("embedding", vec)])
     queries = _gen(spark, bench.N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-    similarity.brute_force_topk_blas(
+    similarity.brute_force_topk(
         corpus, queries, k=bench.ANN_K, max_query_rows=bench.N_ANN_Q
     ).collect()
 

@@ -8,6 +8,7 @@ runs in ~a minute; timings are discarded.
 
 import importlib
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -15,7 +16,8 @@ import pytest
 
 @pytest.fixture(scope="module")
 def bench_small(tmp_path_factory):
-    sys.path.insert(0, "/root/repo")
+    # this checkout's bench.py, wherever the checkout lives
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     bench = importlib.import_module("bench")
     saved = {
         k: getattr(bench, k)
@@ -198,7 +200,7 @@ def test_sessionize_and_pack_mirrors_agree(spark, bench_small):
         qq = similarity.quantize_embeddings(qs, scale, bits=8)
         srows = sorted(
             (r.query_id, r.neighbor_id, r.qdot)
-            for r in similarity.quantized_topk_blas(
+            for r in similarity.quantized_topk(
                 qc, qq, k=b.ANN_K, max_query_rows=b.N_ANN_Q
             ).collect()
         )
@@ -802,7 +804,7 @@ def test_budget_skips_optional_work(bench_small, monkeypatch):
 def test_pq_mirror_agrees(spark, bench_small):
     """Round-10 family: the DuckDB PQ/ADC mirror must return the SAME
     (query_id, neighbor_id, adc, rank) top-k rows as the Spark
-    pq_encode_blas -> pq_adc_topk_blas pipeline at small N — the mirror
+    pq_encode -> pq_adc_topk pipeline at small N — the mirror
     walks the identical fold-order arithmetic, so adc doubles are
     bit-exact (no rounding in the comparison)."""
     from duckdb_ddsketch_spark.operators import similarity
@@ -818,10 +820,10 @@ def test_pq_mirror_agrees(spark, bench_small):
     queries = spark.range(b.N_ANN_Q, numPartitions=2).selectExpr(
         "id AS vec_id", f"{vec} AS embedding"
     )
-    coded = similarity.pq_encode_blas(corpus, b.PQ_CB)
+    coded = similarity.pq_encode(corpus, b.PQ_CB)
     srows = sorted(
         (r.query_id, r.neighbor_id, float(r.adc), r.rank)
-        for r in similarity.pq_adc_topk_blas(
+        for r in similarity.pq_adc_topk(
             coded, queries, b.PQ_CB, k=b.ANN_K, max_query_rows=b.N_ANN_Q
         ).collect()
     )

@@ -44,11 +44,11 @@ KNOB_REGISTRY = {
     ("operators/multimodal.py", "sample_frames", "max_frames"): "semantic sampling spec, oracle mirrors (q49)",
     ("operators/analytics.py", "cohort_retention", "max_offset"): "off-by-default (None)",
     ("operators/similarity.py", "embedding_neardup_lsh", "max_bucket"): "pinned+oracle-mirrors (q24b -> q38 'lshpairs')",
-    ("operators/similarity.py", "brute_force_topk_blas", "max_query_rows"): "loud (raises)",
+    ("operators/similarity.py", "brute_force_topk", "max_query_rows"): "loud (raises)",
     ("operators/similarity.py", "semantic_dedup", "max_cell"): "pinned (q88, 1<<62)",
-    ("operators/similarity.py", "quantized_topk_blas", "max_query_rows"): "loud (raises)",
-    ("operators/similarity.py", "pq_adc_topk_blas", "max_query_rows"): "loud (raises)",
-    ("operators/similarity.py", "ivf_topk_blas", "max_query_rows"): "loud (raises)",
+    ("operators/similarity.py", "quantized_topk", "max_query_rows"): "loud (raises)",
+    ("operators/similarity.py", "pq_adc_topk", "max_query_rows"): "loud (raises)",
+    ("operators/similarity.py", "ivf_topk", "max_query_rows"): "loud (raises)",
 }
 
 
@@ -105,10 +105,10 @@ def test_max_query_rows_raises_loudly(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="max_query_rows"):
-        similarity.brute_force_topk_blas(df, df, k=1, max_query_rows=3).collect()
+        similarity.brute_force_topk(df, df, k=1, max_query_rows=3).collect()
     qc = similarity.quantize_embeddings(df, 1.0, bits=8)
     with pytest.raises(ValueError, match="max_query_rows"):
-        similarity.quantized_topk_blas(qc, qc, k=1, max_query_rows=3).collect()
+        similarity.quantized_topk(qc, qc, k=1, max_query_rows=3).collect()
 
 
 def test_duplicate_clusters_raises_on_nonconvergence(spark):

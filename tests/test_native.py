@@ -232,7 +232,9 @@ def test_struct_to_wire_null_struct_encodes_null(spark):
 def test_struct_to_wire_nulls_a_row_whose_counts_cannot_encode(spark):
     """A NULL, NaN or infinite bin count, or an infinite zero count, has no
     decodable wire form: that row is NULL and the rest of its batch encodes
-    as before, a NULL or NaN zero count still encoding as 0."""
+    as before, a NULL or NaN zero count still encoding as 0. So is a row
+    the decoder would reject: counts totalling 2^63 or more, a negative
+    gamma with a fractional index offset, a bin value that overflows."""
     a = DDSketch(0.01).extend([-3.0, -1.5, 0.0, 0.0, 2.0, 7.5, 7.5, 40.0])
     b = DDSketch(0.02).extend([0.5 * i for i in range(1, 30)])
 
@@ -262,6 +264,18 @@ def test_struct_to_wire_nulls_a_row_whose_counts_cannot_encode(spark):
         (struct(a, zero_count=math.nan), no_zero.encode()),
         (struct(a, zero_count=None), no_zero.encode()),
         (struct(b), b.encode()),
+        (struct(a, pos={p1: 1e19}), None),
+        (struct(a, pos={p1: 6e18, p1 + 1: 6e18}), None),
+        (struct(a, zero_count=1e19), None),
+        (struct(a, pos={p1: 5e18}, neg={n1: 5e18}), None),
+        (struct(a, pos={p1: 6e18}, neg={n1: 3e18}), _replaced(a, pos={p1: 6e18}, neg={n1: 3e18})),
+        (struct(a, zero_count=-1e19), no_zero.encode()),
+        ((-2.0, 0.5, {1: 1.0}, {}, 0.0, 1.0, 0.0, 1.0, 1.0), None),
+        ((-2.0, 0.0, {1: 1.0}, {}, 0.0, 1.0, 0.0, 1.0, 1.0),
+         _replaced(a, gamma=-2.0, index_offset=0.0, pos={1: 1.0}, neg={}, zero_count=0.0)),
+        ((1.5, 0.0, {2**31 - 1: 1.0}, {}, 0.0, 1.0, 0.0, 1.0, 1.0), None),
+        ((1.5, 0.0, {}, {-(2**31): 1.0}, 0.0, 1.0, 0.0, 1.0, 1.0), _replaced(
+            a, gamma=1.5, index_offset=0.0, pos={}, neg={-(2**31): 1.0}, zero_count=0.0)),
     ]
     df = spark.createDataFrame(
         [(i, s) for i, (s, _) in enumerate(cases)],
@@ -274,6 +288,16 @@ def test_struct_to_wire_nulls_a_row_whose_counts_cannot_encode(spark):
     }
     for i, (_, want) in enumerate(cases):
         assert (None if out[i] is None else bytes(out[i])) == want, i
+        if want is not None:
+            DDSketch.decode(want)
+
+
+def _replaced(s, **fields):
+    """Wire bytes of a copy of ``s`` with some fields replaced."""
+    c = DDSketch.decode(s.encode())
+    for name, value in fields.items():
+        setattr(c, {"pos": "positive_bins", "neg": "negative_bins"}.get(name, name), value)
+    return c.encode()
 
 
 def _huge_index_blob() -> bytes:

@@ -2,6 +2,8 @@
 text, multimodal) on controlled synthetic inputs where ground truth is known.
 """
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -501,22 +503,51 @@ def test_blas_topk_guards_oversized_query_collect(spark):
     rows = [(i, [float(i), 1.0]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     with _pytest.raises(ValueError, match="max_query_rows"):
-        similarity.brute_force_topk_blas(df, df, k=2, max_query_rows=5)
+        similarity.brute_force_topk(df, df, k=2, max_query_rows=5)
     # within the bound it still works
-    out = similarity.brute_force_topk_blas(df, df.limit(3), k=2, max_query_rows=5)
+    out = similarity.brute_force_topk(df, df.limit(3), k=2, max_query_rows=5)
     assert out.count() > 0
 
 
+def _cos(a, b):
+    """Cosine as a left-to-right Python fold; None for a zero norm."""
+    den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
+    return sum(x * y for x, y in zip(a, b)) / den if den else None
+
+
+def _idot(a, b):
+    return sum(int(x) * int(y) for x, y in zip(a, b))
+
+
+def _ref_topk(rows, queries, k, score):
+    """Python reference for the collected-query top-k operators: every
+    (query, corpus) pair of ``(id, vector)`` rows scored by ``score``
+    (None drops the pair), self pairs excluded, ranked score DESC then
+    neighbor id ASC; sorted (query_id, neighbor_id, score, rank) rows."""
+    out = []
+    for qid, qv in queries:
+        scored = sorted(
+            ((s, nid) for nid, v in rows
+             if nid != qid and (s := score(qv, v)) is not None),
+            key=lambda t: (-t[0], t[1]),
+        )
+        out += [(qid, nid, s, r + 1) for r, (s, nid) in enumerate(scored[:k])]
+    return sorted(out)
+
+
 def test_blas_topk_matches_fold_topk(spark):
+    """brute_force_topk's matmul equals a per-pair cosine fold (up to
+    summation-order ulps, rounded away) on the same small frame."""
     import random
 
     rng = random.Random(5)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(32)]) for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").repartition(4)
     q = df.where(F.col("vec_id") % 60 == 0)
-    fold = similarity.brute_force_topk(df, q, k=4)
-    blas = similarity.brute_force_topk_blas(df, q, k=4)
-    a = {(r.query_id, r.rank): (r.neighbor_id, round(r.cos, 9)) for r in fold.collect()}
+    blas = similarity.brute_force_topk(df, q, k=4)
+    vecs = [(r.vec_id, r.embedding) for r in df.collect()]
+    qs = [(i, v) for i, v in vecs if i % 60 == 0]
+    a = {(qi, rk): (n, round(c, 9)) for qi, n, c, rk in _ref_topk(vecs, qs, 4, _cos)}
     b = {(r.query_id, r.rank): (r.neighbor_id, round(r.cos, 9)) for r in blas.collect()}
     assert a == b
 
@@ -1013,9 +1044,9 @@ def test_kmeans_fused_summary_null_semantics_and_aliases(spark):
         [(1.7, [1, 0])], "vec_id double, qcodes array<int>"
     )
     for fn in (
-        lambda: similarity.brute_force_topk_blas(corpus, fq, k=1),
-        lambda: similarity.ivf_topk_blas(corpus, fq, k=1),
-        lambda: similarity.quantized_topk_blas(
+        lambda: similarity.brute_force_topk(corpus, fq, k=1),
+        lambda: similarity.ivf_topk(corpus, fq, k=1),
+        lambda: similarity.quantized_topk(
             corpus.select("vec_id", F.transform("embedding", lambda x: x.cast("int")).alias("qcodes")),
             qc, k=1,
         ),
@@ -1024,7 +1055,7 @@ def test_kmeans_fused_summary_null_semantics_and_aliases(spark):
             fn()
     # a missing id column names the real problem, not float truncation
     with pytest.raises(TypeError, match="does not exist"):
-        similarity.brute_force_topk_blas(corpus, fq.withColumnRenamed("vec_id", "x"), k=1)
+        similarity.brute_force_topk(corpus, fq.withColumnRenamed("vec_id", "x"), k=1)
 
 
 def test_blas_null_query_ids_drop_instead_of_crashing(spark):
@@ -1040,10 +1071,10 @@ def test_blas_null_query_ids_drop_instead_of_crashing(spark):
         [(None, [1.0, 0.0]), (9, [1.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    got = similarity.brute_force_topk_blas(corpus, q, k=2).collect()
+    got = similarity.brute_force_topk(corpus, q, k=2).collect()
     assert {r.query_id for r in got} == {9}
     lcorp = corpus.withColumn("label", (F.col("vec_id") % 2).cast("int"))
-    got = similarity.ivf_topk_blas(lcorp, q, k=2, nprobe=2).collect()
+    got = similarity.ivf_topk(lcorp, q, k=2, nprobe=2).collect()
     assert {r.query_id for r in got} == {9}
     qcorp = corpus.select(
         "vec_id", F.transform("embedding", lambda x: (x * 10).cast("int")).alias("qcodes")
@@ -1051,13 +1082,13 @@ def test_blas_null_query_ids_drop_instead_of_crashing(spark):
     qq = q.select(
         "vec_id", F.transform("embedding", lambda x: (x * 10).cast("int")).alias("qcodes")
     )
-    got = similarity.quantized_topk_blas(qcorp, qq, k=2).collect()
+    got = similarity.quantized_topk(qcorp, qq, k=2).collect()
     assert {r.query_id for r in got} == {9}
     # all-NULL query ids -> empty result with the right schema, no crash
     zq = q.where(F.col("vec_id").isNull())
-    assert similarity.brute_force_topk_blas(corpus, zq, k=2).count() == 0
-    assert similarity.ivf_topk_blas(lcorp, zq, k=2).count() == 0
-    assert similarity.quantized_topk_blas(
+    assert similarity.brute_force_topk(corpus, zq, k=2).count() == 0
+    assert similarity.ivf_topk(lcorp, zq, k=2).count() == 0
+    assert similarity.quantized_topk(
         qcorp, zq.select("vec_id", F.transform("embedding", lambda x: (x * 10).cast("int")).alias("qcodes")), k=2
     ).count() == 0
 
@@ -1633,12 +1664,11 @@ def test_quantized_topk_blas_tie_break_partition_invariant(spark):
         )
         queries = qc.where(F.col("vec_id") < 3)
         got = sorted(
-            map(tuple, sim.quantized_topk_blas(qc, queries, k=5).collect())
-        )
-        fold = sorted(
             map(tuple, sim.quantized_topk(qc, queries, k=5).collect())
         )
-        assert got == fold, f"nparts={nparts}"
+        codes = [(r.vec_id, r.qcodes) for r in qc.collect()]
+        ref = _ref_topk(codes, [c for c in codes if c[0] < 3], 5, _idot)
+        assert got == ref, f"nparts={nparts}"
         if base is None:
             base = got
         assert got == base, f"nparts={nparts} diverged"
@@ -1661,7 +1691,7 @@ def test_brute_force_blas_tie_break_partition_invariant(spark):
         out = sorted(
             map(
                 tuple,
-                sim.brute_force_topk_blas(
+                sim.brute_force_topk(
                     df.repartition(nparts), queries, k=4
                 ).collect(),
             )
@@ -1670,32 +1700,105 @@ def test_brute_force_blas_tie_break_partition_invariant(spark):
             base = out
         assert out == base, f"nparts={nparts} diverged"
         # ties resolve to the smallest neighbor ids
-        fold = sorted(
-            map(tuple, sim.brute_force_topk(df, queries, k=4).collect())
-        )
-        assert [(r[0], r[1]) for r in out] == [(r[0], r[1]) for r in fold]
+        ref = _ref_topk(vecs, vecs[:2], 4, _cos)
+        assert [(r[0], r[1]) for r in out] == [(r[0], r[1]) for r in ref]
 
 
-def test_brute_force_blas_nan_row_does_not_poison_batch(spark):
-    """Round-6 review regression: a NaN-scoring corpus row (non-finite
-    component) selected by argpartition must not poison the tie-break
-    threshold — the finite neighbors still come back."""
-    from duckdb_ddsketch_spark.operators import similarity as sim
+_ANN_OPS = (
+    "brute_force_topk", "ivf_topk", "quantized_topk", "pq_encode", "pq_adc_topk",
+)
+# m=2 subspaces of 2 dims over 4-dim vectors
+_ANN_BOOKS = [[[0.5, 0.5], [-0.5, 0.5], [1.0, -1.0]]] * 2
 
-    rows = [
-        (0, [1.0, 0.0]),
-        (1, [float("inf"), 1.0]),  # dot=inf, denom=inf -> cos NaN
-        (2, [2.0, 0.0]),
-        (3, [3.0, 1.0]),
+
+def _ann_run(op, corpus, queries, k=3):
+    """Run one surviving ANN operator; returns (frame, score column)."""
+    if op == "brute_force_topk":
+        return similarity.brute_force_topk(corpus, queries, k=k), "cos"
+    if op == "ivf_topk":
+        return similarity.ivf_topk(corpus, queries, k=k, nprobe=2), "cos"
+    if op == "quantized_topk":
+        qc = similarity.quantize_embeddings(corpus, 0.05, bits=8)
+        qq = similarity.quantize_embeddings(queries, 0.05, bits=8)
+        return similarity.quantized_topk(qc, qq, k=k), "qdot"
+    coded = similarity.pq_encode(corpus, _ANN_BOOKS)
+    if op == "pq_encode":
+        return coded, "pq_codes"
+    return similarity.pq_adc_topk(coded, queries, _ANN_BOOKS, k=k), "adc"
+
+
+@pytest.mark.parametrize("op", _ANN_OPS)
+def test_ann_operators_drop_nonfinite_and_zero_vectors(spark, op):
+    """NaN, +inf and -inf components and an all-zero vector, in the corpus
+    and in the queries, in one small batch (a NaN score reaching the
+    k-th-score threshold would drop every finite candidate): the job
+    completes, no output score is non-finite, the healthy queries keep
+    their k neighbors, and pq_encode gives those rows NULL codes."""
+    nan, inf = float("nan"), float("inf")
+    good = [
+        (i, [1.0 + i % 5, 0.5 * (i % 3) + 0.1, 2.0 - i % 4, 0.25 * i], i % 2)
+        for i in range(24)
+    ]
+    bad = [
+        (100, [nan, 1.0, 1.0, 1.0], 0),
+        (101, [1.0, inf, 1.0, 1.0], 1),
+        (102, [1.0, 1.0, -inf, 1.0], 0),
+        (103, [0.0, 0.0, 0.0, 0.0], 1),
     ]
     df = spark.createDataFrame(
-        rows, "vec_id int, embedding array<double>"
-    ).coalesce(1)  # single small batch: take == n, NaN enters argpartition
-    out = sim.brute_force_topk_blas(
-        df, df.where(F.col("vec_id") == 0), k=3
-    ).collect()
-    got = {r.neighbor_id for r in out}
-    assert 2 in got and 3 in got and 1 not in got
+        good + bad, "vec_id long, embedding array<double>, label int"
+    ).coalesce(1)
+    queries = df.where(F.col("vec_id").isin(0, 7, 100, 101, 102, 103))
+    out, score = _ann_run(op, df, queries)
+    rows = out.collect()
+    if op == "pq_encode":
+        codes = {r.vec_id: r.pq_codes for r in rows}
+        assert len(rows) == len(good) + len(bad)
+        assert all(codes[i] is None for i in (100, 101, 102))
+        assert all(codes[i] is not None for i in range(24)) and codes[103]
+        return
+    assert all(math.isfinite(r[score]) for r in rows), rows
+    per_query = {}
+    for r in rows:
+        per_query.setdefault(r.query_id, []).append(r.neighbor_id)
+    assert len(per_query[0]) == 3 and len(per_query[7]) == 3, per_query
+    if op != "quantized_topk":  # quantizing clamps non-finite components
+        assert not {100, 101, 102} & set(per_query)
+        assert not {100, 101, 102} & {r.neighbor_id for r in rows}
+    if op == "brute_force_topk":  # a zero vector has no cosine
+        assert 103 not in per_query
+        assert 103 not in {r.neighbor_id for r in rows}
+        vecs = [(i, v) for i, v, _ in good]
+        want = _ref_topk(vecs, [vecs[0], vecs[7]], 3, _cos)
+        assert [r[:2] for r in sorted(map(tuple, rows))] == [w[:2] for w in want]
+
+
+@pytest.mark.parametrize("op", _ANN_OPS)
+def test_ann_operators_empty_and_null_inputs(spark, op):
+    """An empty query set, or one whose vectors are all NULL, yields an
+    empty frame with the full output schema instead of a numpy shape
+    error; pq_encode keeps every row and column, NULL vectors coding to
+    NULL."""
+    df = spark.createDataFrame(
+        [(i, [1.0 + i, 2.0, 1.0, 0.5], i % 2) for i in range(6)]
+        + [(50, None, 0)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    empty = df.where(F.lit(False))
+    nulls = spark.createDataFrame(
+        [(1, None, 0), (2, None, 1)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    if op == "pq_encode":
+        out, _ = _ann_run(op, nulls, None)
+        assert out.columns == ["vec_id", "embedding", "label", "pq_codes"]
+        assert [r.pq_codes for r in out.collect()] == [None, None]
+        assert _ann_run(op, empty, None)[0].count() == 0
+        return
+    for q in (empty, nulls):
+        out, score = _ann_run(op, df, q)
+        assert out.columns == ["query_id", "neighbor_id", score, "rank"]
+        assert out.count() == 0
 
 
 def test_quantize_clamps_nonfinite_components(spark):
@@ -1763,12 +1866,12 @@ def test_quantized_topk_blas_bit_identical_to_fold(spark):
     qc = sim.quantize_embeddings(df, scale, bits=8)
     queries = qc.where(F.col("vec_id") % 9 == 0)
     a = sorted(map(tuple, sim.quantized_topk(qc, queries, k=4).collect()))
-    b = sorted(
-        map(tuple, sim.quantized_topk_blas(qc, queries, k=4).collect())
-    )
+    # the reference folds exact integer dots over the well-formed rows:
+    # NULL codes and the ragged row 61 never score
+    codes = [(r.vec_id, r.qcodes) for r in qc.collect()
+             if r.qcodes is not None and len(r.qcodes) == 6]
+    b = _ref_topk(codes, [c for c in codes if c[0] % 9 == 0], 4, _idot)
     assert a == b and len(a) > 0
-    # ragged row 61 must never appear as a neighbor (width-filtered in
-    # blas; zip_with -> NULL-element dot in the fold)
     assert not any(r[1] == 61 for r in a)
 
 
@@ -2267,17 +2370,12 @@ def test_zero_norm_vectors_never_fail_or_match(spark):
     assert {(r.id_a, r.id_b) for r in near.collect()} <= {(1, 2)}
 
     q = df.where(F.col("vec_id") == 1)
-    for out in (
-        similarity.brute_force_topk(df, q, k=3),
-        similarity.brute_force_topk_blas(df, q, k=3),
-    ):
-        got = {r.neighbor_id for r in out.collect()}
-        assert 3 not in got and 2 in got
+    got = {r.neighbor_id for r in similarity.brute_force_topk(df, q, k=3).collect()}
+    assert 3 not in got and 2 in got
 
     # a zero-norm QUERY likewise returns no neighbors rather than raising
     zq = df.where(F.col("vec_id") == 3)
     assert similarity.brute_force_topk(df, zq, k=2).count() == 0
-    assert similarity.brute_force_topk_blas(df, zq, k=2).count() == 0
 
 
 def test_i64_ids_rejects_float_id_columns():
@@ -2504,8 +2602,6 @@ def test_similarity_null_and_empty_embeddings_tolerated(spark):
     q = df.where(F.col("vec_id") == 1)
     got = {r.neighbor_id for r in similarity.brute_force_topk(df, q, k=4).collect()}
     assert got == {2}
-    got = {r.neighbor_id for r in similarity.brute_force_topk_blas(df, q, k=4).collect()}
-    assert 3 not in got and 4 not in got
 
     # k=1: one cell, so the near-dup pair is subject to dominance; the
     # NULL and empty-array rows are excluded from clustering entirely
@@ -2634,43 +2730,11 @@ def test_lsh_topk_quantized_route(spark):
         assert sorted(tuple(r) for r in again.collect()) == base
 
 
-def test_ivf_topk_quantized_route(spark):
-    """codes_col routes ivf_topk through int8 codes: integer-sum centroids
-    (one correctly-rounded division — no float-avg summation-order drift),
-    scale-free probe selection, exact integer in-cell scoring. High recall
-    vs the float route and partition-invariant output."""
-    import random
-
-    rng = random.Random(13)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)], i % 4)
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    scale = similarity.quantize_calibration(df, bits=8)
-    qdf = similarity.quantize_embeddings(df, scale, bits=8)
-    q_f = df.where(F.col("vec_id") < 10)
-    q_q = qdf.where(F.col("vec_id") < 10)
-    fl = similarity.ivf_topk(df, q_f, k=3, nprobe=2)
-    qz = similarity.ivf_topk(qdf, q_q, k=3, nprobe=2, codes_col="qcodes")
-    assert qz.columns == fl.columns
-    a = {(r.query_id, r.neighbor_id) for r in fl.collect()}
-    b = {(r.query_id, r.neighbor_id) for r in qz.collect()}
-    assert a and len(a & b) / len(a) >= 0.8, (a, b)
-    base = sorted(tuple(r) for r in qz.collect())
-    again = similarity.ivf_topk(
-        qdf.repartition(7), q_q, k=3, nprobe=2, codes_col="qcodes"
-    )
-    assert sorted(tuple(r) for r in again.collect()) == base
-
-
 def test_ivf_topk_blas_matches_fold_form(spark):
-    """ivf_topk_blas must return the same (query, neighbor) sets as the
-    Catalyst fold form on well-separated cells (cos values agree to BLAS
-    ulps; probe selection identical when centroid cosines don't tie), be
-    partition-invariant, and drop NULL/ragged/zero-norm rows."""
+    """ivf_topk must return the same (query, neighbor, rank) rows as a
+    Python fold of the IVF rule on well-separated cells (per-cell mean
+    centroids, the nprobe nearest by cosine, exact cosine inside them),
+    be partition-invariant, and drop NULL/ragged/zero-norm rows."""
     import random
 
     rng = random.Random(29)
@@ -2679,7 +2743,7 @@ def test_ivf_topk_blas_matches_fold_form(spark):
         cell = i % 4
         # orthogonal cell directions (5 * e_{2*cell} + noise): centroid
         # cosines are well separated, so probe selection can't flip on
-        # BLAS-vs-fold ulp differences (colinear offsets would tie)
+        # summation-order ulp differences (colinear offsets would tie)
         base = [rng.uniform(-1, 1) for _ in range(8)]
         base[2 * cell] += 5.0
         rows.append((i, base, cell))
@@ -2692,25 +2756,40 @@ def test_ivf_topk_blas_matches_fold_form(spark):
     ).repartition(5)
     q = df.where((F.col("vec_id") % 30 == 0) & F.col("embedding").isNotNull())
 
-    fold = similarity.ivf_topk(df, q, k=4, nprobe=2)
-    blas = similarity.ivf_topk_blas(df, q, k=4, nprobe=2)
-    assert blas.columns == fold.columns
-    a = sorted((r.query_id, r.neighbor_id, r.rank) for r in fold.collect())
-    b = sorted((r.query_id, r.neighbor_id, r.rank) for r in blas.collect())
-    assert a == b
-    ids = {r.neighbor_id for r in blas.collect()}
-    assert not ids & {900, 901, 902, 903}
-    again = similarity.ivf_topk_blas(df.repartition(2), q, k=4, nprobe=2)
-    assert sorted((r.query_id, r.neighbor_id, r.rank) for r in again.collect()) == b
+    out = similarity.ivf_topk(df, q, k=4, nprobe=2)
+    assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
+    got = sorted((r.query_id, r.neighbor_id, r.rank) for r in out.collect())
+
+    # centroids average every labeled row per position, as the aggregate does
+    sums = {}
+    for _, v, c in rows:
+        for p, x in enumerate(v or []):
+            if c is not None:
+                s_, n_ = sums.get((c, p), (0.0, 0))
+                sums[(c, p)] = (s_ + x, n_ + 1)
+    cent = {c: [sums[(c, p)][0] / sums[(c, p)][1] for p in range(8)] for c in range(4)}
+    good = [(i, v, c) for i, v, c in rows
+            if v is not None and len(v) == 8 and c is not None]
+    want = []
+    for qi, qv, _ in good:
+        if qi % 30 == 0:
+            probe = sorted(cent, key=lambda c: (-_cos(qv, cent[c]), c))[:2]
+            cand = [(i, v) for i, v, c in good if c in probe]
+            want += [(a, b, rk) for a, b, _, rk in _ref_topk(cand, [(qi, qv)], 4, _cos)]
+    assert got == sorted(want)
+    assert not {r[1] for r in got} & {900, 901, 902, 903}
+    again = similarity.ivf_topk(df.repartition(2), q, k=4, nprobe=2)
+    assert sorted((r.query_id, r.neighbor_id, r.rank) for r in again.collect()) == got
 
     with pytest.raises(ValueError, match="max_query_rows"):
-        similarity.ivf_topk_blas(df, q, k=4, max_query_rows=2)
+        similarity.ivf_topk(df, q, k=4, max_query_rows=2)
 
 
 def test_ivf_topk_blas_degenerate_inputs(spark):
-    """Empty/all-NULL query sets and over-long corpus rows must degrade
-    (empty result / cell never probed), not crash with numpy shape
-    errors; ragged queries are dropped at the modal width."""
+    """Over-long corpus rows must degrade (their cell is never probed),
+    not crash with numpy shape errors; ragged queries are dropped at the
+    modal width. Empty and all-NULL query sets are covered for every
+    operator by test_ann_operators_empty_and_null_inputs."""
     rows = [
         (i, [1.0 + i, 2.0, 1.0, 0.5], i % 2) for i in range(20)
     ]
@@ -2719,24 +2798,12 @@ def test_ivf_topk_blas_degenerate_inputs(spark):
         rows, "vec_id long, embedding array<double>, label int"
     ).repartition(3)
 
-    # empty query set -> empty frame with the full output schema
-    q_none = df.where(F.lit(False))
-    out = similarity.ivf_topk_blas(df, q_none, k=3)
-    assert out.columns == ["query_id", "neighbor_id", "cos", "rank"]
-    assert out.count() == 0
-
-    # all-NULL queries -> empty
-    q_null = spark.createDataFrame(
-        [(1, None)], "vec_id long, embedding array<double>"
-    )
-    assert similarity.ivf_topk_blas(df, q_null, k=3).count() == 0
-
-    # over-long corpus row: cell 0's centroid is width 5 -> never probed
-    # on the blas route; cell 1 still searchable, job doesn't crash
+    # over-long corpus row: cell 0's centroid is width 5 -> never probed;
+    # cell 1 still searchable, job doesn't crash
     q = spark.createDataFrame(
         [(500, [2.0, 2.0, 1.0, 0.5])], "vec_id long, embedding array<double>"
     )
-    got = similarity.ivf_topk_blas(df, q, k=3, nprobe=2).collect()
+    got = similarity.ivf_topk(df, q, k=3, nprobe=2).collect()
     assert got, "healthy cell must still return neighbors"
     assert all(r.neighbor_id % 2 == 1 for r in got)  # only cell 1 rows
 
@@ -2745,7 +2812,7 @@ def test_ivf_topk_blas_degenerate_inputs(spark):
         [(500, [2.0, 2.0, 1.0, 0.5]), (501, [1.0, 1.0]), (502, [3.0, 1.0, 1.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    got2 = similarity.ivf_topk_blas(df, q_mixed, k=2, nprobe=2).collect()
+    got2 = similarity.ivf_topk(df, q_mixed, k=2, nprobe=2).collect()
     qids = {r.query_id for r in got2}
     assert 501 not in qids and {500, 502} <= qids
 
@@ -3847,11 +3914,12 @@ def test_ivf_pq_recall_monotone_in_nprobe(spark):
 
 
 def test_pq_blas_forms_bit_identical_to_expression_forms(spark):
-    """pq_encode_blas / pq_adc_topk_blas accumulate distances, LUTs, and
-    ADC sums in the SAME left-to-right order as the expression forms'
-    folds, so codes AND float scores are bit-identical — not ulp-close.
-    Also pins the BLAS guards: NULL/ragged vectors and out-of-range codes
-    drop out; oversized query sets raise."""
+    """pq_encode / pq_adc_topk accumulate distances, LUTs, and ADC sums in
+    the SAME left-to-right order as the DuckDB mirror's expressions, so
+    codes AND float scores equal a plain Python fold over the same frame
+    bit for bit — not ulp-close. Also pins the guards: NULL/ragged
+    vectors encode as NULL codes and drop out; oversized query sets
+    raise."""
     import numpy as np
 
     from duckdb_ddsketch_spark.operators import similarity as sim
@@ -3867,35 +3935,47 @@ def test_pq_blas_forms_bit_identical_to_expression_forms(spark):
         for j in range(3)
     ]
 
-    expr_codes = {
+    def fold_code(v):
+        out = []
+        for j, book in enumerate(books):
+            ds = []
+            for cw in book:
+                acc = 0.0
+                for t in range(4):
+                    d = v[j * 4 + t] - cw[t]
+                    acc = acc + d * d
+                ds.append(acc)
+            out.append(ds.index(min(ds)))  # first minimum
+        return out
+
+    def fold_adc(qv, codes):
+        score = 0.0
+        for j, book in enumerate(books):
+            lut = 0.0
+            for t in range(4):
+                lut = lut + qv[j * 4 + t] * book[codes[j]][t]
+            score = score + lut
+        return score
+
+    coded = sim.pq_encode(df, books)
+    got_codes = {
         r.vec_id: (list(r.pq_codes) if r.pq_codes is not None else None)
-        for r in sim.pq_encode(df, books).collect()
+        for r in coded.collect()
     }
-    blas_codes = {
-        r.vec_id: list(r.pq_codes)
-        for r in sim.pq_encode_blas(df, books).collect()
-    }
-    # blas drops NULL/ragged rows; expression form NULLs them
-    assert expr_codes[500] is None and expr_codes[501] is None
-    assert set(blas_codes) == {i for i in range(len(pts))}
-    assert all(blas_codes[i] == expr_codes[i] for i in blas_codes)
+    assert got_codes[500] is None and got_codes[501] is None
+    assert all(got_codes[i] == fold_code(v) for i, v in rows[:120])
 
     queries = df.where(F.col("vec_id") % 30 == 0)
-    coded = sim.pq_encode(df, books)
-    a = sorted(
+    got = sorted(
         (r.query_id, r.neighbor_id, float(r.adc), r.rank)
         for r in sim.pq_adc_topk(coded, queries, books, k=5).collect()
     )
-    b = sorted(
-        (r.query_id, r.neighbor_id, float(r.adc), r.rank)
-        for r in sim.pq_adc_topk_blas(
-            sim.pq_encode_blas(df, books), queries, books, k=5
-        ).collect()
-    )
-    assert a == b and len(a) == 5 * 4  # bit-exact doubles, 4 queries
+    codes = [(i, fold_code(v)) for i, v in rows[:120]]
+    want = _ref_topk(codes, [r for r in rows[:120] if r[0] % 30 == 0], 5, fold_adc)
+    assert got == want and len(got) == 5 * 4  # bit-exact doubles, 4 queries
 
     with pytest.raises(ValueError, match="max_query_rows"):
-        sim.pq_adc_topk_blas(coded, df, books, k=5, max_query_rows=3)
+        sim.pq_adc_topk(coded, df, books, k=5, max_query_rows=3)
 
 
 def test_ivf_pq_topk_composition(spark):

@@ -41,7 +41,6 @@ ALLOWED_BNLJ = {
     "q04_merge_two_sketches",
     "q15_nested_column_merge",
     "q24_embedding_near_pairs",
-    "q28_ann_ivf_topk",
     "q44_tfidf_top_terms",
     "q66_bloom_membership",
     "q72_hll_audience_overlap",
@@ -49,11 +48,7 @@ ALLOWED_BNLJ = {
     "q94_bm25_topk",
     "q96_dsir_scores",
     "q98_rrf_hybrid",  # 3-row qid × broadcast 10-row prior fan-out
-    # corpus × broadcast LUT-queries on the non-equi self-exclusion
-    # predicate — the same query-bounded envelope as brute_force_topk
-    "q100_ann_pq_adc",
-    # queries × broadcast cells-x-d centroid table (probe selection) —
-    # the same bounded envelope as q28's IVF probe
+    # queries × broadcast cells-x-d centroid table (probe selection)
     "q102_ann_ivf_pq",
     # orders × the 1-row ddsketch_create() UDTF seed (reference TVF
     # syntax, round 11) — broadcast side is literally one constant row

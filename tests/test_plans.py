@@ -3,6 +3,8 @@ depends on (pruning, pushdown, shuffle counts, partial agg, no row-at-a-time
 Python). A refactor that silently adds a shuffle or widens a scan fails here.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -102,11 +104,40 @@ def test_minhash_signatures_partial_agg(spark, sf_dir):
     assert checks.python_eval_nodes(sig) == []
 
 
+def _plan_tree(df):
+    """(node name, parent index) for each line of the formatted plan's
+    tree, top-down."""
+    tree = checks.formatted_plan(df).split("== Physical Plan ==")[1]
+    nodes, stack = [], []
+    for line in tree.strip("\n").split("\n\n")[0].splitlines():
+        depth = re.search(r"[A-Za-z]", line).start()
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        nodes.append((line[depth:].split(" (")[0].strip(), stack[-1][1] if stack else None))
+        stack.append((depth, len(nodes) - 1))
+    return nodes
+
+
 def test_topk_broadcasts_queries(spark, sf_dir):
+    """The query side is collected and closed over, so the corpus reaches
+    the MapInArrow scorer with no exchange below it, and the plan's one
+    exchange moves only local top-k rows into the final window."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = similarity.brute_force_topk(emb, emb.where(F.col("vec_id") < 5), k=3)
-    assert checks.broadcast_exchange_count(q) >= 1  # corpus never shuffles
-    assert checks.python_eval_nodes(q) == []
+    nodes = _plan_tree(q)
+
+    def ancestors(i):
+        while (i := nodes[i][1]) is not None:
+            yield i
+
+    names = [n for n, _ in nodes]
+    assert names.count("MapInArrow") == 1 and names.count("Exchange") == 1
+    scorer, exchange = names.index("MapInArrow"), names.index("Exchange")
+    below = [names[i] for i in range(len(nodes)) if scorer in ancestors(i)]
+    assert "Scan parquet" in below and not any("Exchange" in n for n in below)
+    assert exchange in ancestors(scorer)
+    assert "Window" in [names[i] for i in ancestors(exchange)]
+    assert checks.broadcast_exchange_count(q) == 0
 
 
 def test_range_bucket_broadcasts_boundaries(spark, lineitem):
