@@ -340,7 +340,7 @@ def _quantile_fold_sql(
     (datadog_encoding.rs:651-703). ``aggregate`` carries (cumulative,
     selected-bin) over the entries — no Python, no explode, no shuffle.
     """
-    if q < 0.0 or q > 1.0:
+    if not 0.0 <= q <= 1.0:  # also NaN, as the kernel answers None
         return "CAST(NULL AS DOUBLE)"
     rank = f"({float(q)!r}D * ({count} - 1.0D))"
     negc = f"coalesce(aggregate({neg}, 0.0D, (acc, x) -> acc + x.value), 0.0D)"
@@ -540,11 +540,9 @@ def struct_quantile_sql(sketch_col: str, q: float) -> str:
 
 def struct_quantile(sketch, q: float) -> Column:
     """Go-exact quantile over the native struct form, as a pure expression
-    (see :func:`struct_quantile_sql`; column inputs are aliased first)."""
+    (see :func:`struct_quantile_sql`); takes the sketch column's name."""
     if isinstance(sketch, str):
         return F.expr(struct_quantile_sql(sketch, q))
-    # Column input: give it a stable name via a nested-select-free trick —
-    # wrap in a struct alias through expr on the stringified column
     raise TypeError(
         "struct_quantile expects the sketch column *name*; pass the column's "
         "string name so the expression can be assembled as SQL"
@@ -563,6 +561,9 @@ def struct_cdf_sql(sketch_col: str, v: float, alpha: Optional[float] = None) -> 
     s = f"`{sketch_col}`"
     if v is None or math.isnan(v):
         return "CAST(NULL AS DOUBLE)"
+    if math.isinf(v):
+        # the kernel's exact answer: an infinite threshold has no bin
+        return f"CASE WHEN {s}.count > 0 THEN {'1.0D' if v > 0 else '0.0D'} END"
 
     def bin_of(x: float) -> str:
         if alpha is not None:

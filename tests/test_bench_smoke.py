@@ -71,10 +71,17 @@ def test_family_names_continuity_r5(bench_small):
     assert bench_small.R5_FAMILY_NAMES <= set(bench_small._duckdb_family_sqls())
 
 
-def test_all_spark_families_execute(spark, bench_small):
+def test_all_spark_families_execute(spark, bench_small, monkeypatch):
+    # zero cutoffs: every family runs its pass-1 rep only — the protocol
+    # has its own tests, this one checks that each family executes
+    monkeypatch.setattr(bench_small, "PASS_CUTOFFS", {"spark": (0.0, 0.0)})
+    bench_small._RAW_RUNS.clear()
     result = {}
     bench_small.run_spark_families(spark, result)
     fam = result["spark_families_60m_sec"]
+    reps = bench_small._RAW_RUNS
+    assert {k: len(v) for k, v in reps.items()} == {f"spark_fam:{n}": 1 for n in fam}
+    bench_small._RAW_RUNS.clear()
     # superset-of-r5 is the continuity contract; exact equality with the
     # current registry catches accidental drops of newer families too
     assert bench_small.R5_FAMILY_NAMES <= set(fam)
@@ -219,13 +226,15 @@ def test_raw_run_spread_recorded(bench_small):
     """Round-6 verdict item 2: best-of point estimates alone make ±5-10%
     shared-runner noise indistinguishable from regression — every timed
     point must also record its raw repetition times under a stable
-    `<side>:<name>` key for the `raw_runs_sec` JSON section."""
+    `<side>:<name>` key for the `raw_runs_sec` JSON section, and every
+    family rep its steal share under the same key."""
     bench_small._RAW_RUNS.clear()
+    bench_small._RAW_STEAL.clear()
     calls = []
     assert bench_small._best3(lambda: calls.append(1), key="spark:qx") >= 0
     assert len(calls) == 3
     assert len(bench_small._RAW_RUNS["spark:qx"]) == 3
-    # multi-pass scheduler: a cheap in-band family (ref < pass-3 cutoff)
+    # multi-pass scheduler: a cheap family (pass-1 rep < pass-3 cutoff)
     # gets 3 spread reps, ALL recorded, min quoted
     result: dict = {}
     fams = bench_small._run_family_passes(
@@ -235,61 +244,62 @@ def test_raw_run_spread_recorded(bench_small):
     assert fams["hll_distinct"] == min(
         bench_small._RAW_RUNS["spark_fam:hll_distinct"]
     )
-    # a 0-second run sits far inside the band -> no load-suspect notes
-    assert result.get("family_band_notes", []) == []
+    # one steal share per family rep, each a share of CPU time
+    shares = bench_small._RAW_STEAL["spark_fam:hll_distinct"]
+    assert len(shares) == 3 and all(0.0 <= x <= 1.0 for x in shares)
+    assert result["machine"]["steal_max"] == {"spark": max(shares)}
     # key-less timing (warm-ups, one-shots) records nothing
     bench_small._timed(lambda: None)
     assert set(bench_small._RAW_RUNS) == {"spark:qx", "spark_fam:hll_distinct"}
+    assert set(bench_small._RAW_STEAL) == {"spark_fam:hll_distinct"}
     bench_small._RAW_RUNS.clear()
+    bench_small._RAW_STEAL.clear()
 
 
-def test_family_passes_protocol(bench_small):
+def test_family_passes_protocol(bench_small, monkeypatch):
     """Round-9 protocol (VERDICT r8 items 1/3): spread reps with rotated
-    order, deterministic band-based pass membership, setup-before-first-rep,
-    and the band-retry note for load-suspect cells."""
+    order, pass membership from each family's measured pass-1 rep, and
+    setup-before-first-rep."""
     b = bench_small
     b._RAW_RUNS.clear()
+    # cutoffs scaled down so sleeps of a tenth of a second decide membership
+    monkeypatch.setattr(b, "PASS_CUTOFFS", {"spark": (0.5, 0.05)})
     seq = []
 
-    def mk(name):
-        return lambda: seq.append(name)
+    def mk(name, first_sleep=0.0):
+        def run():
+            import time as _t
+
+            if first_sleep and name not in seq:
+                _t.sleep(first_sleep)  # only the pass-1 rep is slow
+            seq.append(name)
+
+        return run
 
     setup_calls = []
     entries = [
-        ("hll_distinct", mk("hll_distinct"), None),             # ref 5.77
+        ("hll_distinct", mk("hll_distinct"), None),
         ("streaming_windows", mk("streaming_windows"),
-         lambda: setup_calls.append("sw")),                      # ref 6.23
-        ("kmeans_15m_d64", mk("kmeans_15m_d64"), None),          # ref 32.5
+         lambda: setup_calls.append("sw")),
+        ("kmeans_15m_d64", mk("kmeans_15m_d64", 0.1), None),  # < 0.5, >= 0.05
+        ("gram_2m_x64", mk("gram_2m_x64", 0.6), None),        # >= 0.5
     ]
     result: dict = {}
     fams = b._run_family_passes(entries, "spark", result)
     # setup ran exactly once, despite 3 timed reps of the family
     assert setup_calls == ["sw"]
-    # pass 1 canonical order; pass 2 reversed (all refs < 60); pass 3
-    # rotated, cheap families only (wide k-means ref 32.5 >= 15 cutoff)
+    # pass 1 canonical order; pass 2 reversed, without gram (slow pass 1);
+    # pass 3 rotated by a third, cheap families only: k-means's fast
+    # pass-2 rep does not bring it back, its slow pass-1 rep decides
     assert seq == [
-        "hll_distinct", "streaming_windows", "kmeans_15m_d64",   # pass 1
-        "kmeans_15m_d64", "streaming_windows", "hll_distinct",   # pass 2 rev
-        "streaming_windows", "hll_distinct",                     # pass 3 rot
+        "hll_distinct", "streaming_windows", "kmeans_15m_d64", "gram_2m_x64",  # pass 1
+        "kmeans_15m_d64", "streaming_windows", "hll_distinct",  # pass 2 rev
+        "streaming_windows", "hll_distinct",                    # pass 3 rot
     ]
     assert set(fams) == {n for n, _, _ in entries}
-    assert result.get("family_band_notes", []) == []
-    # band retry: monkey-make a family whose reps all exceed band*tol —
-    # simulate with a fake band on a synthetic family via FRESH_BANDS
-    b.FRESH_BANDS["__fake_fam__"] = {"spark": -1.0}  # any time > limit
-    try:
-        calls = []
-        result2: dict = {}
-        b._run_family_passes(
-            [("__fake_fam__", lambda: calls.append(1), None)], "spark", result2
-        )
-        notes = result2["family_band_notes"]
-        assert len(notes) == 1 and notes[0]["family"] == "__fake_fam__"
-        assert notes[0]["status"] == "load_suspect"
-        # runs_sec in the note carries every rep (3 passes + the retry)
-        assert len(notes[0]["runs_sec"]) == len(calls) == 4
-    finally:
-        del b.FRESH_BANDS["__fake_fam__"]
+    assert fams["gram_2m_x64"] >= 0.6
+    assert fams["kmeans_15m_d64"] < 0.1  # min over reps, fast pass 2 included
+    assert "passes_truncated_over_budget" not in result
     b._RAW_RUNS.clear()
 
 
@@ -297,83 +307,90 @@ def test_emit_final_line_is_compact_summary(bench_small, capsys, tmp_path, monke
     """Round-7 verdict item 1: the driver parses the LAST stdout line with a
     bounded tail capture, so the final line must be the compact summary
     (no raw_runs_sec — that key made the r7 record unparseable); raw runs
-    travel on an earlier line and in a sidecar file."""
+    and the per-rep steal shares travel on an earlier line and in a
+    sidecar file, while the final line keeps the machine block."""
     import json as _json
 
     monkeypatch.setattr(bench_small, "__file__", str(tmp_path / "bench.py"))
     bench_small._RAW_RUNS.clear()
+    bench_small._RAW_STEAL.clear()
     bench_small._RAW_RUNS["spark:qx"] = [0.5, 0.4]
+    bench_small._RAW_RUNS["spark_fam:f1"] = [3.0, 1.1]
+    bench_small._RAW_STEAL["spark_fam:f1"] = [0.0312, 0.0004]
+    machine = {"nproc": 4, "canary_ms": {"spark": 20.6, "duckdb": 21.3},
+               "steal_max": {"spark": 0.0312, "duckdb": 0.0}}
     result = {
+        "machine": machine,
         "metric": "headline_queries_total",
         "value": 1.0,
         "raw_runs_sec": {"stale": []},
-        # round 9: the verbose protocol evidence must leave the final line
-        "family_band_notes": [
-            {"family": "f1", "engine": "duckdb", "band_ref_sec": 1.0,
-             "runs_sec": [3.0, 1.1], "status": "cleared_by_retry"},
-            {"family": "f2", "engine": "spark", "band_ref_sec": 1.0,
-             "runs_sec": [3.0, 3.1], "status": "load_suspect"},
-        ],
         "duckdb_oracle": {"q01": 0.1, "q02": 0.25},
     }
     bench_small._emit(result)
     lines = capsys.readouterr().out.strip().splitlines()
     assert len(lines) == 2
     raw_line, summary_line = (_json.loads(ln) for ln in lines)
-    assert raw_line["raw_runs_sec"] == {"spark:qx": [0.5, 0.4]}
-    # full notes + per-query oracle dict ride the raw line / sidecar
-    assert [n["family"] for n in raw_line["family_band_notes"]] == ["f1", "f2"]
+    assert raw_line["raw_runs_sec"] == {"spark:qx": [0.5, 0.4], "spark_fam:f1": [3.0, 1.1]}
+    # one steal share per family rep, keyed like its raw run
+    assert raw_line["steal_share"] == {"spark_fam:f1": [0.0312, 0.0004]}
+    # the per-query oracle dict rides the raw line / sidecar
     assert raw_line["duckdb_oracle"] == {"q01": 0.1, "q02": 0.25}
     assert "raw_runs_sec" not in summary_line
-    assert "family_band_notes" not in summary_line
+    assert "steal_share" not in summary_line
     assert "duckdb_oracle" not in summary_line
-    # ...while the final line keeps the quoted forms: total + suspects only
+    # ...while the final line keeps the quoted forms and the machine block
     assert summary_line["duckdb_oracle_total"] == 0.35
-    assert summary_line["load_suspect"] == ["f2"]
+    assert summary_line["machine"] == machine
     assert summary_line["metric"] == "headline_queries_total"
     sidecar = _json.loads((tmp_path / "bench_raw_runs.json").read_text())
     assert sidecar == raw_line
     bench_small._RAW_RUNS.clear()
+    bench_small._RAW_STEAL.clear()
 
 
 def test_emit_final_line_fits_capture_budget(bench_small, capsys, tmp_path, monkeypatch):
     """Round-9: the driver's tail capture held ~2000 chars across rounds
     and the r8 19-family line was 1887 B — one family from truncation.
-    A realistic 20-family record (both engines, headline, native, oracle
-    total, a couple of suspects) must emit a final line under the budget,
-    or the next family addition silently loses the round's record."""
+    A realistic 23-family record (both engines, headline, native, oracle
+    total, the machine block) must emit a final line under the budget,
+    or the next family addition silently loses the round's record. The
+    last partial snapshot of a killed run must fit too."""
     import json as _json
 
     monkeypatch.setattr(bench_small, "__file__", str(tmp_path / "bench.py"))
     bench_small._RAW_RUNS.clear()
+    bench_small._RAW_STEAL.clear()
     fams = list(bench_small.FAMILY_PASS1_ORDER)
     assert len(fams) == 23
+    heads = bench_small.HEADLINE
     result = {
-        "duckdb_oracle": {f"q{i:02d}_some_headline_query_name": 0.123 for i in range(9)},
+        "machine": {"nproc": 32, "canary_ms": {"spark": 123.4, "duckdb": 118.7},
+                    "steal_max": {"spark": 0.1234, "duckdb": 0.0567}},
+        "duckdb_oracle": {q: 0.123 for q in heads},
         "duckdb_60m_sec": 24.567,
         "duckdb_families_60m_sec": {f: 123.456 for f in fams},
         "metric": "headline_queries_total",
         "value": 5.018,
         "unit": "sec",
-        "queries": {f"q{i:02d}_some_headline_query_name": 0.891 for i in range(9)},
+        "queries": {q: 0.891 for q in heads},
         "sf": 0.1,
         "native_sketch_rows_per_sec": 43821234,
         "native_sketch_60m_sec": 1.369,
         "spark_families_60m_sec": {f: 51.871 for f in fams},
-        "family_band_notes": [
-            {"family": fams[0], "engine": "duckdb", "band_ref_sec": 59.1,
-             "runs_sec": [124.7, 70.9], "status": "cleared_by_retry"},
-            {"family": fams[1], "engine": "spark", "band_ref_sec": 3.4,
-             "runs_sec": [7.7, 8.2, 6.7, 6.7], "status": "load_suspect"},
-            {"family": fams[2], "engine": "spark", "band_ref_sec": 2.4,
-             "runs_sec": [6.1, 6.0, 5.9, 5.8], "status": "load_suspect"},
-        ],
     }
+    for f in fams:
+        for engine in ("spark", "duckdb"):
+            bench_small._RAW_STEAL[f"{engine}_fam:{f}"] = [0.1234, 0.0567, 0.0]
+    bench_small._partial(result, "duckdb_families_progress")
+    snap = capsys.readouterr().out.strip()
+    assert len(snap) <= bench_small.FINAL_LINE_BUDGET, len(snap)
     bench_small._emit(result)
-    final = capsys.readouterr().out.strip().splitlines()[-1]
+    raw, final = capsys.readouterr().out.strip().splitlines()[-2:]
     assert len(final) <= bench_small.FINAL_LINE_BUDGET, len(final)
-    assert _json.loads(final)["load_suspect"] == [fams[1], fams[2]]
+    assert _json.loads(final)["machine"]["steal_max"] == {"spark": 0.1234, "duckdb": 0.0567}
+    assert len(_json.loads(raw)["steal_share"]) == 46
     bench_small._RAW_RUNS.clear()
+    bench_small._RAW_STEAL.clear()
 
 
 def test_gram_mirror_agrees(spark, bench_small):
@@ -543,35 +560,6 @@ def test_bm25_mirror_agrees(spark, bench_small):
     assert srows == drows and len(srows) == 10 * len(b.BM25_QUERIES)
 
 
-def test_family_band_retry_can_clear(bench_small):
-    """A family whose in-run reps all exceed the band but whose
-    end-of-session retry lands back inside it must be noted
-    cleared_by_retry — and the quoted min must include the retry."""
-    b = bench_small
-    b._RAW_RUNS.clear()
-    state = {"n": 0}
-
-    def thunk():
-        import time as _t
-
-        state["n"] += 1
-        if state["n"] <= 3:  # the three scheduled passes: slow (load)
-            _t.sleep(0.5)
-        # retry: instant (episode passed)
-
-    b.FRESH_BANDS["__fake2__"] = {"spark": 0.05}  # limit = 0.05*1.6+0.3 = 0.38
-    try:
-        result: dict = {}
-        fams = b._run_family_passes([("__fake2__", thunk, None)], "spark", result)
-        notes = result["family_band_notes"]
-        assert len(notes) == 1 and notes[0]["status"] == "cleared_by_retry"
-        assert state["n"] == 4  # 3 passes + 1 retry
-        assert fams["__fake2__"] < 0.38  # min includes the cleared retry
-    finally:
-        del b.FRESH_BANDS["__fake2__"]
-    b._RAW_RUNS.clear()
-
-
 def test_vocab_tok_mirror_agrees(spark, bench_small):
     """The round-11 vocab_tok_15m family: the Spark Arrow bulk kernel and
     the DuckDB distinct-word recursive-CTE mirror must compute identical
@@ -606,148 +594,39 @@ def test_vocab_tok_mirror_agrees(spark, bench_small):
         con.close()
 
 
-def test_heal_substitutes_in_band_attribution_cells(bench_small, monkeypatch):
-    """Round 11 self-healing: a load_suspect family gets one fresh-process
-    attribution pair; an in-band fresh cell is substituted into the
-    official record and the note becomes substituted_by_attribution; a
-    still-over-band fresh cell keeps the flag; a crashed subprocess keeps
-    the flag with an attribution_error; >_HEAL_MAX_FAMILIES skips with a
-    session-load note. Subprocess mocked — the real pair is exercised by
-    running bench.py with SPARK_GRAFT_BENCH_ONLY."""
-    import json as _json
-    import subprocess as _sp
-
-    b = bench_small
-
-    def fake_run(cmd, capture_output, text, timeout, env):
-        fam = env["SPARK_GRAFT_BENCH_ONLY"]
-        assert env["SPARK_GRAFT_NO_HEAL"] == "1"
-
-        class P:
-            returncode = 0
-            stdout = (
-                _json.dumps({"partial": "duckdb_done"})
-                + "\n"
-                + _json.dumps(
-                    {
-                        "metric": "bench_only_families",
-                        "spark_families_60m_sec": {fam: 1.0},
-                        "duckdb_families_60m_sec": {fam: 50.0},
-                    }
-                )
-            )
-
-        if fam == "__crash__":
-            raise _sp.TimeoutExpired(cmd, timeout)
-        return P()
-
-    monkeypatch.setattr(_sp, "run", fake_run)
-    b._RAW_RUNS.clear()
-    b.FRESH_BANDS["__h1__"] = {"spark": 0.9, "duckdb": 100.0}
-    b.FRESH_BANDS["__h2__"] = {"spark": 0.1}
-    b.FRESH_BANDS["__crash__"] = {"spark": 0.9}
-    b.FRESH_BANDS["__hd__"] = {"spark": 0.9, "duckdb": 40.0}
-    try:
-        result = {
-            "spark_families_60m_sec": {"__h1__": 9.9, "__h2__": 9.9,
-                                       "__crash__": 9.9, "__hd__": 0.8},
-            "duckdb_families_60m_sec": {"__h1__": 999.0, "__hd__": 777.0},
-            "family_band_notes": [
-                {"family": "__h1__", "engine": "spark", "band_ref_sec": 0.9,
-                 "runs_sec": [9.9], "status": "load_suspect"},
-                {"family": "__h2__", "engine": "spark", "band_ref_sec": 0.1,
-                 "runs_sec": [9.9], "status": "load_suspect"},
-                {"family": "__crash__", "engine": "spark", "band_ref_sec": 0.9,
-                 "runs_sec": [9.9], "status": "load_suspect"},
-                # a DUCKDB-engine flag: the r11 in-situ validation only ever
-                # exercised spark-cell substitutions (VERDICT r11 nit d)
-                {"family": "__hd__", "engine": "duckdb", "band_ref_sec": 40.0,
-                 "runs_sec": [777.0], "status": "load_suspect"},
-            ],
-        }
-        b._heal_load_suspects(result)
-        by_fam = {n["family"]: n for n in result["family_band_notes"]}
-        # __h1__: fresh 1.0 <= 0.9*1.6+0.3 -> substituted, cell healed,
-        # and the UNFLAGGED duckdb cell still takes the fresh min
-        assert by_fam["__h1__"]["status"] == "substituted_by_attribution"
-        assert by_fam["__h1__"]["attribution_sec"] == 1.0
-        assert result["spark_families_60m_sec"]["__h1__"] == 1.0
-        assert result["duckdb_families_60m_sec"]["__h1__"] == 50.0
-        # __h2__: fresh 1.0 > 0.1*1.6+0.3 = 0.46 -> two processes agree,
-        # flag stands WITH BOTH VALUES readable in the note (the
-        # in-session reps and the appended fresh attribution rep)
-        assert by_fam["__h2__"]["status"] == "load_suspect"
-        assert by_fam["__h2__"]["attribution_sec"] == 1.0
-        assert by_fam["__h2__"]["runs_sec"] == [9.9, 1.0]
-        assert result["spark_families_60m_sec"]["__h2__"] == 1.0
-        # __crash__: subprocess died -> flag stands with an error note
-        assert by_fam["__crash__"]["status"] == "load_suspect"
-        assert "TimeoutExpired" in by_fam["__crash__"]["attribution_error"]
-        assert "attribution_sec" not in by_fam["__crash__"]
-        # __hd__: the DUCKDB-engine substitution path — fresh 50.0 is
-        # inside 40*1.6+0.3, so the duckdb cell heals in-record while the
-        # unflagged spark cell keeps its (better) in-session min
-        assert by_fam["__hd__"]["status"] == "substituted_by_attribution"
-        assert by_fam["__hd__"]["attribution_sec"] == 50.0
-        assert result["duckdb_families_60m_sec"]["__hd__"] == 50.0
-        assert result["spark_families_60m_sec"]["__hd__"] == 0.8
-        # attribution reps land in the sidecar raw runs for both engines
-        assert 1.0 in b._RAW_RUNS["spark_fam:__h1__"]
-        assert 50.0 in b._RAW_RUNS["duckdb_fam:__hd__"]
-
-        # > _HEAL_MAX_FAMILIES flagged -> session-wide load, no reruns
-        many = {
-            "family_band_notes": [
-                {"family": f"__m{i}__", "engine": "spark", "band_ref_sec": 1,
-                 "runs_sec": [9.9], "status": "load_suspect"}
-                for i in range(b._HEAL_MAX_FAMILIES + 1)
-            ],
-        }
-        b._heal_load_suspects(many)
-        assert "session-wide load" in many["heal_note"]
-        assert all(n["status"] == "load_suspect" for n in many["family_band_notes"])
-    finally:
-        for k in ("__h1__", "__h2__", "__crash__"):
-            del b.FRESH_BANDS[k]
-        b._RAW_RUNS.clear()
-
-
 def test_partial_snapshot_lines(bench_small, capsys, monkeypatch):
     """Round 13 (VERDICT r12 item 1): every completed section/family rep
     prints a {"partial": ...} snapshot so an external wall-clock kill
     leaves the newest complete record as the last stdout line. Snapshots
-    must apply _emit's compaction (band notes dropped, oracle totalled,
-    family cells at 2dp) so a killed run's last line stays inside the
-    driver's tail-capture window, and attribution subprocesses must not
-    print them (their stdout is reverse-scanned for the families record)."""
+    must apply _emit's compaction (oracle totalled, family cells at 2dp)
+    so a killed run's last line stays inside the driver's tail-capture
+    window, and they carry the machine block measured so far."""
     import json as _json
 
     b = bench_small
+    machine = {"nproc": 4, "canary_ms": {"spark": 20.6}, "steal_max": {"spark": 0.0012}}
     result = {
+        "machine": machine,
         "metric": "headline_queries_total",
         "value": 1.5,
         "duckdb_oracle": {"q01": 0.1, "q02": 0.25},
         "spark_families_60m_sec": {"hll_distinct": 5.678},
-        "family_band_notes": [{"family": "f", "engine": "spark",
-                               "band_ref_sec": 1.0, "runs_sec": [9.9],
-                               "status": "load_suspect"}],
     }
     b._partial(result, "spark_done")
     snap = _json.loads(capsys.readouterr().out.strip())
     assert snap["partial"] == "spark_done"
-    assert "family_band_notes" not in snap
     assert "duckdb_oracle" not in snap
     assert snap["duckdb_oracle_total"] == 0.35
     assert snap["spark_families_60m_sec"] == {"hll_distinct": 5.68}
     assert snap["metric"] == "headline_queries_total"
+    assert snap["machine"] == machine
     # result itself is untouched (the final _emit still sees everything)
-    assert "duckdb_oracle" in result and "family_band_notes" in result
-    # attribution subprocesses stay snapshot-free
+    assert "duckdb_oracle" in result
+    # single-family runs snapshot like any other run
     monkeypatch.setattr(b, "_ONLY", {"hll_distinct"})
     b._partial(result, "spark_done")
-    assert capsys.readouterr().out == ""
+    assert _json.loads(capsys.readouterr().out.strip()) == snap
     # the family-passes progress hook feeds snapshots after every rep
-    monkeypatch.setattr(b, "_ONLY", set())
     seen = []
     b._run_family_passes(
         [("hll_distinct", lambda: None, None)], "spark", {},
@@ -756,49 +635,29 @@ def test_partial_snapshot_lines(bench_small, capsys, monkeypatch):
     assert len(seen) == 3  # pass 1 + pass 2 + pass 3 for a cheap family
     assert all("hll_distinct" in s for s in seen)
     b._RAW_RUNS.clear()
+    b._RAW_STEAL.clear()
 
 
 def test_budget_skips_optional_work(bench_small, monkeypatch):
     """Round 13 (VERDICT r12 item 2): once the session deadline passes,
-    pass-2/3 spread reps, band retries and heal pairs are SKIPPED rather
-    than run — pass-1 cells always exist, skipped retries leave an honest
-    load_suspect + retry_skipped_over_budget note, and heal marks its
-    skip in attribution_error. A timeout can then never erase the record."""
+    pass-2/3 spread reps are SKIPPED rather than run — pass-1 cells always
+    exist and the record names the truncated engine. A timeout can then
+    never erase the record."""
     b = bench_small
     b._RAW_RUNS.clear()
     monkeypatch.setattr(b, "_DEADLINE_SEC", -1.0)  # deadline already passed
     calls = []
-    b.FRESH_BANDS["__b1__"] = {"spark": -1.0}  # any time exceeds the band
-    try:
-        result: dict = {}
-        fams = b._run_family_passes(
-            [("hll_distinct", lambda: calls.append("h"), None),
-             ("__b1__", lambda: calls.append("b"), None)],
-            "spark", result,
-        )
-        # exactly one pass-1 rep each: no pass-2/3, no retry
-        assert calls == ["h", "b"]
-        assert set(fams) == {"hll_distinct", "__b1__"}
-        assert result["passes_truncated_over_budget"] == ["spark"]
-        (note,) = result["family_band_notes"]
-        assert note["family"] == "__b1__"
-        assert note["status"] == "load_suspect"
-        assert note["retry_skipped_over_budget"] is True
-        assert len(note["runs_sec"]) == 1
-        # heal skips the pair and says so, keeping the flag
-        import subprocess as _sp
-
-        def boom(*a, **k):  # pragma: no cover - must not be reached
-            raise AssertionError("heal ran a subprocess past the deadline")
-
-        monkeypatch.setattr(_sp, "run", boom)
-        b._heal_load_suspects(result)
-        (note,) = result["family_band_notes"]
-        assert note["status"] == "load_suspect"
-        assert "deadline" in note["attribution_error"]
-    finally:
-        del b.FRESH_BANDS["__b1__"]
-        b._RAW_RUNS.clear()
+    result: dict = {}
+    fams = b._run_family_passes(
+        [("hll_distinct", lambda: calls.append("h"), None),
+         ("kmeans_60m", lambda: calls.append("k"), None)],
+        "spark", result,
+    )
+    # exactly one pass-1 rep each: no pass 2/3
+    assert calls == ["h", "k"]
+    assert set(fams) == {"hll_distinct", "kmeans_60m"}
+    assert result["passes_truncated_over_budget"] == ["spark"]
+    b._RAW_RUNS.clear()
 
 
 def test_pq_mirror_agrees(spark, bench_small):

@@ -138,13 +138,16 @@ def test_struct_quantile_expr_matches_kernel(spark):
     values = [-3.0, 0.0, 1.0, 5.0, 5.0, 20.0, 400.0]
     df = spark.createDataFrame([(v,) for v in values], "v double")
     sk = native.sketch_struct_agg(df.withColumn("g", F.lit(1)), ["g"], "v", 0.01)
-    qs = [0.0, 0.3, 0.5, 0.8, 1.0]
+    qs = [0.0, 0.3, 0.5, 0.8, 1.0, math.nan]
     row = sk.select(
         *[native.struct_quantile("sketch", q).alias(f"q{i}") for i, q in enumerate(qs)]
     ).first()
     kernel = DDSketch(0.01).extend(values)
     for i, q in enumerate(qs):
         assert rel_eq(row[f"q{i}"], kernel.quantile(q)), (q, row[f"q{i}"], kernel.quantile(q))
+    # the raw-value aggregate shares the fold: a NaN quantile is NULL too
+    agg = native.sketch_quantile_agg(df.withColumn("g", F.lit(1)), ["g"], "v", 0.01, (math.nan,))
+    assert agg.first()["pnan"] is None
 
 
 def test_merge_struct_sketches_native(spark):
@@ -546,16 +549,18 @@ def test_struct_cdf_matches_kernel(spark):
     df = spark.createDataFrame([(v,) for v in values], "v double")
     s = native.sketch_struct_agg(df.withColumn("k", F.lit("k")), ["k"], "v", 0.01)
     kernel = DDSketch(0.01).extend(values)
-    thresholds = (-10.0, -0.5, 0.0, 0.5, 30.0, 1000.0)
+    thresholds = (-math.inf, -10.0, -0.5, 0.0, 0.5, 30.0, 1000.0, math.inf)
     cols = [
-        f"{native.struct_cdf_sql('sketch', t, alpha=0.01)} AS c{i}"
+        f"{native.struct_cdf_sql('sketch', t, alpha=a)} AS c{i}_{j}"
         for i, t in enumerate(thresholds)
+        for j, a in enumerate((0.01, None))
     ]
     row = s.selectExpr(*cols).first()
     blob_df = spark.createDataFrame([(kernel.encode(),)], "b binary")
     for i, t in enumerate(thresholds):
         expect = kernel.cdf(t)
-        assert rel_eq(row[f"c{i}"], expect), (t, row[f"c{i}"], expect)
+        for j in range(2):
+            assert rel_eq(row[f"c{i}_{j}"], expect), (t, j, row[f"c{i}_{j}"], expect)
         got = blob_df.select(
             fs.ddsketch_cdf(F.col("b"), F.lit(t)).alias("c")
         ).first().c
@@ -566,6 +571,12 @@ def test_struct_cdf_matches_kernel(spark):
         empty.select(fs.ddsketch_cdf(F.col("b"), F.lit(1.0)).alias("c")).first().c
         is None
     )
+    # ...and so is the fold over an empty struct, infinite thresholds too
+    empty_row = empty.select(native.wire_to_struct("b").alias("sketch")).selectExpr(
+        *[f"{native.struct_cdf_sql('sketch', t, alpha=0.01)} AS c{i}"
+          for i, t in enumerate((-math.inf, 1.0, math.inf))]
+    ).first()
+    assert list(empty_row) == [None, None, None]
 
 
 def test_struct_histogram_totals_and_ranges(spark):
