@@ -42,6 +42,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import Window, functions as F
+
+from duckdb_ddsketch_spark import streaming
+from duckdb_ddsketch_spark.operators import (
+    analytics,
+    approx,
+    bitmap,
+    clustering,
+    decomposition,
+    dedup,
+    native,
+    relational,
+    sampling,
+    similarity,
+    text as text_ops,
+)
 from perfbench.probes import cpu_canary_ms, cpu_ticks, steal_share
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -153,10 +169,25 @@ R5_FAMILY_NAMES = frozenset({
     "streaming_windows_full_recompute",
 })
 
+
+def _per(mod: int, n: int, base: int) -> int:
+    """A cardinality modulus (distinct users, docs, classes) for ``n``
+    rows that keeps the per-row character ``mod`` has at a family's
+    ``base`` rows; exactly ``mod`` at ``base``. Structure parameters
+    (group count, k, dims, query count, shard count) do not scale."""
+    return max(1, mod * n // base)
+
+
 # deterministic generators (arithmetic only — identical rows in both engines)
-HLL_USERS = "(id * 2654435761) % 10000000"
+def _hll_users(n: int) -> str:
+    return f"(id * 2654435761) % {_per(10_000_000, n, N_60M)}"
+
+
+def _dedup_doc(n: int) -> str:
+    return f"id % {_per(30_000_000, n, N_60M)}"
+
+
 HEAVY_TOK = "(id * id + 17 * id) % 50021"
-DEDUP_DOC = "id % 30000000"
 N_ASOF_L, N_ASOF_R = 54_000_000, 6_000_000
 N_MINHASH = 600_000
 MINHASH_D = 550_000
@@ -302,12 +333,12 @@ def _km_seed_centroids(primes: tuple = KM_PRIMES) -> list:
 N_SPAN, SPAN_POOL, SPAN_N = 2_000_000, 50_000, 8
 
 
-def _span_text_sql(idv: str) -> str:
+def _span_text_sql(idv: str, pool: int) -> str:
     uniq = " || ' ' || ".join(
         f"'u{j}_' || CAST(({idv}) * {2 * j + 3} AS VARCHAR)" for j in range(8)
     )
     boil = " || ' ' || ".join(
-        f"'b{j}_' || CAST((({idv}) % {SPAN_POOL}) * {j + 1} AS VARCHAR)"
+        f"'b{j}_' || CAST((({idv}) % {pool}) * {j + 1} AS VARCHAR)"
         for j in range(16)
     )
     return f"{uniq} || ' ' || {boil}"
@@ -339,29 +370,35 @@ def _span_text_printf(idv: str) -> str:
 # (informational) — it answers a different question (recompute everything
 # at the end) than the streaming operator does (answer after every batch).
 STREAM_KEYS, STREAM_HOURS, STREAM_FILES = 25, 1000, 16
-# cache key encodes every generation parameter so a config change can't
-# silently reuse stale staged files through the _DONE sentinel
-STREAM_SRC = os.path.join(
-    os.environ.get("TMPDIR", "/tmp"),
-    f"ddsketch_bench_stream_v2_{N_60M}_{STREAM_KEYS}k_{STREAM_HOURS}h_{STREAM_FILES}f",
-)
+STREAM_DIR = os.environ.get("TMPDIR", "/tmp")
 # both engines ingest the 16 files in arrival chunks of 4 — micro-batch
 # fixed costs (state commit, plan) amortize over real per-batch work
 STREAM_BATCH_FILES = 4
 
 
-def _ensure_stream_src() -> None:
-    done = os.path.join(STREAM_SRC, "_DONE")
+def _stream_src(n: int) -> str:
+    # the cache key encodes every generation parameter so a config change
+    # can't silently reuse stale staged files through the _DONE sentinel
+    return os.path.join(
+        STREAM_DIR,
+        f"ddsketch_bench_stream_v2_{n}_{STREAM_KEYS}k_{STREAM_HOURS}h_{STREAM_FILES}f",
+    )
+
+
+def _ensure_stream_src(n: int) -> str:
+    """Stage the ``n``-row stream once; returns its directory."""
+    src = _stream_src(n)
+    done = os.path.join(src, "_DONE")
     if os.path.exists(done):
-        return
+        return src
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(STREAM_SRC, exist_ok=True)
+    os.makedirs(src, exist_ok=True)
     base = 1_700_000_000
-    per = N_60M // STREAM_FILES
-    per_hour = N_60M // STREAM_HOURS
+    per = n // STREAM_FILES
+    per_hour = n // STREAM_HOURS
     for f in range(STREAM_FILES):
         ids = np.arange(f * per, (f + 1) * per, dtype=np.int64)
         # epoch micros; the HOUR component (ids // per_hour) is
@@ -372,7 +409,8 @@ def _ensure_stream_src() -> None:
         # exactly 250 whole hours and the 10-min watermark (advanced only
         # between batches) never drops an in-hour late row. Changing
         # STREAM_FILES/STREAM_HOURS/STREAM_BATCH_FILES must preserve that
-        # alignment (or make ts fully monotone).
+        # alignment (or make ts fully monotone); a row count n divisible by
+        # both STREAM_FILES and STREAM_HOURS keeps it at any scale.
         ts = (base + (ids // per_hour) * 3600 + (ids % 3600)) * 1_000_000
         tbl = pa.table(
             {
@@ -383,9 +421,10 @@ def _ensure_stream_src() -> None:
                 ),
             }
         )
-        pq.write_table(tbl, os.path.join(STREAM_SRC, f"part-{f:02d}.parquet"))
+        pq.write_table(tbl, os.path.join(src, f"part-{f:02d}.parquet"))
     with open(done, "w") as fh:
         fh.write("ok")
+    return src
 
 
 def _minhash_text_sql(d: str) -> str:
@@ -648,11 +687,11 @@ def run_duckdb(result: dict) -> None:
                     # this one-shot query is warmed once so the recorded
                     # number measures the aggregation, not first-touch
                     def setup(s=sql):
-                        _ensure_stream_src()
+                        _ensure_stream_src(N_60M)
                         con.execute(s).fetchall()
 
                 else:
-                    setup = _ensure_stream_src
+                    setup = lambda: _ensure_stream_src(N_60M)
             entries.append((name, thunk, setup))
 
         def _prog(cells):
@@ -679,7 +718,7 @@ def _duckdb_family_sqls() -> dict:
     rho = f"CASE WHEN {x} = 0 THEN 61 ELSE 61 - length(bin({x})) END"
     sqls["hll_distinct"] = f"""
     WITH gen AS (
-        SELECT range % 25 AS grp, ({HLL_USERS.replace('id', 'range')}) AS u
+        SELECT range % 25 AS grp, ({_hll_users(N_60M).replace('id', 'range')}) AS u
         FROM range({N_60M})
     ),
     hashed AS (SELECT grp, md5(CAST(u AS VARCHAR)) AS __h FROM gen),
@@ -728,7 +767,7 @@ def _duckdb_family_sqls() -> dict:
     sqls["exact_dedup"] = f"""
     WITH gen AS (
         SELECT range % 4 AS src,
-               'lorem ipsum dolor ' || CAST(({DEDUP_DOC.replace('id', 'range')})
+               'lorem ipsum dolor ' || CAST(({_dedup_doc(N_60M).replace('id', 'range')})
                    AS VARCHAR) AS text
         FROM range({N_60M})
     )
@@ -1387,9 +1426,10 @@ def _duckdb_family_sqls() -> dict:
             "ws TIMESTAMP, key INTEGER, sign INTEGER, bin INTEGER,"
             " cnt DOUBLE, PRIMARY KEY (ws, key, sign, bin))"
         )
+        src = _stream_src(N_60M)
         for f0 in range(0, STREAM_FILES, STREAM_BATCH_FILES):
             batch = ", ".join(
-                f"'{STREAM_SRC}/part-{f:02d}.parquet'"
+                f"'{src}/part-{f:02d}.parquet'"
                 for f in range(f0, f0 + STREAM_BATCH_FILES)
             )
             con.execute(
@@ -1434,44 +1474,326 @@ def _duckdb_family_sqls() -> dict:
     # windowed aggregation, not driver-side transfer of ~6M result rows
     sqls["streaming_windows_full_recompute"] = (
         "SELECT COUNT(*) AS n, SUM(cnt) AS c FROM ("
-        + _stream_select(f"'{STREAM_SRC}/part-*.parquet'")
+        + _stream_select(f"'{_stream_src(N_60M)}/part-*.parquet'")
         + ")"
     )
     return sqls
 
 
-def run_full_recompute(spark) -> None:
-    """Batch recompute over the staged stream files — the symmetric
-    counterpart of the DuckDB full-recompute row, so the bench records
-    both streaming-vs-IVM and batch-vs-batch. Module-level so the
-    scaling-curve probe can drive it at scaled row counts."""
-    from pyspark.sql import functions as F
+# ---------------------------------------------------------------------------
+# The Spark family bodies, each defined once. run_spark_families times a
+# body at its base row count, scripts/scaling_curve_probe.py at fractions
+# and multiples of it, and the smoke tests compare its rows with the DuckDB
+# mirror at small sizes. ``body(spark, n)`` returns the rows it collected.
+# Cardinality moduli follow ``n`` through _per, so at the base count every
+# generated SQL string is the one the DuckDB mirror is written against.
+# ---------------------------------------------------------------------------
 
-    from duckdb_ddsketch_spark.operators.native import gamma_of, value_to_bin_expr
 
-    gamma = gamma_of(0.01)
+def _gen(spark, n, expr_pairs, partitions=64):
+    return spark.range(n, numPartitions=partitions).selectExpr(
+        *[f"{e} AS {a}" for a, e in expr_pairs]
+    )
+
+
+def _hll_distinct(spark, n):
+    df = _gen(spark, n, [("grp", "id % 25"), ("u", _hll_users(n))])
+    return approx.hll_distinct(df, ["grp"], "u", p=8).collect()
+
+
+def _asof_join(spark, n):
+    # 100k users is structure: per-user rows scale with n, as a corpus
+    # scale-up would; the right side keeps its 1:9 share of the left
+    left = _gen(spark, n, [("u", "id % 100000"), ("ts", "id * 7")])
+    right = _gen(
+        spark, _per(N_ASOF_R, n, N_ASOF_L), [("u", "id % 100000"), ("ts", "id * 71")]
+    )
+    j = relational.asof_join(
+        left, right, on=["u"], left_ts="ts", right_ts="ts", right_cols=[]
+    )
+    return j.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("ts_r").alias("matched"),
+        F.sum(F.col("ts") - F.col("ts_r")).alias("lag_sum"),
+    ).collect()
+
+
+def _heavy_hitters(spark, n):
+    # the 50021-token vocabulary is structure (a language's heavy-hitter
+    # set doesn't grow with corpus size): only the event stream scales
+    df = _gen(spark, n, [("grp", "id % 25"), ("tok", f"CAST(({HEAVY_TOK}) AS STRING)")])
+    counts = df.groupBy("grp", "tok").count()
+    w = Window.partitionBy("grp").orderBy(F.col("count").desc(), F.col("tok").asc())
+    return (
+        counts.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 10)
+        .collect()
+    )
+
+
+def _exact_dedup(spark, n):
+    text = f"'lorem ipsum dolor ' || CAST(({_dedup_doc(n)}) AS STRING)"
+    df = _gen(spark, n, [("src", "id % 4"), ("text", text)])
+    return dedup.exact_dedup_summary(df, ["src"], text="text", id_col="id").collect()
+
+
+def _span_extents(spark, n):
+    t = _span_text_sql("id", _per(SPAN_POOL, n, N_SPAN)).replace("VARCHAR", "STRING")
+    docs = _gen(spark, n, [("doc_id", "id"), ("text", t)])
+    # bench opts into the xxhash64 gram key explicitly (8-byte shuffle
+    # keys, measured 23.6 -> 12.6 s vs md5 on this family)
+    return (
+        dedup.duplicate_span_extents(
+            docs, text="text", id_col="doc_id", n=SPAN_N, min_docs=2,
+            gram_hash="xxhash64",
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_extents"),
+            F.sum(F.col("span_end") - F.col("span_start") + 1).alias("cut_tokens"),
+        )
+        .collect()
+    )
+
+
+def _class_docs(spark, n, classes, id_col="doc_id", partitions=64):
+    """n 8-token docs over ``classes`` duplicate classes (_minhash_text_sql)."""
+    t = (
+        _minhash_text_sql(f"id % {classes}")
+        .replace("//", "div")
+        .replace("VARCHAR", "STRING")
+    )
+    return _gen(spark, n, [(id_col, "id"), ("text", t)], partitions)
+
+
+def _minhash_lsh(spark, n):
+    docs = _class_docs(spark, n, _per(MINHASH_D, n, N_MINHASH), "id", partitions=32)
+    return [(dedup.lsh_candidate_pairs(docs, text="text", id_col="id").count(),)]
+
+
+def _bitmap_retention(spark, n):
+    df = _gen(
+        spark, n,
+        [("user", f"id % {_per(N_BITMAP_USERS, n, N_60M)}"),
+         ("day", "(id * 2654435761) % 62")],
+    )
+    bm = bitmap.activity_bitmap(df, "user", "day")
+    return bitmap.retention_report(bm, 62, offsets=(7,)).collect()
+
+
+def _ann_inputs(spark, n):
+    """An n-row corpus and the N_ANN_Q queries from the 16-dim generator."""
+    vec = "array(" + ", ".join(
+        f"CAST(((id * {p}) % 1024) / 64.0D + 0.5D AS DOUBLE)" for p in ANN_PRIMES
+    ) + ")"
+    cols = [("vec_id", "id"), ("embedding", vec)]
+    return _gen(spark, n, cols), _gen(spark, N_ANN_Q, cols)
+
+
+def _ann_brute(spark, n):
+    corpus, queries = _ann_inputs(spark, n)
+    return similarity.brute_force_topk(
+        corpus, queries, k=ANN_K, max_query_rows=N_ANN_Q
+    ).collect()
+
+
+def _ann_quantized(spark, n):
+    # calibrate (one global-max pass) -> quantize (map-only) -> exact
+    # integer-dot top-k; the DuckDB mirror performs the identical
+    # calibration + flat-arithmetic codes + windowed rank
+    corpus, queries = _ann_inputs(spark, n)
+    scale = similarity.quantize_calibration(corpus, bits=8)
+    qc = similarity.quantize_embeddings(corpus, scale, bits=8)
+    qq = similarity.quantize_embeddings(queries, scale, bits=8)
+    return similarity.quantized_topk(qc, qq, k=ANN_K, max_query_rows=N_ANN_Q).collect()
+
+
+def _ann_pq(spark, n):
+    # fixed dyadic codebooks (PQ_CB) -> numpy encode (fold-order distance
+    # accumulation, codes equal to the mirror's argmin) -> collected-LUT
+    # ADC top-k; the mirror runs the identical argmin + list lookups
+    corpus, queries = _ann_inputs(spark, n)
+    coded = similarity.pq_encode(corpus, PQ_CB)
+    return similarity.pq_adc_topk(
+        coded, queries, PQ_CB, k=ANN_K, max_query_rows=N_ANN_Q
+    ).collect()
+
+
+def _text_docs(spark, n):
+    return _class_docs(spark, n, _per(N_TEXT_D, n, N_TEXT))
+
+
+def _text_metrics(spark, n):
+    stats = text_ops.token_stats(_text_docs(spark, n), text="text", id_col="doc_id")
+    return stats.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("tok_sum"),
+        F.sum("n_distinct_tokens").alias("distinct_sum"),
+        F.sum("est_bpe_tokens").alias("bpe_sum"),
+        F.avg("avg_token_len").alias("avg_tok_len"),
+    ).collect()
+
+
+def _vocab_tok(spark, n):
+    st = text_ops.vocab_token_stats(_text_docs(spark, n), form="bulk")
+    return st.agg(
+        F.sum("n_words").alias("word_sum"),
+        F.sum("n_bpe_tokens").alias("tok_sum"),
+        F.sum("n_unk").alias("unk_sum"),
+    ).collect()
+
+
+def _bm25(spark, n):
+    docs = _text_docs(spark, n)
+    qdf = spark.createDataFrame(BM25_QUERIES, "query_id int, query_text string")
+    return text_ops.bm25_scores(docs, qdf, k=10).collect()
+
+
+def _sessionize(spark, n):
+    df = _gen(
+        spark, n,
+        [("id", "id"), ("user", f"id % {_per(SESS_USERS, n, N_60M)}"),
+         ("ts", f"timestamp_seconds({SESS_TS})")],
+    )
+    sess = relational.sessionize(
+        df, ["user"], ts="ts", gap_seconds=SESS_GAP_S, tiebreak="id"
+    )
+    per_user = sess.groupBy("user").agg((F.max("session_idx") + 1).alias("ns"))
+    return per_user.agg(
+        F.count(F.lit(1)).alias("n_users"), F.sum("ns").alias("n_sessions")
+    ).collect()
+
+
+def _pack_manifest(spark, n):
+    df = _gen(
+        spark, n,
+        [("doc_id", "id"), ("shard", f"id % {PACK_SHARDS}"), ("tokens", PACK_TOK)],
+    )
+    man = sampling.pack_manifest(
+        df, "tokens", PACK_BUDGET, keys=["shard"], order_col="doc_id"
+    )
+    # window sort cost scales with ROWS per reducer, not bytes — the
+    # session-wide 8MB advisory (spark_session) keeps the 15M-row shuffle
+    # parallel (4.6s with the 64MB default -> 1.4s)
+    return man.agg(
+        F.count(F.lit(1)).alias("n_seqs"),
+        F.sum("n_docs").alias("docs"),
+        F.sum("token_sum").alias("toks"),
+        F.max("token_sum").alias("max_tok"),
+    ).collect()
+
+
+def _funnel(spark, n):
+    # an odd user modulus, so it stays coprime with the 5 event types at
+    # every scale (see FUNNEL_USERS)
+    users = _per(FUNNEL_USERS, n, N_60M) | 1
+    df = _gen(
+        spark, n, [("user", f"id % {users}"), ("ts", FUNNEL_TS), ("e", FUNNEL_ET)]
+    )
+    cur = analytics.funnel(
+        df, "user", "ts", [F.col("e") == 0, F.col("e") == 1, F.col("e") == 2]
+    )
+    return cur.agg(
+        F.count(F.lit(1)).alias("n1"),
+        F.count("step_2").alias("n2"),
+        F.count("step_3").alias("n3"),
+        F.sum("step_3").alias("t3_sum"),
+    ).collect()
+
+
+def _kmeans(spark, n, primes=KM_PRIMES):
+    vec = "array(" + ", ".join(
+        f"CAST(((id * {p}) % 1024) / 64.0D AS FLOAT)" for p in primes
+    ) + ")"
+    df = _gen(spark, n, [("vec_id", "id"), ("embedding", vec)])
+    return clustering.kmeans_summary(
+        df, "embedding", "vec_id", k=KM_K, iters=KM_ITERS
+    ).collect()
+
+
+def _kmeans_wide(spark, n):
+    # k*dims = 512 > 64: _choose_method auto-routes through the Arrow+numpy
+    # BLAS assignment (the expand route's codegen bails to interpreted eval
+    # past 64 terms — SCALING.md width sweep); this family pins that route
+    return _kmeans(spark, n, KM_WIDE_PRIMES)
+
+
+def _gram(spark, n):
+    # PCA stats pass on int8 codes: per-batch X^T X collapse inside
+    # mapInPandas, exchange carries n_batches * d^2 scalars only
+    codes = "array(" + ", ".join(
+        f"CAST((id * {3 + 7 * d}) % 255 - 127 AS INT)" for d in range(GRAM_D)
+    ) + ")"
+    df = _gen(spark, n, [("vec_id", "id"), ("qcodes", codes)])
+    return decomposition.gram_matrix(df, "qcodes", dims=GRAM_D, integer=True).collect()
+
+
+def _pct_values(spark, n):
+    return _gen(spark, n, [("grp", "id % 25"), ("v", f"{PCT_V} / 32.0D")])
+
+
+def _pctrank(spark, n):
+    ranked = native.percentile_rank(_pct_values(spark, n), "v", ["grp"])
+    return ranked.agg(
+        F.count("pct_rank").alias("n_ranked"), F.avg("pct_rank").alias("mean_pct")
+    ).collect()
+
+
+def _qnorm(spark, n):
+    # quantile normalization over the pctrank family's data: the per-group
+    # bins, the union+window CDF inversion onto the global reference, and
+    # the broadcast probe join — everything after the one binned pass is
+    # structure-sized; DuckDB runs the identical CTE chain
+    out = native.quantile_normalize(_pct_values(spark, n), "v", ["grp"])
+    return out.agg(
+        F.count("qnorm").alias("n_mapped"), F.avg("qnorm").alias("mean_qn")
+    ).collect()
+
+
+def _run_streaming(spark, src, glob_filter=None):
+    """The repo's windowed-binned-counts state operator over the staged
+    files in arrival chunks of STREAM_BATCH_FILES; returns each
+    micro-batch's output row count."""
+    import shutil
+    import tempfile
+
+    ckpt = tempfile.mkdtemp(prefix="ddsketch_bench_ckpt_")
+    try:
+        reader = spark.readStream.schema(
+            "ts TIMESTAMP, key INT, value DOUBLE"
+        ).option("maxFilesPerTrigger", STREAM_BATCH_FILES)
+        if glob_filter:
+            reader = reader.option("pathGlobFilter", glob_filter)
+        binned = streaming.windowed_binned_counts(
+            reader.parquet(src), "ts", ["key"], "value", window="1 hour"
+        )
+        n_out = []
+        q = (
+            binned.writeStream.outputMode("append")
+            .foreachBatch(lambda df, _bid: n_out.append(df.count()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return n_out
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _streaming_windows(spark, n):
+    return _run_streaming(spark, _ensure_stream_src(n))
+
+
+def run_full_recompute(spark, n):
+    """The ``streaming_windows_full_recompute`` body: one batch aggregation
+    over the ``n``-row staged stream, the counterpart of the DuckDB
+    full-recompute row, so the bench records both streaming-vs-IVM and
+    batch-vs-batch."""
+    gamma = native.gamma_of(0.01)
     df = spark.read.schema("ts TIMESTAMP, key INT, value DOUBLE").parquet(
-        STREAM_SRC
+        _ensure_stream_src(n)
     )
     v = F.col("value")
-
-    def agg():
-        df.groupBy(
-            F.date_trunc("hour", "ts").alias("ws"),
-            "key",
-            F.when(v > 0, F.lit(1)).when(v < 0, F.lit(-1)).otherwise(0).alias(
-                "sign"
-            ),
-            # zeros -> bin 0, mirroring the DuckDB side's PK-safe mapping
-            # (generator emits value >= 1.0 only, so the branch is dead)
-            F.when(v > 0, value_to_bin_expr(v, gamma))
-            .when(v < 0, value_to_bin_expr(-v, gamma))
-            .otherwise(F.lit(0))
-            .alias("bin"),
-        ).agg(F.count("*").cast("double").alias("cnt")).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("c")
-        ).collect()
-
     # The first aggregate produces 5.86M groups (~300MB of shuffle):
     # AQE's byte-based partition coalescing (64MB advisory) would fold
     # the final aggregate into ~5 reducer tasks, but aggregate work
@@ -1481,439 +1803,77 @@ def run_full_recompute(spark) -> None:
     # at the default 128MB split: 4MB splits give every core a scan +
     # partial-agg task (1.55s -> 1.42s, the measured floor).
     # (the reduce side stays parallel via the session-wide 8MB
-    # advisory — see main(); only the input split needs local help)
+    # advisory — see spark_session(); only the input split needs help)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     try:
-        agg()
+        return df.groupBy(
+            F.date_trunc("hour", "ts").alias("ws"),
+            "key",
+            F.when(v > 0, F.lit(1)).when(v < 0, F.lit(-1)).otherwise(0).alias("sign"),
+            # zeros -> bin 0, mirroring the DuckDB side's PK-safe mapping
+            # (generator emits value >= 1.0 only, so the branch is dead)
+            F.when(v > 0, native.value_to_bin_expr(v, gamma))
+            .when(v < 0, native.value_to_bin_expr(-v, gamma))
+            .otherwise(F.lit(0))
+            .alias("bin"),
+        ).agg(F.count("*").cast("double").alias("cnt")).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("cnt").alias("c")
+        ).collect()
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
+def spark_families() -> dict:
+    """``{name: (base_rows, body)}`` for the 23 Spark families. Built per
+    call from the row-count constants, so a caller that rebinds them (the
+    smoke tests' small sizes) moves the bases too."""
+    return {
+        "hll_distinct": (N_60M, _hll_distinct),
+        "asof_join": (N_ASOF_L, _asof_join),
+        "heavy_hitters": (N_60M, _heavy_hitters),
+        "exact_dedup": (N_60M, _exact_dedup),
+        "span_extents_2m": (N_SPAN, _span_extents),
+        "minhash_lsh_600k": (N_MINHASH, _minhash_lsh),
+        "bitmap_retention": (N_60M, _bitmap_retention),
+        "ann_brute_2m_x128": (N_ANN_CORPUS, _ann_brute),
+        "ann_quantized_2m_x128": (N_ANN_CORPUS, _ann_quantized),
+        "ann_pq_2m_x128": (N_ANN_CORPUS, _ann_pq),
+        "text_metrics_15m": (N_TEXT, _text_metrics),
+        "vocab_tok_15m": (N_TEXT, _vocab_tok),
+        "bm25_15m": (N_TEXT, _bm25),
+        "sessionize_60m": (N_60M, _sessionize),
+        "pack_manifest_15m": (N_PACK, _pack_manifest),
+        "funnel_60m": (N_60M, _funnel),
+        "kmeans_60m": (N_60M, _kmeans),
+        "kmeans_15m_d64": (N_KM_WIDE, _kmeans_wide),
+        "gram_2m_x64": (N_GRAM, _gram),
+        "pctrank_60m": (N_60M, _pctrank),
+        "qnorm_60m": (N_60M, _qnorm),
+        "streaming_windows": (N_60M, _streaming_windows),
+        "streaming_windows_full_recompute": (N_60M, run_full_recompute),
+    }
+
+
 def run_spark_families(spark, result: dict) -> None:
-    """Spark side of the per-family 60M comparators — each drives the
-    repo's actual operator (not a hand-inlined plan) on generated data."""
-    from pyspark.sql import Window, functions as F
-
-    from duckdb_ddsketch_spark.operators import approx, dedup, relational
-
-    entries = []  # (name, thunk, setup) — scheduled by _run_family_passes
-
-    def gen(n, expr_pairs, partitions=64):
-        return spark.range(n, numPartitions=partitions).selectExpr(
-            *[f"{e} AS {a}" for a, e in expr_pairs]
-        )
-
-    def hll():
-        df = gen(N_60M, [("grp", "id % 25"), ("u", HLL_USERS)])
-        approx.hll_distinct(df, ["grp"], "u", p=8).collect()
-
-    entries.append(("hll_distinct", hll, None))
-
-    def asof():
-        left = gen(N_ASOF_L, [("u", "id % 100000"), ("ts", "id * 7")])
-        right = gen(N_ASOF_R, [("u", "id % 100000"), ("ts", "id * 71")])
-        j = relational.asof_join(
-            left, right, on=["u"], left_ts="ts", right_ts="ts", right_cols=[]
-        )
-        j.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("ts_r").alias("matched"),
-            F.sum(F.col("ts") - F.col("ts_r")).alias("lag_sum"),
-        ).collect()
-
-    entries.append(("asof_join", asof, None))
-
-    def heavy():
-        df = gen(
-            N_60M,
-            [("grp", "id % 25"), ("tok", f"CAST(({HEAVY_TOK}) AS STRING)")],
-        )
-        counts = df.groupBy("grp", "tok").count()
-        w = Window.partitionBy("grp").orderBy(
-            F.col("count").desc(), F.col("tok").asc()
-        )
-        counts.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= 10
-        ).collect()
-
-    entries.append(("heavy_hitters", heavy, None))
-
-    def dedup_60m():
-        df = gen(
-            N_60M,
-            [
-                ("src", "id % 4"),
-                ("text", f"'lorem ipsum dolor ' || CAST(({DEDUP_DOC}) AS STRING)"),
-            ],
-        )
-        dedup.exact_dedup_summary(df, ["src"], text="text", id_col="id").collect()
-
-    entries.append(("exact_dedup", dedup_60m, None))
-
-    def span_extents():
-        t = _span_text_sql("id").replace("VARCHAR", "STRING")
-        docs = gen(N_SPAN, [("doc_id", "id"), ("text", t)])
-        # bench opts into the xxhash64 gram key explicitly (8-byte shuffle
-        # keys, measured 23.6 -> 12.6 s vs md5 on this family)
-        dedup.duplicate_span_extents(
-            docs, text="text", id_col="doc_id", n=SPAN_N, min_docs=2,
-            gram_hash="xxhash64",
-        ).agg(
-            F.count(F.lit(1)).alias("n_extents"),
-            F.sum(
-                F.col("span_end") - F.col("span_start") + 1
-            ).alias("cut_tokens"),
-        ).collect()
-
-    entries.append(("span_extents_2m", span_extents, None))
-
-    def minhash():
-        d = f"id % {MINHASH_D}"
-        text = _minhash_text_sql(d).replace("//", "div").replace("VARCHAR", "STRING")
-        docs = gen(N_MINHASH, [("id", "id"), ("text", text)], partitions=32)
-        dedup.lsh_candidate_pairs(docs, text="text", id_col="id").count()
-
-    entries.append(("minhash_lsh_600k", minhash, None))
-
-    def bitmap_retention():
-        from duckdb_ddsketch_spark.operators import bitmap
-
-        df = gen(
-            N_60M,
-            [
-                ("user", f"id % {N_BITMAP_USERS}"),
-                ("day", "(id * 2654435761) % 62"),
-            ],
-        )
-        bm = bitmap.activity_bitmap(df, "user", "day")
-        bitmap.retention_report(bm, 62, offsets=(7,)).collect()
-
-    entries.append(("bitmap_retention", bitmap_retention, None))
-
-    def ann_brute():
-        from duckdb_ddsketch_spark.operators import similarity
-
-        vec = "array(" + ", ".join(
-            f"CAST(((id * {p}) % 1024) / 64.0D + 0.5D AS DOUBLE)"
-            for p in ANN_PRIMES
-        ) + ")"
-        corpus = gen(N_ANN_CORPUS, [("vec_id", "id"), ("embedding", vec)])
-        queries = gen(N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-        similarity.brute_force_topk(
-            corpus, queries, k=ANN_K, max_query_rows=N_ANN_Q
-        ).collect()
-
-    entries.append(("ann_brute_2m_x128", ann_brute, None))
-
-    def ann_quantized():
-        # same corpus/query shape as ann_brute, through the int8 pipeline:
-        # calibrate (one global-max pass) -> quantize (map-only) -> exact
-        # integer-dot top-k; the DuckDB mirror performs the identical
-        # calibration + flat-arithmetic codes + windowed rank
-        from duckdb_ddsketch_spark.operators import similarity
-
-        vec = "array(" + ", ".join(
-            f"CAST(((id * {p}) % 1024) / 64.0D + 0.5D AS DOUBLE)"
-            for p in ANN_PRIMES
-        ) + ")"
-        corpus = gen(N_ANN_CORPUS, [("vec_id", "id"), ("embedding", vec)])
-        queries = gen(N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-        scale = similarity.quantize_calibration(corpus, bits=8)
-        qc = similarity.quantize_embeddings(corpus, scale, bits=8)
-        qq = similarity.quantize_embeddings(queries, scale, bits=8)
-        similarity.quantized_topk(
-            qc, qq, k=ANN_K, max_query_rows=N_ANN_Q
-        ).collect()
-
-    entries.append(("ann_quantized_2m_x128", ann_quantized, None))
-
-    def ann_pq():
-        # PQ/ADC pipeline at bench scale: fixed dyadic codebooks (PQ_CB)
-        # -> numpy encode (fold-order distance accumulation, codes equal
-        # to the mirror's argmin) -> collected-LUT ADC top-k. The
-        # DuckDB mirror runs the identical argmin + list-lookup
-        # arithmetic; mirror agreement pinned at small N in
-        # test_bench_smoke.
-        from duckdb_ddsketch_spark.operators import similarity
-
-        vec = "array(" + ", ".join(
-            f"CAST(((id * {p}) % 1024) / 64.0D + 0.5D AS DOUBLE)"
-            for p in ANN_PRIMES
-        ) + ")"
-        corpus = gen(N_ANN_CORPUS, [("vec_id", "id"), ("embedding", vec)])
-        queries = gen(N_ANN_Q, [("vec_id", "id"), ("embedding", vec)])
-        coded = similarity.pq_encode(corpus, PQ_CB)
-        similarity.pq_adc_topk(
-            coded, queries, PQ_CB, k=ANN_K, max_query_rows=N_ANN_Q
-        ).collect()
-
-    entries.append(("ann_pq_2m_x128", ann_pq, None))
-
-    def text_metrics():
-        from duckdb_ddsketch_spark.operators import text as text_ops
-
-        t = (
-            _minhash_text_sql(f"id % {N_TEXT_D}")
-            .replace("//", "div")
-            .replace("VARCHAR", "STRING")
-        )
-        docs = gen(N_TEXT, [("doc_id", "id"), ("text", t)])
-        stats = text_ops.token_stats(docs, text="text", id_col="doc_id")
-        stats.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("tok_sum"),
-            F.sum("n_distinct_tokens").alias("distinct_sum"),
-            F.sum("est_bpe_tokens").alias("bpe_sum"),
-            F.avg("avg_token_len").alias("avg_tok_len"),
-        ).collect()
-
-    entries.append(("text_metrics_15m", text_metrics, None))
-
-    def vocab_tok():
-        from duckdb_ddsketch_spark.operators import text as text_ops
-
-        t = (
-            _minhash_text_sql(f"id % {N_TEXT_D}")
-            .replace("//", "div")
-            .replace("VARCHAR", "STRING")
-        )
-        docs = gen(N_TEXT, [("doc_id", "id"), ("text", t)])
-        st = text_ops.vocab_token_stats(docs, form="bulk")
-        st.agg(
-            F.sum("n_words").alias("word_sum"),
-            F.sum("n_bpe_tokens").alias("tok_sum"),
-            F.sum("n_unk").alias("unk_sum"),
-        ).collect()
-
-    entries.append(("vocab_tok_15m", vocab_tok, None))
-
-    def bm25_15m():
-        from duckdb_ddsketch_spark.operators import text as text_ops
-
-        t = (
-            _minhash_text_sql(f"id % {N_TEXT_D}")
-            .replace("//", "div")
-            .replace("VARCHAR", "STRING")
-        )
-        docs = gen(N_TEXT, [("doc_id", "id"), ("text", t)])
-        qdf = spark.createDataFrame(
-            BM25_QUERIES, "query_id int, query_text string"
-        )
-        text_ops.bm25_scores(docs, qdf, k=10).collect()
-
-    entries.append(("bm25_15m", bm25_15m, None))
-
-    def sessionize_60m():
-        df = gen(
-            N_60M,
-            [
-                ("id", "id"),
-                ("user", f"id % {SESS_USERS}"),
-                ("ts", f"timestamp_seconds({SESS_TS})"),
-            ],
-        )
-        sess = relational.sessionize(
-            df, ["user"], ts="ts", gap_seconds=SESS_GAP_S, tiebreak="id"
-        )
-        per_user = sess.groupBy("user").agg(
-            (F.max("session_idx") + 1).alias("ns")
-        )
-        per_user.agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("ns").alias("n_sessions"),
-        ).collect()
-
-    entries.append(("sessionize_60m", sessionize_60m, None))
-
-    def pack_15m():
-        from duckdb_ddsketch_spark.operators import sampling
-
-        df = gen(
-            N_PACK,
-            [
-                ("doc_id", "id"),
-                ("shard", f"id % {PACK_SHARDS}"),
-                ("tokens", PACK_TOK),
-            ],
-        )
-        man = sampling.pack_manifest(
-            df, "tokens", PACK_BUDGET, keys=["shard"], order_col="doc_id"
-        )
-        # window sort cost scales with ROWS per reducer, not bytes — the
-        # session-wide 8MB advisory (see main()) keeps the 15M-row
-        # shuffle parallel (4.6s with the 64MB default -> 1.4s)
-        man.agg(
-            F.count(F.lit(1)).alias("n_seqs"),
-            F.sum("n_docs").alias("docs"),
-            F.sum("token_sum").alias("toks"),
-            F.max("token_sum").alias("max_tok"),
-        ).collect()
-
-    entries.append(("pack_manifest_15m", pack_15m, None))
-
-    def funnel_60m():
-        from duckdb_ddsketch_spark.operators import analytics
-
-        df = gen(
-            N_60M,
-            [
-                ("user", f"id % {FUNNEL_USERS}"),
-                ("ts", FUNNEL_TS),
-                ("e", FUNNEL_ET),
-            ],
-        )
-        cur = analytics.funnel(
-            df, "user", "ts",
-            [F.col("e") == 0, F.col("e") == 1, F.col("e") == 2],
-        )
-        cur.agg(
-            F.count(F.lit(1)).alias("n1"),
-            F.count("step_2").alias("n2"),
-            F.count("step_3").alias("n3"),
-            F.sum("step_3").alias("t3_sum"),
-        ).collect()
-
-    entries.append(("funnel_60m", funnel_60m, None))
-
-    def kmeans_60m():
-        from duckdb_ddsketch_spark.operators import clustering
-
-        vec = "array(" + ", ".join(
-            f"CAST(((id * {p}) % 1024) / 64.0D AS FLOAT)" for p in KM_PRIMES
-        ) + ")"
-        df = gen(N_60M, [("vec_id", "id"), ("embedding", vec)])
-        clustering.kmeans_summary(
-            df, "embedding", "vec_id", k=KM_K, iters=KM_ITERS
-        ).collect()
-
-    entries.append(("kmeans_60m", kmeans_60m, None))
-
-    def kmeans_15m_d64():
-        # k*dims = 512 > 64: _choose_method auto-routes through the
-        # Arrow+numpy BLAS assignment (the expand route's codegen bails
-        # to interpreted eval past 64 terms — SCALING.md width sweep);
-        # this family pins that route round-over-round (VERDICT r6 #3)
-        from duckdb_ddsketch_spark.operators import clustering
-
-        vec = "array(" + ", ".join(
-            f"CAST(((id * {p}) % 1024) / 64.0D AS FLOAT)"
-            for p in KM_WIDE_PRIMES
-        ) + ")"
-        df = gen(N_KM_WIDE, [("vec_id", "id"), ("embedding", vec)])
-        clustering.kmeans_summary(
-            df, "embedding", "vec_id", k=KM_K, iters=KM_ITERS
-        ).collect()
-
-    entries.append(("kmeans_15m_d64", kmeans_15m_d64, None))
-
-    def gram_2m_x64():
-        # PCA stats pass on int8 codes: per-batch X^T X collapse inside
-        # mapInPandas, exchange carries n_batches * d^2 scalars only
-        from duckdb_ddsketch_spark.operators import decomposition as dec
-
-        codes = "array(" + ", ".join(
-            f"CAST((id * {3 + 7 * d}) % 255 - 127 AS INT)"
-            for d in range(GRAM_D)
-        ) + ")"
-        df = gen(N_GRAM, [("vec_id", "id"), ("qcodes", codes)])
-        dec.gram_matrix(df, "qcodes", dims=GRAM_D, integer=True).collect()
-
-    entries.append(("gram_2m_x64", gram_2m_x64, None))
-
-    def pctrank_60m():
-        from duckdb_ddsketch_spark.operators import native
-
-        df = gen(
-            N_60M,
-            [("grp", "id % 25"), ("v", f"{PCT_V} / 32.0D")],
-        )
-        ranked = native.percentile_rank(df, "v", ["grp"])
-        ranked.agg(
-            F.count("pct_rank").alias("n_ranked"),
-            F.avg("pct_rank").alias("mean_pct"),
-        ).collect()
-
-    entries.append(("pctrank_60m", pctrank_60m, None))
-
-    def qnorm_60m():
-        # quantile normalization over the pctrank family's data: the
-        # per-group bins, the union+window CDF inversion onto the global
-        # reference, and the broadcast probe join — everything after the
-        # one binned pass is structure-sized; DuckDB runs the identical
-        # CTE chain (same bins, same POWER representative values)
-        from duckdb_ddsketch_spark.operators import native
-
-        df = gen(
-            N_60M,
-            [("grp", "id % 25"), ("v", f"{PCT_V} / 32.0D")],
-        )
-        out = native.quantile_normalize(df, "v", ["grp"])
-        out.agg(
-            F.count("qnorm").alias("n_mapped"),
-            F.avg("qnorm").alias("mean_qn"),
-        ).collect()
-
-    entries.append(("qnorm_60m", qnorm_60m, None))
-
-    def _run_streaming(glob_filter=None):
-        import shutil
-        import tempfile
-
-        from duckdb_ddsketch_spark import streaming as st
-
-        ckpt = tempfile.mkdtemp(prefix="ddsketch_bench_ckpt_")
-        try:
-            reader = spark.readStream.schema(
-                "ts TIMESTAMP, key INT, value DOUBLE"
-            ).option("maxFilesPerTrigger", STREAM_BATCH_FILES)
-            if glob_filter:
-                reader = reader.option("pathGlobFilter", glob_filter)
-            stream = reader.parquet(STREAM_SRC)
-            binned = st.windowed_binned_counts(
-                stream, "ts", ["key"], "value", window="1 hour"
-            )
-            n_out = []
-            q = (
-                binned.writeStream.outputMode("append")
-                .foreachBatch(lambda df, _bid: n_out.append(df.count()))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-
-    def streaming_windows():
-        _run_streaming()
-
-    def streaming_full_recompute():
-        run_full_recompute(spark)
-
-    def _stream_setup():
+    """Spark side of the per-family 60M comparators: every body of
+    spark_families() at its base row count, under _run_family_passes."""
+    setups = {
         # one-file warm-up: the streaming machinery (state store,
         # micro-batch planner, streaming codegen) appears nowhere else in
         # the session, so its one-time JIT would otherwise be billed to
         # this family alone — the headline section applies the same
         # steady-state policy. Runs once, before the family's FIRST rep.
-        _ensure_stream_src()
-        _run_streaming(glob_filter="part-00.parquet")
-
-    entries.append(("streaming_windows", streaming_windows, _stream_setup))
-
-    def _full_recompute_setup():
+        "streaming_windows": lambda: _run_streaming(
+            spark, _ensure_stream_src(N_60M), glob_filter="part-00.parquet"
+        ),
         # steady-state policy (mirrored on the DuckDB side): warm once so
         # the recorded number measures the aggregation, not batch-plan JIT
-        _ensure_stream_src()
-        streaming_full_recompute()
-
-    entries.append(
-        (
-            "streaming_windows_full_recompute",
-            streaming_full_recompute,
-            _full_recompute_setup,
-        )
-    )
+        "streaming_windows_full_recompute": lambda: run_full_recompute(spark, N_60M),
+    }
+    entries = [
+        (name, lambda body=body, n=n: body(spark, n), setups.get(name))
+        for name, (n, body) in spark_families().items()
+    ]
 
     def _prog(cells):
         result["spark_families_60m_sec"] = cells
@@ -1953,13 +1913,9 @@ def _shutdown_jvm(spark) -> None:
         pass  # best-effort: a lingering idle JVM only costs memory
 
 
-def main() -> None:
-    result: dict = {}
-    _machine(result)["canary_ms"]["spark"] = round(cpu_canary_ms(), 1)
-
+def spark_session():
+    """The bench's SparkSession; the scaling probe runs on it too."""
     from pyspark.sql import SparkSession
-
-    from duckdb_ddsketch_spark.plans import declared
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
@@ -1989,7 +1945,39 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
+
+def warm_up(spark) -> None:
+    """Minimal standardized warm-up for a process that times families
+    only: absorb JVM/codegen/Arrow-worker cold-start WITHOUT executing any
+    other workload — the measurement is the family, not first-touch JIT
+    (families >= 20 s run once, so the spike would otherwise land inside
+    their single timed run)."""
+    spark.range(1_000_000, numPartitions=8).select(F.sum("id")).collect()
+
+    def _noop(batches):
+        yield from batches
+
+    spark.range(100_000).select(
+        F.col("id").cast("double").alias("x")
+    ).mapInArrow(_noop, "x double").select(F.sum("x")).collect()
+    # md5 + hash-aggregate + shuffle codegen: the round-9 exact_dedup
+    # adjudication measured a 23.9 s first rep (vs 8.2 s steady) in a
+    # process whose warm-up had never JIT'd these paths — bill the
+    # one-time compile to the warm-up, not the first timed rep
+    spark.range(100_000, numPartitions=8).selectExpr(
+        "md5(CAST(id AS STRING)) AS h", "id % 7 AS g"
+    ).groupBy("g").agg(F.countDistinct("h").alias("d")).collect()
+
+
+def main() -> None:
+    result: dict = {}
+    _machine(result)["canary_ms"]["spark"] = round(cpu_canary_ms(), 1)
+
+    from duckdb_ddsketch_spark.plans import declared
+
+    spark = spark_session()
     queries = declared.STAGED_QUERIES
     timings: dict[str, float] = {}
     # Warm-up pass: JVM JIT, parquet footers, Python UDF workers. Excluded
@@ -1999,32 +1987,7 @@ def main() -> None:
     # sections entirely: the flag's purpose is a process that has executed
     # NOTHING before the selected family.
     if _ONLY:
-        # minimal standardized warm-up for attribution runs: absorb
-        # JVM/codegen/Arrow-worker cold-start WITHOUT executing any other
-        # workload — the flag measures the family, not first-touch JIT
-        # (families >= 20 s run once, so the spike would otherwise land
-        # inside their single timed run)
-        from pyspark.sql import functions as _wF
-
-        spark.range(1_000_000, numPartitions=8).select(
-            _wF.sum("id")
-        ).collect()
-
-        def _noop(batches):
-            yield from batches
-
-        spark.range(100_000).select(
-            _wF.col("id").cast("double").alias("x")
-        ).mapInArrow(_noop, "x double").select(_wF.sum("x")).collect()
-        # md5 + hash-aggregate + shuffle codegen: the round-9 exact_dedup
-        # adjudication measured a 23.9 s first rep (vs 8.2 s steady) in a
-        # process whose warm-up had never JIT'd these paths — bill the
-        # one-time compile to the warm-up, not the first timed rep
-        spark.range(100_000, numPartitions=8).selectExpr(
-            "md5(CAST(id AS STRING)) AS h", "id % 7 AS g"
-        ).groupBy("g").agg(
-            _wF.countDistinct("h").alias("d")
-        ).collect()
+        warm_up(spark)
     for name in HEADLINE if not _ONLY else ():
         queries[name](spark, SF_DIR).collect()
 
@@ -2058,10 +2021,6 @@ def main() -> None:
     # dominated by fixed scheduling overhead at this tiny SF). The plan is
     # REBUILT for the timed run: re-collecting one DataFrame would reuse its
     # materialized shuffle outputs and time only the final stage.
-    from pyspark.sql import functions as F
-
-    from duckdb_ddsketch_spark.operators import native
-
     def native_60m():
         gen = spark.range(N_60M, numPartitions=64).select(
             (F.col("id") % 25).cast("string").alias("grp"),

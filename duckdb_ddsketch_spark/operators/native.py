@@ -50,7 +50,6 @@ from ..sketch import (
 __all__ = [
     "gamma_of",
     "value_to_bin_expr",
-    "bin_to_value_expr",
     "binned_counts",
     "sketch_quantile_agg",
     "sketch_quantile_agg_multi",
@@ -95,12 +94,6 @@ def gamma_of(alpha: float = DEFAULT_RELATIVE_ACCURACY) -> float:
 def value_to_bin_expr(value: Column, gamma: float) -> Column:
     """``ceil(ln(v)/ln(gamma))`` for v>0 (caller routes sign classes)."""
     return F.ceil(F.log(value) / F.lit(math.log(gamma))).cast("int")
-
-
-def bin_to_value_expr(bin_col: Column, gamma: float) -> Column:
-    """``gamma^i * (1 + (1 - 2/(1+gamma)))`` — bin representative value."""
-    eta = 1.0 - 2.0 / (1.0 + gamma)
-    return F.pow(F.lit(gamma), bin_col.cast("double")) * F.lit(1.0 + eta)
 
 
 def binned_counts(
@@ -804,10 +797,6 @@ def _struct_to_wire(rows: pd.DataFrame) -> pd.Series:
         if not _wire_decodes(s):
             out.append(None)
             continue
-        s.count = float(row["count"])
-        s.sum = 0.0 if pd.isna(row.get("sum")) else float(row["sum"])
-        s.min = math.inf if pd.isna(row.get("min")) else float(row["min"])
-        s.max = -math.inf if pd.isna(row.get("max")) else float(row["max"])
         out.append(s.encode())
     return pd.Series(out, dtype=object)
 

@@ -37,7 +37,7 @@ def bench_small(tmp_path_factory):
             "N_PACK",
             "SESS_USERS",
             "FUNNEL_USERS",
-            "STREAM_SRC",
+            "STREAM_DIR",
             "N_SPAN",
             "SPAN_POOL",
         )
@@ -54,7 +54,7 @@ def bench_small(tmp_path_factory):
     bench.N_PACK = 20_000
     bench.SESS_USERS = 1_000
     bench.FUNNEL_USERS = 1_999  # coprime with 5 event types, like the real value
-    bench.STREAM_SRC = str(tmp_path_factory.mktemp("bench_stream"))
+    bench.STREAM_DIR = str(tmp_path_factory.mktemp("bench_stream"))
     bench.N_SPAN, bench.SPAN_POOL = 10_000, 50  # ~200 docs/block, like real
     yield bench
     for k, v in saved.items():
@@ -100,7 +100,7 @@ def test_all_spark_families_execute(spark, bench_small, monkeypatch):
 
 
 def test_all_duckdb_family_mirrors_execute(bench_small):
-    bench_small._ensure_stream_src()
+    bench_small._ensure_stream_src(bench_small.N_60M)
     con = duckdb.connect()
     try:
         for name, sql in bench_small._duckdb_family_sqls().items():
@@ -120,106 +120,42 @@ def test_headline_oracles_resolve(bench_small):
         assert name in declared.STAGED_ORACLES
 
 
+def _both(spark, b, name):
+    """(Spark rows, DuckDB mirror rows) of one family at small N: the
+    family body bench.py times, against its mirror."""
+    base, body = b.spark_families()[name]
+    sql = b._duckdb_family_sqls()[name]
+    con = duckdb.connect()
+    try:
+        drows = sql(con) if callable(sql) else con.execute(sql).fetchall()
+    finally:
+        con.close()
+    return body(spark, base), drows
+
+
 def test_sessionize_and_pack_mirrors_agree(spark, bench_small):
     """The two window-family mirrors must compute the SAME summary values
     as the Spark operators at small N — a mirror that merely executes can
     still silently measure a different workload (the round-4 strlen/length
     lesson)."""
-    from pyspark.sql import functions as F
-
-    from duckdb_ddsketch_spark.operators import relational, sampling
-
     b = bench_small
-    con = duckdb.connect()
-    try:
-        mirrors = b._duckdb_family_sqls()
+    srows, drows = _both(spark, b, "sessionize_60m")
+    srow, drow = srows[0], drows[0]
+    assert (int(srow[0]), int(srow[1])) == (int(drow[0]), int(drow[1]))
 
-        # sessionize
-        df = spark.range(b.N_60M).selectExpr(
-            "id",
-            f"id % {b.SESS_USERS} AS user",
-            f"timestamp_seconds({b.SESS_TS}) AS ts",
-        )
-        sess = relational.sessionize(
-            df, ["user"], ts="ts", gap_seconds=b.SESS_GAP_S, tiebreak="id"
-        )
-        srow = (
-            sess.groupBy("user")
-            .agg((F.max("session_idx") + 1).alias("ns"))
-            .agg(F.count(F.lit(1)), F.sum("ns"))
-            .collect()[0]
-        )
-        drow = con.execute(mirrors["sessionize_60m"]).fetchall()[0]
-        assert (int(srow[0]), int(srow[1])) == (int(drow[0]), int(drow[1]))
+    srows, drows = _both(spark, b, "pack_manifest_15m")
+    assert tuple(int(x) for x in srows[0]) == tuple(int(x) for x in drows[0])
 
-        # pack manifest
-        docs = spark.range(b.N_PACK).selectExpr(
-            "id AS doc_id",
-            f"id % {b.PACK_SHARDS} AS shard",
-            f"{b.PACK_TOK.replace('id', 'doc_id')} AS tokens",
-        )
-        man = sampling.pack_manifest(
-            docs, "tokens", b.PACK_BUDGET, keys=["shard"], order_col="doc_id"
-        )
-        srow = man.agg(
-            F.count(F.lit(1)), F.sum("n_docs"), F.sum("token_sum"),
-            F.max("token_sum"),
-        ).collect()[0]
-        drow = con.execute(mirrors["pack_manifest_15m"]).fetchall()[0]
-        assert tuple(int(x) for x in srow) == tuple(int(x) for x in drow)
+    srows, drows = _both(spark, b, "funnel_60m")
+    norm = lambda row: tuple(int(x) if x is not None else 0 for x in row)
+    assert norm(srows[0]) == norm(drows[0])
 
-        # funnel
-        from duckdb_ddsketch_spark.operators import analytics
-
-        ev = spark.range(b.N_60M).selectExpr(
-            f"id % {b.FUNNEL_USERS} AS user",
-            f"{b.FUNNEL_TS} AS ts",
-            f"{b.FUNNEL_ET} AS e",
-        )
-        cur = analytics.funnel(
-            ev, "user", "ts",
-            [F.col("e") == 0, F.col("e") == 1, F.col("e") == 2],
-        )
-        srow = cur.agg(
-            F.count(F.lit(1)), F.count("step_2"), F.count("step_3"),
-            F.sum("step_3"),
-        ).collect()[0]
-        drow = con.execute(mirrors["funnel_60m"]).fetchall()[0]
-        norm = lambda row: tuple(int(x) if x is not None else 0 for x in row)
-        assert norm(srow) == norm(drow)
-
-        # quantized ANN: the full top-k row set is exact integers on both
-        # engines — compare it verbatim, no tolerance
-        from duckdb_ddsketch_spark.operators import similarity
-
-        vec = "array(" + ", ".join(
-            f"CAST(((id * {p}) % 1024) / 64.0 + 0.5 AS DOUBLE)"
-            for p in b.ANN_PRIMES
-        ) + ")"
-        corpus = spark.range(b.N_ANN_CORPUS).selectExpr(
-            "id AS vec_id", f"{vec} AS embedding"
-        )
-        qs = spark.range(b.N_ANN_Q).selectExpr(
-            "id AS vec_id", f"{vec} AS embedding"
-        )
-        scale = similarity.quantize_calibration(corpus, bits=8)
-        qc = similarity.quantize_embeddings(corpus, scale, bits=8)
-        qq = similarity.quantize_embeddings(qs, scale, bits=8)
-        srows = sorted(
-            (r.query_id, r.neighbor_id, r.qdot)
-            for r in similarity.quantized_topk(
-                qc, qq, k=b.ANN_K, max_query_rows=b.N_ANN_Q
-            ).collect()
-        )
-        drows = sorted(
-            (int(a), int(c_), int(d))
-            for a, c_, d in con.execute(
-                mirrors["ann_quantized_2m_x128"]
-            ).fetchall()
-        )
-        assert srows == drows and len(srows) == b.N_ANN_Q * b.ANN_K
-    finally:
-        con.close()
+    # quantized ANN: the full top-k row set is exact integers on both
+    # engines — compare it verbatim, no tolerance
+    srows, drows = _both(spark, b, "ann_quantized_2m_x128")
+    srows = sorted((r.query_id, r.neighbor_id, r.qdot) for r in srows)
+    drows = sorted((int(a), int(c_), int(d)) for a, c_, d in drows)
+    assert srows == drows and len(srows) == b.N_ANN_Q * b.ANN_K
 
 
 def test_raw_run_spread_recorded(bench_small):
@@ -397,59 +333,25 @@ def test_gram_mirror_agrees(spark, bench_small):
     """The gram family's DuckDB flat-aggregate mirror must produce the
     SAME 4096 exact integers as the Spark gram_matrix route at small N
     (different output shapes: 4096 one-row columns vs 4096 rows)."""
-    from duckdb_ddsketch_spark.operators import decomposition as dec
-
     b = bench_small
-    con = duckdb.connect()
-    try:
-        drow = b._duckdb_family_sqls()["gram_2m_x64"](con)[0]
-        codes = "array(" + ", ".join(
-            f"CAST((id * {3 + 7 * d}) % 255 - 127 AS INT)"
-            for d in range(b.GRAM_D)
-        ) + ")"
-        df = spark.range(b.N_GRAM).selectExpr("id AS vec_id", f"{codes} AS qcodes")
-        g = {
-            (r.i, r.j): r.g
-            for r in dec.gram_matrix(df, "qcodes", dims=b.GRAM_D, integer=True).collect()
-        }
-        assert len(g) == b.GRAM_D * b.GRAM_D
-        for idx, (i, j) in enumerate(
-            (i, j) for i in range(b.GRAM_D) for j in range(b.GRAM_D)
-        ):
-            assert g[(i, j)] == drow[idx], (i, j)
-    finally:
-        con.close()
+    srows, drows = _both(spark, b, "gram_2m_x64")
+    g = {(r.i, r.j): r.g for r in srows}
+    assert len(g) == b.GRAM_D * b.GRAM_D
+    for idx, (i, j) in enumerate(
+        (i, j) for i in range(b.GRAM_D) for j in range(b.GRAM_D)
+    ):
+        assert g[(i, j)] == drows[0][idx], (i, j)
 
 
 def test_pctrank_mirror_agrees(spark, bench_small):
     """The pctrank mirror must compute the SAME (n_ranked, mean_pct) as
     the Spark operator at small N (the round-4 silently-different-
     workload lesson); mean is a float reduction, compared to 1e-9 rel."""
-    from pyspark.sql import functions as F
-
-    from duckdb_ddsketch_spark.operators import native
-
     b = bench_small
-    con = duckdb.connect()
-    try:
-        df = spark.range(b.N_60M).selectExpr(
-            "id % 25 AS grp", f"{b.PCT_V} / 32.0D AS v"
-        )
-        srow = (
-            native.percentile_rank(df, "v", ["grp"])
-            .agg(
-                F.count("pct_rank").alias("n_ranked"),
-                F.avg("pct_rank").alias("mean_pct"),
-            )
-            .collect()[0]
-        )
-        drow = con.execute(
-            b._duckdb_family_sqls()["pctrank_60m"]
-        ).fetchall()[0]
-        assert int(srow[0]) == int(drow[0]) == b.N_60M
-        assert abs(srow[1] - drow[1]) <= 1e-9 * abs(drow[1])
-    finally:
-        con.close()
+    srows, drows = _both(spark, b, "pctrank_60m")
+    srow, drow = srows[0], drows[0]
+    assert int(srow[0]) == int(drow[0]) == b.N_60M
+    assert abs(srow[1] - drow[1]) <= 1e-9 * abs(drow[1])
 
 
 def test_qnorm_mirror_agrees(spark, bench_small):
@@ -457,31 +359,13 @@ def test_qnorm_mirror_agrees(spark, bench_small):
     Spark operator at small N. Per-row qn values are bit-identical
     cross-engine (q92's value-hash gate pins them); the MEAN is a float
     reduction whose summation order differs, so 1e-9 rel like pctrank."""
-    from pyspark.sql import functions as F
-
-    from duckdb_ddsketch_spark.operators import native
-
     b = bench_small
-    con = duckdb.connect()
-    try:
-        df = spark.range(b.N_60M).selectExpr(
-            "id % 25 AS grp", f"{b.PCT_V} / 32.0D AS v"
-        )
-        srow = (
-            native.quantile_normalize(df, "v", ["grp"])
-            .agg(
-                F.count("qnorm").alias("n_mapped"),
-                F.avg("qnorm").alias("mean_qn"),
-            )
-            .collect()[0]
-        )
-        drow = con.execute(b._duckdb_family_sqls()["qnorm_60m"]).fetchall()[0]
-        # every generated v is finite and the self-reference covers every
-        # (sign, bin), so all N rows map
-        assert int(srow[0]) == int(drow[0]) == b.N_60M
-        assert abs(srow[1] - drow[1]) <= 1e-9 * abs(drow[1])
-    finally:
-        con.close()
+    srows, drows = _both(spark, b, "qnorm_60m")
+    srow, drow = srows[0], drows[0]
+    # every generated v is finite and the self-reference covers every
+    # (sign, bin), so all N rows map
+    assert int(srow[0]) == int(drow[0]) == b.N_60M
+    assert abs(srow[1] - drow[1]) <= 1e-9 * abs(drow[1])
 
 
 def test_span_extents_mirror_agrees(spark, bench_small):
@@ -489,34 +373,9 @@ def test_span_extents_mirror_agrees(spark, bench_small):
     SAME (n_extents, cut_tokens) as the Spark operator at small N —
     integer outputs, so equality is exact. Also pins the generator's
     intended shape: one 16-token boilerplate extent per doc."""
-    from pyspark.sql import functions as F
-
-    from duckdb_ddsketch_spark.operators import dedup
-
     b = bench_small
-    t = b._span_text_sql("id").replace("VARCHAR", "STRING")
-    docs = spark.range(b.N_SPAN, numPartitions=8).selectExpr(
-        "id AS doc_id", f"{t} AS text"
-    )
-    srow = (
-        dedup.duplicate_span_extents(
-            docs, text="text", id_col="doc_id", n=b.SPAN_N, min_docs=2
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_extents"),
-            F.sum(F.col("span_end") - F.col("span_start") + 1).alias(
-                "cut_tokens"
-            ),
-        )
-        .collect()[0]
-    )
-    con = duckdb.connect()
-    try:
-        drow = con.execute(
-            b._duckdb_family_sqls()["span_extents_2m"]
-        ).fetchall()[0]
-    finally:
-        con.close()
+    srows, drows = _both(spark, b, "span_extents_2m")
+    srow, drow = srows[0], drows[0]
     assert (int(srow[0]), int(srow[1])) == (int(drow[0]), int(drow[1]))
     # generator shape: every doc's 16-token boilerplate tail repeats
     # across ~N/POOL docs -> exactly one extent per doc, 16 tokens wide
@@ -529,34 +388,16 @@ def test_bm25_mirror_agrees(spark, bench_small):
     (query_id, doc_id, bm25, n_terms, rank) top-10 rows as
     text.bm25_scores at small N — fixed-point scores and a doc-id
     tie-break make the comparison exact."""
-    from duckdb_ddsketch_spark.operators import text as text_ops
-
     b = bench_small
-    t = (
-        b._minhash_text_sql(f"id % {b.N_TEXT_D}")
-        .replace("//", "div")
-        .replace("VARCHAR", "STRING")
-    )
-    docs = spark.range(b.N_TEXT, numPartitions=8).selectExpr(
-        "id AS doc_id", f"{t} AS text"
-    )
-    qdf = spark.createDataFrame(
-        b.BM25_QUERIES, "query_id int, query_text string"
-    )
+    srows, drows = _both(spark, b, "bm25_15m")
     srows = sorted(
         (r.query_id, r.doc_id, round(float(r.bm25), 6), r.n_terms, r.rank)
-        for r in text_ops.bm25_scores(docs, qdf, k=10).collect()
+        for r in srows
     )
-    con = duckdb.connect()
-    try:
-        drows = sorted(
-            (int(q), int(d), round(float(s), 6), int(nt), int(rk))
-            for q, d, s, nt, rk in con.execute(
-                b._duckdb_family_sqls()["bm25_15m"]
-            ).fetchall()
-        )
-    finally:
-        con.close()
+    drows = sorted(
+        (int(q), int(d), round(float(s), 6), int(nt), int(rk))
+        for q, d, s, nt, rk in drows
+    )
     assert srows == drows and len(srows) == 10 * len(b.BM25_QUERIES)
 
 
@@ -565,33 +406,10 @@ def test_vocab_tok_mirror_agrees(spark, bench_small):
     the DuckDB distinct-word recursive-CTE mirror must compute identical
     (word_sum, tok_sum, unk_sum) totals at small N — same greedy rule,
     same default vocab, integer-exact."""
-    from pyspark.sql import functions as F
-
-    from duckdb_ddsketch_spark.operators import text as text_ops
-
-    b = bench_small
-    con = duckdb.connect()
-    try:
-        t = (
-            b._minhash_text_sql(f"id % {b.N_TEXT_D}")
-            .replace("//", "div")
-            .replace("VARCHAR", "STRING")
-        )
-        docs = spark.range(b.N_TEXT, numPartitions=8).selectExpr(
-            "id AS doc_id", f"{t} AS text"
-        )
-        srow = (
-            text_ops.vocab_token_stats(docs, form="bulk")
-            .agg(F.sum("n_words"), F.sum("n_bpe_tokens"), F.sum("n_unk"))
-            .collect()[0]
-        )
-        drow = con.execute(
-            b._duckdb_family_sqls()["vocab_tok_15m"]
-        ).fetchall()[0]
-        assert tuple(int(x) for x in srow) == tuple(int(x) for x in drow)
-        assert int(srow[0]) > 0 and int(srow[1]) > int(srow[0])
-    finally:
-        con.close()
+    srows, drows = _both(spark, bench_small, "vocab_tok_15m")
+    srow = tuple(int(x) for x in srows[0])
+    assert srow == tuple(int(x) for x in drows[0])
+    assert srow[0] > 0 and srow[1] > srow[0]
 
 
 def test_partial_snapshot_lines(bench_small, capsys, monkeypatch):
@@ -666,34 +484,52 @@ def test_pq_mirror_agrees(spark, bench_small):
     pq_encode -> pq_adc_topk pipeline at small N — the mirror
     walks the identical fold-order arithmetic, so adc doubles are
     bit-exact (no rounding in the comparison)."""
-    from duckdb_ddsketch_spark.operators import similarity
-
     b = bench_small
-    vec = "array(" + ", ".join(
-        f"CAST(((id * {p}) % 1024) / 64.0D + 0.5D AS DOUBLE)"
-        for p in b.ANN_PRIMES
-    ) + ")"
-    corpus = spark.range(b.N_ANN_CORPUS, numPartitions=8).selectExpr(
-        "id AS vec_id", f"{vec} AS embedding"
-    )
-    queries = spark.range(b.N_ANN_Q, numPartitions=2).selectExpr(
-        "id AS vec_id", f"{vec} AS embedding"
-    )
-    coded = similarity.pq_encode(corpus, b.PQ_CB)
+    srows, drows = _both(spark, b, "ann_pq_2m_x128")
     srows = sorted(
-        (r.query_id, r.neighbor_id, float(r.adc), r.rank)
-        for r in similarity.pq_adc_topk(
-            coded, queries, b.PQ_CB, k=b.ANN_K, max_query_rows=b.N_ANN_Q
-        ).collect()
+        (r.query_id, r.neighbor_id, float(r.adc), r.rank) for r in srows
     )
-    con = duckdb.connect()
-    try:
-        drows = sorted(
-            (int(q), int(d), float(s), int(rk))
-            for q, d, s, rk in con.execute(
-                b._duckdb_family_sqls()["ann_pq_2m_x128"]
-            ).fetchall()
-        )
-    finally:
-        con.close()
+    drows = sorted((int(q), int(d), float(s), int(rk)) for q, d, s, rk in drows)
     assert srows == drows and len(srows) == b.ANN_K * b.N_ANN_Q
+
+
+def test_scaling_probe_runs_the_bench_bodies(spark, bench_small, monkeypatch):
+    """scripts/scaling_curve_probe.py times the bench's own family
+    bodies: it builds no DataFrame, rebinds no bench constant, probes
+    exactly the bench table's families, and its main loop yields one
+    {rows, sec, marginal_slope} record per family."""
+    import ast
+
+    root = Path(__file__).resolve().parent.parent
+    tree = ast.parse((root / "scripts" / "scaling_curve_probe.py").read_text())
+    targets = [
+        t
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Assign, ast.AugAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+    ]
+    assert not [
+        t for t in targets
+        if isinstance(t, ast.Attribute) and getattr(t.value, "id", None) == "bench"
+    ]
+    assert not [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("range", "selectExpr", "readStream", "createDataFrame")
+    ]
+    monkeypatch.syspath_prepend(str(root / "scripts"))
+    probe = importlib.import_module("scaling_curve_probe")
+    table = bench_small.spark_families()
+    fams = probe.families()
+    assert set(fams) == set(table)
+    assert all(body is table[name][1] for name, (_, body) in fams.items())
+
+    names = {"hll_distinct", "streaming_windows"}
+    out = probe.probe(spark, names, (0.32, 0.64))
+    assert set(out) == names
+    n = bench_small.N_60M
+    for rec in out.values():
+        assert set(rec) == {"rows", "sec", "marginal_slope"}
+        assert rec["rows"] == [int(n * 0.32), int(n * 0.64)]
+        assert all(s > 0 for s in rec["sec"])
+        assert isinstance(rec["marginal_slope"], float)
