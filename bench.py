@@ -184,11 +184,13 @@ def _hll_users(n: int) -> str:
 
 
 def _dedup_doc(n: int) -> str:
-    return f"id % {_per(30_000_000, n, N_60M)}"
+    return f"id % {_per(DEDUP_DOCS, n, N_60M)}"
 
 
 HEAVY_TOK = "(id * id + 17 * id) % 50021"
+DEDUP_DOCS = 30_000_000  # distinct docs at N_60M rows: a 50% dup rate
 N_ASOF_L, N_ASOF_R = 54_000_000, 6_000_000
+ASOF_USERS = 100_000
 N_MINHASH = 600_000
 MINHASH_D = 550_000
 N_BITMAP_USERS = 5_000_000
@@ -738,9 +740,9 @@ def _duckdb_family_sqls() -> dict:
 
     # as-of join: every click joined to the latest preceding error per user
     sqls["asof_join"] = f"""
-    WITH l AS (SELECT range % 100000 AS u, range * 7 AS ts
+    WITH l AS (SELECT range % {ASOF_USERS} AS u, range * 7 AS ts
                FROM range({N_ASOF_L})),
-         r AS (SELECT range % 100000 AS u, range * 71 AS ts
+         r AS (SELECT range % {ASOF_USERS} AS u, range * 71 AS ts
                FROM range({N_ASOF_R}))
     SELECT COUNT(*) AS n, COUNT(r.ts) AS matched, SUM(l.ts - r.ts) AS lag_sum
     FROM l ASOF LEFT JOIN r ON l.u = r.u AND l.ts >= r.ts
@@ -1502,11 +1504,11 @@ def _hll_distinct(spark, n):
 
 
 def _asof_join(spark, n):
-    # 100k users is structure: per-user rows scale with n, as a corpus
-    # scale-up would; the right side keeps its 1:9 share of the left
-    left = _gen(spark, n, [("u", "id % 100000"), ("ts", "id * 7")])
+    # the user count is structure: per-user rows scale with n, as a
+    # corpus scale-up would; the right side keeps its 1:9 share of the left
+    left = _gen(spark, n, [("u", f"id % {ASOF_USERS}"), ("ts", "id * 7")])
     right = _gen(
-        spark, _per(N_ASOF_R, n, N_ASOF_L), [("u", "id % 100000"), ("ts", "id * 71")]
+        spark, _per(N_ASOF_R, n, N_ASOF_L), [("u", f"id % {ASOF_USERS}"), ("ts", "id * 71")]
     )
     j = relational.asof_join(
         left, right, on=["u"], left_ts="ts", right_ts="ts", right_cols=[]

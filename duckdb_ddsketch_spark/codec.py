@@ -22,9 +22,12 @@ bits are a subflag:
   but the encoder intentionally never writes them — Go's decoder mishandles
   FlagCount, so stats are recomputed from bins on decode.
 
-The scalar primitives are pure Python. ``decode_varint64_tokens`` and
-``decode_varfloat64_tokens`` decode a column of already-delimited tokens
-with numpy, using the same integer and IEEE operations bit for bit.
+The scalar primitives are pure Python. The token codecs work on whole
+columns with numpy, using the same integer and IEEE operations bit for bit:
+``decode_varint64_tokens`` and ``decode_varfloat64_tokens`` decode
+already-delimited tokens, ``encode_varint64_tokens`` and
+``encode_varfloat64_tokens`` are their inverses, and ``encode_wire_column``
+writes a whole batch of sketches (``DDSketch.encode``'s bytes) in one pass.
 """
 
 from __future__ import annotations
@@ -44,6 +47,9 @@ __all__ = [
     "decode_float64_le",
     "decode_varint64_tokens",
     "decode_varfloat64_tokens",
+    "encode_varint64_tokens",
+    "encode_varfloat64_tokens",
+    "encode_wire_column",
     "MAX_VARINT_TOKEN",
     "MAX_VARFLOAT_TOKEN",
 ]
@@ -235,3 +241,174 @@ def decode_varfloat64_tokens(
     r = np.uint64(_VARFLOAT_ROTATE)
     bits = ((x >> r) | (x << (np.uint64(64) - r))) + np.uint64(_FLOAT_BITS_1)
     return bits.view(np.float64) - 1.0
+
+
+# The column encoders first size every token, then lay the tokens out back
+# to back and write them one byte position at a time: byte k of every token
+# longer than k in one numpy pass. Most tokens of a sketch are one or two
+# bytes, so the later passes touch few tokens.
+
+# 2**7, 2**14, ..., 2**63: a uvarint is one byte longer past each
+_UVARINT_STEPS = np.array([1 << (7 * k) for k in range(1, 10)], np.uint64)
+_LOW7 = np.uint64(0x7F)
+
+
+def _uvarint_lengths(x: np.ndarray) -> np.ndarray:
+    return np.searchsorted(_UVARINT_STEPS, x, side="right") + 1
+
+
+def _zigzag(values: np.ndarray) -> np.ndarray:
+    v = np.asarray(values, np.int64)
+    return ((v << 1) ^ (v >> 63)).view(np.uint64)
+
+
+def _put_uvarint(data: np.ndarray, starts: np.ndarray, x: np.ndarray, lengths: np.ndarray) -> None:
+    """Write ``encode_uvarint64`` of each ``x`` at ``data[starts:]``: 7-bit
+    groups, least significant first, the continuation bit on all but the
+    last."""
+    for k in range(int(lengths.max(initial=0))):
+        on = lengths > k
+        group = ((x[on] >> np.uint64(7 * k)) & _LOW7).astype(np.uint8)
+        group[lengths[on] - 1 > k] |= 0x80
+        data[starts[on] + k] = group
+
+
+def _varfloat_bits(values: np.ndarray) -> np.ndarray:
+    """The 64 bits ``encode_varfloat64`` emits: bits(v + 1) - bits(1.0),
+    rotated left by 6."""
+    bits = (np.asarray(values, np.float64) + 1.0).view(np.uint64) - np.uint64(_FLOAT_BITS_1)
+    r = np.uint64(_VARFLOAT_ROTATE)
+    return (bits << r) | (bits >> (np.uint64(64) - r))
+
+
+def _varfloat_lengths(x: np.ndarray) -> np.ndarray:
+    """Bytes of each varfloat: its 7-bit groups, MSB first, end at the first
+    after which no set bit is left, so at ceil((64 - trailing zeros) / 7),
+    at least 1; a token needing more than 8 ends in a 9th, whole byte."""
+    lowest = x & (~x + np.uint64(1))
+    trailing = np.frexp(lowest.astype(np.float64))[1] - 1
+    groups = (64 - np.where(x == 0, 64, trailing) + 6) // 7
+    return np.where(groups > _MAX_VAR_LEN_64 - 1, _MAX_VAR_LEN_64, np.maximum(groups, 1))
+
+
+def _put_varfloat(data: np.ndarray, starts: np.ndarray, x: np.ndarray, lengths: np.ndarray) -> None:
+    """Write ``encode_varfloat64``'s bytes for each ``_varfloat_bits`` ``x``
+    at ``data[starts:]``."""
+    for k in range(int(lengths.max(initial=0))):
+        on = lengths > k
+        if k == _MAX_VAR_LEN_64 - 1:
+            data[starts[on] + k] = (x[on] & np.uint64(0xFF)).astype(np.uint8)
+            continue
+        group = ((x[on] >> np.uint64(57 - 7 * k)) & _LOW7).astype(np.uint8)
+        group[lengths[on] - 1 > k] |= 0x80
+        data[starts[on] + k] = group
+
+
+def _laid_out(lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """An output buffer for tokens of ``lengths`` back to back, and each
+    token's start in it."""
+    ends = np.cumsum(lengths)
+    return np.empty(int(ends[-1]) if len(ends) else 0, np.uint8), ends - lengths
+
+
+def encode_varint64_tokens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``encode_varint64`` of every int64 value: the tokens' bytes back to
+    back (uint8) and each token's length. The inverse of
+    ``decode_varint64_tokens`` for tokens of at most ``MAX_VARINT_TOKEN``
+    bytes."""
+    x = _zigzag(values)
+    lengths = _uvarint_lengths(x)
+    data, starts = _laid_out(lengths)
+    _put_uvarint(data, starts, x, lengths)
+    return data, lengths
+
+
+def encode_varfloat64_tokens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``encode_varfloat64`` of every float64 value, any bit pattern: the
+    tokens' bytes back to back (uint8) and each token's length. The inverse
+    of ``decode_varfloat64_tokens`` for tokens of at most
+    ``MAX_VARFLOAT_TOKEN`` bytes."""
+    x = _varfloat_bits(values)
+    lengths = _varfloat_lengths(x)
+    data, starts = _laid_out(lengths)
+    _put_varfloat(data, starts, x, lengths)
+    return data, lengths
+
+
+def encode_wire_column(
+    gamma: np.ndarray,
+    index_offset: np.ndarray,
+    zero_count: np.ndarray,
+    positive: tuple[np.ndarray, np.ndarray, np.ndarray],
+    negative: tuple[np.ndarray, np.ndarray, np.ndarray],
+) -> tuple[np.ndarray, np.ndarray]:
+    """``DDSketch.encode`` of every row of a batch, in one numpy pass.
+
+    Row ``r`` has mapping ``(gamma[r], index_offset[r])`` and zero count
+    ``zero_count[r]``; ``positive`` and ``negative`` are ``(offsets, index,
+    count)``, the row's bins being ``index[offsets[r]:offsets[r + 1]]``
+    (int64, strictly increasing, ``offsets[0] == 0``) with their float64
+    counts. Returns the batch's bytes (uint8) and the int64 offsets of each
+    row's blob in them.
+
+    Each blob is, as the kernel writes it: the mapping section, then each
+    non-empty store as IndexDeltasAndCounts (bin count, then per bin the
+    zig-zag delta from the previous index and the varfloat count), then the
+    zero count when it is > 0. Every piece (a flag, a float64, a token) is
+    sized, the pieces are laid out in blob order, and each kind of piece is
+    written at its places.
+    """
+    gamma = np.asarray(gamma, np.float64)
+    zero_count = np.asarray(zero_count, np.float64)
+    n = len(gamma)
+    stores = []
+    for flag_type, (offsets, index, count) in (
+        (FLAG_POSITIVE_STORE, positive),
+        (FLAG_NEGATIVE_STORE, negative),
+    ):
+        offsets = np.asarray(offsets, np.int64)
+        index = np.asarray(index, np.int64)
+        sizes = np.diff(offsets)
+        row = np.repeat(np.arange(n), sizes)
+        place = np.arange(len(index)) - offsets[:-1][row]
+        delta = np.diff(index, prepend=0)
+        delta[place == 0] = index[place == 0]
+        stores.append((flag_type, sizes, row, place, _zigzag(delta), _varfloat_bits(count)))
+    has_zero = zero_count > 0.0
+    # pieces per row: flag, gamma, offset; per non-empty store its flag, bin
+    # count and two tokens per bin; a zero count's flag and token
+    store_pieces = [np.where(sizes > 0, 2 + 2 * sizes, 0) for _, sizes, *_ in stores]
+    pieces = 3 + store_pieces[0] + store_pieces[1] + 2 * has_zero
+    first = np.cumsum(pieces) - pieces
+    flags = [(first, make_flag(FLAG_INDEX_MAPPING, SUBFLAG_LOG_MAPPING))]
+    tokens = []  # (pieces, values, writer)
+    start = first + 3
+    for (flag_type, sizes, row, place, delta, count), n_pieces in zip(stores, store_pieces):
+        filled = np.flatnonzero(sizes)
+        flags.append((start[filled], make_flag(flag_type, SUBFLAG_INDEX_DELTAS_AND_COUNTS)))
+        bin_at = start[row] + 2 + 2 * place
+        tokens += [
+            (start[filled] + 1, sizes[filled].astype(np.uint64), _put_uvarint),
+            (bin_at, delta, _put_uvarint),
+            (bin_at + 1, count, _put_varfloat),
+        ]
+        start = start + n_pieces
+    zeros = np.flatnonzero(has_zero)
+    flags.append((start[zeros], make_flag(FLAG_SKETCH_FEATURES, SUBFLAG_ZERO_COUNT)))
+    tokens.append((start[zeros] + 1, _varfloat_bits(zero_count[zeros]), _put_varfloat))
+
+    lengths = np.ones(int(pieces.sum()), np.int64)  # flags are one byte
+    lengths[first + 1] = lengths[first + 2] = 8
+    sized = {_put_uvarint: _uvarint_lengths, _put_varfloat: _varfloat_lengths}
+    for at, x, put in tokens:
+        lengths[at] = sized[put](x)
+    data, piece_start = _laid_out(lengths)
+    for at, flag in flags:
+        data[piece_start[at]] = flag
+    for at, x, put in tokens:
+        put(data, piece_start[at], x, lengths[at])
+    for k, column in ((1, gamma), (2, index_offset)):
+        floats = np.asarray(column, "<f8").view(np.uint8).reshape(n, 8)
+        data[piece_start[first + k][:, None] + np.arange(8)] = floats
+    # each blob starts at its mapping flag and ends where the next starts
+    return data, np.append(piece_start[first], len(data))

@@ -20,17 +20,24 @@ sketch math is expressed as Catalyst expressions over raw values:
 The native *working form* is a struct column
 ``(gamma, index_offset, pos MAP<INT,DOUBLE>, neg MAP<INT,DOUBLE>, zero_count,
 count, sum, min, max)`` mirroring datadog_encoding.rs:225-244; wire bytes are
-produced/consumed only at boundaries via a pandas UDF codec hop.
+produced/consumed only at boundaries, by two scalar Arrow UDFs that read the
+record batch's buffers: ``struct_to_wire`` encodes the whole batch with
+``codec.encode_wire_column`` and ``wire_to_struct`` decodes it with
+``sketch.decode_wire_column``. Rows those column codecs cannot prove go
+through the kernel one at a time, so the bytes and NULL rows are the
+kernel's.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Optional, Sequence
+from typing import NamedTuple, Optional, Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -40,11 +47,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import codec
 from ..sketch import (
     _BIGINT_LIMIT,
+    _MAX_BIN_EXPONENT,
+    _MAX_TOTAL_COUNT,
+    _NO_BINS,
     DDSketch,
     DEFAULT_RELATIVE_ACCURACY,
-    decode_or_none,
+    WireRow,
+    _decode_rows,
+    decoded_stats,
 )
 
 __all__ = [
@@ -740,7 +753,9 @@ def merge_struct_sketches(
 
 
 # ---------------------------------------------------------------------------
-# Wire boundary (the only Python hop in the native pipeline)
+# Wire boundary (the only Python hop in the native pipeline): scalar Arrow
+# UDFs over whole record batches. The struct's MAP<INT,DOUBLE> columns are
+# read as offset, key and item buffers, never as Python rows.
 # ---------------------------------------------------------------------------
 
 
@@ -772,33 +787,103 @@ def _wire_decodes(s: DDSketch) -> bool:
     return True
 
 
-@pandas_udf(BinaryType())
-def _struct_to_wire(rows: pd.DataFrame) -> pd.Series:
-    out = []
-    for row in rows.to_dict("records"):
-        # pandas renders a NULL struct (and NULL numeric fields) as NaN, not
-        # None — pd.isna catches both so a NULL sketch encodes as NULL
-        # instead of a garbage NaN-gamma sketch.
-        if row is None or pd.isna(row.get("count")) or pd.isna(row.get("gamma")):
-            out.append(None)
-            continue
-        s = DDSketch.__new__(DDSketch)
-        s.gamma = float(row["gamma"])
-        s.index_offset = float(row["index_offset"])
-        pos, neg = row.get("pos"), row.get("neg")
-        s.positive_bins = dict(pos) if isinstance(pos, dict) else {}
-        s.negative_bins = dict(neg) if isinstance(neg, dict) else {}
-        s.zero_count = 0.0 if pd.isna(row.get("zero_count")) else float(row["zero_count"])
-        # a NULL, NaN or infinite count has no wire form that decodes
-        counts = (*s.positive_bins.values(), *s.negative_bins.values(), s.zero_count)
-        if not all(c is not None and math.isfinite(c) for c in counts):
-            out.append(None)
-            continue
-        if not _wire_decodes(s):
-            out.append(None)
-            continue
-        out.append(s.encode())
-    return pd.Series(out, dtype=object)
+def _encode_struct(gamma, index_offset, pos: dict, neg: dict, zero_count) -> Optional[bytes]:
+    """One struct's wire bytes by the kernel, or None when it has no wire
+    form that decodes."""
+    s = DDSketch.__new__(DDSketch)
+    s.gamma, s.index_offset = gamma, index_offset
+    s.positive_bins, s.negative_bins, s.zero_count = pos, neg, zero_count
+    return s.encode() if _wire_decodes(s) else None
+
+
+class _Bins(NamedTuple):
+    """A ``MAP<INT,DOUBLE>`` column's entries gathered row after row:
+    ``index[offsets[r]:offsets[r + 1]]`` are row ``r``'s keys (a NULL map
+    has none), ``count`` their values (NaN where NULL) and ``row`` each
+    entry's row."""
+
+    offsets: np.ndarray
+    index: np.ndarray
+    count: np.ndarray
+    row: np.ndarray
+
+    @classmethod
+    def of(cls, maps: pa.MapArray) -> "_Bins":
+        # a sliced map's offsets point into its whole key and item arrays
+        offsets = maps.offsets.to_numpy()
+        sizes = np.diff(offsets)
+        if maps.null_count:
+            sizes[~maps.is_valid().to_numpy(zero_copy_only=False)] = 0
+        row = np.repeat(np.arange(len(sizes)), sizes)
+        ends = np.cumsum(sizes)
+        at = offsets[:-1][row] + np.arange(len(row)) - (ends - sizes)[row]
+        return cls(
+            np.append(0, ends),
+            maps.keys.to_numpy(zero_copy_only=False).astype(np.int64)[at],
+            maps.items.to_numpy(zero_copy_only=False)[at],
+            row,
+        )
+
+    def all(self, ok: np.ndarray) -> np.ndarray:
+        """Whether every entry of each row has ``ok``."""
+        return np.bincount(self.row[~ok], minlength=len(self.offsets) - 1) == 0
+
+    def rows(self, take: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The ``(offsets, index, count)`` runs of the rows ``take`` marks."""
+        sizes = np.diff(self.offsets)[take]
+        entries = take[self.row]
+        return np.append(0, np.cumsum(sizes)), self.index[entries], self.count[entries]
+
+    def dict_of(self, i: int) -> dict:
+        lo, hi = self.offsets[i], self.offsets[i + 1]
+        return dict(zip(self.index[lo:hi].tolist(), self.count[lo:hi].tolist()))
+
+
+@arrow_udf(BinaryType())
+def _struct_to_wire(sketches: pa.Array) -> pa.Array:
+    """The kernel's ``encode`` of every struct, read off the Arrow buffers.
+
+    A NULL struct, a NULL or NaN gamma or count, and a NULL, NaN or
+    infinite bin or zero count give NULL; a NULL or NaN zero count encodes
+    as 0, a NULL index offset as NaN. Rows the column encoder can prove
+    decodable (``1 < gamma < 2``, a finite offset, increasing keys, counts
+    >= 0, ``|key - offset| * ln(gamma) <= 700``, a total count below
+    2**60) are encoded in one numpy pass; any other row goes through the
+    kernel, which NULLs it when ``DDSketch.decode`` would reject its bytes.
+    """
+    f = dict(zip(SKETCH_STRUCT_SCHEMA.names, sketches.flatten()))
+    gamma, index_offset, count, zero = (
+        f[k].to_numpy(zero_copy_only=False) for k in ("gamma", "index_offset", "count", "zero_count")
+    )
+    zero = np.where(np.isnan(zero), 0.0, zero)
+    stores = _Bins.of(f["pos"]), _Bins.of(f["neg"])
+    encodable = ~np.isnan(gamma) & ~np.isnan(count) & ~np.isinf(zero)
+    fast = encodable & (gamma > 1.0) & (gamma < 2.0) & np.isfinite(index_offset)
+    total = np.maximum(zero, 0.0)
+    log_gamma = np.log(np.where(fast, gamma, 2.0))
+    offset = np.where(fast, index_offset, 0.0)
+    for bins in stores:
+        finite = np.isfinite(bins.count)
+        encodable &= bins.all(finite)
+        follows = np.ones(len(bins.index), bool)
+        follows[1:] = (bins.index[1:] > bins.index[:-1]) | (bins.row[1:] != bins.row[:-1])
+        exponent = np.abs(bins.index - offset[bins.row]) * log_gamma[bins.row]
+        fast &= bins.all(follows & (bins.count >= 0.0) & (exponent <= _MAX_BIN_EXPONENT))
+        with np.errstate(over="ignore"):  # a total past 2**60 only fails the test below
+            total = total + np.bincount(bins.row, np.where(finite, bins.count, 0.0), len(gamma))
+    fast &= encodable & (total < _MAX_TOTAL_COUNT)
+
+    out: list = [None] * len(gamma)
+    data, offsets = codec.encode_wire_column(
+        gamma[fast], index_offset[fast], zero[fast], *(b.rows(fast) for b in stores)
+    )
+    buf = data.tobytes()
+    for i, lo, hi in zip(np.flatnonzero(fast).tolist(), offsets[:-1].tolist(), offsets[1:].tolist()):
+        out[i] = buf[lo:hi]
+    for i in np.flatnonzero(encodable & ~fast).tolist():
+        pos, neg = (b.dict_of(i) for b in stores)
+        out[i] = _encode_struct(float(gamma[i]), float(index_offset[i]), pos, neg, float(zero[i]))
+    return pa.array(out, pa.binary())
 
 
 def struct_to_wire(sketch_col) -> Column:
@@ -808,29 +893,52 @@ def struct_to_wire(sketch_col) -> Column:
     return _struct_to_wire(sketch_col)
 
 
-@pandas_udf(SKETCH_STRUCT_SCHEMA)
-def _wire_to_struct(blobs: pd.Series) -> pd.DataFrame:
-    rows = []
-    cols = [f.name for f in SKETCH_STRUCT_SCHEMA.fields]
-    for blob in blobs:
-        s = decode_or_none(blob)
-        if s is None:
-            rows.append((None,) * len(cols))
+def _map_column(rows: list, valid: np.ndarray, index_at: int) -> pa.MapArray:
+    """The ``MAP<INT,DOUBLE>`` of each row's bins (``WireRow`` fields
+    ``index_at`` and ``index_at + 1``), NULL where the row is None."""
+    good = [r for r in rows if r is not None]
+    sizes = np.zeros(len(rows), np.int64)
+    sizes[valid] = [len(r[index_at]) for r in good]
+    offsets = np.concatenate(([0], np.cumsum(sizes))).astype(np.int32)
+    return pa.MapArray.from_arrays(
+        pa.array(offsets, mask=np.append(~valid, False)),
+        pa.array(np.concatenate([_NO_BINS[0], *(r[index_at] for r in good)]).astype(np.int32)),
+        pa.array(np.concatenate([_NO_BINS[1], *(r[index_at + 1] for r in good)])),
+    )
+
+
+@arrow_udf(SKETCH_STRUCT_SCHEMA)
+def _wire_to_struct(blobs: pa.Array) -> pa.Array:
+    """``DDSketch.decode`` of every blob as a struct, through
+    ``decode_wire_column``: the maps are built from its index and count
+    arrays, the stats by ``decoded_stats`` (the kernel's, for the rows the
+    kernel decoded). An empty blob is the kernel's empty sketch, an
+    undecodable one a struct of NULL fields, and a NaN field is NULL."""
+    rows, kernel = _decode_rows(blobs)
+    empty = pc.equal(pc.binary_length(blobs), 0).fill_null(False)
+    for i in np.flatnonzero(empty.to_numpy(zero_copy_only=False)).tolist():
+        kernel[i] = s = DDSketch.decode(b"")
+        rows[i] = WireRow(s.gamma, s.index_offset, s.zero_count, *_NO_BINS, *_NO_BINS)
+    scalars = []
+    for i, r in enumerate(rows):
+        if r is None:
+            scalars.append((math.nan,) * 7)
             continue
-        rows.append(
-            (
-                s.gamma,
-                s.index_offset,
-                {int(k): float(v) for k, v in s.positive_bins.items()},
-                {int(k): float(v) for k, v in s.negative_bins.items()},
-                s.zero_count,
-                s.count,
-                s.sum,
-                s.min if math.isfinite(s.min) else None,
-                s.max if math.isfinite(s.max) else None,
-            )
-        )
-    return pd.DataFrame(rows, columns=cols)
+        stats = None if i in kernel else decoded_stats(r)
+        if stats is None:
+            s = kernel[i] if i in kernel else DDSketch.decode(blobs[i].as_py())
+            stats = s.count, s.sum, s.min, s.max
+        count, total, lo, hi = stats
+        lo, hi = (v if math.isfinite(v) else math.nan for v in (lo, hi))
+        scalars.append((r.gamma, r.index_offset, r.zero_count, count, total, lo, hi))
+    columns = np.array(scalars, np.float64).reshape(len(rows), 7).T
+    names = ("gamma", "index_offset", "zero_count", "count", "sum", "min", "max")
+    arrays = {k: pa.array(c, from_pandas=True) for k, c in zip(names, columns)}
+    valid = np.array([r is not None for r in rows], bool)
+    arrays["pos"], arrays["neg"] = _map_column(rows, valid, 3), _map_column(rows, valid, 5)
+    return pa.StructArray.from_arrays(
+        [arrays[k] for k in SKETCH_STRUCT_SCHEMA.names], names=SKETCH_STRUCT_SCHEMA.names
+    )
 
 
 def wire_to_struct(blob_col) -> Column:

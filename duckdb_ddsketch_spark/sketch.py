@@ -20,7 +20,9 @@ Semantics mirror the reference extension's sketch
 
 ``decode_wire_column`` / ``merge_wire_column`` decode and merge a whole Arrow
 column of wire blobs in numpy; ``DDSketch.decode`` stays the definition of
-which blobs are decodable.
+which blobs are decodable. ``encode_wire_row`` writes a merged row with the
+column encoder (``codec.encode_wire_column``), and ``decoded_stats`` reads
+the stats decode would rebuild straight off a row's arrays.
 """
 
 from __future__ import annotations
@@ -40,7 +42,11 @@ __all__ = [
     "WireRow",
     "decode_or_none",
     "decode_wire_column",
+    "merge_wire_rows",
     "merge_wire_column",
+    "encode_wire_row",
+    "decoded_stats",
+    "wire_sketch",
 ]
 
 DEFAULT_RELATIVE_ACCURACY = 0.01
@@ -650,6 +656,14 @@ def decode_wire_column(blobs: pa.Array) -> list[Optional[WireRow]]:
     below ``2**60`` (no BIGINT overflow). Every other blob goes through
     ``DDSketch.decode`` alone.
     """
+    return _decode_rows(blobs)[0]
+
+
+def _decode_rows(
+    blobs: pa.Array,
+) -> tuple[list[Optional[WireRow]], dict[int, DDSketch]]:
+    """``decode_wire_column``'s rows, and the kernel's sketch of each row
+    the fast path left to ``DDSketch.decode``, by row number."""
     data, offsets, valid = _column_buffers(blobs)
     n_rows = len(offsets) - 1
     buf = data.tobytes()
@@ -725,10 +739,12 @@ def decode_wire_column(blobs: pa.Array) -> list[Optional[WireRow]]:
             *final_bins(first_store, final, codec.FLAG_POSITIVE_STORE),
             *final_bins(first_store, final, codec.FLAG_NEGATIVE_STORE),
         )
+    kernel = {}
     for i in slow:
         s = decode_or_none(buf[offsets[i] : offsets[i + 1]])
         if s is None:
             continue  # undecodable: the row is skipped, like NULL
+        kernel[i] = s
         rows[i] = WireRow(
             s.gamma,
             s.index_offset,
@@ -736,32 +752,35 @@ def decode_wire_column(blobs: pa.Array) -> list[Optional[WireRow]]:
             *_bin_arrays(s.positive_bins),
             *_bin_arrays(s.negative_bins),
         )
-    return rows
+    return rows, kernel
 
 
-def _sum_bins(indexes: list[np.ndarray], counts: list[np.ndarray]) -> dict[int, float]:
+def _sum_bins(
+    indexes: list[np.ndarray], counts: list[np.ndarray]
+) -> tuple[np.ndarray, np.ndarray]:
     """Per-index sums over rows, each index's counts added in row order
-    from 0.0, as a dict fold over the rows adds them."""
+    from 0.0, as a dict fold over the rows adds them: the distinct indexes,
+    increasing, and their sums."""
     index = np.concatenate(indexes)
     if not len(index):
-        return {}
+        return _NO_BINS
     keys, where = np.unique(index, return_inverse=True)
     sums = np.zeros(len(keys))
     np.add.at(sums, where, np.concatenate(counts))
-    return dict(zip(keys.tolist(), sums.tolist()))
+    return keys, sums
 
 
-def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
-    """Merge a binary Arrow array of wire blobs into one blob, by the
+def merge_wire_rows(blobs: pa.Array) -> Optional[WireRow]:
+    """Merge a binary Arrow array of wire blobs into one row, by the
     reference aggregate's rule (lib.rs:697-735): NULL, empty and
     undecodable rows are skipped; the first decodable row is adopted and
     later rows merged into it; a row whose gamma or index_offset differs
     from the adopted one by more than 1e-10 is dropped, as
     ``DDSketch.merge`` would refuse it. No decodable row gives None.
 
-    The bytes equal ``encode()`` of the ``DDSketch.decode`` /
-    ``DDSketch.merge`` fold over the rows in order: each bin's counts and
-    the zero count are added in row order.
+    The row holds the ``DDSketch.decode`` / ``DDSketch.merge`` fold over
+    the rows in order: each bin's counts and the zero count are added in
+    row order. Its indexes are increasing.
     """
     kept: list[WireRow] = []
     for row in decode_wire_column(blobs):
@@ -775,16 +794,97 @@ def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
         kept.append(row)
     if not kept:
         return None
-    merged = DDSketch()
-    merged.gamma, merged.index_offset = kept[0].gamma, kept[0].index_offset
-    merged.zero_count = kept[0].zero_count
+    zero_count = kept[0].zero_count
     for row in kept[1:]:
-        merged.zero_count += row.zero_count
-    merged.positive_bins = _sum_bins(
-        [r.positive_index for r in kept], [r.positive_count for r in kept]
+        zero_count += row.zero_count
+    return WireRow(
+        kept[0].gamma,
+        kept[0].index_offset,
+        zero_count,
+        *_sum_bins([r.positive_index for r in kept], [r.positive_count for r in kept]),
+        *_sum_bins([r.negative_index for r in kept], [r.negative_count for r in kept]),
     )
-    merged.negative_bins = _sum_bins(
-        [r.negative_index for r in kept], [r.negative_count for r in kept]
-    )
-    return merged.encode()
 
+
+def encode_wire_row(row: WireRow) -> bytes:
+    """``DDSketch.encode`` of a row whose indexes are increasing."""
+    data, _ = codec.encode_wire_column(
+        np.array([row.gamma]),
+        np.array([row.index_offset]),
+        np.array([row.zero_count]),
+        ([0, len(row.positive_index)], row.positive_index, row.positive_count),
+        ([0, len(row.negative_index)], row.negative_index, row.negative_count),
+    )
+    return data.tobytes()
+
+
+def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
+    """The wire bytes of ``merge_wire_rows``: ``encode()`` of the kernel's
+    decode/merge fold over the rows in order, or None."""
+    merged = merge_wire_rows(blobs)
+    return None if merged is None else encode_wire_row(merged)
+
+
+def decoded_stats(row: WireRow) -> Optional[tuple[float, float, float, float]]:
+    """``(count, sum, min, max)`` as ``DDSketch.decode`` rebuilds them from
+    the bins of a blob without stats sections, for a row as decode returns
+    it (counts bit for bit, indexes increasing); min and max stay infinite
+    when no bin holds a count. None when the mapping is outside
+    ``1 < gamma < 2`` with a finite offset, a bin value could overflow, or
+    the count leaves BIGINT: then the kernel decides.
+
+    The arithmetic is the kernel's: the count is Python ``sum`` of each
+    store's counts plus the zero count, bin values use Python's ``**``
+    (``np.power`` can differ in the last bit), and the sum adds
+    ``value * count`` in index order, positives then negatives, from 0.0.
+    """
+    gamma, index_offset = row.gamma, row.index_offset
+    if not (1.0 < gamma < 2.0 and math.isfinite(index_offset)):
+        return None
+    count = sum(row.positive_count.tolist()) + sum(row.negative_count.tolist()) + row.zero_count
+    if not -_BIGINT_LIMIT <= count < _BIGINT_LIMIT:
+        return None
+    log_gamma = math.log(gamma)
+    multiplier = 1.0 + (1.0 - 2.0 / (1.0 + gamma))
+    values = []
+    for index in (row.positive_index, row.negative_index):
+        exponents = [i - index_offset for i in index.tolist()]
+        if exponents and max(abs(exponents[0]), abs(exponents[-1])) * log_gamma > _MAX_BIN_EXPONENT:
+            return None
+        values.append(np.array([gamma**x for x in exponents], np.float64) * multiplier)
+    positive, negative = values
+    terms = np.concatenate(
+        ([0.0], positive * row.positive_count, -(negative * row.negative_count))
+    )
+    candidates = np.concatenate(
+        (
+            -negative[row.negative_count > 0.0],
+            [0.0] if row.zero_count > 0.0 else [],
+            positive[row.positive_count > 0.0],
+        )
+    )
+    if not len(candidates):
+        return count, float(np.cumsum(terms)[-1]), math.inf, -math.inf
+    return count, float(np.cumsum(terms)[-1]), float(candidates.min()), float(candidates.max())
+
+
+def wire_sketch(row: WireRow) -> Optional[DDSketch]:
+    """The sketch ``DDSketch.decode(encode_wire_row(row))`` returns, built
+    off the row's arrays instead of the bytes: each count as its varfloat
+    decodes, ``(c + 1.0) - 1.0``, a zero count only when it is > 0, and
+    the stats of ``decoded_stats``. None where ``decoded_stats`` is."""
+    zero_count = (row.zero_count + 1.0) - 1.0 if row.zero_count > 0.0 else 0.0
+    row = row._replace(
+        zero_count=zero_count,
+        positive_count=(row.positive_count + 1.0) - 1.0,
+        negative_count=(row.negative_count + 1.0) - 1.0,
+    )
+    stats = decoded_stats(row)
+    if stats is None:
+        return None
+    s = DDSketch.__new__(DDSketch)
+    s.gamma, s.index_offset, s.zero_count = row.gamma, row.index_offset, zero_count
+    s.positive_bins = dict(zip(row.positive_index.tolist(), row.positive_count.tolist()))
+    s.negative_bins = dict(zip(row.negative_index.tolist(), row.negative_count.tolist()))
+    s.count, s.sum, s.min, s.max = stats
+    return s

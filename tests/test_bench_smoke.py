@@ -23,8 +23,10 @@ def bench_small(tmp_path_factory):
         k: getattr(bench, k)
         for k in (
             "N_60M",
+            "DEDUP_DOCS",
             "N_ASOF_L",
             "N_ASOF_R",
+            "ASOF_USERS",
             "N_MINHASH",
             "MINHASH_D",
             "N_BITMAP_USERS",
@@ -43,10 +45,14 @@ def bench_small(tmp_path_factory):
         )
     }
     bench.N_60M = 50_000
+    bench.DEDUP_DOCS = 25_000  # a 50% dup rate, like the real value
     bench.N_ASOF_L, bench.N_ASOF_R = 45_000, 5_000
+    bench.ASOF_USERS = 1_000  # 45 left and 5 right rows per user
     bench.N_MINHASH = 4_000
     bench.MINHASH_D = 3_600
-    bench.N_BITMAP_USERS = 5_000
+    # odd, so a user's rows land 7 days apart (an even user count steps
+    # each user's day by an even amount modulo 62)
+    bench.N_BITMAP_USERS = 4_999
     bench.N_ANN_CORPUS, bench.N_ANN_Q = 5_000, 8
     bench.N_KM_WIDE = 10_000
     bench.N_GRAM = 10_000
@@ -75,6 +81,16 @@ def test_all_spark_families_execute(spark, bench_small, monkeypatch):
     # zero cutoffs: every family runs its pass-1 rep only — the protocol
     # has its own tests, this one checks that each family executes
     monkeypatch.setattr(bench_small, "PASS_CUTOFFS", {"spark": (0.0, 0.0)})
+    rows = {}
+    families = bench_small.spark_families
+
+    def recording():
+        return {
+            name: (n, lambda spark, n, name=name, body=body: rows.setdefault(name, body(spark, n)))
+            for name, (n, body) in families().items()
+        }
+
+    monkeypatch.setattr(bench_small, "spark_families", recording)
     bench_small._RAW_RUNS.clear()
     result = {}
     bench_small.run_spark_families(spark, result)
@@ -97,6 +113,12 @@ def test_all_spark_families_execute(spark, bench_small, monkeypatch):
         "vocab_tok_15m",  # round 11: greedy vocab tokenization, bulk kernel
     }
     assert all(t >= 0 for t in fam.values())
+    # the small sizes keep each family's shape: duplicates to drop, users
+    # retained on day 7, and clicks with an error before them
+    assert all(0 < r.n_dups < r.n_docs for r in rows["exact_dedup"])
+    assert any(r.n_ret7 > 0 for r in rows["bitmap_retention"])
+    (asof,) = rows["asof_join"]
+    assert asof.n // 2 < asof.matched < asof.n
 
 
 def test_all_duckdb_family_mirrors_execute(bench_small):

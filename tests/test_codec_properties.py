@@ -5,14 +5,20 @@ coverage beyond the reference's fixed vectors.
 import math
 import struct
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql.pandas.types import to_arrow_type
 
 from duckdb_ddsketch_spark import codec
+from duckdb_ddsketch_spark.functions.aggregate import ddsketch_stats_agg
+from duckdb_ddsketch_spark.functions.scalar import STATS_FULL_SCHEMA, stats_full_row
+from duckdb_ddsketch_spark.operators import native
 from duckdb_ddsketch_spark.sketch import (
     DDSketch,
     SketchMergeError,
+    decode_or_none,
     decode_wire_column,
     merge_wire_column,
 )
@@ -508,3 +514,198 @@ def test_column_decode_without_bytes(blobs, arrow_type):
     assert merge_wire_column(arr) is None
     sliced = pa.array([_GOOD_BLOB] + blobs, type=arrow_type).slice(1)
     assert merge_wire_column(sliced) is None
+
+
+# ---------------------------------------------------------------------------
+# Column encoders vs the kernel: token encoders, struct_to_wire, the
+# ddsketch_stats_agg finalize
+# ---------------------------------------------------------------------------
+
+_FLOAT_BITS = st.integers(0, 2**64 - 1).map(lambda b: struct.unpack("<d", struct.pack("<Q", b))[0])
+_ANY_FLOAT = st.one_of(
+    _FLOAT_BITS,
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.sampled_from([0.0, -0.0, math.nan, math.inf, -math.inf, 5e-324, -5e-324, 2.2e-308, 1.0, -1.0]),
+)
+
+
+def _scalar_tokens(encode, values):
+    data, lengths = bytearray(), []
+    for v in values:
+        buf = bytearray()
+        encode(buf, v)
+        data += buf
+        lengths.append(len(buf))
+    return bytes(data), lengths
+
+
+def _starts(lengths):
+    return np.cumsum(lengths) - lengths
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.integers(-(2**63), 2**63 - 1), max_size=40))
+def test_varint_token_encoder_matches_scalar(values):
+    """``encode_varint64_tokens`` writes ``encode_varint64``'s bytes for
+    any int64, and tokens the column decoder takes decode back."""
+    data, lengths = codec.encode_varint64_tokens(np.array(values, np.int64))
+    assert (data.tobytes(), lengths.tolist()) == _scalar_tokens(codec.encode_varint64, values)
+    short = lengths <= codec.MAX_VARINT_TOKEN
+    got = codec.decode_varint64_tokens(data, _starts(lengths), lengths)
+    assert got[short].tolist() == np.array(values, np.int64)[short].tolist()
+    pos = 0
+    for v in values:
+        decoded, pos = codec.decode_varint64(data.tobytes(), pos)
+        assert decoded == v
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_ANY_FLOAT, max_size=40))
+def test_varfloat_token_encoder_matches_scalar(values):
+    """``encode_varfloat64_tokens`` writes ``encode_varfloat64``'s bytes for
+    any float64 bit pattern (NaN, infinities, -0.0, subnormals), and the
+    bytes decode to ``(v + 1.0) - 1.0``, the value the format keeps: on
+    the scalar decoder always, on the column decoder for tokens it takes."""
+    data, lengths = codec.encode_varfloat64_tokens(np.array(values, np.float64))
+    assert (data.tobytes(), lengths.tolist()) == _scalar_tokens(codec.encode_varfloat64, values)
+    kept = [((np.float64(v) + 1.0) - 1.0).tobytes() for v in values]
+    got = codec.decode_varfloat64_tokens(data, _starts(lengths), lengths)
+    for k, g, n in zip(kept, got, lengths):
+        if n <= codec.MAX_VARFLOAT_TOKEN:
+            assert g.tobytes() == k
+    pos = 0
+    for k in kept:
+        decoded, pos = codec.decode_varfloat64(data.tobytes(), pos)
+        assert np.float64(decoded).tobytes() == k
+
+
+_STRUCT_ARROW = to_arrow_type(native.SKETCH_STRUCT_SCHEMA)
+_EDGE_COUNTS = [1.0, 2.0, 0.0, 0.5, 1 / 3, 1e15, 2.0**62, 2.0**62 + 2.0**52, 2.0**63, 6e18, -1.0, -1e19]
+_STRUCT_COUNT = st.one_of(
+    st.sampled_from([1.0, 2.0, 3.0, 7.0]),
+    st.sampled_from(_EDGE_COUNTS + [math.nan, math.inf, -math.inf, None]),
+)
+_STRUCT_KEY = st.one_of(
+    st.integers(-300, 300),
+    st.sampled_from([2**31 - 1, -(2**31), 34_990, 35_500, -36_000]),
+)
+_STRUCT_MAP = st.one_of(
+    st.none(),
+    st.dictionaries(_STRUCT_KEY, st.sampled_from([1.0, 2.0, 5.0]), max_size=12),
+    st.dictionaries(_STRUCT_KEY, _STRUCT_COUNT, max_size=6),
+)
+_STRUCT = st.one_of(
+    st.none(),
+    st.fixed_dictionaries(
+        {
+            "gamma": st.sampled_from(
+                [_GAMMA, _GAMMA, _GAMMA_02, 1.5, 1.0000001, 1.0, 0.5, -1.5, -2.0, 2.0, 3.0, math.nan, math.inf, None]
+            ),
+            "index_offset": st.sampled_from([0.0, 0.0, 0.5, -3.0, 1e9, math.nan, math.inf, None]),
+            "pos": _STRUCT_MAP,
+            "neg": _STRUCT_MAP,
+            "zero_count": st.sampled_from([0.0, 0.0, 1.0, 4.0, -1.0, 2.0**61, 1e19, math.nan, math.inf, None]),
+            "count": st.sampled_from([1.0, 10.0, 0.0, math.nan, math.inf, None]),
+            "sum": st.just(0.0),
+            "min": st.just(1.0),
+            "max": st.just(2.0),
+        }
+    ),
+)
+
+
+def _kernel_struct_to_wire(row):
+    """The per-row rule: a NULL struct, gamma or count (or NaN) is NULL, a
+    NULL or NaN zero count is 0 and a NULL offset NaN; a NULL, NaN or
+    infinite count is NULL; otherwise the kernel encodes, NULLing what
+    ``DDSketch.decode`` would reject."""
+
+    def missing(v):
+        return v is None or math.isnan(v)
+
+    if row is None or missing(row["gamma"]) or missing(row["count"]):
+        return None
+    zero = 0.0 if missing(row["zero_count"]) else row["zero_count"]
+    pos, neg = (dict(row[k] or {}) for k in ("pos", "neg"))
+    if not all(c is not None and math.isfinite(c) for c in (*pos.values(), *neg.values(), zero)):
+        return None
+    offset = math.nan if row["index_offset"] is None else row["index_offset"]
+    return native._encode_struct(row["gamma"], offset, pos, neg, zero)
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(_STRUCT, min_size=1, max_size=10), st.lists(_STRUCT, max_size=2))
+def test_struct_to_wire_matches_kernel(structs, padding):
+    """``struct_to_wire`` gives the per-row kernel path's bytes and NULLs
+    over NULL structs and map values, gamma <= 1 or negative, NaN and
+    fractional offsets, counts near 2^62 and 2^63, negative counts and
+    int32-edge bins, in an array slice whose offset is nonzero; and every
+    blob it writes decodes."""
+    arr = pa.array(padding + structs + padding, _STRUCT_ARROW).slice(len(padding), len(structs))
+    got = native._struct_to_wire.func(arr).to_pylist()
+    want = [_kernel_struct_to_wire(r) for r in structs]
+    assert got == want
+    for blob in want:
+        if blob is not None:
+            DDSketch.decode(blob)
+
+
+_WEIGHTED_BLOB = st.builds(
+    lambda alpha, pairs: _weighted(alpha, pairs).encode(),
+    st.sampled_from([0.01, 0.01, 0.02]),
+    st.lists(
+        st.tuples(st.floats(-1e6, 1e6), st.sampled_from([1.0, 2.5, 0.3, 1 / 3, 1e15, 2.0**55])),
+        max_size=40,
+    ),
+)
+
+
+def _weighted(alpha, pairs):
+    s = DDSketch(alpha)
+    for v, c in pairs:
+        s.add_with_count(v, c)
+    return s
+
+
+def _float_bits(row):
+    return tuple(v.hex() if isinstance(v, float) else v for v in row)
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=8))
+def test_stats_agg_finalize_matches_decoded_bytes(blobs):
+    """``ddsketch_stats_agg``'s 12 fields, read off the merged arrays, are
+    bit for bit those ``stats_full_row`` reads by decoding the merged
+    bytes, over groups of damaged, weighted, mixed-mapping blobs."""
+    arr = pa.array(blobs, pa.binary())
+    got = ddsketch_stats_agg.func(arr).as_py()
+    want = stats_full_row(merge_wire_column(arr))
+    assert _float_bits(got[k] for k in STATS_FULL_SCHEMA.names) == _float_bits(want)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=6))
+def test_wire_to_struct_matches_kernel_decode(blobs):
+    """``wire_to_struct`` holds what ``DDSketch.decode`` returns, bins in
+    its order and stats bit for bit; an undecodable blob is a struct of
+    NULL fields and a NaN field is NULL."""
+    got = native._wire_to_struct.func(pa.array(blobs, pa.binary())).to_pylist()
+    for blob, row in zip(blobs, got):
+        s = None if blob is None else decode_or_none(blob)
+        if s is None:
+            assert all(v is None for v in row.values())
+            continue
+
+        want = {
+            "gamma": s.gamma,
+            "index_offset": s.index_offset,
+            "zero_count": s.zero_count,
+            "count": s.count,
+            "sum": s.sum,
+            "min": s.min if math.isfinite(s.min) else math.nan,
+            "max": s.max if math.isfinite(s.max) else math.nan,
+        }
+        for k, v in want.items():
+            assert (None if row[k] is None else row[k].hex()) == (None if math.isnan(v) else v.hex()), k
+        assert row["pos"] == list(s.positive_bins.items())
+        assert row["neg"] == list(s.negative_bins.items())

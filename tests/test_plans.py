@@ -62,6 +62,41 @@ def test_struct_merge_plan_no_join(spark, lineitem):
     assert checks.python_eval_nodes(merged) == []
 
 
+def test_wire_hop_is_arrow_not_pandas(spark, lineitem):
+    """The wire hop is Arrow end to end: ``operators/native.py`` and
+    ``functions/`` import neither pandas nor ``pandas_udf``, and the ingest
+    plan's one Python node is an ArrowEvalPython running ``struct_to_wire``
+    with the scalar Arrow UDF eval type, not the pandas one."""
+    import ast
+    from pathlib import Path
+
+    from pyspark.util import PythonEvalType
+
+    import duckdb_ddsketch_spark
+
+    pkg = Path(duckdb_ddsketch_spark.__file__).parent
+    for path in [pkg / "operators" / "native.py", *sorted((pkg / "functions").glob("*.py"))]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                modules, names = [a.name for a in node.names], []
+            elif isinstance(node, ast.ImportFrom):
+                modules, names = [node.module or ""], [a.name for a in node.names]
+            else:
+                continue
+            assert not any(m.split(".")[0] == "pandas" for m in modules), (path, node.lineno)
+            assert "pandas_udf" not in names, (path, node.lineno)
+
+    sk = native.sketch_struct_agg(lineitem, ["l_returnflag"], "l_quantity", 0.01)
+    ingest = sk.select("l_returnflag", native.struct_to_wire("sketch").alias("b"))
+    assert set(checks.python_eval_nodes(ingest)) == {"ArrowEvalPython"}
+    # the node prints its UDFs, its outputs, then the UDFs' eval type
+    tree = ingest._jdf.queryExecution().executedPlan().toString()
+    assert tree.count("ArrowEvalPython") == 1
+    m = re.search(r"ArrowEvalPython \[_struct_to_wire\(.*?\], \[.*?\], (\d+)", tree)
+    assert m and int(m.group(1)) == PythonEvalType.SQL_SCALAR_ARROW_UDF
+    assert native._struct_to_wire.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+
+
 def test_no_row_at_a_time_python_anywhere(spark, lineitem):
     """Blob-path pandas UDFs must be Arrow-vectorized, never BatchEvalPython."""
     from duckdb_ddsketch_spark.functions import scalar as fs
