@@ -28,11 +28,10 @@ pass, then merges the bins with ``np.unique`` + ``np.add.at`` in row order.
 The kernel decode decides every blob the fast path cannot prove decodable:
 such a blob goes through ``DDSketch.decode`` alone, so the skipped rows and
 the merged bytes are those of a per-row ``DDSketch.decode`` /
-``DDSketch.merge`` fold. The finalize encodes the merged bins with the column
-encoder (``sketch.encode_wire_row``); ``ddsketch_stats_agg`` reads its stats
-and quantiles off the merged arrays (``sketch.wire_sketch``, the sketch
-``DDSketch.decode`` would return for those bytes) instead of decoding them
-again, and decodes them with the kernel only where it cannot prove that.
+``DDSketch.merge`` fold. The finalize writes the merged bins with the column
+encoder (``codec.encode_wire_column``); ``ddsketch_stats_agg`` then reads its
+stats off those bytes with ``scalar.stats_full_row``, one kernel decode per
+group.
 
 Mapping-mismatch rule. ``ddsketch_agg`` keeps the group's first decodable
 mapping and drops later rows whose gamma/index_offset differ (the
@@ -54,14 +53,7 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BinaryType
 
-from ..sketch import (
-    DDSketch,
-    DEFAULT_RELATIVE_ACCURACY,
-    encode_wire_row,
-    merge_wire_column,
-    merge_wire_rows,
-    wire_sketch,
-)
+from ..sketch import DDSketch, DEFAULT_RELATIVE_ACCURACY, merge_wire_column
 from .scalar import STATS_FULL_SCHEMA, stats_full_row
 
 __all__ = [
@@ -86,17 +78,11 @@ def ddsketch_stats_agg(sketches: pa.Array) -> pa.Scalar:
     """Aggregate returning STRUCT(sketch, count, sum, avg, min, max, p25, p50,
     p75, p90, p95, p99) in one pass (lib.rs:811-989).
 
-    The stats are those any later ``ddsketch_stats_full(sketch)`` reads
-    off the merged bytes, rebuilt from the merged arrays
-    (``sketch.wire_sketch``); where that cannot prove the kernel's answer,
-    the bytes are decoded. A group with no decodable row gives a non-NULL
-    struct of 12 NULL fields.
+    The stats are read off the merged sketch's own wire bytes, as any later
+    ``ddsketch_stats_full(sketch)`` would read them. A group with no
+    decodable row gives a non-NULL struct of 12 NULL fields.
     """
-    merged = merge_wire_rows(sketches)
-    if merged is None:
-        row = stats_full_row(None)
-    else:
-        row = stats_full_row(encode_wire_row(merged), wire_sketch(merged))
+    row = stats_full_row(merge_wire_column(sketches))
     return pa.scalar(dict(zip(STATS_FULL_SCHEMA.names, row)), type=_STATS_FULL_ARROW)
 
 

@@ -240,12 +240,11 @@ def ddsketch_stats(s: DDSketch):
 _STATS_QUANTILES = (0.25, 0.50, 0.75, 0.90, 0.95, 0.99)
 
 
-def stats_full_row(blob, sketch: DDSketch | None = None) -> tuple:
+def stats_full_row(blob) -> tuple:
     """One ``STATS_FULL_SCHEMA`` row from a wire blob: the stats and the six
-    quantiles off one decode (lib.rs:811-895), or off ``sketch`` when the
-    caller already holds what ``DDSketch.decode(blob)`` returns. A NULL or
-    undecodable blob gives 12 NULLs."""
-    s = decode_or_none(blob) if sketch is None else sketch
+    quantiles off one decode (lib.rs:811-895). A NULL or undecodable blob
+    gives 12 NULLs."""
+    s = decode_or_none(blob)
     if s is None:
         return (None,) * len(STATS_FULL_SCHEMA.fields)
     return (

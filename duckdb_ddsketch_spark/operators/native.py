@@ -56,8 +56,8 @@ from ..sketch import (
     DDSketch,
     DEFAULT_RELATIVE_ACCURACY,
     WireRow,
+    _bin_stats,
     _decode_rows,
-    decoded_stats,
 )
 
 __all__ = [
@@ -895,7 +895,8 @@ def struct_to_wire(sketch_col) -> Column:
 
 def _map_column(rows: list, valid: np.ndarray, index_at: int) -> pa.MapArray:
     """The ``MAP<INT,DOUBLE>`` of each row's bins (``WireRow`` fields
-    ``index_at`` and ``index_at + 1``), NULL where the row is None."""
+    ``index_at`` and ``index_at + 1``), NULL where the row is None; a NaN
+    count (a kernel-decoded blob may carry one) is a NULL value."""
     good = [r for r in rows if r is not None]
     sizes = np.zeros(len(rows), np.int64)
     sizes[valid] = [len(r[index_at]) for r in good]
@@ -903,7 +904,7 @@ def _map_column(rows: list, valid: np.ndarray, index_at: int) -> pa.MapArray:
     return pa.MapArray.from_arrays(
         pa.array(offsets, mask=np.append(~valid, False)),
         pa.array(np.concatenate([_NO_BINS[0], *(r[index_at] for r in good)]).astype(np.int32)),
-        pa.array(np.concatenate([_NO_BINS[1], *(r[index_at + 1] for r in good)])),
+        pa.array(np.concatenate([_NO_BINS[1], *(r[index_at + 1] for r in good)]), from_pandas=True),
     )
 
 
@@ -911,7 +912,7 @@ def _map_column(rows: list, valid: np.ndarray, index_at: int) -> pa.MapArray:
 def _wire_to_struct(blobs: pa.Array) -> pa.Array:
     """``DDSketch.decode`` of every blob as a struct, through
     ``decode_wire_column``: the maps are built from its index and count
-    arrays, the stats by ``decoded_stats`` (the kernel's, for the rows the
+    arrays, the stats by ``_bin_stats`` (the kernel's, for the rows the
     kernel decoded). An empty blob is the kernel's empty sketch, an
     undecodable one a struct of NULL fields, and a NaN field is NULL."""
     rows, kernel = _decode_rows(blobs)
@@ -924,11 +925,11 @@ def _wire_to_struct(blobs: pa.Array) -> pa.Array:
         if r is None:
             scalars.append((math.nan,) * 7)
             continue
-        stats = None if i in kernel else decoded_stats(r)
-        if stats is None:
-            s = kernel[i] if i in kernel else DDSketch.decode(blobs[i].as_py())
-            stats = s.count, s.sum, s.min, s.max
-        count, total, lo, hi = stats
+        if i in kernel:
+            s = kernel[i]
+            count, total, lo, hi = s.count, s.sum, s.min, s.max
+        else:
+            count, total, lo, hi = _bin_stats(r)
         lo, hi = (v if math.isfinite(v) else math.nan for v in (lo, hi))
         scalars.append((r.gamma, r.index_offset, r.zero_count, count, total, lo, hi))
     columns = np.array(scalars, np.float64).reshape(len(rows), 7).T

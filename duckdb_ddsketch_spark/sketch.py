@@ -20,9 +20,8 @@ Semantics mirror the reference extension's sketch
 
 ``decode_wire_column`` / ``merge_wire_column`` decode and merge a whole Arrow
 column of wire blobs in numpy; ``DDSketch.decode`` stays the definition of
-which blobs are decodable. ``encode_wire_row`` writes a merged row with the
-column encoder (``codec.encode_wire_column``), and ``decoded_stats`` reads
-the stats decode would rebuild straight off a row's arrays.
+which blobs are decodable. ``merge_wire_column`` writes its merged bins with
+the column encoder (``codec.encode_wire_column``).
 """
 
 from __future__ import annotations
@@ -42,11 +41,7 @@ __all__ = [
     "WireRow",
     "decode_or_none",
     "decode_wire_column",
-    "merge_wire_rows",
     "merge_wire_column",
-    "encode_wire_row",
-    "decoded_stats",
-    "wire_sketch",
 ]
 
 DEFAULT_RELATIVE_ACCURACY = 0.01
@@ -770,17 +765,18 @@ def _sum_bins(
     return keys, sums
 
 
-def merge_wire_rows(blobs: pa.Array) -> Optional[WireRow]:
-    """Merge a binary Arrow array of wire blobs into one row, by the
+def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
+    """Merge a binary Arrow array of wire blobs into one blob, by the
     reference aggregate's rule (lib.rs:697-735): NULL, empty and
     undecodable rows are skipped; the first decodable row is adopted and
     later rows merged into it; a row whose gamma or index_offset differs
     from the adopted one by more than 1e-10 is dropped, as
     ``DDSketch.merge`` would refuse it. No decodable row gives None.
 
-    The row holds the ``DDSketch.decode`` / ``DDSketch.merge`` fold over
-    the rows in order: each bin's counts and the zero count are added in
-    row order. Its indexes are increasing.
+    The bytes equal ``encode()`` of the ``DDSketch.decode`` /
+    ``DDSketch.merge`` fold over the rows in order: each bin's counts and
+    the zero count are added in row order, and the merged bins are written
+    by ``codec.encode_wire_column``.
     """
     kept: list[WireRow] = []
     for row in decode_wire_column(blobs):
@@ -797,62 +793,39 @@ def merge_wire_rows(blobs: pa.Array) -> Optional[WireRow]:
     zero_count = kept[0].zero_count
     for row in kept[1:]:
         zero_count += row.zero_count
-    return WireRow(
-        kept[0].gamma,
-        kept[0].index_offset,
-        zero_count,
-        *_sum_bins([r.positive_index for r in kept], [r.positive_count for r in kept]),
-        *_sum_bins([r.negative_index for r in kept], [r.negative_count for r in kept]),
-    )
-
-
-def encode_wire_row(row: WireRow) -> bytes:
-    """``DDSketch.encode`` of a row whose indexes are increasing."""
+    positive = _sum_bins([r.positive_index for r in kept], [r.positive_count for r in kept])
+    negative = _sum_bins([r.negative_index for r in kept], [r.negative_count for r in kept])
     data, _ = codec.encode_wire_column(
-        np.array([row.gamma]),
-        np.array([row.index_offset]),
-        np.array([row.zero_count]),
-        ([0, len(row.positive_index)], row.positive_index, row.positive_count),
-        ([0, len(row.negative_index)], row.negative_index, row.negative_count),
+        np.array([kept[0].gamma]),
+        np.array([kept[0].index_offset]),
+        np.array([zero_count]),
+        *(([0, len(index)], index, count) for index, count in (positive, negative)),
     )
     return data.tobytes()
 
 
-def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
-    """The wire bytes of ``merge_wire_rows``: ``encode()`` of the kernel's
-    decode/merge fold over the rows in order, or None."""
-    merged = merge_wire_rows(blobs)
-    return None if merged is None else encode_wire_row(merged)
-
-
-def decoded_stats(row: WireRow) -> Optional[tuple[float, float, float, float]]:
+def _bin_stats(row: WireRow) -> tuple[float, float, float, float]:
     """``(count, sum, min, max)`` as ``DDSketch.decode`` rebuilds them from
-    the bins of a blob without stats sections, for a row as decode returns
-    it (counts bit for bit, indexes increasing); min and max stay infinite
-    when no bin holds a count. None when the mapping is outside
-    ``1 < gamma < 2`` with a finite offset, a bin value could overflow, or
-    the count leaves BIGINT: then the kernel decides.
+    the bins of a blob without stats sections, for a row the fast path of
+    ``decode_wire_column`` decoded (so ``1 < gamma < 2``, a finite offset,
+    increasing indexes and no bin value past ``e**700``); min and max stay
+    infinite when no bin holds a count.
 
-    The arithmetic is the kernel's: the count is Python ``sum`` of each
+    The arithmetic is the kernel's (``_sum_from_bins``,
+    ``_min_max_from_bins``) on arrays: the count is Python ``sum`` of each
     store's counts plus the zero count, bin values use Python's ``**``
-    (``np.power`` can differ in the last bit), and the sum adds
-    ``value * count`` in index order, positives then negatives, from 0.0.
+    (``np.power`` can differ in the last bit), and the sum adds ``value *
+    count`` in index order, positives then negatives, from 0.0. Against
+    the kernel's methods on a sketch built from the row it took
+    ``merge_sketches_native`` on 100k fat blobs from 33-36 s to 21 s.
     """
     gamma, index_offset = row.gamma, row.index_offset
-    if not (1.0 < gamma < 2.0 and math.isfinite(index_offset)):
-        return None
     count = sum(row.positive_count.tolist()) + sum(row.negative_count.tolist()) + row.zero_count
-    if not -_BIGINT_LIMIT <= count < _BIGINT_LIMIT:
-        return None
-    log_gamma = math.log(gamma)
     multiplier = 1.0 + (1.0 - 2.0 / (1.0 + gamma))
-    values = []
-    for index in (row.positive_index, row.negative_index):
-        exponents = [i - index_offset for i in index.tolist()]
-        if exponents and max(abs(exponents[0]), abs(exponents[-1])) * log_gamma > _MAX_BIN_EXPONENT:
-            return None
-        values.append(np.array([gamma**x for x in exponents], np.float64) * multiplier)
-    positive, negative = values
+    positive, negative = (
+        np.array([gamma ** (i - index_offset) for i in index.tolist()], np.float64) * multiplier
+        for index in (row.positive_index, row.negative_index)
+    )
     terms = np.concatenate(
         ([0.0], positive * row.positive_count, -(negative * row.negative_count))
     )
@@ -863,28 +836,7 @@ def decoded_stats(row: WireRow) -> Optional[tuple[float, float, float, float]]:
             positive[row.positive_count > 0.0],
         )
     )
+    total = float(np.cumsum(terms)[-1])
     if not len(candidates):
-        return count, float(np.cumsum(terms)[-1]), math.inf, -math.inf
-    return count, float(np.cumsum(terms)[-1]), float(candidates.min()), float(candidates.max())
-
-
-def wire_sketch(row: WireRow) -> Optional[DDSketch]:
-    """The sketch ``DDSketch.decode(encode_wire_row(row))`` returns, built
-    off the row's arrays instead of the bytes: each count as its varfloat
-    decodes, ``(c + 1.0) - 1.0``, a zero count only when it is > 0, and
-    the stats of ``decoded_stats``. None where ``decoded_stats`` is."""
-    zero_count = (row.zero_count + 1.0) - 1.0 if row.zero_count > 0.0 else 0.0
-    row = row._replace(
-        zero_count=zero_count,
-        positive_count=(row.positive_count + 1.0) - 1.0,
-        negative_count=(row.negative_count + 1.0) - 1.0,
-    )
-    stats = decoded_stats(row)
-    if stats is None:
-        return None
-    s = DDSketch.__new__(DDSketch)
-    s.gamma, s.index_offset, s.zero_count = row.gamma, row.index_offset, zero_count
-    s.positive_bins = dict(zip(row.positive_index.tolist(), row.positive_count.tolist()))
-    s.negative_bins = dict(zip(row.negative_index.tolist(), row.negative_count.tolist()))
-    s.count, s.sum, s.min, s.max = stats
-    return s
+        return count, total, math.inf, -math.inf
+    return count, total, float(candidates.min()), float(candidates.max())

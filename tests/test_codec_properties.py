@@ -8,7 +8,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql.pandas.types import to_arrow_type
 
 from duckdb_ddsketch_spark import codec
@@ -673,22 +673,29 @@ def _float_bits(row):
 
 @settings(max_examples=500, deadline=None)
 @given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=8))
-def test_stats_agg_finalize_matches_decoded_bytes(blobs):
-    """``ddsketch_stats_agg``'s 12 fields, read off the merged arrays, are
-    bit for bit those ``stats_full_row`` reads by decoding the merged
-    bytes, over groups of damaged, weighted, mixed-mapping blobs."""
+def test_stats_agg_finalize_matches_kernel_fold(blobs):
+    """``ddsketch_stats_agg``'s 12 fields are bit for bit those
+    ``stats_full_row`` reads off ``encode()`` of the kernel's decode/merge
+    fold, over groups of damaged, weighted, mixed-mapping blobs."""
     arr = pa.array(blobs, pa.binary())
     got = ddsketch_stats_agg.func(arr).as_py()
-    want = stats_full_row(merge_wire_column(arr))
+    want = stats_full_row(_kernel_fold(blobs)[0])
     assert _float_bits(got[k] for k in STATS_FULL_SCHEMA.names) == _float_bits(want)
 
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=6))
+# an explicit count section lets the kernel decode a NaN bin count
+@example(
+    [
+        b"\x02\xfdJ\x81Z\xbfR\xf0?\x00\x00\x00\x00\x00\x00\x00\x00\xa0\x04\x05\x03"
+        b"\x00\x81\x80\x80\x80\x80\x80\x80\x80\x10\x02\x02\x02\x02"
+    ]
+)
 def test_wire_to_struct_matches_kernel_decode(blobs):
     """``wire_to_struct`` holds what ``DDSketch.decode`` returns, bins in
     its order and stats bit for bit; an undecodable blob is a struct of
-    NULL fields and a NaN field is NULL."""
+    NULL fields, and a NaN field or bin count is NULL."""
     got = native._wire_to_struct.func(pa.array(blobs, pa.binary())).to_pylist()
     for blob, row in zip(blobs, got):
         s = None if blob is None else decode_or_none(blob)
@@ -707,5 +714,5 @@ def test_wire_to_struct_matches_kernel_decode(blobs):
         }
         for k, v in want.items():
             assert (None if row[k] is None else row[k].hex()) == (None if math.isnan(v) else v.hex()), k
-        assert row["pos"] == list(s.positive_bins.items())
-        assert row["neg"] == list(s.negative_bins.items())
+        for key, bins in (("pos", s.positive_bins), ("neg", s.negative_bins)):
+            assert row[key] == [(i, None if math.isnan(c) else c) for i, c in bins.items()]
