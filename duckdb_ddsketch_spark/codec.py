@@ -209,13 +209,16 @@ _VARFLOAT_SHIFTS = tuple(64 - 7 - 7 * j for j in range(MAX_VARFLOAT_TOKEN))
 
 def _token_bits(data: np.ndarray, starts: np.ndarray, lengths: np.ndarray, shifts) -> np.ndarray:
     """OR of each token's 7-bit groups, byte ``j`` shifted by ``shifts[j]``;
-    bytes past a token's length contribute nothing."""
+    bytes past a token's length contribute nothing. Byte ``j`` is read only
+    for the tokens longer than ``j``, and most tokens are 1-2 bytes, so the
+    later passes touch few tokens."""
     out = np.zeros(len(starts), dtype=np.uint64)
-    last = len(data) - 1
+    on = np.flatnonzero(lengths > 0)
     for j, shift in enumerate(shifts):
-        group = (data[np.minimum(starts + j, last)] & 0x7F).astype(np.uint64)
-        group[lengths <= j] = 0
-        out |= group << np.uint64(shift)
+        if not len(on):
+            break
+        out[on] |= (data[starts[on] + j] & 0x7F).astype(np.uint64) << np.uint64(shift)
+        on = on[lengths[on] > j + 1]
     return out
 
 

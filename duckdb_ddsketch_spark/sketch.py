@@ -20,8 +20,11 @@ Semantics mirror the reference extension's sketch
 
 ``decode_wire_column`` / ``merge_wire_column`` decode and merge a whole Arrow
 column of wire blobs in numpy; ``DDSketch.decode`` stays the definition of
-which blobs are decodable. ``merge_wire_column`` writes its merged bins with
-the column encoder (``codec.encode_wire_column``).
+which blobs are decodable. The merge is two steps: ``_merge_rows`` decodes
+and sums the column in slices of ``_MERGE_SLICE_ROWS`` rows into one merged
+``WireRow``, and ``_encode_row`` writes it with the column encoder
+(``codec.encode_wire_column``). ``_encoded_stats`` reads the stats and
+quantiles a kernel decode of those bytes would give off the row's arrays.
 """
 
 from __future__ import annotations
@@ -750,19 +753,74 @@ def _decode_rows(
     return rows, kernel
 
 
-def _sum_bins(
-    indexes: list[np.ndarray], counts: list[np.ndarray]
+# Rows ``merge_wire_column`` decodes at a time: the merge holds one slice's
+# decoded bins and the running sums, never a whole hot group's bins.
+_MERGE_SLICE_ROWS = 4096
+
+
+def _add_bins(
+    acc: tuple[np.ndarray, np.ndarray], indexes: list[np.ndarray], counts: list[np.ndarray]
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-index sums over rows, each index's counts added in row order
-    from 0.0, as a dict fold over the rows adds them: the distinct indexes,
-    increasing, and their sums."""
+    """The per-index sums ``acc`` (distinct indexes, increasing, and their
+    sums) with more rows' bins added, each index's counts in row order, as
+    a dict fold over the rows adds them; a new index starts from 0.0. So
+    sums carried across slices equal one pass over all the rows."""
     index = np.concatenate(indexes)
     if not len(index):
-        return _NO_BINS
-    keys, where = np.unique(index, return_inverse=True)
-    sums = np.zeros(len(keys))
-    np.add.at(sums, where, np.concatenate(counts))
-    return keys, sums
+        return acc
+    keys, sums = acc
+    union = np.union1d(keys, index)
+    out = np.zeros(len(union))
+    out[np.searchsorted(union, keys)] = sums
+    np.add.at(out, np.searchsorted(union, index), np.concatenate(counts))
+    return union, out
+
+
+def _merge_rows(blobs: pa.Array) -> Optional[WireRow]:
+    """``merge_wire_column``'s merged sketch as a ``WireRow``, or None when
+    no row decodes. The column is decoded ``_MERGE_SLICE_ROWS`` rows at a
+    time; the adopted mapping, the zero count and the bin sums carry from
+    slice to slice in row order."""
+    first: Optional[WireRow] = None
+    zero_count = 0.0
+    positive = negative = _NO_BINS
+    for start in range(0, len(blobs), _MERGE_SLICE_ROWS):
+        kept: list[WireRow] = []
+        for row in decode_wire_column(blobs.slice(start, _MERGE_SLICE_ROWS)):
+            if row is None:
+                continue
+            if first is None:
+                first, zero_count = row, row.zero_count
+            elif (
+                abs(first.gamma - row.gamma) > _GAMMA_TOLERANCE
+                or abs(first.index_offset - row.index_offset) > _GAMMA_TOLERANCE
+            ):
+                continue
+            else:
+                zero_count += row.zero_count
+            kept.append(row)
+        if not kept:
+            continue
+        positive = _add_bins(
+            positive, [r.positive_index for r in kept], [r.positive_count for r in kept]
+        )
+        negative = _add_bins(
+            negative, [r.negative_index for r in kept], [r.negative_count for r in kept]
+        )
+    if first is None:
+        return None
+    return WireRow(first.gamma, first.index_offset, zero_count, *positive, *negative)
+
+
+def _encode_row(row: WireRow) -> bytes:
+    """``DDSketch.encode``'s bytes for one row, by ``codec.encode_wire_column``."""
+    data, _ = codec.encode_wire_column(
+        np.array([row.gamma]),
+        np.array([row.index_offset]),
+        np.array([row.zero_count]),
+        *(([0, len(index)], index, count) for index, count in (row[3:5], row[5:7])),
+    )
+    return data.tobytes()
 
 
 def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
@@ -776,56 +834,45 @@ def merge_wire_column(blobs: pa.Array) -> Optional[bytes]:
     The bytes equal ``encode()`` of the ``DDSketch.decode`` /
     ``DDSketch.merge`` fold over the rows in order: each bin's counts and
     the zero count are added in row order, and the merged bins are written
-    by ``codec.encode_wire_column``.
+    by ``codec.encode_wire_column``. The column is decoded and summed in
+    slices of ``_MERGE_SLICE_ROWS`` rows with one running sum per bin, so
+    memory past the Arrow column is one slice's bins however large the
+    group, and the sums are those of a single pass.
     """
-    kept: list[WireRow] = []
-    for row in decode_wire_column(blobs):
-        if row is None:
-            continue
-        if kept and (
-            abs(kept[0].gamma - row.gamma) > _GAMMA_TOLERANCE
-            or abs(kept[0].index_offset - row.index_offset) > _GAMMA_TOLERANCE
-        ):
-            continue
-        kept.append(row)
-    if not kept:
-        return None
-    zero_count = kept[0].zero_count
-    for row in kept[1:]:
-        zero_count += row.zero_count
-    positive = _sum_bins([r.positive_index for r in kept], [r.positive_count for r in kept])
-    negative = _sum_bins([r.negative_index for r in kept], [r.negative_count for r in kept])
-    data, _ = codec.encode_wire_column(
-        np.array([kept[0].gamma]),
-        np.array([kept[0].index_offset]),
-        np.array([zero_count]),
-        *(([0, len(index)], index, count) for index, count in (positive, negative)),
+    row = _merge_rows(blobs)
+    return None if row is None else _encode_row(row)
+
+
+def _bin_values(row: WireRow) -> tuple[np.ndarray, np.ndarray]:
+    """``DDSketch.bin_to_value`` of each positive and each negative bin,
+    with Python's ``**`` (``np.power`` can differ in the last bit)."""
+    gamma, index_offset = row.gamma, row.index_offset
+    multiplier = 1.0 + (1.0 - 2.0 / (1.0 + gamma))
+    return tuple(
+        np.array([gamma ** (i - index_offset) for i in index.tolist()], np.float64) * multiplier
+        for index in (row.positive_index, row.negative_index)
     )
-    return data.tobytes()
 
 
-def _bin_stats(row: WireRow) -> tuple[float, float, float, float]:
+def _bin_stats(
+    row: WireRow, values: Optional[tuple[np.ndarray, np.ndarray]] = None
+) -> tuple[float, float, float, float]:
     """``(count, sum, min, max)`` as ``DDSketch.decode`` rebuilds them from
     the bins of a blob without stats sections, for a row the fast path of
     ``decode_wire_column`` decoded (so ``1 < gamma < 2``, a finite offset,
     increasing indexes and no bin value past ``e**700``); min and max stay
-    infinite when no bin holds a count.
+    infinite when no bin holds a count. ``values`` are the row's
+    ``_bin_values`` when the caller has them.
 
     The arithmetic is the kernel's (``_sum_from_bins``,
     ``_min_max_from_bins``) on arrays: the count is Python ``sum`` of each
-    store's counts plus the zero count, bin values use Python's ``**``
-    (``np.power`` can differ in the last bit), and the sum adds ``value *
-    count`` in index order, positives then negatives, from 0.0. Against
-    the kernel's methods on a sketch built from the row it took
+    store's counts plus the zero count, and the sum adds ``value * count``
+    in index order, positives then negatives, from 0.0. Against the
+    kernel's methods on a sketch built from the row it took
     ``merge_sketches_native`` on 100k fat blobs from 33-36 s to 21 s.
     """
-    gamma, index_offset = row.gamma, row.index_offset
+    positive, negative = _bin_values(row) if values is None else values
     count = sum(row.positive_count.tolist()) + sum(row.negative_count.tolist()) + row.zero_count
-    multiplier = 1.0 + (1.0 - 2.0 / (1.0 + gamma))
-    positive, negative = (
-        np.array([gamma ** (i - index_offset) for i in index.tolist()], np.float64) * multiplier
-        for index in (row.positive_index, row.negative_index)
-    )
     terms = np.concatenate(
         ([0.0], positive * row.positive_count, -(negative * row.negative_count))
     )
@@ -840,3 +887,71 @@ def _bin_stats(row: WireRow) -> tuple[float, float, float, float]:
     if not len(candidates):
         return count, total, math.inf, -math.inf
     return count, total, float(candidates.min()), float(candidates.max())
+
+
+def _encoded_stats(row: WireRow, quantiles: Iterable[float]) -> Optional[tuple]:
+    """``(count, sum, avg, min, max, *quantiles)`` that ``get_count``,
+    ``get_sum``, ``get_avg``, ``get_min``, ``get_max`` and ``quantile`` give
+    on ``DDSketch.decode(_encode_row(row))``, bit for bit, read off the
+    row's arrays; None when the row is outside the bounds of
+    ``decode_wire_column``'s fast path (``1 < gamma < 2`` and a finite
+    offset, finite counts >= 0 with a total below ``2**60``, every
+    ``|index - offset| * ln(gamma) <= 700``), where the caller decodes the
+    bytes with the kernel instead.
+
+    The bytes keep each count ``c > 0`` as ``(c + 1) - 1`` (a varfloat);
+    a zero count of 0 is not written. A quantile walks a store's
+    ``np.cumsum`` (sequential from 0.0, as ``_key_at_rank`` adds) with
+    ``searchsorted(side="right")`` for its strict ``>``, the negative store
+    under the reversed rank, as ``DDSketch.quantile`` does.
+    """
+    gamma, index_offset = row.gamma, row.index_offset
+    if not (1.0 < gamma < 2.0 and math.isfinite(index_offset)):
+        return None
+    counts = np.concatenate(([row.zero_count], row.positive_count, row.negative_count))
+    index = np.concatenate((row.positive_index, row.negative_index))
+    # an infinite count fails the total's bound below
+    if not (
+        np.all(counts >= 0.0)
+        and np.all(np.abs(index - index_offset) * math.log(gamma) <= _MAX_BIN_EXPONENT)
+    ):
+        return None
+    zero = (row.zero_count + 1.0) - 1.0 if row.zero_count > 0.0 else 0.0
+    kept = row._replace(
+        zero_count=zero,
+        positive_count=(row.positive_count + 1.0) - 1.0,
+        negative_count=(row.negative_count + 1.0) - 1.0,
+    )
+    values = _bin_values(kept)
+    count, total, lo, hi = _bin_stats(kept, values)
+    if not count < _MAX_TOTAL_COUNT:
+        return None
+    if count == 0.0:
+        return (0, None, None, None, None, *(None for _ in quantiles))
+    negative_count = sum(kept.negative_count.tolist())
+    cumulative = (np.cumsum(kept.positive_count), np.cumsum(kept.negative_count))
+
+    def key_at_rank(store: int, rank: float) -> float:
+        cum = cumulative[store]
+        if not len(cum):
+            return 0.0
+        at = int(np.searchsorted(cum, max(rank, 0.0), side="right"))
+        return float(values[store][min(at, len(cum) - 1)])
+
+    answers = []
+    for q in quantiles:
+        rank = q * (count - 1.0)
+        if rank < negative_count:
+            answers.append(-key_at_rank(1, negative_count - 1.0 - rank))
+        elif rank < negative_count + zero:
+            answers.append(0.0)
+        else:
+            answers.append(key_at_rank(0, rank - zero - negative_count))
+    return (
+        int(count),
+        total,
+        total / count,
+        lo if math.isfinite(lo) else None,
+        hi if math.isfinite(hi) else None,
+        *answers,
+    )

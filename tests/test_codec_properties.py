@@ -4,6 +4,8 @@ coverage beyond the reference's fixed vectors.
 
 import math
 import struct
+import tracemalloc
+from unittest import mock
 
 import numpy as np
 import pyarrow as pa
@@ -11,7 +13,7 @@ import pytest
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql.pandas.types import to_arrow_type
 
-from duckdb_ddsketch_spark import codec
+from duckdb_ddsketch_spark import codec, sketch
 from duckdb_ddsketch_spark.functions.aggregate import ddsketch_stats_agg
 from duckdb_ddsketch_spark.functions.scalar import STATS_FULL_SCHEMA, stats_full_row
 from duckdb_ddsketch_spark.operators import native
@@ -671,8 +673,54 @@ def _float_bits(row):
     return tuple(v.hex() if isinstance(v, float) else v for v in row)
 
 
+# an explicit count section lets the kernel decode a NaN bin count
+_NAN_BIN_COUNT_BLOB = (
+    b"\x02\xfdJ\x81Z\xbfR\xf0?\x00\x00\x00\x00\x00\x00\x00\x00\xa0\x04\x05\x03"
+    b"\x00\x81\x80\x80\x80\x80\x80\x80\x80\x10\x02\x02\x02\x02"
+)
+
+
 @settings(max_examples=500, deadline=None)
 @given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=8))
+# merged total counts past the column bound: 3 * 2**59 is read by the
+# kernel, 2**63 is outside BIGINT (12 NULL fields)
+@example([_store(_POS, [3], [2.0**59])] * 3)
+@example([_store(_POS, [3], [2.0**62]), _store(_POS, [5], [2.0**62])])
+# kernel-decoded rows: explicit stats sections, and a NaN bin count
+@example([_EXIT_CASES["explicit_sum"], _EXIT_CASES["explicit_count"], _GOOD_BLOB])
+@example([_NAN_BIN_COUNT_BLOB, _GOOD_BLOB])
+# merged counts the wire rounds: 1 + 0.3 is kept as 1.2999999999999998,
+# in a bin and in the zero count
+@example([_store(_POS, [3], [1.0]), _store(_POS, [3], [0.3])])
+@example([_store(_POS, [3], [0.5]) + _zero(1.0), _zero(0.3)])
+# a total below 1 with an empty first bin: a negative rank counts as 0
+@example([_store(_NEG, [3, 1], [0.0, 0.5])])
+@example([_store(_POS, [3, 1], [0.0, 0.5]) + _zero(0.25)])
+# a negative count (kernel-decoded) makes the cumulative counts fall
+@example([_store(_POS, [3, 1, 1], [0.5, -1.0, 2.0])])
+# gammas 9e-11 apart merge, and a bin finite under row 2's gamma overflows
+# ``gamma ** x`` under the adopted one (12 NULL fields)
+@example(
+    [
+        _mapping(_GAMMA, 12.047201538058289) + _store(_POS, [3], [1.0]),
+        _mapping(_GAMMA - 9e-11, 12.047201538058289) + _store(_POS, [35_500], [1.0]),
+    ]
+)
+# gamma < 1: a bin finite under row 2's gamma overflows ``0.5 ** -1024``
+# under the adopted one (12 NULL fields, not an OverflowError)
+@example(
+    [
+        _mapping(0.5) + _store(_POS, [3], [1.0]),
+        _mapping(0.5 + 9e-11) + _store(_POS, [-1024], [1.0]),
+    ]
+)
+# gamma > 2
+@example(
+    [
+        _mapping(3.0) + _store(_POS, [3, 1], [1.0, 2.0]),
+        _mapping(3.0) + _store(_NEG, [2], [1.0]) + _zero(1.0),
+    ]
+)
 def test_stats_agg_finalize_matches_kernel_fold(blobs):
     """``ddsketch_stats_agg``'s 12 fields are bit for bit those
     ``stats_full_row`` reads off ``encode()`` of the kernel's decode/merge
@@ -684,14 +732,53 @@ def test_stats_agg_finalize_matches_kernel_fold(blobs):
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=6))
-# an explicit count section lets the kernel decode a NaN bin count
-@example(
-    [
-        b"\x02\xfdJ\x81Z\xbfR\xf0?\x00\x00\x00\x00\x00\x00\x00\x00\xa0\x04\x05\x03"
-        b"\x00\x81\x80\x80\x80\x80\x80\x80\x80\x10\x02\x02\x02\x02"
+@given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=14))
+def test_sliced_merge_matches_single_pass(blobs):
+    """Decoding and summing a group 3 rows at a time gives the bytes and
+    stats of one pass over the group, which are the kernel fold's: over
+    weighted, damaged and mixed-mapping groups, where the adopted mapping
+    and the zero count carry across slices."""
+    arr = pa.array(blobs, pa.binary())
+    whole = merge_wire_column(arr), ddsketch_stats_agg.func(arr).as_py()
+    with mock.patch.object(sketch, "_MERGE_SLICE_ROWS", 3):
+        sliced = merge_wire_column(arr), ddsketch_stats_agg.func(arr).as_py()
+    assert sliced[0] == whole[0] == _kernel_fold(blobs)[0]
+    assert _float_bits(sliced[1].values()) == _float_bits(whole[1].values())
+
+
+@pytest.mark.parametrize("rows", [1, 2])
+def test_sliced_merge_adds_counts_in_row_order(rows):
+    """A bin's counts add in row order across slice edges: (1e16 + 1) + 1
+    rounds differently from 1e16 + (1 + 1)."""
+    blobs = [_store(_POS, [3], [c]) for c in (1e16, 1.0, 1.0, 1.0)]
+    with mock.patch.object(sketch, "_MERGE_SLICE_ROWS", rows):
+        got = merge_wire_column(pa.array(blobs)), merge_wire_column(pa.array(blobs[::-1]))
+    assert got[0] == _kernel_fold(blobs)[0]
+    assert got[0] != got[1]
+
+
+def test_hot_group_merge_memory_is_bounded():
+    """One group of 20,000 fat blobs (~390 B, ~170 bins) merges holding one
+    slice's decoded bins, not the group's: the traced peak stays under
+    200 MB, where one pass over the group held ~450-500 MB."""
+    rng = np.random.default_rng(3)
+    distinct = [
+        DDSketch(0.01).extend_array(rng.lognormal(3.0, 1.0, 400)).encode() for _ in range(200)
     ]
-)
+    arr = pa.array(distinct * 100, pa.binary())
+    tracemalloc.start()
+    try:
+        merged = merge_wire_column(arr)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 200e6
+    assert DDSketch.decode(merged).count == 20_000 * 400
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.one_of(_WIRE_BLOB, _WEIGHTED_BLOB), min_size=1, max_size=6))
+@example([_NAN_BIN_COUNT_BLOB])
 def test_wire_to_struct_matches_kernel_decode(blobs):
     """``wire_to_struct`` holds what ``DDSketch.decode`` returns, bins in
     its order and stats bit for bit; an undecodable blob is a struct of
